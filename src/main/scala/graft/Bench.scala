@@ -56,12 +56,15 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // default to the machine's cores (capped at 32): an unset env var must
-    // not silently throttle the bench to local[4]
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(Runtime.getRuntime.availableProcessors, 32).toString)
+    // not silently throttle the bench to local[4]. Parsed here: the value
+    // lands unquoted in the JSON line below, so a non-integer setting must
+    // fail now rather than leave that line unparseable
+    val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(v => v.trim.toIntOption
+        .getOrElse(sys.error(s"SPARK_GRAFT_CPUS must be an integer, got '$v'")))
+      .getOrElse(math.min(Runtime.getRuntime.availableProcessors, 32))
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.shuffle.partitions", cpus.toLong)
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       // events() MICROS normalization is value-preserving only under UTC;
       // pin it in the builder, not just the launcher's -D flag

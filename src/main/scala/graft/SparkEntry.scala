@@ -4096,12 +4096,10 @@ object SparkEntry {
         |FROM supplier WHERE s_suppkey > 50 ORDER BY item_id LIMIT 200""".stripMargin,
 
     "m5_post_idgen" ->
-      """SELECT lpad(CAST(r_regionkey AS VARCHAR), 19, '0') || '-' ||
-        |       lpad(CAST(ROW_NUMBER() OVER (ORDER BY r_regionkey) AS VARCHAR), 4, '0')
+      """SELECT lpad(CAST(ROW_NUMBER() OVER (ORDER BY r_regionkey) AS VARCHAR), 19, '0')
         |         AS item_id,
         |       r_name AS name,
-        |       lpad(CAST(r_regionkey AS VARCHAR), 19, '0') || '-' ||
-        |       lpad(CAST(ROW_NUMBER() OVER (ORDER BY r_regionkey) AS VARCHAR), 4, '0')
+        |       lpad(CAST(ROW_NUMBER() OVER (ORDER BY r_regionkey) AS VARCHAR), 19, '0')
         |         AS injected_id
         |FROM region ORDER BY item_id""".stripMargin,
 

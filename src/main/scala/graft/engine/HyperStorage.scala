@@ -80,14 +80,27 @@ object SortBy {
     }.toSeq
 }
 
-/** Collection query result. `release` drops the persisted latest-revision
-  * fold backing `rows` (mirroring [[ApplyResult.release]]): call it once the
-  * rows have been consumed. Embedders that batch many queries per session
-  * (like Bench's per-entry cache clear) may skip it; without either, each
-  * successful query leaves one collection-sized MEMORY_AND_DISK entry until
-  * a later eviction. Index-served results carry a no-op release. */
-final case class QueryResult(rows: DataFrame, revision: Long,
-    release: () => Unit = () => ())
+/** Collection query result: the page's rows and the collection revision.
+  *
+  * The primary path ([[HyperStorage.query]]) reports the content log's
+  * current revision, like [[HyperStorage.revisionOf]]. An index-served
+  * result ([[graft.indexing.QueryPlanner]]) reports the revision recorded
+  * in the commit of the index version its rows come from — the state the
+  * rows actually reflect. The two agree whenever every write to the
+  * collection goes through index maintenance (`FeedPipeline.runBatch`
+  * with `indexes`, or [[graft.indexing.IndexManager.applyFeed]]); a write
+  * that bypasses it leaves the index stale, and its results then report
+  * the older revision their rows belong to.
+  *
+  * `release` (outside case-class equality) drops the persisted
+  * latest-revision fold backing `rows` (mirroring [[ApplyResult.release]]):
+  * call it once the rows have been consumed. Embedders that batch many
+  * queries per session (like Bench's per-entry cache clear) may skip it;
+  * without either, each successful query leaves one collection-sized
+  * MEMORY_AND_DISK entry until a later eviction. Index-served results
+  * carry a no-op release. */
+final case class QueryResult(rows: DataFrame, revision: Long)(
+    val release: () => Unit = () => ())
 
 /** One write operation — the engine's "query language" for mutations
   * (reference §2.11: PUT/PATCH/DELETE/POST over documents and collection
@@ -153,21 +166,6 @@ final class HyperStorage(val spark: SparkSession, val log: DataFrame,
   private def latestFor(uri: String): DataFrame =
     Content.latestRows(log.filter(uriPruner(uri) && col("document_uri") === uri))
 
-  /** Body-free latest fold for PURE COUNTING reads ([[staticRow]]): fold
-    * only keys, revision and the tombstone flag through the max_by. The
-    * full [[latestFor]] carries the whole JSON body inside the max_by
-    * struct, so a counting aggregate over it shuffles and hash-aggregates
-    * payload bytes it never reads — and, for [[Content.fromTable]] logs,
-    * forces the to_json serialization of every row; dropping body lets
-    * column pruning reach the scan (measured: the no-filter guard agg
-    * 0.60 → 0.42 s at sf0.1). NOT used by [[query]]: its guard shares one
-    * persisted full fold with the items job instead (see there). */
-  private def latestNarrowFor(uri: String): DataFrame =
-    Content.latestRows(
-      log.filter(uriPruner(uri) && col("document_uri") === uri)
-        .select(col("document_uri"), col("item_id"), col("revision"),
-          col("is_deleted")))
-
   /** Time-travel view, COLLECTION-revision cutoff: every read — get,
     * query, pagination, static row — sees the state as of collection
     * revision `maxRevision` inclusive. Revisions are monotone per
@@ -215,27 +213,16 @@ final class HyperStorage(val spark: SparkSession, val log: DataFrame,
       .limit(1)
   }
 
-  /** S3 static-row facts for a collection/document URI, one small agg job
-    * over the pruned scan (the reference reads these from Cassandra static
-    * columns, Db.scala:179-183). */
-  private[graft] def staticRow(uri: String): Option[StaticRow] = {
-    val r = latestNarrowFor(uri).agg(
-      max("revision"),
-      max(when(col("item_id") === "" && col("is_deleted"), col("revision"))),
-      max(when(col("item_id") =!= "" && !col("is_deleted"), col("revision")))
-    ).collect()(0)
-    if (r.isNullAt(0)) None
-    else {
-      val tomb = if (r.isNullAt(1)) -1L else r.getLong(1)
-      val maxLive = if (r.isNullAt(2)) -1L else r.getLong(2)
-      Some(StaticRow(r.getLong(0), tomb, maxLive > tomb))
-    }
+  /** S3: collection-level revision, 0 for a URI never written (the
+    * reference keeps it as a Cassandra static column, Db.scala:179-183).
+    * One aggregate over the pruned raw log, no latest-revision fold: the
+    * latest row of every item is among the raw rows, and no fold drops
+    * the row holding the maximum, so both maxima agree. */
+  def revisionOf(uri: String): Long = {
+    val r = log.filter(uriPruner(uri) && col("document_uri") === uri)
+      .agg(max("revision")).collect()(0)
+    if (r.isNullAt(0)) 0L else r.getLong(0)
   }
-
-  /** S3: collection-level revision (max over the log — the reference keeps
-    * it as a Cassandra static column). */
-  def revisionOf(uri: String): Long =
-    staticRow(uri).map(_.staticRevision).getOrElse(0L)
 
   /** §3.1 collection query. Filter is an HQL expression over body fields;
     * itemIdFilter supports the S2 clustering-range form; `ascending=false`
@@ -275,10 +262,11 @@ final class HyperStorage(val spark: SparkSession, val log: DataFrame,
     // the first action — populates the cache; the items/boundary jobs
     // read it. MEMORY_AND_DISK: the cache is one collection's folded
     // working set (bounded by the collection, spills instead of OOM at
-    // scale). Released on the error paths; on the success path it lives
-    // until the caller's action has run (the session's cache clear or a
-    // later query eviction reclaims it — same contract as applyOps'
-    // persisted fold). Measured (sf0.1 orders, same-session A/B):
+    // scale). Released here on the error paths; on the success path the
+    // returned rows still read it, so the caller frees it through
+    // QueryResult.release once they are consumed (ApplyResult.release is
+    // the same contract for applyOps' fold). Measured (sf0.1 orders,
+    // same-session A/B):
     // o3-shape 1.12 → 0.77 s, o4-shape 1.34 → 0.79 s.
     val latest = latest1.persist(
       org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -399,7 +387,7 @@ final class HyperStorage(val spark: SparkSession, val log: DataFrame,
       if (sort.isEmpty || idSortOnly) filtered.orderBy(idOrder).limit(size)
       else sortAndLimit(filtered, sort, resolver, idOrder, size)
 
-    QueryResult(sorted.drop(helperCols: _*), staticRevision,
+    QueryResult(sorted.drop(helperCols: _*), staticRevision)(
       release = () => { latest.unpersist(); () })
   }
 
@@ -519,9 +507,6 @@ final class HyperStorage(val spark: SparkSession, val log: DataFrame,
   }
 }
 
-final case class StaticRow(
-    staticRevision: Long, tombRev: Long, hasVisibleItems: Boolean)
-
 object HyperStorage {
   val DefaultPageSize = 100            // HyperbusAdapter.scala:35
   val DefaultMaxSkippedRows = 10000    // HyperbusAdapter.scala:33
@@ -598,7 +583,6 @@ object HyperStorage {
     var collTombRev: Long =
       docRow.filter(_.is_deleted).map(_.revision).getOrElse(-1L)
     var staticRevision: Long = (state.map(_.revision) :+ 0L).max
-    var postCounter = 0L
     val out = Seq.newBuilder[ApplyOutcome]
 
     def visibleItem(id: String): Option[ContentRow] =
@@ -631,12 +615,14 @@ object HyperStorage {
           Some(FeedEvent(uri, itemId, s"feed:$feedMethod", rev, body)), None)
       }
 
-      // POST → PUT rewrite with generated increasing id
-      // (PrimaryWorker.scala:76-91); monotonic within the collection.
+      // POST → PUT rewrite with a generated increasing id
+      // (PrimaryWorker.scala:76-91): the revision the item is stamped
+      // with, zero-padded so ids order like revisions. Revisions are
+      // unique and increasing per collection across batches, unlike the
+      // caller's seq, which only orders the ops of one batch.
       val (method, itemId) = op.method.toUpperCase match {
         case "POST" if isCollection && itemIdRaw.isEmpty =>
-          postCounter += 1
-          ("PUT", f"${op.seq}%019d-$postCounter%04d")
+          ("PUT", f"${staticRevision + 1}%019d")
         case m => (m, itemIdRaw)
       }
 

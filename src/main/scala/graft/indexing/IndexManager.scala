@@ -3,7 +3,7 @@ package graft.indexing
 import graft.engine.{Conflict, Content, HyperStorage, NotFound, QueryResult,
   QuerySkippedRowsLimited, SortBy}
 import graft.hql._
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, StringType}
 
@@ -12,6 +12,11 @@ final case class IndexDef(
     collectionUri: String, indexId: String,
     sortBy: Seq[IndexSortItem], filterBy: Option[String],
     status: String, tableName: String)
+
+/** One committed index version: its rows and the collection revision they
+  * reflect — the revision of the latest content-log row the build read,
+  * raised by every feed batch merged since. */
+final case class IndexVersion(rows: DataFrame, revision: Long)
 
 object IndexDef {
   val StatusIndexing = "INDEXING"
@@ -50,7 +55,7 @@ final class IndexManager(val storage: HyperStorage,
 
   private var defs: Map[(String, String), IndexDef] =
     store.map(_.loadDefs()).getOrElse(Map.empty)
-  private var tables = Map.empty[(String, String), DataFrame]
+  private var tables = Map.empty[(String, String), IndexVersion]
 
   // finish interrupted deletes on load: a DELETING def whose drop crashed
   // would otherwise block re-creation of the id forever (409 on retry)
@@ -66,13 +71,18 @@ final class IndexManager(val storage: HyperStorage,
   def indexDef(uri: String, indexId: String): Option[IndexDef] =
     defs.get((uri, indexId))
 
-  def indexTable(uri: String, indexId: String): Option[DataFrame] =
+  /** The committed version of a NORMAL index, re-opened per call in the
+    * store mode (one manifest read: rows and revision of one version). */
+  def indexVersion(uri: String, indexId: String): Option[IndexVersion] =
     store match {
       case Some(st) =>
         defs.get((uri, indexId)).filter(_.status == StatusNormal)
-          .map(_ => st.openTable(uri, indexId))
+          .map(_ => st.openVersion(uri, indexId))
       case None => tables.get((uri, indexId))
     }
+
+  def indexTable(uri: String, indexId: String): Option[DataFrame] =
+    indexVersion(uri, indexId).map(_.rows)
 
   /** Typed sort-column expressions for a body column. */
   private def sortCols(sortBy: Seq[IndexSortItem], body: Column): Seq[Column] = {
@@ -122,18 +132,28 @@ final class IndexManager(val storage: HyperStorage,
     store.foreach(_.saveDefs(defs.values))
     try {
       // apply the storage's partition pruner like every per-URI read —
-      // a ContentStore-backed build scans one directory partition
+      // a ContentStore-backed build scans one directory partition. The
+      // collection revision the index reflects is observed on that scan
+      // by the build job itself: no separate job over the content log
+      val scanned = new Observation()
       val items = Content.visible(
           Content.latestRows(storage.log.filter(
-            storage.uriPruner(uri) && col("document_uri") === uri)))
+              storage.uriPruner(uri) && col("document_uri") === uri)
+            .observe(scanned, max("revision").as("revision"))))
         .filter(col("item_id") =!= "")
       val built = materialize(items, indexing)
+      // read only after the build job ran (get blocks until then); a scan
+      // with no rows (or one the optimizer proved empty) reports none
+      def revision: Long = scanned.get.get("revision") match {
+        case Some(r: Long) => r
+        case _ => 0L
+      }
       store match {
-        case Some(st) => st.writeTable(uri, indexId, built)
+        case Some(st) => st.writeTable(uri, indexId, built, revision)
         case None =>
           val table = built.persist()
           table.count() // force the build
-          tables += (uri, indexId) -> table
+          tables += (uri, indexId) -> IndexVersion(table, revision)
       }
       val normal = indexing.copy(status = StatusNormal)
       defs += (uri, indexId) -> normal
@@ -142,7 +162,7 @@ final class IndexManager(val storage: HyperStorage,
     } catch {
       case e: Throwable =>
         defs -= ((uri, indexId)) // failed build leaves no phantom def
-        tables.get((uri, indexId)).foreach(_.unpersist())
+        tables.get((uri, indexId)).foreach(_.rows.unpersist())
         tables -= ((uri, indexId))
         store.foreach { st => st.dropTable(uri, indexId); st.saveDefs(defs.values) }
         throw e
@@ -172,7 +192,7 @@ final class IndexManager(val storage: HyperStorage,
       throw new NotFound(s"index: $uri/$indexId"))
     defs += (uri, indexId) -> d.copy(status = StatusDeleting)
     store.foreach(_.saveDefs(defs.values)) // DELETING survives a crash mid-drop
-    tables.get((uri, indexId)).foreach(_.unpersist())
+    tables.get((uri, indexId)).foreach(_.rows.unpersist())
     tables -= ((uri, indexId))
     store.foreach(_.dropTable(uri, indexId))
     defs -= ((uri, indexId))
@@ -202,21 +222,24 @@ final class IndexManager(val storage: HyperStorage,
         Seq("document_uri"), "left_semi")
       .persist()
     try {
-      // one job answers both driver-side questions (result bounded by
-      // defs.size): which indexed collections the batch touches, and which
+      // one job answers every driver-side question (result bounded by
+      // defs.size): which indexed collections the batch touches, which
       // carry a collection-level tombstone (item_id = "") — those cascade
       // to a full index drop (PrimaryWorker.scala:310-328;
-      // IndexingSpec.scala:655-692)
+      // IndexingSpec.scala:655-692) — which item-hash partitions each
+      // touches, and the collection revision each reaches
       val uriStats = relevant.groupBy("document_uri")
         .agg(
           max(col("item_id") === "" && col("method") === "feed:delete")
             .as("coll_deleted"),
           collect_set(when(col("item_id") =!= "",
-            IndexStore.ipartCol(col("item_id")))).as("iparts"))
+            IndexStore.ipartCol(col("item_id")))).as("iparts"),
+          max("revision"))
         .collect()
       val touchedUris = uriStats.map(_.getString(0)).toSet
       val touchedParts = uriStats
         .map(r => r.getString(0) -> r.getSeq[Int](2)).toMap
+      val batchRevision = uriStats.map(r => r.getString(0) -> r.getLong(3)).toMap
       val deletedCollections =
         uriStats.filter(_.getBoolean(1)).map(_.getString(0)).toSet
       deletedCollections.foreach(dropCollectionIndexes)
@@ -235,18 +258,19 @@ final class IndexManager(val storage: HyperStorage,
           case Some(st) =>
             // partition-scoped on-disk merge; lineage ends at the parquet
             st.mergeTable(uri, id, touchedItems, replacement,
-              knownParts = touchedParts.get(uri))
+              batchRevision(uri), knownParts = touchedParts.get(uri))
           case None =>
             val old = tables((uri, id))
-            val updated = old
+            val updated = old.rows
               .join(broadcast(touchedItems), Seq("item_id"), "left_anti")
               .unionByName(replacement)
               // localCheckpoint (eager) materializes AND truncates lineage —
               // without it N batches stack N anti-join/union layers and every
               // downstream action replays the whole chain
               .localCheckpoint()
-            old.unpersist()
-            tables += (uri, id) -> updated
+            old.rows.unpersist()
+            tables += (uri, id) -> IndexVersion(updated,
+              math.max(old.revision, batchRevision(uri)))
         }
       }
     } finally {
@@ -435,7 +459,8 @@ object QueryPlanner {
       (p, im.storage.query(uri, filter, sort, size, skipMax = skipMax))
     } else {
       val d = im.indexDef(uri, p.source).get
-      val table = im.indexTable(uri, p.source).get
+      val version = im.indexVersion(uri, p.source).get
+      val table = version.rows
       val resolver = FieldResolver.json(col("body"))
       val pushed = p.pushdown.foldLeft(table)((df, ff) => df.filter(filterColumn(ff)))
       val residualPred = filter.map(f => Translator.predicate(f, resolver))
@@ -463,8 +488,7 @@ object QueryPlanner {
             .limit(size)
         else HyperStorage.sortAndLimit(residual, sort, resolver,
           col("item_id").asc, size)
-      val revision = im.storage.revisionOf(uri)
-      (p, QueryResult(limited, revision))
+      (p, QueryResult(limited, version.revision)())
     }
   }
 
@@ -498,7 +522,8 @@ object QueryPlanner {
       (p, im.storage.queryAfter(uri, lastRow, filter, sort, size))
     else {
       val d = im.indexDef(uri, p.source).get
-      val table = im.indexTable(uri, p.source).get
+      val version = im.indexVersion(uri, p.source).get
+      val table = version.rows
       val indexSortBy = d.sortBy :+ DefIdSort
       val lastBody = Option(lastRow.getAs[String]("body")).getOrElse("{}")
       // run the reference's shrinking-prefix recursion to fixpoint:
@@ -518,7 +543,7 @@ object QueryPlanner {
         }.takeWhile(_.nonEmpty).toSeq
       if (resumeSets.isEmpty) {
         // boundary already at/past the query's own range end — no page 2
-        (p, QueryResult(table.filter(lit(false)), im.storage.revisionOf(uri)))
+        (p, QueryResult(table.filter(lit(false)), version.revision)())
       } else {
         val afterPred = resumeSets.map { s =>
           IndexLogic.mergeLeastQueryFilterFields(p.pushdown, s)
@@ -542,7 +567,7 @@ object QueryPlanner {
           else
             residual.orderBy(orderCols(scanOrder(d, reversed = false)): _*)
               .limit(size)
-        (p, QueryResult(limited, im.storage.revisionOf(uri)))
+        (p, QueryResult(limited, version.revision)())
       }
     }
   }

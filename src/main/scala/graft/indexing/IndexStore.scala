@@ -17,12 +17,22 @@ import java.net.{URLDecoder, URLEncoder}
   *   <path>/defs                     — driver-written def rows (atomic swap)
   *   <path>/tables/<enc(uri)>/<enc(id)>/
   *     _schema.json                  — driver-written Spark schema JSON
-  *     _manifest                     — lines "ipart<TAB>root": which staging
+  *     _manifest                     — a line "revision<TAB>N": the
+  *                                     collection revision the version
+  *                                     reflects; then lines
+  *                                     "ipart<TAB>root": which staging
   *                                     root currently owns each partition
   *     w-<G>/ipart=N/…parquet        — immutable staging roots, one per
   *                                     build/merge job
   * }}}
   * Index rows are hash-clustered by `crc32(item_id) % IndexPartitions`.
+  *
+  * The manifest's revision line is the commit record of the index as a
+  * sink: the collection revision its rows reflect (the latest revision of
+  * the content log it was built from, raised by every merged feed batch).
+  * Index-served reads report it instead of re-deriving the revision from
+  * the content log, and since one manifest read yields both the parts and
+  * the revision, they always come from the same version.
   *
   * The item-hash partitioning makes incremental maintenance
   * PARTITION-SCOPED: a feed batch touching k items reads and rewrites at
@@ -46,7 +56,7 @@ import java.net.{URLDecoder, URLEncoder}
   * Single writer per store path, mirroring the reference's one-owner-per-
   * shard discipline (ShardProcessor); readers may open concurrently, but a
   * DataFrame held across a later commit may see its files GC'd — re-open
-  * per query, as [[IndexManager.indexTable]] does.
+  * per query, as [[IndexManager.indexVersion]] does.
   */
 final class IndexStore(val spark: SparkSession, val path: String) {
   import IndexStore._
@@ -105,21 +115,28 @@ final class IndexStore(val spark: SparkSession, val path: String) {
 
   private def manifestPath(dir: String) = s"$dir/_manifest"
 
-  /** ipart → staging-root name (relative to the table dir). */
-  private def loadManifest(dir: String): Map[Int, String] =
-    Option(readSwapped(fs, manifestPath(dir))).map(_.split("\n").iterator
-      .filter(_.nonEmpty).map { line =>
-        val Array(p, root) = line.split("\t", -1)
-        p.toInt -> root
-      }.toMap).getOrElse(Map.empty)
+  /** The committed version a manifest names. A manifest without a
+    * revision line predates the revision record: fail with intent, like
+    * [[loadDefs]] on the old defs layout, rather than guess a revision. */
+  private def loadManifest(dir: String): Manifest = {
+    val lines = Option(readSwapped(fs, manifestPath(dir))).toSeq
+      .flatMap(_.split("\n")).filter(_.nonEmpty).map(_.split("\t", -1))
+    val revision = lines.collectFirst { case Array(RevisionKey, r) => r.toLong }
+      .getOrElse(throw new IllegalStateException(
+        s"${manifestPath(dir)} records no revision; rebuild the index store"))
+    Manifest(lines.collect {
+      case Array(p, root) if p != RevisionKey => p.toInt -> root
+    }.toMap, revision)
+  }
 
   /** THE commit point: a table version is exactly what its manifest lists.
     * After the atomic swap, unreferenced staging roots (superseded
     * partitions, aborted writes) are garbage. */
-  private def commitManifest(dir: String, m: Map[Int, String]): Unit = {
+  private def commitManifest(dir: String, m: Manifest): Unit = {
     writeSwapped(fs, manifestPath(dir),
-      m.toSeq.sorted.map { case (p, root) => s"$p\t$root" }.mkString("\n"))
-    val live = m.values.toSet
+      (s"$RevisionKey\t${m.revision}" +:
+        m.parts.toSeq.sorted.map { case (p, root) => s"$p\t$root" }).mkString("\n"))
+    val live = m.parts.values.toSet
     Option(fs.globStatus(new Path(s"$dir/w-*"))).getOrElse(Array.empty)
       .map(_.getPath).filterNot(p => live(p.getName))
       .foreach(fs.delete(_, true))
@@ -147,14 +164,16 @@ final class IndexStore(val spark: SparkSession, val path: String) {
     * schema is a pure function of its IndexDef — a schema CHANGE always
     * goes through dropTable (delete + create) — so the
     * new-schema-over-old-manifest crash window rewrites an identical
-    * schema and is benign. */
-  def writeTable(uri: String, indexId: String, rows: DataFrame): Unit = {
+    * schema and is benign. `revision` is evaluated after the rows are
+    * written, so it may read an observation of the write job. */
+  def writeTable(uri: String, indexId: String, rows: DataFrame,
+      revision: => Long): Unit = {
     val dir = tableDir(uri, indexId)
     val root = nextRoot(dir)
     writePartitioned(rows, s"$dir/$root")
     writeSwapped(fs, schemaAnchor(dir), rows.schema.json)
-    commitManifest(dir,
-      writtenParts(new Path(dir, root)).map(_ -> root).toMap)
+    commitManifest(dir, Manifest(
+      writtenParts(new Path(dir, root)).map(_ -> root).toMap, revision))
   }
 
   /** Cluster rows by their target directory before the partitioned write:
@@ -169,11 +188,15 @@ final class IndexStore(val spark: SparkSession, val path: String) {
     ()
   }
 
-  /** Open the committed table version (manifest snapshot) with the
-    * anchored schema — zero-row tables and merge-emptied partitions read
-    * as empty DataFrames, not errors. */
-  def openTable(uri: String, indexId: String): DataFrame =
-    openRaw(tableDir(uri, indexId)).drop("ipart")
+  /** Open the committed table version: one manifest read yields its rows,
+    * with the anchored schema — zero-row tables and merge-emptied
+    * partitions read as empty DataFrames, not errors — and the collection
+    * revision they reflect. */
+  def openVersion(uri: String, indexId: String): IndexVersion = {
+    val dir = tableDir(uri, indexId)
+    val m = loadManifest(dir)
+    IndexVersion(openParts(dir, m.parts, m.parts.keys).drop("ipart"), m.revision)
+  }
 
   /** Committed rows of the given partitions only (directory-level pruning
     * through the manifest — no file listing outside the named parts). */
@@ -189,41 +212,43 @@ final class IndexStore(val spark: SparkSession, val path: String) {
       spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema))
   }
 
-  private def openRaw(dir: String): DataFrame = {
-    val m = loadManifest(dir)
-    openParts(dir, m, m.keys)
-  }
-
   def dropTable(uri: String, indexId: String): Unit = {
     fs.delete(new Path(tableDir(uri, indexId)), true)
     ()
   }
 
   /** Partition-scoped merge: drop all index rows of `touchedItems`, insert
-    * `replacement`, touching only the item-hash partitions involved. The
-    * new staging root fully materializes BEFORE the manifest swap, so the
+    * `replacement`, touching only the item-hash partitions involved, and
+    * raise the committed revision to `revision` (the batch's). The new
+    * staging root fully materializes BEFORE the manifest swap, so the
     * scoped self-read never races the rewrite, and a crash at any point
     * leaves the previous committed version intact (atomicity across all
     * touched partitions — the manifest swap is the single commit point). */
   def mergeTable(uri: String, indexId: String, touchedItems: DataFrame,
-      replacement: DataFrame, knownParts: Option[Seq[Int]] = None): Unit = {
+      replacement: DataFrame, revision: Long,
+      knownParts: Option[Seq[Int]] = None): Unit = {
     val dir = tableDir(uri, indexId)
+    val m = loadManifest(dir)
+    val rev = math.max(m.revision, revision)
     // bounded by IndexPartitions; callers that already aggregated the
     // touched item-hash partitions (applyFeed's one-pass uri stats) pass
     // them in and skip this job
     val parts = knownParts.getOrElse(touchedItems
       .select(ipartCol(col("item_id")).as("ipart")).distinct()
       .collect().map(_.getInt(0)).toSeq)
-    if (parts.isEmpty) return
-    val m = loadManifest(dir)
-    val scoped = openParts(dir, m, parts).drop("ipart")
+    if (parts.isEmpty) {
+      // no rows to rewrite, but the batch still moved the collection on
+      commitManifest(dir, m.copy(revision = rev))
+      return
+    }
+    val scoped = openParts(dir, m.parts, parts).drop("ipart")
     val updated = scoped
       .join(broadcast(touchedItems.select("item_id")), Seq("item_id"), "left_anti")
       .unionByName(replacement)
     val root = nextRoot(dir)
     writePartitioned(updated, s"$dir/$root")
-    val merged = (m -- parts) ++
-      writtenParts(new Path(dir, root)).map(_ -> root)
+    val merged = Manifest((m.parts -- parts) ++
+      writtenParts(new Path(dir, root)).map(_ -> root), rev)
     commitManifest(dir, merged)
     compactIfScattered(dir, merged)
   }
@@ -232,14 +257,15 @@ final class IndexStore(val spark: SparkSession, val path: String) {
     * scattered over more than [[MaxRoots]] staging roots, rewrite it into
     * one root (cost: one full-table job, amortized over the ≥MaxRoots
     * merges that caused it — the same background-compaction bargain
-    * cluster table formats strike). */
-  private def compactIfScattered(dir: String, m: Map[Int, String]): Unit =
-    if (m.values.toSet.size > MaxRoots) {
-      val rows = openParts(dir, m, m.keys).drop("ipart")
+    * cluster table formats strike). The rows are unchanged, so the
+    * revision carries forward. */
+  private def compactIfScattered(dir: String, m: Manifest): Unit =
+    if (m.parts.values.toSet.size > MaxRoots) {
+      val rows = openParts(dir, m.parts, m.parts.keys).drop("ipart")
       val root = nextRoot(dir)
       writePartitioned(rows, s"$dir/$root")
-      commitManifest(dir,
-        writtenParts(new Path(dir, root)).map(_ -> root).toMap)
+      commitManifest(dir, m.copy(parts =
+        writtenParts(new Path(dir, root)).map(_ -> root).toMap))
     }
 }
 
@@ -252,6 +278,13 @@ object IndexStore {
   /** Compaction threshold: maximum staging roots a table may scatter
     * across before it is rewritten into one. */
   val MaxRoots = 8
+
+  /** A table version as its manifest records it: ipart → staging-root
+    * name (relative to the table dir), and the collection revision. */
+  private final case class Manifest(parts: Map[Int, String], revision: Long)
+
+  /** The manifest line key of the revision record. */
+  private val RevisionKey = "revision"
 
   def ipartCol(itemId: Column): Column =
     pmod(crc32(itemId), lit(IndexPartitions)).cast("int")

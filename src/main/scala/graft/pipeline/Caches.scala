@@ -25,4 +25,20 @@ object Caches {
     intermediates.foreach(_.unpersist())
     spark.createDataFrame(rows.toSeq.asJava, result.schema)
   }
+
+  /** Release the executor block store backing a `localCheckpoint()`ed
+    * frame. `df.unpersist()` is a cache-manager uncache and does NOT
+    * touch local-checkpoint RDD blocks (they were persisted at the RDD
+    * layer, not registered with the CacheManager) — without this an
+    * iterative loop holds O(rounds) superseded table copies on executors
+    * until the ContextCleaner GCs the RDD references. Non-LogicalRDD
+    * plans (a frame that was never checkpointed) are a no-op, and the
+    * release is async (blocking = false) — the caller never waits on
+    * block removal. */
+  def releaseLocalCheckpoint(df: DataFrame): Unit =
+    df.queryExecution.logical match {
+      case lr: org.apache.spark.sql.execution.LogicalRDD =>
+        lr.rdd.unpersist(blocking = false)
+      case _ => ()
+    }
 }

@@ -543,22 +543,6 @@ object Dedup {
     * Input columns `id_a`/`id_b`; output (id, cluster_id), covering only
     * ids that appear in some pair — callers left-join their full table
     * and coalesce to the row's own id (singleton clusters). */
-  /** Release the executor block store backing a `localCheckpoint()`ed
-    * frame. `df.unpersist()` is a cache-manager uncache and does NOT
-    * touch local-checkpoint RDD blocks (they were persisted at the RDD
-    * layer, not registered with the CacheManager) — without this the
-    * iterative loops below hold O(rounds) superseded table copies on
-    * executors until the ContextCleaner GCs the RDD references. Non-
-    * LogicalRDD plans (a frame that was never checkpointed) are a no-op,
-    * and the release is async (blocking = false) — the loop never waits
-    * on block removal. */
-  private[pipeline] def releaseLocalCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.logical match {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        lr.rdd.unpersist(blocking = false)
-      case _ => ()
-    }
-
   def duplicateClusters(pairs: DataFrame): DataFrame = {
     // persist the symmetrized edges PARTITIONED BY THE JOIN KEY: distinct()
     // leaves the cache hash(src, dst)-partitioned, which satisfies no
@@ -607,7 +591,7 @@ object Dedup {
       changed = if (round % 2 == 0) next.filter(col("cluster_id") =!= col("prev")).count() else 1L
       // release the superseded round's checkpoint blocks NOW — without
       // this, executors hold O(rounds) full label-table copies until GC
-      releaseLocalCheckpoint(labels)
+      Caches.releaseLocalCheckpoint(labels)
       labels = next
     }
     edges.unpersist()
@@ -695,7 +679,7 @@ object Dedup {
           .filter((col("p") === 1 && col("c") > 0) || col("c") > 1)
         offenders.limit(1).count() == 0
       }
-      releaseLocalCheckpoint(edges)
+      Caches.releaseLocalCheckpoint(edges)
       edges = next
     }
     edges.select(col("v").as("id"), col("u").as("cluster_id"))

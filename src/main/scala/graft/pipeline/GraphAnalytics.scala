@@ -187,10 +187,8 @@ object GraphAnalytics {
     // entry; superseded checkpoint blocks remain ContextCleaner-owned
     // as documented above).
     if (danglingRedistribution) {
-      val out = ranks.select(col("node"), col("r").as("rank_scaled"))
-        .localCheckpoint()
-      withDeg.unpersist(blocking = false)
-      out
+      try ranks.select(col("node"), col("r").as("rank_scaled")).localCheckpoint()
+      finally withDeg.unpersist(blocking = false)
     } else ranks.select(col("node"), col("r").as("rank_scaled"))
   }
 
@@ -290,10 +288,9 @@ object GraphAnalytics {
       if (i < iters) ranks = ranks.localCheckpoint(eager = false)
     }
     // same edge-cache release as [[pageRank]]: eager final cut, then drop
-    val out = ranks.select(col("node"), col("r").as("rank_scaled"))
-      .localCheckpoint()
-    withDeg.unpersist(blocking = false)
-    out
+    // (also when the cut throws)
+    try ranks.select(col("node"), col("r").as("rank_scaled")).localCheckpoint()
+    finally withDeg.unpersist(blocking = false)
   }
 
   /** Exact triangle count per node over an undirected pair graph — the

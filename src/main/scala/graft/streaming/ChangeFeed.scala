@@ -33,8 +33,9 @@ object ChangeFeed {
   /** ST6: assign gapless per-document INGEST revisions to a stream of
     * write ops. State = last revision per URI (a single Long). Ops inside
     * a batch are ordered by `seq`; the method is rewritten to its feed:*
-    * form. POST id-gen is deterministic (seq-derived), so a replayed batch
-    * emits identical events (SURVEY §7.4 risk 1).
+    * form. A POST's id is its zero-padded revision, as on the apply path:
+    * deterministic, so a replayed batch emits identical events (SURVEY
+    * §7.4 risk 1), and unique per collection across batches.
     *
     * CONTRACT: this is the ingest-ordering stage — the revision sequence
     * numbers every arriving op. Whether an op ultimately applies (PATCH of
@@ -51,13 +52,11 @@ object ChangeFeed {
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
         (uri: String, it: Iterator[WriteOp], state: GroupState[Long]) =>
           var rev = state.getOption.getOrElse(0L)
-          var postCounter = 0L
           val out = it.toSeq.sortBy(_.seq).flatMap { op =>
             val (_, rawItem) = HyperStorage.splitPath(op.path)
             val rewritten = op.method.toUpperCase match {
               case "POST" if HyperStorage.isCollectionUri(uri) && rawItem.isEmpty =>
-                postCounter += 1
-                Some(("put", f"${op.seq}%019d-$postCounter%04d"))
+                Some(("put", f"${rev + 1}%019d")) // the revision it gets
               case "POST" => None // batch path: method-not-allowed
               case m => Some((m.toLowerCase, rawItem))
             }

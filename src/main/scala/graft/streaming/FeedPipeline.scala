@@ -84,6 +84,13 @@ object FeedPipeline {
       else full.log
     val store = new HyperStorage(s, stateLog, full.uriPruner)
     val r = store.applyOps(batch, tsMillis)
+    // checkpoints taken so far, released with the fold when the batch ends
+    var checkpoints = List.empty[DataFrame]
+    def checkpoint(df: DataFrame): DataFrame = {
+      val c = df.localCheckpoint()
+      checkpoints ::= c
+      c
+    }
     try {
       // localCheckpoint (eager) BOTH outputs before any write: writing to
       // storePath below invalidates every cache whose lineage reads it
@@ -91,8 +98,8 @@ object FeedPipeline {
       // persisted fold would silently RECOMPUTE against the just-written
       // files — double-applying the batch. Checkpointing cuts the lineage
       // to materialized partitions with no path dependence.
-      val feed = r.feed.localCheckpoint()
-      val appended = r.appended.localCheckpoint()
+      val feed = checkpoint(r.feed)
+      val appended = checkpoint(r.appended)
       // 1. durable intent BEFORE any effect (write-ahead): overwrites this
       // BATCH's partition, clearing a crashed attempt's leftovers. Keyed
       // by the batch identity itself, NOT dt_quantum — two batches can
@@ -145,7 +152,10 @@ object FeedPipeline {
       // total IS the completed total once step 4 commits
       reg.add("feed.events.completed", pub.total.value)
       ()
-    } finally r.release()
+    } finally {
+      checkpoints.foreach(graft.pipeline.Caches.releaseLocalCheckpoint)
+      r.release()
+    }
   }
 
   /** Current per-transaction ledger state (intent ∪ completions folded;

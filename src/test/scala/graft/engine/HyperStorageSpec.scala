@@ -129,6 +129,17 @@ class HyperStorageSpec extends AnyFreeSpec with Matchers with SparkFixture {
       bodies(st, "docs~")(ids.head) should include(s""""id":"${ids.head}"""")
     }
 
+    "POST ids stay unique across batches that each number their ops from 1" in {
+      val r1 = store.applySeq(Seq(WriteOp(1, "POST", "docs~", """{"a":1}""")))
+      val r2 = HyperStorage(spark, r1.log)
+        .applySeq(Seq(WriteOp(1, "POST", "docs~", """{"a":2}""")))
+      val got = bodies(HyperStorage(spark, r2.log), "docs~").toSeq.sorted
+      // two distinct items, ids increasing in write order: the second
+      // POST did not overwrite the first
+      got.map(_._2.take(7)) shouldBe Seq("""{"a":1,""", """{"a":2,""")
+      got.map(_._1).distinct should have size 2
+    }
+
     "DELETE tombstones an item; GET no longer sees it" in {
       val r = store.applySeq(Seq(
         WriteOp(1, "PUT", "docs~/a", """{"x":1}"""),

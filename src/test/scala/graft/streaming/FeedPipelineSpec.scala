@@ -149,6 +149,24 @@ class FeedPipelineSpec extends AnyFreeSpec with Matchers with SparkFixture {
       reg.get("feed.events.completed") shouldBe 3
     }
 
+    "releases every cache it takes: no persisted RDD outlives a batch" in {
+      import spark.implicits._
+      import graft.indexing.{IndexManager, IndexStore}
+      TestSink.reset()
+      val (storePath, ledgerPath, _) = paths()
+      val im = new IndexManager(ContentStore.openOrEmpty(spark, storePath),
+        Some(new IndexStore(spark, tmp("fp-idx"))))
+      im.createIndex("c~", "all", Nil, None)
+      val before = spark.sparkContext.getPersistentRDDs.keySet
+      FeedPipeline.runBatch(
+        Seq(WriteOp(1, "PUT", "c~/a", """{"x":1}"""),
+          WriteOp(2, "POST", "c~", """{"x":2}""")).toDS(),
+        60000L, storePath, ledgerPath, Some(im))(TestSink.send)
+      // (a difference, not an equality: the ContextCleaner may drop
+      // earlier specs' caches meanwhile)
+      (spark.sparkContext.getPersistentRDDs.keySet -- before) shouldBe empty
+    }
+
     "crash between publish and completion: incomplete ledger, clean replay" in {
       implicit val sql = spark.sqlContext
       import spark.implicits._
