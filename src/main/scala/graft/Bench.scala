@@ -2,76 +2,14 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
-/** Driver-run benchmark: by default EVERY registered query on
-  * SPARK_GRAFT_SF_DIR (the full correctness board — a selective headline
-  * can silently overstate progress), one JSON line on stdout. Set
-  * SPARK_GRAFT_BENCH_HEADLINE=1 to time only the historical headline
-  * subset (kept for round-over-round comparison of the long-lived
-  * entries). */
+/** Driver-run benchmark: EVERY registered query on SPARK_GRAFT_SF_DIR (the
+  * full correctness board — a selective headline can silently overstate
+  * progress), one JSON line on stdout. */
 object Bench {
-  /** The historical scale-representative subset (index build+scan, big
-    * agg/join/window, dedup, ANN, text) — the pre-r10 headline, retained
-    * as an opt-in cut. */
-  val headline: Seq[String] = Seq(
-    "q1_agg", "q3_shipping", "q5_local_supplier", "q7_stats",
-    "f1_filter_numeric", "o2_sort_multifield", "o4_topk_overfetch",
-    "s4_index_scan", "m6_index_build", "m8_index_maintenance",
-    "m1_put_get", "m4_delete_items",
-    "dedup_exact", "dedup_minhash_lsh", "dedup_simhash",
-    "ann_cosine_topk", "ann_lsh_topk", "ann_ivf_topk", "ann_pq_topk",
-    "ann_ivfpq_topk",
-    "text_quality", "text_fingerprint", "text_langid", "text_corpus_filter",
-    "text_repetition", "text_redact_pii",
-    "text_decontaminate", "pack_sequences", "dedup_semantic",
-    "pipeline_train_prep",
-    "sample_mix", "embed_kmedians", "text_top_terms", "dedup_substring",
-    "dedup_incremental", "dedup_bloom_prefilter", "src_json_roundtrip",
-    "corpus_diff",
-    "layout_zorder", "text_line_dedup",
-    "text_classifier", "stat_corpus_overlap", "text_ngram_novelty",
-    "text_c4_clean", "text_bigram_lift", "url_domain_cap", "text_html_strip",
-    "w1_window_rank", "e1_sessionize", "e3_asof_attribution", "e5_funnel",
-    "e6_retention", "st5_quantize",
-    "e4_interval_join", "sample_stratified", "sample_temperature",
-    "stat_vocab_coverage", "stat_quantiles",
-    "stat_source_drift", "stat_kmv_distinct", "stat_kmv_incremental",
-    "stat_heavy_hitters", "stat_rollup",
-    "text_bm25", "sample_importance", "sample_shuffle", "text_normalize",
-    "stat_cms", "embed_project", "e7_count_anomaly", "stat_ks_drift",
-    "text_bm25_batch", "e8_asof_forward", "st14_trending_topk",
-    "text_bpe_learn", "text_bpe_vocab", "text_bpe_count", "text_bpe_encode",
-    "stat_lsh_bands",
-    "e9_ewma_smooth", "q8_market_share", "w2_running_total",
-    "dedup_norm_survivor", "stat_token_gini", "stat_hll_overlap", "dedup_minhash_est", "pipeline_rag_prep", "e10_user_paths", "ann_ivf_trained_topk", "dedup_cdc_chunks", "embed_outliers", "embed_quantize_sq8", "text_langid_confusion", "dedup_semantic_trained", "st17_stream_anomaly", "e11_markov_transitions", "text_bigram_next", "stat_vocab_growth",
-    "ann_knn_graph", "text_decontaminate_fuzzy", "stat_cube",
-    "stat_unpivot",
-    "graph_pagerank", "embed_robust_scale", "q4_order_priority",
-    "q13_customer_distribution", "w3_moving_avg",
-    "dedup_containment", "w4_rank_family", "e12_gap_fill",
-    "stat_winsorize", "src_bucketed_join", "st18_stream_static_join",
-    "stat_grouping_sets", "s2_asof_scan")
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // default to the machine's cores (capped at 32): an unset env var must
-    // not silently throttle the bench to local[4]. Parsed here: the value
-    // lands unquoted in the JSON line below, so a non-integer setting must
-    // fail now rather than leave that line unparseable
-    val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(v => v.trim.toIntOption
-        .getOrElse(sys.error(s"SPARK_GRAFT_CPUS must be an integer, got '$v'")))
-      .getOrElse(math.min(Runtime.getRuntime.availableProcessors, 32))
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus.toLong)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // events() MICROS normalization is value-preserving only under UTC;
-      // pin it in the builder, not just the launcher's -D flag
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = GraftSession.cpus
+    val spark = GraftSession.local(cpus)
     // steady-state warmup: JIT the parquet reader / codegen / shuffle
     // machinery once so the first timed query doesn't absorb JVM startup
     locally {
@@ -81,10 +19,7 @@ object Bench {
       n.join(r, col("n_regionkey") === col("r_regionkey"))
         .groupBy("r_name").count().collect()
     }
-    val names =
-      if (sys.env.contains("SPARK_GRAFT_BENCH_HEADLINE"))
-        headline.filter(SparkEntry.queries.contains)
-      else SparkEntry.queries.keys.toSeq.sorted
+    val names = SparkEntry.queries.keys.toSeq.sorted
     def timeOne(name: String): Double = {
       val t0 = System.nanoTime()
       val ok =

@@ -7,7 +7,6 @@ import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 
 /** Diagnostic harness for the intra-session throughput collapse: runs a
   * sequence of registered queries in ONE warm session and prints, per run,
@@ -82,8 +81,6 @@ object PerfProbe {
   def main(args: Array[String]): Unit = {
     val stallSec = sys.env.getOrElse("GRAFT_PROBE_STALL_SEC", "30").toInt
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(Runtime.getRuntime.availableProcessors, 32).toString)
     // "name x3" → name, name, name
     val plan: Seq[String] = {
       val raw = if (args.nonEmpty) args.toSeq else Seq("dedup_minhash_lsh", "x6")
@@ -96,14 +93,7 @@ object PerfProbe {
       }
       out.toSeq
     }
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(GraftSession.cpus)
     val listener = new TaskMetricsListener
     spark.sparkContext.addSparkListener(listener)
 

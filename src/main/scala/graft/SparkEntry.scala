@@ -91,12 +91,16 @@ object SparkEntry {
     * persisted sketch tables. The first call in a JVM pays the build; the
     * bench's second full pass then times the operator alone, so its
     * min-of-two-passes records the query, not its scaffolding. Verify runs
-    * each entry once per JVM and is unaffected. Keys include the session
-    * identity so a stale memo can never cross SparkSessions (specs). */
-  private val prepCache = scala.collection.concurrent.TrieMap[String, Any]()
+    * each entry once per JVM and is unaffected. The memo is kept per
+    * session object (a weak map, as EngineMetrics keys its registries), so
+    * a memo can never cross SparkSessions: a memoized index manager points
+    * into a temp dir that stopping its session's context deletes. */
+  private val prepCache: java.util.Map[SparkSession,
+      scala.collection.concurrent.TrieMap[String, Any]] =
+    java.util.Collections.synchronizedMap(new java.util.WeakHashMap())
   private def prepared[T](s: SparkSession, key: String)(build: => T): T =
-    prepCache.getOrElseUpdate(
-      s"${System.identityHashCode(s)}:$key", build).asInstanceOf[T]
+    prepCache.computeIfAbsent(s, _ => scala.collection.concurrent.TrieMap())
+      .getOrElseUpdate(key, build).asInstanceOf[T]
 
   /** The deterministic-PNG media fixture shared by mm_decode and
     * mm_resize: one congruence-pixel PNG per document, encoded once per

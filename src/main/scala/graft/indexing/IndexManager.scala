@@ -4,6 +4,7 @@ import graft.engine.{Conflict, Content, HyperStorage, NotFound, QueryResult,
   QuerySkippedRowsLimited, SortBy}
 import graft.hql._
 import org.apache.spark.sql.{Column, DataFrame, Observation}
+import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, StringType}
 
@@ -44,25 +45,34 @@ object IndexDef {
   * into typed columns (text / decimal(38,18)) — scans sort and push
   * predicates on native columns, no per-row JSON parsing.
   *
-  * With a [[IndexStore]] attached, defs and tables are DURABLE parquet: a
-  * restarted manager over the same store path sees every NORMAL index, and
-  * maintenance is a partition-scoped on-disk merge (bounded lineage). The
-  * store-less mode keeps everything in cached DataFrames for tests and
-  * one-shot jobs, truncating lineage per batch via localCheckpoint. */
+  * Defs and tables live in one [[IndexStore]] (manifest-committed parquet):
+  * a restarted manager over the same store path sees every NORMAL index,
+  * and maintenance is a partition-scoped on-disk merge (bounded lineage).
+  * Passing no store selects only WHERE they live, never a different code
+  * path: a fresh store in a uniquely named directory under the driver's
+  * per-context temp dir, which stopping the SparkContext deletes. That
+  * default is local-mode only (cluster executors cannot see a driver-local
+  * directory), so a cluster deployment passes a store on shared storage. */
 final class IndexManager(val storage: HyperStorage,
-    val store: Option[IndexStore] = None) {
+    indexStore: Option[IndexStore] = None) {
   import IndexDef._
 
-  private var defs: Map[(String, String), IndexDef] =
-    store.map(_.loadDefs()).getOrElse(Map.empty)
-  private var tables = Map.empty[(String, String), IndexVersion]
+  private val store: IndexStore = indexStore.getOrElse {
+    val sc = storage.spark.sparkContext
+    require(sc.isLocal, "the default index store is a driver-local directory; " +
+      "outside local mode pass an IndexStore on storage every executor can read")
+    new IndexStore(storage.spark, java.nio.file.Files.createTempDirectory(
+      java.nio.file.Paths.get(Bridge.driverTmpDir), "index-store-").toString)
+  }
+
+  private var defs: Map[(String, String), IndexDef] = store.loadDefs()
 
   // finish interrupted deletes on load: a DELETING def whose drop crashed
   // would otherwise block re-creation of the id forever (409 on retry)
-  for (st <- store; d <- defs.values.toSeq if d.status == StatusDeleting) {
-    st.dropTable(d.collectionUri, d.indexId)
+  for (d <- defs.values.toSeq if d.status == StatusDeleting) {
+    store.dropTable(d.collectionUri, d.indexId)
     defs -= ((d.collectionUri, d.indexId))
-    st.saveDefs(defs.values)
+    store.saveDefs(defs.values)
   }
 
   def indexDefs(uri: String): Seq[IndexDef] =
@@ -71,15 +81,11 @@ final class IndexManager(val storage: HyperStorage,
   def indexDef(uri: String, indexId: String): Option[IndexDef] =
     defs.get((uri, indexId))
 
-  /** The committed version of a NORMAL index, re-opened per call in the
-    * store mode (one manifest read: rows and revision of one version). */
+  /** The committed version of a NORMAL index, re-opened per call (one
+    * manifest read: rows and revision of one version). */
   def indexVersion(uri: String, indexId: String): Option[IndexVersion] =
-    store match {
-      case Some(st) =>
-        defs.get((uri, indexId)).filter(_.status == StatusNormal)
-          .map(_ => st.openVersion(uri, indexId))
-      case None => tables.get((uri, indexId))
-    }
+    defs.get((uri, indexId)).filter(_.status == StatusNormal)
+      .map(_ => store.openVersion(uri, indexId))
 
   def indexTable(uri: String, indexId: String): Option[DataFrame] =
     indexVersion(uri, indexId).map(_.rows)
@@ -129,7 +135,7 @@ final class IndexManager(val storage: HyperStorage,
     defs += (uri, indexId) -> indexing
     // durable: record the INDEXING def BEFORE building, so a crash leaves
     // a resumable pending build (reference pending_index semantics)
-    store.foreach(_.saveDefs(defs.values))
+    store.saveDefs(defs.values)
     try {
       // apply the storage's partition pruner like every per-URI read —
       // a ContentStore-backed build scans one directory partition. The
@@ -148,23 +154,16 @@ final class IndexManager(val storage: HyperStorage,
         case Some(r: Long) => r
         case _ => 0L
       }
-      store match {
-        case Some(st) => st.writeTable(uri, indexId, built, revision)
-        case None =>
-          val table = built.persist()
-          table.count() // force the build
-          tables += (uri, indexId) -> IndexVersion(table, revision)
-      }
+      store.writeTable(uri, indexId, built, revision)
       val normal = indexing.copy(status = StatusNormal)
       defs += (uri, indexId) -> normal
-      store.foreach(_.saveDefs(defs.values))
+      store.saveDefs(defs.values)
       normal
     } catch {
       case e: Throwable =>
         defs -= ((uri, indexId)) // failed build leaves no phantom def
-        tables.get((uri, indexId)).foreach(_.rows.unpersist())
-        tables -= ((uri, indexId))
-        store.foreach { st => st.dropTable(uri, indexId); st.saveDefs(defs.values) }
+        store.dropTable(uri, indexId)
+        store.saveDefs(defs.values)
         throw e
     }
   }
@@ -181,7 +180,7 @@ final class IndexManager(val storage: HyperStorage,
       catch {
         case scala.util.control.NonFatal(_) =>
           defs += key -> d
-          store.foreach(_.saveDefs(defs.values))
+          store.saveDefs(defs.values)
           None
       }
     }
@@ -191,12 +190,10 @@ final class IndexManager(val storage: HyperStorage,
     val d = defs.getOrElse((uri, indexId),
       throw new NotFound(s"index: $uri/$indexId"))
     defs += (uri, indexId) -> d.copy(status = StatusDeleting)
-    store.foreach(_.saveDefs(defs.values)) // DELETING survives a crash mid-drop
-    tables.get((uri, indexId)).foreach(_.rows.unpersist())
-    tables -= ((uri, indexId))
-    store.foreach(_.dropTable(uri, indexId))
+    store.saveDefs(defs.values) // DELETING survives a crash mid-drop
+    store.dropTable(uri, indexId)
     defs -= ((uri, indexId))
-    store.foreach(_.saveDefs(defs.values))
+    store.saveDefs(defs.values)
   }
 
   /** Collection-delete cascade (M3): drop all indexes of the collection
@@ -254,24 +251,9 @@ final class IndexManager(val storage: HyperStorage,
         val touchedItems = latest.select("item_id").distinct()
         val replacement = materialize(
           latest.filter(!col("is_deleted")).select("item_id", "revision", "body"), d)
-        store match {
-          case Some(st) =>
-            // partition-scoped on-disk merge; lineage ends at the parquet
-            st.mergeTable(uri, id, touchedItems, replacement,
-              batchRevision(uri), knownParts = touchedParts.get(uri))
-          case None =>
-            val old = tables((uri, id))
-            val updated = old.rows
-              .join(broadcast(touchedItems), Seq("item_id"), "left_anti")
-              .unionByName(replacement)
-              // localCheckpoint (eager) materializes AND truncates lineage —
-              // without it N batches stack N anti-join/union layers and every
-              // downstream action replays the whole chain
-              .localCheckpoint()
-            old.rows.unpersist()
-            tables += (uri, id) -> IndexVersion(updated,
-              math.max(old.revision, batchRevision(uri)))
-        }
+        // partition-scoped on-disk merge; lineage ends at the parquet
+        store.mergeTable(uri, id, touchedItems, replacement,
+          batchRevision(uri), touchedParts(uri))
       }
     } finally {
       relevant.unpersist()

@@ -218,24 +218,19 @@ final class IndexStore(val spark: SparkSession, val path: String) {
   }
 
   /** Partition-scoped merge: drop all index rows of `touchedItems`, insert
-    * `replacement`, touching only the item-hash partitions involved, and
-    * raise the committed revision to `revision` (the batch's). The new
-    * staging root fully materializes BEFORE the manifest swap, so the
-    * scoped self-read never races the rewrite, and a crash at any point
-    * leaves the previous committed version intact (atomicity across all
-    * touched partitions — the manifest swap is the single commit point). */
+    * `replacement`, rewriting only `parts` — the item-hash partitions
+    * ([[ipartCol]]) of the touched items, which the caller has already
+    * aggregated — and raise the committed revision to `revision` (the
+    * batch's). The new staging root fully materializes BEFORE the manifest
+    * swap, so the scoped self-read never races the rewrite, and a crash at
+    * any point leaves the previous committed version intact (atomicity
+    * across all touched partitions — the manifest swap is the single
+    * commit point). */
   def mergeTable(uri: String, indexId: String, touchedItems: DataFrame,
-      replacement: DataFrame, revision: Long,
-      knownParts: Option[Seq[Int]] = None): Unit = {
+      replacement: DataFrame, revision: Long, parts: Seq[Int]): Unit = {
     val dir = tableDir(uri, indexId)
     val m = loadManifest(dir)
     val rev = math.max(m.revision, revision)
-    // bounded by IndexPartitions; callers that already aggregated the
-    // touched item-hash partitions (applyFeed's one-pass uri stats) pass
-    // them in and skip this job
-    val parts = knownParts.getOrElse(touchedItems
-      .select(ipartCol(col("item_id")).as("ipart")).distinct()
-      .collect().map(_.getInt(0)).toSeq)
     if (parts.isEmpty) {
       // no rows to rewrite, but the batch still moved the collection on
       commitManifest(dir, m.copy(revision = rev))

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.engine.{FeedEvent, HyperStorage, WriteOp}
-import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
+import org.apache.spark.sql.{Dataset, Encoders}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 
@@ -102,11 +102,4 @@ object ChangeFeed {
         publish(batch)(send)
       }
       .start()
-
-  /** File-based feed source: stream an append-only parquet feed directory
-    * (the batch engine's `ApplyResult.feed` written with `append`). */
-  def fromParquetDir(spark: SparkSession, dir: String): Dataset[FeedEvent] = {
-    val schema = Encoders.product[FeedEvent].schema
-    spark.readStream.schema(schema).parquet(dir).as[FeedEvent]
-  }
 }

@@ -1,5 +1,6 @@
 package org.apache.spark.sql.graftbridge
 
+import org.apache.spark.SparkEnv
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.{ColumnNodeToExpressionConverter, ExpressionUtils}
@@ -18,4 +19,9 @@ object Bridge {
     * lazy ColumnNodeExpression wrapper). */
   def resolvedExpression(c: Column): Expression =
     ColumnNodeToExpressionConverter(c.node)
+
+  /** The driver's per-context scratch dir (`private[spark]`), which
+    * `SparkEnv.stop` deletes recursively. */
+  def driverTmpDir: String = SparkEnv.get.driverTmpDir.getOrElse(
+    throw new IllegalStateException("no driver temp dir: not on the driver"))
 }

@@ -5,7 +5,7 @@ import org.scalatest.matchers.should.Matchers
 
 /** Driver-contract consistency guards: every oracle belongs to a query;
   * every query is oracle-checked unless deliberately exempt; the flagship
-  * entry returns rows at the smoke scale; bench headliners exist. */
+  * entry returns rows at the smoke scale. */
 class SparkEntrySpec extends AnyFreeSpec with Matchers with SparkFixture {
 
   /** Every registered query is oracle-checked — the simhash/LSH entries
@@ -19,9 +19,6 @@ class SparkEntrySpec extends AnyFreeSpec with Matchers with SparkFixture {
     }
     "every query has an oracle unless exempt" in {
       (SparkEntry.queries.keySet -- SparkEntry.oracleSql.keySet) shouldBe oracleExempt
-    }
-    "bench headline names resolve" in {
-      Bench.headline.filterNot(SparkEntry.queries.contains) shouldBe empty
     }
     "the registry never shrinks (entry-count tripwire)" in {
       // Verify swallows a failed entry with a stderr line, and the

@@ -13,9 +13,9 @@ import java.nio.file.{Files, Path}
 /** The collection revision of an index-served result comes from the
   * commit record of the index version that serves it. Whenever every write
   * goes through index maintenance it equals the content log's revision
-  * (HyperStorage.revisionOf) — pinned here step by step, in the durable
-  * and the store-less mode — and serving it reads nothing of the content
-  * store. */
+  * (HyperStorage.revisionOf) — pinned here step by step, over a content
+  * store and over an in-memory content log — and serving it reads nothing
+  * of the content store. */
 class IndexRevisionSpec extends AnyFreeSpec with Matchers with SparkFixture {
 
   private val Uri = "c~"
@@ -56,7 +56,8 @@ class IndexRevisionSpec extends AnyFreeSpec with Matchers with SparkFixture {
     def reopen(): Unit = im = new IndexManager(storage, Some(new IndexStore(spark, indexPath)))
   }
 
-  /** Store-less: an in-memory log, index tables kept by the manager. */
+  /** No content store: an in-memory log, batches through `applyFeed`, the
+    * index served from the manager's default store. */
   private final class MemoryMode extends Mode {
     var storage: HyperStorage = HyperStorage(spark, Content.empty(spark))
     var im: IndexManager = _
@@ -193,11 +194,11 @@ class IndexRevisionSpec extends AnyFreeSpec with Matchers with SparkFixture {
       store.openVersion(Uri, "byX").revision shouldBe 2
       val none = Content.empty(spark).select("item_id")
       store.mergeTable(Uri, "byX", none, im.indexTable(Uri, "byX").get.limit(0),
-        revision = 9, knownParts = Some(Nil))
+        revision = 9, parts = Nil)
       store.openVersion(Uri, "byX").revision shouldBe 9
       // a revision never moves backwards
       store.mergeTable(Uri, "byX", none, im.indexTable(Uri, "byX").get.limit(0),
-        revision = 4, knownParts = Some(Nil))
+        revision = 4, parts = Nil)
       store.openVersion(Uri, "byX").revision shouldBe 9
     }
 

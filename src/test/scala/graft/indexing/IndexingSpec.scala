@@ -286,6 +286,36 @@ class IndexingSpec extends AnyFreeSpec with Matchers with SparkFixture {
         Some("b > 10"), Seq(SortBy("a")), 50)
       ids(q) shouldBe Seq("item1", "item3") // "aaaa" < "way way"
     }
+    "build and maintenance keep no cache: no RDD they persist outlives them" in {
+      // every index version lives in the manager's store; none may stay
+      // cached once superseded (checked over several merges of one index)
+      val sc = spark.sparkContext
+      val persisted = scala.collection.mutable.Set.empty[Int]
+      def watch(call: => Unit): Unit = {
+        val before = sc.getPersistentRDDs.keySet
+        call
+        // (a difference, not an equality: the ContextCleaner may drop
+        // earlier specs' caches meanwhile)
+        persisted ++= sc.getPersistentRDDs.keySet -- before
+      }
+      var st = HyperStorage(spark, Content.empty(spark))
+      def write(i: Int): ApplyResult = {
+        val r = st.applySeq(Seq(WriteOp(i, "PUT", s"leak~/i$i", s"""{"x":$i}""")))
+        st = HyperStorage(spark, r.log.localCheckpoint())
+        r
+      }
+      write(0).release()
+      val im = new IndexManager(st)
+      watch(im.createIndex("leak~", "byX",
+        Seq(IndexSortItem("x", Some("decimal"), Some("asc"))), None))
+      for (i <- 1 to 4) {
+        val r = write(i)
+        try watch(im.applyFeed(r.feed)) finally r.release()
+      }
+      (sc.getPersistentRDDs.keySet & persisted) shouldBe empty
+      im.indexTable("leak~", "byX").get.select("item_id").collect()
+        .map(_.getString(0)).sorted.toSeq shouldBe (0 to 4).map(i => s"i$i")
+    }
   }
 
   "skipMax guards the index-served path (error-taxonomy parity)" - {
