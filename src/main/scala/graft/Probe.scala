@@ -6,25 +6,6 @@ object Probe {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val what = if (args.length > 1) args(1) else "plans"
     val spark = GraftSession.local(GraftSession.cpus)
-    if (what == "pipe") {
-      import spark.implicits._
-      import graft.engine._
-      val base = java.nio.file.Files.createTempDirectory("probe-pipe").toString
-      val (sp, lp) = (s"$base/store", s"$base/ledger")
-      def ops(xs: (Long, String, String, String)*) =
-        spark.createDataset(xs.map(t => WriteOp(t._1, t._2, t._3, t._4)))
-      graft.streaming.FeedPipeline.runBatch(
-        ops((1, "PUT", "c~/a", """{"x":1}"""), (2, "PUT", "c~/b", """{"x":2}""")),
-        60000L, sp, lp)(e => println(s"SENT1 ${e.item_id}#${e.revision}"))
-      println("after b1: " + ContentStore.open(spark, sp).log
-        .select("item_id", "revision").collect().toSeq)
-      graft.streaming.FeedPipeline.runBatch(
-        ops((3, "PATCH", "c~/a", """{"y":9}"""), (4, "DELETE", "c~/b", null)),
-        120000L, sp, lp)(e => println(s"SENT2 ${e.item_id}#${e.revision}"))
-      println("after b2: " + ContentStore.open(spark, sp).log
-        .select("item_id", "revision").collect().toSeq)
-      spark.stop(); return
-    }
     if (what == "plans") {
       val qs = if (args.length > 2) args(2).split(",").toSeq
         else Seq("q3_shipping", "q1_agg", "w1_window_rank", "s4_index_scan")
@@ -73,34 +54,6 @@ object Probe {
         tick("topk count") { res.rows.count() }
         log.unpersist(true)
       }
-    }
-    if (what == "tls") {
-      // run a JSON-heavy query a few times, then dump executor-thread
-      // ThreadLocalMap contents (size + top referent classes)
-      for (_ <- 1 to 3)
-        SparkEntry.queries("o4_topk_overfetch")(spark, dir).count()
-      import spark.implicits._
-      val report = spark.range(0, 16, 1, 16).mapPartitions { _ =>
-        val th = Thread.currentThread()
-        val f = classOf[Thread].getDeclaredField("threadLocals")
-        f.setAccessible(true)
-        val map = f.get(th)
-        if (map == null) Iterator(th.getName -> "no-map")
-        else {
-          val tf = map.getClass.getDeclaredField("table")
-          tf.setAccessible(true)
-          val table = tf.get(map).asInstanceOf[Array[AnyRef]]
-          val entries = table.filter(_ != null)
-          val kinds = entries.map { e =>
-            val ref = e.asInstanceOf[java.lang.ref.Reference[AnyRef]].get()
-            if (ref == null) "STALE" else ref.getClass.getName
-          }
-          val top = kinds.groupBy(identity).view.mapValues(_.length).toSeq
-            .sortBy(-_._2).take(8).mkString("; ")
-          Iterator(th.getName -> s"cap=${table.length} live=${entries.length} :: $top")
-        }
-      }.collect()
-      report.distinct.foreach { case (n, s) => println(s"[tls] $n $s") }
     }
     if (what == "time") {
       // Probe <dir> time <query,query,...> [reps] — per-run seconds

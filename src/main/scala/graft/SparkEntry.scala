@@ -270,7 +270,7 @@ object SparkEntry {
     "s2_store_scan" -> ((s, dir) => {
       // through the crc32-partitioned parquet store: the per-URI read
       // prunes to one directory partition (ContentStoreSpec pins the plan)
-      val path = s"/tmp/graft_store_${dir.replace('/', '_')}"
+      val path = scratchDir(s, "store", dir)
       ContentStore.write(
         Content.fromTable(t(s, dir, "customer"), "customers~", "c_custkey"),
         path, org.apache.spark.sql.SaveMode.Overwrite)

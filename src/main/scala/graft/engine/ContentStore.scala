@@ -2,6 +2,7 @@ package graft.engine
 
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.hadoop.fs.Path
 import java.util.zip.CRC32
 
 /** Physical layout of the content log: parquet partitioned by
@@ -10,7 +11,11 @@ import java.util.zip.CRC32
   * prunes to ONE directory partition at the FileScan (PartitionFilters),
   * so point gets and collection queries touch 1/256 of a 100 TB store
   * before any row is read; the bound on partition count is the same idea
-  * as the reference's ≤1024-node scale ceiling. */
+  * as the reference's ≤1024-node scale ceiling.
+  *
+  * A store is a [[TableCommit]] directory whose `_manifest` names the one
+  * live root, `<path>/w-<G>/part=…[/batch=…]`. Appends and batch writes
+  * land in that root; compaction and overwrites commit a fresh root. */
 object ContentStore {
   val NumPartitions = 256
 
@@ -24,15 +29,14 @@ object ContentStore {
     (c.getValue % NumPartitions).toInt
   }
 
-  /** Append (or overwrite) a content-log slice into the partitioned store.
-    * Heals a half-finished compaction swap first — writing into the
-    * delete-to-rename crash window would otherwise recreate the live dir
-    * and permanently strand the pre-compaction data in `<path>.compact`. */
+  /** Append a content-log slice to the committed version, or (any other
+    * `mode`) commit it as a whole new version. */
   def write(log: DataFrame, path: String,
       mode: SaveMode = SaveMode.Append): Unit = {
-    recoverCompact(log.sparkSession, path)
-    log.withColumn("part", partitionCol(col("document_uri")))
-      .write.partitionBy("part").mode(mode).parquet(path)
+    val rows = log.withColumn("part", partitionCol(col("document_uri")))
+      .write.partitionBy("part").mode(mode)
+    if (mode == SaveMode.Append) extend(log.sparkSession, path)(rows.parquet)
+    else commitRoot(log.sparkSession, path)(rows.parquet)
   }
 
   /** Idempotent per-batch write: rows land under (part, batch=batchTs) and
@@ -40,23 +44,29 @@ object ContentStore {
     * partitions — the standard Spark exactly-once file-sink discipline.
     * Readers that must see only COMMITTED prior state filter the batch
     * column (see FeedPipeline.runBatch). */
-  def writeBatch(log: DataFrame, path: String, batchTs: Long): Unit = {
-    recoverCompact(log.sparkSession, path)
-    log.withColumn("part", partitionCol(col("document_uri")))
-      .withColumn("batch", lit(batchTs))
-      .write.partitionBy("part", "batch")
-      .option("partitionOverwriteMode", "dynamic")
-      .mode(SaveMode.Overwrite).parquet(path)
-  }
+  def writeBatch(log: DataFrame, path: String, batchTs: Long): Unit =
+    extend(log.sparkSession, path)(
+      log.withColumn("part", partitionCol(col("document_uri")))
+        .withColumn("batch", lit(batchTs))
+        .write.partitionBy("part", "batch")
+        .option("partitionOverwriteMode", "dynamic")
+        .mode(SaveMode.Overwrite).parquet)
 
-  /** Open the store as a HyperStorage whose per-URI reads carry the
-    * partition predicate (directory pruning before any IO). The `part`
-    * column rides along in the log; engine projections ignore it. */
-  def open(spark: SparkSession, path: String): HyperStorage = {
-    recoverCompact(spark, path)
-    new HyperStorage(spark, spark.read.parquet(path),
-      uriPruner = uri => col("part") === partitionOf(uri))
-  }
+  /** Open the committed version as a HyperStorage whose per-URI reads
+    * carry the partition predicate (directory pruning before any IO). The
+    * `part` column rides along in the log; engine projections ignore it. */
+  def open(spark: SparkSession, path: String): HyperStorage =
+    scan(spark, liveRoot(spark, path).getOrElse(
+      throw new java.io.FileNotFoundException(s"no committed store at $path")))
+      .map(log => new HyperStorage(spark, log,
+        uriPruner = uri => col("part") === partitionOf(uri)))
+      .getOrElse(HyperStorage(spark, Content.empty(spark)))
+
+  /** [[open]], or an empty in-memory log when nothing has been committed
+    * yet (the bootstrap case of a write-back loop). */
+  def openOrEmpty(spark: SparkSession, path: String): HyperStorage =
+    if (liveRoot(spark, path).isEmpty) HyperStorage(spark, Content.empty(spark))
+    else open(spark, path)
 
   /** Compaction — the role Cassandra's compaction plays for the reference
     * (scheme.cql's leveled store): rewrite the log keeping only the LATEST
@@ -68,9 +78,8 @@ object ContentStore {
     * them would lower collection static revisions); aging them out is a
     * separate retention policy.
     *
-    * The rewrite lands in `<path>.compact` and swaps in whole; a crash
-    * between delete and rename is healed by [[recoverCompact]] on the
-    * next open or write. A `batch` column (FeedPipeline stores) keeps its
+    * The rewrite is a new version, committed like any other (see
+    * [[TableCommit]]). A `batch` column (FeedPipeline stores) keeps its
     * values and its partition layout, so batch-replay dynamic overwrite
     * and prior-state batch exclusion still address the right directories.
     *
@@ -87,58 +96,67 @@ object ContentStore {
     * every tail batch's state read, so replays still see exact pre-batch
     * state. */
   def compact(spark: SparkSession, path: String,
-      foldBelowBatch: Option[Long] = None): Unit = {
-    recoverCompact(spark, path)
-    val log = spark.read.parquet(path)
-    val hasBatch = log.columns.contains("batch")
-    val partCols = Seq("part") ++ (if (hasBatch) Seq("batch") else Nil)
-    val compacted =
-      if (!hasBatch) Content.latestRows(log)
-      else {
-        // partition-dir read-back narrows batch to int — cast before max
-        val cutoff = foldBelowBatch.getOrElse(
-          log.agg(max(col("batch").cast("long"))).collect()(0) match {
-            case r if r.isNullAt(0) => Long.MinValue
-            case r => r.getLong(0)
-          })
-        Content.latestRows(log.filter(col("batch") < cutoff))
-          .unionByName(log.filter(col("batch") >= cutoff))
-      }
-    val tmp = s"$path.compact"
-    compacted
-      .repartition(partCols.map(col): _*)
-      .write.partitionBy(partCols: _*).mode(SaveMode.Overwrite).parquet(tmp)
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(p, true)
-    fs.rename(new org.apache.hadoop.fs.Path(tmp), p)
-    ()
+      foldBelowBatch: Option[Long] = None): Unit =
+    liveRoot(spark, path).flatMap(scan(spark, _)).foreach { log =>
+      val hasBatch = log.columns.contains("batch")
+      val partCols = Seq("part") ++ (if (hasBatch) Seq("batch") else Nil)
+      val compacted =
+        if (!hasBatch) Content.latestRows(log)
+        else {
+          // partition-dir read-back narrows batch to int — cast before max
+          val cutoff = foldBelowBatch.getOrElse(
+            log.agg(max(col("batch").cast("long"))).collect()(0) match {
+              case r if r.isNullAt(0) => Long.MinValue
+              case r => r.getLong(0)
+            })
+          Content.latestRows(log.filter(col("batch") < cutoff))
+            .unionByName(log.filter(col("batch") >= cutoff))
+        }
+      commitRoot(spark, path)(compacted
+        .repartition(partCols.map(col): _*)
+        .write.partitionBy(partCols: _*).parquet)
+    }
+
+  // ------------------------------------------------------------ versions
+
+  private def fsOf(spark: SparkSession, path: String) =
+    new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  /** Path of the root the manifest commits; None before the first commit.
+    * `part=` directories with no manifest are the pre-manifest layout:
+    * fail with intent rather than hide or half-read them. */
+  private def liveRoot(spark: SparkSession, path: String): Option[String] = {
+    val fs = fsOf(spark, path)
+    TableCommit.readManifest(fs, path).map(root => s"$path/$root").orElse {
+      if (Option(fs.globStatus(new Path(path, "part=*"))).exists(_.nonEmpty))
+        throw new IllegalStateException(
+          s"$path uses the pre-manifest layout; rebuild the store")
+      None
+    }
   }
 
-  /** Finish a compaction swap that crashed between delete and rename: a
-    * COMMITTED tmp (has _SUCCESS) with no live store is adopted. */
-  private def recoverCompact(spark: SparkSession, path: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = new org.apache.hadoop.fs.Path(s"$path.compact")
-    if (!fs.exists(p) &&
-        fs.exists(new org.apache.hadoop.fs.Path(tmp, "_SUCCESS")))
-      fs.rename(tmp, p)
-    ()
+  /** Whole-version write: fill a fresh root, commit it, GC the old one. */
+  private def commitRoot(spark: SparkSession, path: String)(
+      write: String => Unit): Unit = {
+    val fs = fsOf(spark, path)
+    val root = TableCommit.nextRoot(fs, path)
+    write(s"$path/$root")
+    TableCommit.commit(fs, path, root, Set(root))
   }
 
-  /** Open an existing store, or an empty in-memory log when nothing has
-    * been written yet (the bootstrap case of a write-back loop). Only
-    * COMMITTED output counts as existing — a crashed first write leaves
-    * `_temporary`/`_SUCCESS` debris that must not make the replay try to
-    * read a store with no data files. */
-  def openOrEmpty(spark: SparkSession, path: String): HyperStorage = {
-    recoverCompact(spark, path)
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val hasData = fs.exists(p) &&
-      fs.listStatus(p).exists(s => !s.getPath.getName.startsWith("_"))
-    if (hasData) open(spark, path)
-    else HyperStorage(spark, Content.empty(spark))
+  /** Write into the committed root (the first write to a path commits a
+    * fresh one); roots orphaned by a crashed commit are GC'd after. */
+  private def extend(spark: SparkSession, path: String)(
+      write: String => Unit): Unit = liveRoot(spark, path) match {
+    case Some(root) =>
+      write(root)
+      TableCommit.gcRoots(fsOf(spark, path), path, Set(new Path(root).getName))
+    case None => commitRoot(spark, path)(write)
   }
+
+  /** A root's rows; None when it holds no data files, as a first write
+    * whose every op was rejected commits. */
+  private def scan(spark: SparkSession, root: String): Option[DataFrame] =
+    Option.when(fsOf(spark, root).listStatus(new Path(root))
+      .exists(!_.getPath.getName.startsWith("_")))(spark.read.parquet(root))
 }

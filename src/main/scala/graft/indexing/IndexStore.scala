@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, IntegerType, StructType}
 import org.apache.hadoop.fs.Path
+import graft.engine.TableCommit
+import TableCommit.{readSwapped, writeSwapped}
 import java.net.{URLDecoder, URLEncoder}
 
 /** Durable home of index definitions and index tables — the Spark-native
@@ -12,7 +14,7 @@ import java.net.{URLDecoder, URLEncoder}
   * IndexDefTaskWorker.scala:71-110 persists the def BEFORE building so an
   * interrupted build is resumable after restart).
   *
-  * Layout — a manifest-committed mini table format:
+  * Layout — each index table is a [[TableCommit]] directory:
   * {{{
   *   <path>/defs                     — driver-written def rows (atomic swap)
   *   <path>/tables/<enc(uri)>/<enc(id)>/
@@ -37,14 +39,8 @@ import java.net.{URLDecoder, URLEncoder}
   * The item-hash partitioning makes incremental maintenance
   * PARTITION-SCOPED: a feed batch touching k items reads and rewrites at
   * most min(k, IndexPartitions) partitions into a NEW immutable staging
-  * root, then commits by atomically swapping the single `_manifest` file —
-  * never mutating data in place. A crash before the manifest swap leaves
-  * the previous table version fully intact (the half-written root is
-  * unreferenced and garbage-collected later); a crash during the swap is
-  * healed by loadManifest's tmp recovery. This closes the cross-partition
-  * atomicity window a per-directory rename loop would have, the same
-  * snapshot-commit discipline cluster table formats use. The row-wise
-  * Cassandra MERGE the reference performs
+  * root, then commits through the manifest swap, so the merge is atomic
+  * across every touched partition. The row-wise Cassandra MERGE the reference performs
   * (BackgroundContentTaskCompleter.scala:126-188) is thus expressed as
   * bulk partition rewrites with lineage truncated at every batch.
   *
@@ -54,9 +50,8 @@ import java.net.{URLDecoder, URLEncoder}
   * bounded union and small files don't accumulate.
   *
   * Single writer per store path, mirroring the reference's one-owner-per-
-  * shard discipline (ShardProcessor); readers may open concurrently, but a
-  * DataFrame held across a later commit may see its files GC'd — re-open
-  * per query, as [[IndexManager.indexVersion]] does.
+  * shard discipline (ShardProcessor); readers re-open per query, as
+  * [[IndexManager.indexVersion]] does.
   */
 final class IndexStore(val spark: SparkSession, val path: String) {
   import IndexStore._
@@ -75,7 +70,7 @@ final class IndexStore(val spark: SparkSession, val path: String) {
         fs.getFileStatus(new Path(defsPath)).isDirectory)
       throw new IllegalStateException(
         s"$defsPath uses the old parquet def layout; rebuild the index store")
-    Option(readSwapped(fs, defsPath)).map(_.split("\n").iterator
+    readSwapped(fs, defsPath).map(_.split("\n").iterator
       .filter(_.nonEmpty).map { line =>
         val Array(uri, id, sortBy, filterBy, status, tableName) =
           line.split("\t", -1).map(f => URLDecoder.decode(f, "UTF-8"))
@@ -108,47 +103,31 @@ final class IndexStore(val spark: SparkSession, val path: String) {
   private def schemaAnchor(dir: String) = s"$dir/_schema.json"
 
   private def tableSchema(dir: String): StructType =
-    DataType.fromJson(readSwapped(fs, schemaAnchor(dir)))
+    DataType.fromJson(readSwapped(fs, schemaAnchor(dir)).get)
       .asInstanceOf[StructType]
 
   // ---------------------------------------------------------- manifest
-
-  private def manifestPath(dir: String) = s"$dir/_manifest"
 
   /** The committed version a manifest names. A manifest without a
     * revision line predates the revision record: fail with intent, like
     * [[loadDefs]] on the old defs layout, rather than guess a revision. */
   private def loadManifest(dir: String): Manifest = {
-    val lines = Option(readSwapped(fs, manifestPath(dir))).toSeq
+    val lines = TableCommit.readManifest(fs, dir).toSeq
       .flatMap(_.split("\n")).filter(_.nonEmpty).map(_.split("\t", -1))
     val revision = lines.collectFirst { case Array(RevisionKey, r) => r.toLong }
       .getOrElse(throw new IllegalStateException(
-        s"${manifestPath(dir)} records no revision; rebuild the index store"))
+        s"${TableCommit.manifest(dir)} records no revision; rebuild the index store"))
     Manifest(lines.collect {
       case Array(p, root) if p != RevisionKey => p.toInt -> root
     }.toMap, revision)
   }
 
-  /** THE commit point: a table version is exactly what its manifest lists.
-    * After the atomic swap, unreferenced staging roots (superseded
-    * partitions, aborted writes) are garbage. */
-  private def commitManifest(dir: String, m: Manifest): Unit = {
-    writeSwapped(fs, manifestPath(dir),
+  /** A table version is exactly what its manifest lists. */
+  private def commitManifest(dir: String, m: Manifest): Unit =
+    TableCommit.commit(fs, dir,
       (s"$RevisionKey\t${m.revision}" +:
-        m.parts.toSeq.sorted.map { case (p, root) => s"$p\t$root" }).mkString("\n"))
-    val live = m.parts.values.toSet
-    Option(fs.globStatus(new Path(s"$dir/w-*"))).getOrElse(Array.empty)
-      .map(_.getPath).filterNot(p => live(p.getName))
-      .foreach(fs.delete(_, true))
-  }
-
-  /** Next staging-root name: max existing generation + 1 (single writer). */
-  private def nextRoot(dir: String): String = {
-    val g = Option(fs.globStatus(new Path(s"$dir/w-*")))
-      .getOrElse(Array.empty)
-      .flatMap(s => s.getPath.getName.stripPrefix("w-").toIntOption)
-    s"w-${if (g.isEmpty) 1 else g.max + 1}"
-  }
+        m.parts.toSeq.sorted.map { case (p, root) => s"$p\t$root" }).mkString("\n"),
+      m.parts.values.toSet)
 
   /** The ipart dirs a staging write actually produced (a partition whose
     * merge result is empty emits no dir — it simply leaves the manifest). */
@@ -169,7 +148,7 @@ final class IndexStore(val spark: SparkSession, val path: String) {
   def writeTable(uri: String, indexId: String, rows: DataFrame,
       revision: => Long): Unit = {
     val dir = tableDir(uri, indexId)
-    val root = nextRoot(dir)
+    val root = TableCommit.nextRoot(fs, dir)
     writePartitioned(rows, s"$dir/$root")
     writeSwapped(fs, schemaAnchor(dir), rows.schema.json)
     commitManifest(dir, Manifest(
@@ -240,7 +219,7 @@ final class IndexStore(val spark: SparkSession, val path: String) {
     val updated = scoped
       .join(broadcast(touchedItems.select("item_id")), Seq("item_id"), "left_anti")
       .unionByName(replacement)
-    val root = nextRoot(dir)
+    val root = TableCommit.nextRoot(fs, dir)
     writePartitioned(updated, s"$dir/$root")
     val merged = Manifest((m.parts -- parts) ++
       writtenParts(new Path(dir, root)).map(_ -> root), rev)
@@ -257,7 +236,7 @@ final class IndexStore(val spark: SparkSession, val path: String) {
   private def compactIfScattered(dir: String, m: Manifest): Unit =
     if (m.parts.values.toSet.size > MaxRoots) {
       val rows = openParts(dir, m.parts, m.parts.keys).drop("ipart")
-      val root = nextRoot(dir)
+      val root = TableCommit.nextRoot(fs, dir)
       writePartitioned(rows, s"$dir/$root")
       commitManifest(dir, m.copy(parts =
         writtenParts(new Path(dir, root)).map(_ -> root).toMap))
@@ -283,69 +262,6 @@ object IndexStore {
 
   def ipartCol(itemId: Column): Column =
     pmod(crc32(itemId), lit(IndexPartitions)).cast("int")
-
-  private def writeUtf8(fs: org.apache.hadoop.fs.FileSystem, p: Path,
-      body: String): Unit = {
-    val out = fs.create(p, true)
-    try out.write(body.getBytes("UTF-8")) finally out.close()
-  }
-
-  private def readUtf8(fs: org.apache.hadoop.fs.FileSystem, p: Path): String = {
-    val in = fs.open(p)
-    try {
-      val buf = new java.io.ByteArrayOutputStream()
-      val chunk = new Array[Byte](8192)
-      var n = in.read(chunk)
-      while (n >= 0) { buf.write(chunk, 0, n); n = in.read(chunk) }
-      new String(buf.toByteArray, "UTF-8")
-    } finally in.close()
-  }
-
-  /** Atomic single-file replace: write `<p>.tmp` (with a length header so
-    * a partially-written tmp is detectable), delete live, rename. A crash
-    * between delete and rename is healed on read (the COMPLETE tmp is
-    * adopted); a crash mid-tmp-write leaves the live file untouched and
-    * the invalid tmp is discarded. */
-  private def writeSwapped(fs: org.apache.hadoop.fs.FileSystem, path: String,
-      body: String): Unit = {
-    val tmp = new Path(path + ".tmp")
-    writeUtf8(fs, tmp, s"${body.getBytes("UTF-8").length}\n" + body)
-    fs.delete(new Path(path), false)
-    fs.rename(tmp, new Path(path))
-    ()
-  }
-
-  /** Payload of a header-framed file, or null when incomplete/corrupt. */
-  private def validPayload(content: String): String = {
-    val nl = content.indexOf('\n')
-    if (nl < 0) return null
-    val payload = content.substring(nl + 1)
-    content.substring(0, nl).toLongOption match {
-      case Some(len) if payload.getBytes("UTF-8").length == len => payload
-      case _ => null
-    }
-  }
-
-  /** Read a [[writeSwapped]] file, finishing an interrupted swap; null if
-    * the file has never been (completely) written. Only a tmp that passes
-    * the length check is adopted — a crash mid-tmp-write must not replace
-    * a readable store with garbage. */
-  private def readSwapped(fs: org.apache.hadoop.fs.FileSystem,
-      path: String): String = {
-    val live = new Path(path)
-    val tmp = new Path(path + ".tmp")
-    if (!fs.exists(live) && fs.exists(tmp)) {
-      if (validPayload(readUtf8(fs, tmp)) != null) fs.rename(tmp, live)
-      else fs.delete(tmp, false) // partial write; live was never deleted
-    }
-    if (!fs.exists(live)) null
-    else {
-      val p = validPayload(readUtf8(fs, live))
-      if (p == null)
-        throw new IllegalStateException(s"corrupt swapped file: $path")
-      p
-    }
-  }
 
   private def enc(s: String): String = URLEncoder.encode(s, "UTF-8")
 

@@ -106,7 +106,7 @@ class ContentStoreSpec extends AnyFreeSpec with Matchers with SparkFixture {
         WriteOp(4, "PATCH", "docs~/a", """{"y":9}""")), batchTsMillis = 120000L)
       ContentStore.writeBatch(r2.appended, path, 120000L)
       ContentStore.compact(spark, path) // default: newest batch stays raw
-      val log = spark.read.parquet(path)
+      val log = ContentStore.open(spark, path).log
       // prefix folded (a@rev2, b@rev3), tail raw (a@rev4 under batch 120000)
       log.count() shouldBe 3
       log.filter(col("batch") === 120000L).count() shouldBe 1
@@ -119,22 +119,86 @@ class ContentStoreSpec extends AnyFreeSpec with Matchers with SparkFixture {
         .map(_.getAs[String]("body")) shouldBe Some("""{"x":2,"id":"a","y":9}""")
       // explicit full fold once everything is known complete
       ContentStore.compact(spark, path, Some(Long.MaxValue))
-      spark.read.parquet(path).count() shouldBe 2
+      ContentStore.open(spark, path).log.count() shouldBe 2
     }
 
-    "a compaction swap that crashed before rename is healed on open" in {
+    "every crash point of a commit opens as the whole old or the whole new version" in {
+      import org.apache.hadoop.fs.{FileUtil, Path}
+      val conf = spark.sparkContext.hadoopConfiguration
+      val fs = new Path(tempStore()).getFileSystem(conf)
+      // the old and the new version differ in every read below
+      val oldLog = HyperStorage(spark, Content.empty(spark)).applySeq(Seq(
+        WriteOp(1, "PUT", "docs~/a", """{"x":1}"""),
+        WriteOp(2, "PUT", "docs~/b", """{"x":2}"""))).log
+      val newLog = HyperStorage(spark, oldLog).applySeq(Seq(
+        WriteOp(3, "PATCH", "docs~/a", """{"y":9}"""),
+        WriteOp(4, "DELETE", "docs~/b", null),
+        WriteOp(5, "PUT", "docs~/c", """{"x":3}"""))).log
+      def observe(st: HyperStorage) = (
+        st.query("docs~").rows.collect()
+          .map(r => r.getAs[String]("item_id") -> r.getAs[String]("body")).toSeq,
+        st.get("docs~/a").map(_.getAs[String]("body")),
+        st.revisionOf("docs~"))
+      val oldSeen = (Seq("a" -> """{"x":1,"id":"a"}""", "b" -> """{"x":2,"id":"b"}"""),
+        Some("""{"x":1,"id":"a"}"""), 2L)
+      val newSeen = (Seq("a" -> """{"x":1,"id":"a","y":9}""", "c" -> """{"x":3,"id":"c"}"""),
+        Some("""{"x":1,"id":"a","y":9}"""), 5L)
+      def bytes(p: Path) = { val in = fs.open(p); try in.readAllBytes() finally in.close() }
+      def put(p: Path, b: Array[Byte]) = { val out = fs.create(p, true); try out.write(b) finally out.close() }
+      def roots(path: String) = fs.listStatus(new Path(path)).map(_.getPath.getName)
+        .filter(_.startsWith("w-")).toSeq
+
+      // Commit the old version (root w-1), then the new one (w-2, which GCs
+      // w-1), and restore w-1: the state after the manifest swap, before
+      // the old root's GC. The other crash points are rebuilt from it.
+      def crashedAt(point: String): String = {
+        val path = tempStore()
+        val manifest = new Path(s"$path/_manifest")
+        val tmp = new Path(s"$path/_manifest.tmp")
+        val kept = new Path(tempStore(), "w-1")
+        ContentStore.write(oldLog, path, SaveMode.Overwrite)
+        val oldManifest = bytes(manifest)
+        FileUtil.copy(fs, new Path(s"$path/w-1"), fs, kept, false, conf)
+        ContentStore.write(newLog, path, SaveMode.Overwrite)
+        val newManifest = bytes(manifest)
+        fs.rename(kept, new Path(s"$path/w-1"))
+        roots(path).sorted shouldBe Seq("w-1", "w-2")
+        point match {
+          case "new root written, manifest tmp absent" => put(manifest, oldManifest)
+          case "manifest tmp complete, live manifest deleted" => fs.rename(manifest, tmp)
+          case "manifest swapped, old root not GC'd" =>
+          case "torn manifest tmp" =>
+            put(manifest, oldManifest)
+            put(tmp, newManifest.dropRight(1))
+        }
+        path
+      }
+      val compact: String => Unit = ContentStore.compact(spark, _)
+      val append: String => Unit = path => ContentStore.write(
+        ContentStore.open(spark, path).applySeq(Seq(
+          WriteOp(6, "PUT", "other~/z", """{"x":6}"""))).appended, path)
+      for ((point, seen, next) <- Seq(
+          ("new root written, manifest tmp absent", oldSeen, compact),
+          ("manifest tmp complete, live manifest deleted", newSeen, append),
+          ("manifest swapped, old root not GC'd", newSeen, compact),
+          ("torn manifest tmp", oldSeen, append))) withClue(point) {
+        val path = crashedAt(point)
+        observe(ContentStore.open(spark, path)) shouldBe seen
+        observe(ContentStore.openOrEmpty(spark, path)) shouldBe seen
+        next(path)
+        roots(path) should have size 1
+        observe(ContentStore.open(spark, path)) shouldBe seen
+      }
+    }
+
+    "a part= layout with no manifest fails with a rebuild error" in {
       val path = tempStore()
-      val r = HyperStorage(spark, Content.empty(spark)).applySeq(Seq(
-        WriteOp(1, "PUT", "docs~/a", """{"x":1}""")))
-      ContentStore.write(r.log, path, SaveMode.Overwrite)
-      // simulate the crash window: committed tmp exists, live dir deleted
-      val fs = new org.apache.hadoop.fs.Path(path)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val tmp = new org.apache.hadoop.fs.Path(s"$path.compact")
-      fs.rename(new org.apache.hadoop.fs.Path(path), tmp)
-      val st = ContentStore.open(spark, path) // adopts the tmp
-      st.get("docs~/a").map(_.getAs[String]("body")) shouldBe
-        Some("""{"x":1,"id":"a"}""")
+      Files.createDirectories(java.nio.file.Path.of(path, "part=0"))
+      Seq[String => Any](ContentStore.open(spark, _), ContentStore.openOrEmpty(spark, _),
+          ContentStore.compact(spark, _)).foreach { call =>
+        intercept[IllegalStateException](call(path)).getMessage should include(
+          "pre-manifest layout; rebuild the store")
+      }
     }
 
     "writes after applyOps keep serving (append mode)" in {

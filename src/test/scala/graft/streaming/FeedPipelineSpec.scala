@@ -149,6 +149,34 @@ class FeedPipelineSpec extends AnyFreeSpec with Matchers with SparkFixture {
       reg.get("feed.events.completed") shouldBe 3
     }
 
+    "a first batch that rejects every op leaves an empty store the next batch extends" in {
+      import spark.implicits._
+      TestSink.reset()
+      val (storePath, ledgerPath, _) = paths()
+      // batch 1 on an empty path: both ops target absent items (404s), so
+      // the store's first write carries no rows
+      FeedPipeline.runBatch(
+        Seq(WriteOp(1, "PATCH", "c~/a", """{"y":1}"""),
+          WriteOp(2, "DELETE", "c~/b", null)).toDS(),
+        60000L, storePath, ledgerPath)(TestSink.send)
+      TestSink.delivered shouldBe empty
+      val first = ContentStore.openOrEmpty(spark, storePath)
+      first.get("c~/a") shouldBe None
+      first.revisionOf("c~") shouldBe 0
+      // batch 2 applies on top of that empty version
+      FeedPipeline.runBatch(
+        Seq(WriteOp(3, "PUT", "c~/a", """{"x":1}"""),
+          WriteOp(4, "PUT", "c~/b", """{"x":2}""")).toDS(),
+        120000L, storePath, ledgerPath)(TestSink.send)
+      TestSink.delivered.keys.map(_._3).toSeq.sorted shouldBe Seq(1L, 2L)
+      val st = ContentStore.open(spark, storePath)
+      st.get("c~/a").map(_.getAs[String]("body")) shouldBe
+        Some("""{"x":1,"id":"a"}""")
+      st.query("c~").rows.collect().map(_.getAs[String]("item_id")).toSeq shouldBe
+        Seq("a", "b")
+      st.revisionOf("c~") shouldBe 2
+    }
+
     "releases every cache it takes: no persisted RDD outlives a batch" in {
       import spark.implicits._
       import graft.indexing.{IndexManager, IndexStore}

@@ -1,6 +1,10 @@
 #!/bin/bash
 # Run a graft main (Verify/Bench/Probe) against the compiled classes without
-# holding the sbt lock. Usage: tools/run.sh graft.Verify [args...]
+# holding the sbt lock, with the same JVM flags as build.sbt's forked run.
+# Usage: tools/run.sh graft.Verify [args...], e.g.
+#   tools/run.sh graft.Probe <sf_dir> time q1_agg 3
+# Env: SPARK_DRIVER_MEM (default below), SPARK_GRAFT_CPUS (cores; read by
+# Verify, Bench and Probe).
 MAIN=$1; shift
 ADDOPENS=""
 for p in java.base/java.lang java.base/java.lang.invoke java.base/java.lang.reflect \
