@@ -64,15 +64,7 @@ object SparkEntry {
   }
 
   /** Run `body` with `spark.sql.shuffle.partitions` temporarily set to
-    * `n` — the STATE-partition sizing knob for the streaming sketch
-    * entries: a stateful streaming shuffle keys on a handful of groups
-    * (5 sources / ~8 event types here), and every state partition pays
-    * per-batch checkpoint-delta file I/O whether or not it holds a
-    * group, so 32 partitions price 4× the file ops of a keyspace-sized
-    * 8. This is the knob a real deployment sizes to its key
-    * cardinality, not a bench trick: the maintained results are
-    * partition-count-independent (the oracles pin them). Restores the
-    * previous setting even on failure.
+    * `n`, restoring the previous setting even on failure.
     *
     * NOTE: the override is SESSION-GLOBAL for the duration of `body` —
     * safe because Bench and Verify execute entries strictly
@@ -84,6 +76,74 @@ object SparkEntry {
     val prev = s.conf.get("spark.sql.shuffle.partitions")
     s.conf.set("spark.sql.shuffle.partitions", n.toString)
     try body finally s.conf.set("spark.sql.shuffle.partitions", prev)
+  }
+
+  // ------------------------------------------------- streaming-gate helpers
+  // Every `*_stream_*` entry replays its arrival schedule through these;
+  // each gate keeps its own operator, output mode, sink and result query.
+
+  /** Write each chunk as one append-mode parquet file under a fresh
+    * `path`, in order, and pin strictly increasing mtimes in write order
+    * (chunk i of n gets now − (n − i) min). FileStreamSource orders files
+    * by MODIFICATION TIME only, and two tiny sequential writes can land
+    * in the same local-FS millisecond, so without the pin the trigger
+    * order is not the write order. */
+  private[graft] def writeArrivals(s: SparkSession, path: String,
+      chunks: DataFrame*): Unit = {
+    val dirPath = new org.apache.hadoop.fs.Path(path)
+    val fs = dirPath.getFileSystem(s.sparkContext.hadoopConfiguration)
+    def dataFiles(): Set[org.apache.hadoop.fs.Path] =
+      fs.listStatus(dirPath).map(_.getPath).filterNot(p =>
+        p.getName.startsWith("_") || p.getName.startsWith(".")).toSet
+    val t0 = System.currentTimeMillis()
+    var seen = Set.empty[org.apache.hadoop.fs.Path]
+    chunks.zipWithIndex.foreach { case (chunk, i) =>
+      chunk.coalesce(1).write.mode("append").parquet(path)
+      val now = dataFiles()
+      val mtime = t0 - (chunks.size - i) * 60000L
+      (now -- seen).foreach(fs.setTimes(_, mtime, -1L))
+      seen = now
+    }
+  }
+
+  /** The file-source stream over an arrival schedule: the schema of the
+    * written chunks, one file per trigger. */
+  private[graft] def readArrivals(s: SparkSession, path: String): DataFrame =
+    s.readStream.schema(s.read.parquet(path).schema)
+      .option("maxFilesPerTrigger", 1).parquet(path)
+
+  /** Shuffle partitions while a gate's query drains. Every gate's
+    * shuffles are small: the sketch and monitor gates key on 5 sources or
+    * ~8 event types, and the rest replay two triggers of sf-scale input
+    * (st10's per-trigger probe jobs included). Every state partition pays
+    * per-batch checkpoint-delta file I/O whether or not it holds a key,
+    * and a stream-stream join runs four state stores per side per
+    * partition, so the default 32 partitions price 4× the file ops of 8
+    * (probed 4/8/16/32: st6 2.9 s at 8 vs 4.0 s at 32, st9 2.3 s vs
+    * 3.9 s). This is the knob a deployment sizes to its key cardinality;
+    * every gate's result is partition-count-independent (the oracles pin
+    * them), and the stateless gates (st15, st18) plan no shuffle (st18's
+    * one exchange is its broadcast). */
+  private[graft] val StatePartitions = 8
+
+  /** Start `writer` on checkpoint `ckpt` under StatePartitions, process
+    * every available file, and stop the query, also when a batch fails
+    * (the failure is rethrown). */
+  private[graft] def drain(s: SparkSession,
+      writer: org.apache.spark.sql.streaming.DataStreamWriter[_],
+      ckpt: String): Unit =
+    withShufflePartitions(s, StatePartitions) {
+      val q = writer.option("checkpointLocation", ckpt).start()
+      try q.processAllAvailable() finally q.stop()
+    }
+
+  /** A memory sink's rows as a DataFrame, with the sink's temp view
+    * dropped so no later entry can observe it (the DataFrame keeps the
+    * rows). */
+  private def memorySinkRows(s: SparkSession, name: String): DataFrame = {
+    val rows = s.table(name)
+    s.catalog.dropTempView(name)
+    rows
   }
 
   /** Process-level memo for per-(entry, sfDir) SETUP that is not the
@@ -114,9 +174,10 @@ object SparkEntry {
 
   /** st19/st20 shared input fixture: chronologically-split view/click
     * chunks with a ride-along far-future sentinel per stream (see
-    * st19_stream_outer_join's comment for the layout); built once per
-    * (session, sf) — both interval-join gates replay the SAME arrival
-    * schedule, so they differ only in joinType. */
+    * st19_stream_outer_join's comment for the layout), written through
+    * writeArrivals so the chronological split IS the trigger order;
+    * built once per (session, sf) — both interval-join gates replay the
+    * SAME arrival schedule, so they differ only in joinType. */
   private def st19Input(s: SparkSession, dir: String): String =
     prepared(s, s"st19in:$dir") {
         val b = scratchDir(s, "st19in", dir)
@@ -132,32 +193,17 @@ object SparkEntry {
         val midMs =
           (mm.getTimestamp(0).getTime + mm.getTimestamp(1).getTime) / 2
         val sentMs = mm.getTimestamp(1).getTime + 100L * 24 * 3600 * 1000
-        val fs = new org.apache.hadoop.fs.Path(b)
-          .getFileSystem(s.sparkContext.hadoopConfiguration)
+        // the sentinel RIDES in the second chunk: the watermark is the
+        // per-batch max event time, so batch 2 processes the late-half
+        // rows on time (late = vs batch 1's watermark) AND advances the
+        // watermark past every real window — one trigger cheaper than
+        // a separate sentinel file, identical final table
         def writeChrono(df: DataFrame, tsCol: String, sub: String,
-            sentinel: DataFrame): Unit = {
-          val p = new org.apache.hadoop.fs.Path(s"$b/$sub")
-          def files(): Set[org.apache.hadoop.fs.Path] =
-            fs.listStatus(p).map(_.getPath).filterNot(q =>
-              q.getName.startsWith("_") || q.getName.startsWith(".")).toSet
-          df.filter(col(tsCol) <= timestamp_millis(lit(midMs)))
-            .coalesce(1).write.mode("append").parquet(p.toString)
-          val b1 = files()
-          // the sentinel RIDES in the second chunk: the watermark is the
-          // per-batch max event time, so batch 2 processes the late-half
-          // rows on time (late = vs batch 1's watermark) AND advances the
-          // watermark past every real window — one trigger cheaper than
-          // a separate sentinel file, identical final table
-          df.filter(col(tsCol) > timestamp_millis(lit(midMs)))
-            .unionByName(sentinel)
-            .coalesce(1).write.mode("append").parquet(p.toString)
-          val b2 = files() -- b1
-          // FileStreamSource orders by mtime only — pin distinct mtimes
-          // so the chronological split IS the trigger order (st16 idiom)
-          val t0 = System.currentTimeMillis()
-          b1.foreach(q => fs.setTimes(q, t0 - 120000L, -1L))
-          b2.foreach(q => fs.setTimes(q, t0 - 60000L, -1L))
-        }
+            sentinel: DataFrame): Unit =
+          writeArrivals(s, s"$b/$sub",
+            df.filter(col(tsCol) <= timestamp_millis(lit(midMs))),
+            df.filter(col(tsCol) > timestamp_millis(lit(midMs)))
+              .unionByName(sentinel))
         writeChrono(views, "vts", "v", s.range(1).select(
           lit(-1L).as("view_id"), lit(-1L).as("v_user"),
           timestamp_millis(lit(sentMs)).as("vts")))
@@ -816,8 +862,8 @@ object SparkEntry {
 
     "st6_stream_revisions" -> ((s, dir) => {
       // ST6 under a REAL micro-batch executor: flatMapGroupsWithState over
-      // a file source, ≥2 triggers (maxFilesPerTrigger=1 over two appended
-      // files) — per-key revision state must carry ACROSS batches. Output
+      // a file source, ≥2 triggers (one per arrival file) — per-key
+      // revision state must carry ACROSS batches. Output
       // pins gaplessness: per uri, revisions are exactly {1..n} iff
       // count=n ∧ distinct=n ∧ max=n ∧ sum=n(n+1)/2.
       import s.implicits._
@@ -828,27 +874,13 @@ object SparkEntry {
         concat(lit("bucket"), pmod(col("c_custkey"), lit(8)).cast("string"),
           lit("~/"), col("c_custkey").cast("string")).as("path"),
         lit("{}").as("body"))
-      ops.filter(col("seq") % 2 === 0).coalesce(1)
-        .write.mode("append").parquet(s"$base/in")
-      ops.filter(col("seq") % 2 === 1).coalesce(1)
-        .write.mode("append").parquet(s"$base/in")
-      // state partitions load-sized like the other stateful gates (the
-      // withShufflePartitions note): the keyspace is per-document but
-      // the job is two triggers over sf-scale input — probed 4/8/16/32,
-      // 8 wins (min-window 2.9 s vs 4.0 s at 32): per-partition
-      // checkpoint-delta file ops dominate per-key work at this load
-      withShufflePartitions(s, 8) {
-        val stream = s.readStream
-          .schema(s.read.parquet(s"$base/in").schema)
-          .option("maxFilesPerTrigger", 1)
-          .parquet(s"$base/in").as[WriteOp]
-        val q = graft.streaming.ChangeFeed.assignRevisions(stream)
-          .writeStream.format("memory").queryName("st6_revs")
-          .option("checkpointLocation", s"$base/ckpt")
-          .outputMode("append").start()
-        try q.processAllAvailable() finally q.stop()
-      }
-      s.table("st6_revs")
+      writeArrivals(s, s"$base/in",
+        ops.filter(col("seq") % 2 === 0), ops.filter(col("seq") % 2 === 1))
+      drain(s, graft.streaming.ChangeFeed.assignRevisions(
+          readArrivals(s, s"$base/in").as[WriteOp])
+        .writeStream.format("memory").queryName("st6_revs")
+        .outputMode("append"), s"$base/ckpt")
+      memorySinkRows(s, "st6_revs")
         .groupBy(col("document_uri"))
         .agg(count(lit(1)).as("events"),
           max(col("revision")).as("max_rev"),
@@ -906,17 +938,11 @@ object SparkEntry {
       // duplicated across the trigger boundary
       val base = scratchDir(s, "st15", dir)
       val docs = t(s, dir, "documents")
-      docs.filter(col("doc_id") % 2 === 0).coalesce(1)
-        .write.mode("append").parquet(s"$base/in")
-      docs.filter(col("doc_id") % 2 === 1).coalesce(1)
-        .write.mode("append").parquet(s"$base/in")
-      val stream = s.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1).parquet(s"$base/in")
-      val q = stream.writeStream.format("parquet")
-        .option("path", s"$base/out")
-        .option("checkpointLocation", s"$base/ckpt")
-        .outputMode("append").start()
-      try q.processAllAvailable() finally q.stop()
+      writeArrivals(s, s"$base/in",
+        docs.filter(col("doc_id") % 2 === 0),
+        docs.filter(col("doc_id") % 2 === 1))
+      drain(s, readArrivals(s, s"$base/in").writeStream.format("parquet")
+        .option("path", s"$base/out").outputMode("append"), s"$base/ckpt")
       s.read.parquet(s"$base/out")
         .select("doc_id", "text", "lang", "source", "n_chars")
         .orderBy("doc_id")
@@ -1190,7 +1216,7 @@ object SparkEntry {
 
     "st9_stream_dedup" -> ((s, dir) => {
       // streaming dedup-on-arrival under a REAL micro-batch executor
-      // (file source, maxFilesPerTrigger=1, 2 triggers): originals arrive
+      // (file source, one file per trigger, 2 triggers): originals arrive
       // in batch 1; exact copies + intra-batch duplicate synthetics in
       // batch 2. First-arrival state must drop every cross-batch copy and
       // keep the min-id synthetic within its batch.
@@ -1203,24 +1229,15 @@ object SparkEntry {
       val synth = s.range(10).select((col("id") + 200000L).as("doc_id"),
         md5(concat(lit("synthetic "),
           pmod(col("id"), lit(5)).cast("string"))).as("h"))
-      originals.coalesce(1).write.mode("append").parquet(s"$base/in")
-      copies.unionByName(synth).coalesce(1)
-        .write.mode("append").parquet(s"$base/in")
-      // probed 4/8/16/32 state partitions (r12 verdict #3): 8 wins
-      // (min-window 2.3 s vs 3.9 s at 32) — same file-op floor as st6
-      withShufflePartitions(s, 8) {
-        val stream = s.readStream.schema(s.read.parquet(s"$base/in").schema)
-          .option("maxFilesPerTrigger", 1).parquet(s"$base/in")
-          .select(col("doc_id").as("_1"), col("h").as("_2"))
-          .as[(Long, String)]
-        val q = graft.streaming.Streams.dedupFirstArrival(stream)
-          .toDF("doc_id", "h")
-          .writeStream.format("memory").queryName("st9_dedup")
-          .option("checkpointLocation", s"$base/ckpt")
-          .outputMode("append").start()
-        try q.processAllAvailable() finally q.stop()
-      }
-      s.table("st9_dedup").orderBy("doc_id")
+      writeArrivals(s, s"$base/in", originals, copies.unionByName(synth))
+      val stream = readArrivals(s, s"$base/in")
+        .select(col("doc_id").as("_1"), col("h").as("_2"))
+        .as[(Long, String)]
+      drain(s, graft.streaming.Streams.dedupFirstArrival(stream)
+        .toDF("doc_id", "h")
+        .writeStream.format("memory").queryName("st9_dedup")
+        .outputMode("append"), s"$base/ckpt")
+      memorySinkRows(s, "st9_dedup").orderBy("doc_id")
     }),
 
     "st10_stream_corpus_dedup" -> ((s, dir) => {
@@ -1246,36 +1263,24 @@ object SparkEntry {
         Dedup.bandedSignatures(Dedup.minhashSignatures(shC, 32),
             "id", "sig", 16, 32)
           .write.mode("overwrite").parquet(s"$fx/corpus_banded")
-        val arrivals = docs.filter(col("doc_id") % 2 === 1)
-        arrivals.filter(col("doc_id") % 4 === 1).coalesce(1)
-          .write.mode("append").parquet(s"$fx/in")
-        arrivals.filter(col("doc_id") % 4 === 3).coalesce(1)
-          .write.mode("append").parquet(s"$fx/in")
+        writeArrivals(s, s"$fx/in",
+          docs.filter(col("doc_id") % 4 === 1),
+          docs.filter(col("doc_id") % 4 === 3))
         fx
       }
       val base = scratchDir(s, "st10", dir)
-      // load-sized partitions for the per-trigger probe jobs (the
-      // withShufflePartitions note — each batch is half the odd docs)
-      withShufflePartitions(s, 8) {
-        val stream = s.readStream
-          .schema(s.read.parquet(s"$inBase/in").schema)
-          .option("maxFilesPerTrigger", 1).parquet(s"$inBase/in")
-        val q = stream.writeStream
-          .foreachBatch { (b: DataFrame, _: Long) =>
-            val res = Dedup.minhashDedupAgainstTables(
-              s.read.parquet(s"$inBase/corpus_shingles"),
-              s.read.parquet(s"$inBase/corpus_banded"),
-              b, "text", "doc_id", n = 3, k = 32, bands = 16,
-              threshold = 0.5)
-            res.select("batch_id", "corpus_id", "jaccard")
-              .write.mode("append").parquet(s"$base/out")
-            res.unpersist() // caller-owned cache, one per trigger
-            ()
-          }
-          .option("checkpointLocation", s"$base/ckpt")
-          .start()
-        try q.processAllAvailable() finally q.stop()
-      }
+      drain(s, readArrivals(s, s"$inBase/in").writeStream
+        .foreachBatch { (b: DataFrame, _: Long) =>
+          val res = Dedup.minhashDedupAgainstTables(
+            s.read.parquet(s"$inBase/corpus_shingles"),
+            s.read.parquet(s"$inBase/corpus_banded"),
+            b, "text", "doc_id", n = 3, k = 32, bands = 16,
+            threshold = 0.5)
+          res.select("batch_id", "corpus_id", "jaccard")
+            .write.mode("append").parquet(s"$base/out")
+          res.unpersist() // caller-owned cache, one per trigger
+          ()
+        }, s"$base/ckpt")
       s.read.parquet(s"$base/out")
         .select("batch_id", "corpus_id").orderBy("batch_id", "corpus_id")
     }),
@@ -1283,7 +1288,7 @@ object SparkEntry {
     "st11_stream_stream_join" -> ((s, dir) => {
       // stream-stream time-interval join under a REAL micro-batch
       // executor: views and clicks arrive as two independent file-source
-      // streams (two chunks each, maxFilesPerTrigger=1), inner-joined on
+      // streams (two chunks each, one per trigger), inner-joined on
       // user within [click-10min, click]. Watermarks bound the join state
       // in production (state ∝ rate × disorder bound); the replay uses a
       // full-span bound so NOTHING is ever late and the final table is
@@ -1302,39 +1307,26 @@ object SparkEntry {
         val clicks = ev.filter(col("event_type") === "click")
           .select(col("event_id").as("click_id"), col("user_id").as("c_user"),
             col("ets").as("cts"))
-        views.filter(col("view_id") % 2 === 0).coalesce(1)
-          .write.mode("append").parquet(s"$b/v")
-        views.filter(col("view_id") % 2 === 1).coalesce(1)
-          .write.mode("append").parquet(s"$b/v")
-        clicks.filter(col("click_id") % 2 === 0).coalesce(1)
-          .write.mode("append").parquet(s"$b/c")
-        clicks.filter(col("click_id") % 2 === 1).coalesce(1)
-          .write.mode("append").parquet(s"$b/c")
+        writeArrivals(s, s"$b/v", views.filter(col("view_id") % 2 === 0),
+          views.filter(col("view_id") % 2 === 1))
+        writeArrivals(s, s"$b/c", clicks.filter(col("click_id") % 2 === 0),
+          clicks.filter(col("click_id") % 2 === 1))
         b
       }
       val base = scratchDir(s, "st11", dir)
-      // load-sized state partitions (the st19 note)
-      withShufflePartitions(s, 8) {
-        val vs = s.readStream.schema(s.read.parquet(s"$inBase/v").schema)
-          .option("maxFilesPerTrigger", 1).parquet(s"$inBase/v")
-        val cs = s.readStream.schema(s.read.parquet(s"$inBase/c").schema)
-          .option("maxFilesPerTrigger", 1).parquet(s"$inBase/c")
-        // the library operator owns the watermark/interval contract
-        // (Streams.intervalJoin — state ∝ rate × (delay + lookback));
-        // this REPLAY passes a full-span delay so nothing is ever late
-        // and the final table equals the batch join the oracle replays.
-        // The production contract (late rows dropped, state bounded) is
-        // spec-pinned in StreamsSpec with a tight delay.
-        val q = graft.streaming.Streams.intervalJoin(
-            vs, "vts", "40 days", cs, "cts", "40 days",
-            col("c_user") === col("v_user"), "10 minutes")
-          .select("click_id", "view_id")
-          .writeStream.format("parquet")
-          .option("path", s"$base/out")
-          .option("checkpointLocation", s"$base/ckpt")
-          .start()
-        try q.processAllAvailable() finally q.stop()
-      }
+      // the library operator owns the watermark/interval contract
+      // (Streams.intervalJoin — state ∝ rate × (delay + lookback));
+      // this REPLAY passes a full-span delay so nothing is ever late
+      // and the final table equals the batch join the oracle replays.
+      // The production contract (late rows dropped, state bounded) is
+      // spec-pinned in StreamsSpec with a tight delay.
+      drain(s, graft.streaming.Streams.intervalJoin(
+          readArrivals(s, s"$inBase/v"), "vts", "40 days",
+          readArrivals(s, s"$inBase/c"), "cts", "40 days",
+          col("c_user") === col("v_user"), "10 minutes")
+        .select("click_id", "view_id")
+        .writeStream.format("parquet")
+        .option("path", s"$base/out"), s"$base/ckpt")
       s.read.parquet(s"$base/out").orderBy("click_id", "view_id")
     }),
 
@@ -1351,21 +1343,14 @@ object SparkEntry {
         col("event_type"))
       ev.groupBy("event_type").agg(count(lit(1)).as("type_cnt"))
         .coalesce(1).write.mode("overwrite").parquet(s"$base/dim")
-      ev.filter(col("event_id") % 2 === 0).coalesce(1)
-        .write.mode("append").parquet(s"$base/in")
-      ev.filter(col("event_id") % 2 === 1).coalesce(1)
-        .write.mode("append").parquet(s"$base/in")
+      writeArrivals(s, s"$base/in", ev.filter(col("event_id") % 2 === 0),
+        ev.filter(col("event_id") % 2 === 1))
       val dim = s.read.parquet(s"$base/dim")
-      val stream = s.readStream.schema(s.read.parquet(s"$base/in").schema)
-        .option("maxFilesPerTrigger", 1).parquet(s"$base/in")
-      val q = stream.filter(col("user_id") < 20)
+      drain(s, readArrivals(s, s"$base/in").filter(col("user_id") < 20)
         .join(broadcast(dim), "event_type")
         .select("event_id", "event_type", "type_cnt")
         .writeStream.format("parquet")
-        .option("path", s"$base/out")
-        .option("checkpointLocation", s"$base/ckpt")
-        .start()
-      try q.processAllAvailable() finally q.stop()
+        .option("path", s"$base/out"), s"$base/ckpt")
       s.read.parquet(s"$base/out").orderBy("event_id")
     }),
 
@@ -1386,28 +1371,15 @@ object SparkEntry {
       // (session, sf), like st11's; fresh out/ckpt per call below.
       val inBase = st19Input(s, dir)
       val base = scratchDir(s, "st19", dir)
-      // load-sized state partitions: a stream-stream join runs FOUR
-      // state stores per side per partition, each paying per-batch
-      // checkpoint-delta I/O — for a two-trigger replay, 32 partitions
-      // price 4× the file ops 8 can carry (the withShufflePartitions
-      // note; the joined rows are partition-count-independent)
-      withShufflePartitions(s, 8) {
-        val vs = s.readStream.schema(s.read.parquet(s"$inBase/v").schema)
-          .option("maxFilesPerTrigger", 1).parquet(s"$inBase/v")
-        val cs = s.readStream.schema(s.read.parquet(s"$inBase/c").schema)
-          .option("maxFilesPerTrigger", 1).parquet(s"$inBase/c")
-        val q = graft.streaming.Streams.intervalJoin(
-            vs, "vts", "1 minute", cs, "cts", "1 minute",
-            col("c_user") === col("v_user"), "10 minutes",
-            joinType = "left_outer")
-          .select(col("click_id"),
-            coalesce(col("view_id"), lit(-1L)).as("view_id"))
-          .writeStream.format("parquet")
-          .option("path", s"$base/out")
-          .option("checkpointLocation", s"$base/ckpt")
-          .start()
-        try q.processAllAvailable() finally q.stop()
-      }
+      drain(s, graft.streaming.Streams.intervalJoin(
+          readArrivals(s, s"$inBase/v"), "vts", "1 minute",
+          readArrivals(s, s"$inBase/c"), "cts", "1 minute",
+          col("c_user") === col("v_user"), "10 minutes",
+          joinType = "left_outer")
+        .select(col("click_id"),
+          coalesce(col("view_id"), lit(-1L)).as("view_id"))
+        .writeStream.format("parquet")
+        .option("path", s"$base/out"), s"$base/ckpt")
       s.read.parquet(s"$base/out").filter(col("click_id") >= 0)
         .orderBy("click_id", "view_id")
     }),
@@ -1427,23 +1399,15 @@ object SparkEntry {
       // coalesce to −1 (nullable ints float-ify in the comparer).
       val inBase = st19Input(s, dir)
       val base = scratchDir(s, "st20", dir)
-      withShufflePartitions(s, 8) {
-        val vs = s.readStream.schema(s.read.parquet(s"$inBase/v").schema)
-          .option("maxFilesPerTrigger", 1).parquet(s"$inBase/v")
-        val cs = s.readStream.schema(s.read.parquet(s"$inBase/c").schema)
-          .option("maxFilesPerTrigger", 1).parquet(s"$inBase/c")
-        val q = graft.streaming.Streams.intervalJoin(
-            vs, "vts", "1 minute", cs, "cts", "1 minute",
-            col("c_user") === col("v_user"), "10 minutes",
-            joinType = "right_outer")
-          .select(col("view_id"),
-            coalesce(col("click_id"), lit(-1L)).as("click_id"))
-          .writeStream.format("parquet")
-          .option("path", s"$base/out")
-          .option("checkpointLocation", s"$base/ckpt")
-          .start()
-        try q.processAllAvailable() finally q.stop()
-      }
+      drain(s, graft.streaming.Streams.intervalJoin(
+          readArrivals(s, s"$inBase/v"), "vts", "1 minute",
+          readArrivals(s, s"$inBase/c"), "cts", "1 minute",
+          col("c_user") === col("v_user"), "10 minutes",
+          joinType = "right_outer")
+        .select(col("view_id"),
+          coalesce(col("click_id"), lit(-1L)).as("click_id"))
+        .writeStream.format("parquet")
+        .option("path", s"$base/out"), s"$base/ckpt")
       s.read.parquet(s"$base/out").filter(col("view_id") >= 0)
         .orderBy("view_id", "click_id")
     }),
@@ -1470,28 +1434,19 @@ object SparkEntry {
             explode(graft.pipeline.Dedup.shingles(col("text"), 3)).as("sh"))
           .select(col("doc_id"), col("source"),
             graft.pipeline.Sampling.md5Hash60(col("sh")).as("h"))
-        rows.filter(col("doc_id") % 2 === 0).select("source", "h")
-          .coalesce(1).write.mode("append").parquet(s"$out/in")
-        rows.filter(col("doc_id") % 2 === 1).select("source", "h")
-          .coalesce(1).write.mode("append").parquet(s"$out/in")
+        writeArrivals(s, s"$out/in",
+          rows.filter(col("doc_id") % 2 === 0).select("source", "h"),
+          rows.filter(col("doc_id") % 2 === 1).select("source", "h"))
         out
       }
       val ckpt = scratchDir(s, "st12ckpt", dir)
-      // state partitions sized to the keyspace (5 sources) — see
-      // withShufflePartitions; the maintained registers are
-      // partition-count-independent (elementwise max merge)
-      withShufflePartitions(s, 8) {
-        val stream = s.readStream.schema(s.read.parquet(s"$base/in").schema)
-          .option("maxFilesPerTrigger", 1).parquet(s"$base/in")
-          .select(col("source").as("_1"), col("h").as("_2")).as[(String, Long)]
-        val q = graft.streaming.Streams.hllMaintain(stream, p = 6)
-          .toDF("source", "upd", "regs")
-          .writeStream.format("memory").queryName("st12_hll")
-          .option("checkpointLocation", ckpt)
-          .outputMode("update").start()
-        try q.processAllAvailable() finally q.stop()
-      }
-      val finalRegs = s.table("st12_hll")
+      val stream = readArrivals(s, s"$base/in")
+        .select(col("source").as("_1"), col("h").as("_2")).as[(String, Long)]
+      drain(s, graft.streaming.Streams.hllMaintain(stream, p = 6)
+        .toDF("source", "upd", "regs")
+        .writeStream.format("memory").queryName("st12_hll")
+        .outputMode("update"), ckpt)
+      val finalRegs = memorySinkRows(s, "st12_hll")
         .groupBy("source").agg(max_by(col("regs"), col("upd")).as("regs"))
       graft.pipeline.Stats.hllEstimate(finalRegs, "source", p = 6)
         .orderBy("source")
@@ -1508,25 +1463,19 @@ object SparkEntry {
       import s.implicits._
       // the pinned-mtime chunk layout is fixture, built once per
       // (session, sf) — mtimes persist with the files, so the in-order
-      // contract survives the memo; checkpoint per-run (the st12 note)
+      // contract survives the memo; checkpoint per-run (as in st12)
       val base = prepared(s, s"st16in:$dir") {
         orderedCountFiles(s, dir, "st16")
       }
       val ckpt = scratchDir(s, "st16ckpt", dir)
-      // keyspace-sized state partitions (~8 event types; the st12 note)
-      withShufflePartitions(s, 8) {
-        val stream = s.readStream.schema(s.read.parquet(s"$base/in").schema)
-          .option("maxFilesPerTrigger", 1).parquet(s"$base/in")
-          .select(col("event_type").as("_1"), col("bucket").as("_2"),
-            col("cnt").as("_3")).as[(String, Long, Long)]
-        val q = graft.streaming.Streams.ewmaMaintain(stream, alpha = 0.25)
-          .toDF("event_type", "bucket", "cnt", "ewma")
-          .writeStream.format("memory").queryName("st16_ewma")
-          .option("checkpointLocation", ckpt)
-          .outputMode("update").start()
-        try q.processAllAvailable() finally q.stop()
-      }
-      s.table("st16_ewma").orderBy("event_type", "bucket")
+      val stream = readArrivals(s, s"$base/in")
+        .select(col("event_type").as("_1"), col("bucket").as("_2"),
+          col("cnt").as("_3")).as[(String, Long, Long)]
+      drain(s, graft.streaming.Streams.ewmaMaintain(stream, alpha = 0.25)
+        .toDF("event_type", "bucket", "cnt", "ewma")
+        .writeStream.format("memory").queryName("st16_ewma")
+        .outputMode("update"), ckpt)
+      memorySinkRows(s, "st16_ewma").orderBy("event_type", "bucket")
     }),
 
     "st17_stream_anomaly" -> ((s, dir) => {
@@ -1541,22 +1490,16 @@ object SparkEntry {
         orderedCountFiles(s, dir, "st17")
       }
       val ckpt = scratchDir(s, "st17ckpt", dir)
-      // keyspace-sized state partitions (~8 event types; the st12 note)
-      withShufflePartitions(s, 8) {
-        val stream = s.readStream.schema(s.read.parquet(s"$base/in").schema)
-          .option("maxFilesPerTrigger", 1).parquet(s"$base/in")
-          .select(col("event_type").as("_1"), col("bucket").as("_2"),
-            col("cnt").as("_3")).as[(String, Long, Long)]
-        val q = graft.streaming.Streams.anomalyMaintain(stream,
-            window = 24, factor = 2L)
-          .toDF("event_type", "bucket", "cnt", "trail_n", "trail_sum",
-            "anomaly")
-          .writeStream.format("memory").queryName("st17_anomaly")
-          .option("checkpointLocation", ckpt)
-          .outputMode("update").start()
-        try q.processAllAvailable() finally q.stop()
-      }
-      s.table("st17_anomaly").orderBy("event_type", "bucket")
+      val stream = readArrivals(s, s"$base/in")
+        .select(col("event_type").as("_1"), col("bucket").as("_2"),
+          col("cnt").as("_3")).as[(String, Long, Long)]
+      drain(s, graft.streaming.Streams.anomalyMaintain(stream,
+          window = 24, factor = 2L)
+        .toDF("event_type", "bucket", "cnt", "trail_n", "trail_sum",
+          "anomaly")
+        .writeStream.format("memory").queryName("st17_anomaly")
+        .outputMode("update"), ckpt)
+      memorySinkRows(s, "st17_anomaly").orderBy("event_type", "bucket")
     }),
 
     "st13_stream_cms" -> ((s, dir) => {
@@ -1581,10 +1524,9 @@ object SparkEntry {
           .filter(col("tok") =!= "")
         val hashed = rows.select(col("doc_id"), col("source"),
           graft.pipeline.Sampling.md5Hash60(col("tok")).as("h"))
-        hashed.filter(col("doc_id") % 2 === 0).select("source", "h")
-          .coalesce(1).write.mode("append").parquet(s"$out/in")
-        hashed.filter(col("doc_id") % 2 === 1).select("source", "h")
-          .coalesce(1).write.mode("append").parquet(s"$out/in")
+        writeArrivals(s, s"$out/in",
+          hashed.filter(col("doc_id") % 2 === 0).select("source", "h"),
+          hashed.filter(col("doc_id") % 2 === 1).select("source", "h"))
         val top = rows.groupBy("tok").agg(count(lit(1)).as("g"))
           .orderBy(col("g").desc, col("tok")).limit(10).select("tok")
         rows.join(broadcast(top), "tok")
@@ -1593,20 +1535,13 @@ object SparkEntry {
         out
       }
       val ckpt = scratchDir(s, "st13ckpt", dir)
-      // keyspace-sized state partitions (the st12 note); counter
-      // addition is partition-count-independent
-      withShufflePartitions(s, 8) {
-        val stream = s.readStream.schema(s.read.parquet(s"$base/in").schema)
-          .option("maxFilesPerTrigger", 1).parquet(s"$base/in")
-          .select(col("source").as("_1"), col("h").as("_2")).as[(String, Long)]
-        val q = graft.streaming.Streams.cmsMaintain(stream, d = 4, wlog = 9)
-          .toDF("source", "upd", "cnts")
-          .writeStream.format("memory").queryName("st13_cms")
-          .option("checkpointLocation", ckpt)
-          .outputMode("update").start()
-        try q.processAllAvailable() finally q.stop()
-      }
-      val finalCnts = s.table("st13_cms")
+      val stream = readArrivals(s, s"$base/in")
+        .select(col("source").as("_1"), col("h").as("_2")).as[(String, Long)]
+      drain(s, graft.streaming.Streams.cmsMaintain(stream, d = 4, wlog = 9)
+        .toDF("source", "upd", "cnts")
+        .writeStream.format("memory").queryName("st13_cms")
+        .outputMode("update"), ckpt)
+      val finalCnts = memorySinkRows(s, "st13_cms")
         .groupBy("source").agg(max_by(col("cnts"), col("upd")).as("__cms"))
       s.read.parquet(s"$base/probe").join(broadcast(finalCnts), "source")
         .withColumn("est", graft.pipeline.Stats.cmsEstimateExpr(
@@ -7842,15 +7777,13 @@ object SparkEntry {
         TrainedNlist, TrainedIters)
     }
 
-  /** The in-order two-trigger harness shared by the ORDER-SENSITIVE
+  /** The in-order two-trigger fixture shared by the ORDER-SENSITIVE
     * streaming entries (st16/st17): hourly (event_type, bucket, cnt)
     * counts — the SAME timeBucket as the batch operators, a drifted copy
     * would break the streamed≡batch gate identities — split at the
-    * midpoint bucket into two parquet files under `<base>/in`.
-    * FileStreamSource orders files by MODIFICATION TIME only and two
-    * tiny writes can land in the same local-FS millisecond, so the
-    * batches' mtimes are pinned explicitly (st12/st13/st15 are
-    * order-insensitive and don't need this). Returns the scratch base. */
+    * midpoint bucket into two arrival chunks under `<base>/in`, so the
+    * earlier buckets arrive first (writeArrivals pins the order).
+    * Returns the scratch base. */
   private def orderedCountFiles(
       s: SparkSession, dir: String, purpose: String): String = {
     val base = scratchDir(s, purpose, dir)
@@ -7863,21 +7796,8 @@ object SparkEntry {
     try {
       val mm = counts.agg(min("bucket"), max("bucket")).collect()(0)
       val split = (mm.getLong(0) + mm.getLong(1)) / 2
-      counts.filter(col("bucket") <= split)
-        .coalesce(1).write.mode("append").parquet(s"$base/in")
-      val inPath = new org.apache.hadoop.fs.Path(s"$base/in")
-      val fs = inPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-      def dataFiles(): Set[org.apache.hadoop.fs.Path] =
-        fs.listStatus(inPath).map(_.getPath)
-          .filterNot(p => p.getName.startsWith("_") ||
-            p.getName.startsWith(".")).toSet
-      val batch1 = dataFiles()
-      counts.filter(col("bucket") > split)
-        .coalesce(1).write.mode("append").parquet(s"$base/in")
-      val batch2 = dataFiles() -- batch1
-      val t0 = System.currentTimeMillis()
-      batch1.foreach(p => fs.setTimes(p, t0 - 120000L, -1L))
-      batch2.foreach(p => fs.setTimes(p, t0 - 60000L, -1L))
+      writeArrivals(s, s"$base/in", counts.filter(col("bucket") <= split),
+        counts.filter(col("bucket") > split))
       base
     } finally counts.unpersist()
   }

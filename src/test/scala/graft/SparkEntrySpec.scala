@@ -65,6 +65,23 @@ class SparkEntrySpec extends AnyFreeSpec with Matchers with SparkFixture {
     "entry() answers the smoke check (rows > 0 at sf0.001)" in {
       SparkEntry.entry(spark).count() should be > 0L
     }
+    "every streaming gate returns rows and leaves no session state behind" in {
+      // a gate that leaves a query running, a memory-sink view registered
+      // or its state-partition override set changes what the next entry
+      // on the same session sees
+      val gates = SparkEntry.queries.keys.filter(_.contains("_stream_"))
+        .toSeq.sorted
+      gates should have size 12
+      def tables() = spark.catalog.listTables().collect().map(_.name).toSet
+      val tablesBefore = tables()
+      val partitions = spark.conf.get("spark.sql.shuffle.partitions")
+      val rowless = gates.filter(g =>
+        SparkEntry.queries(g)(spark, "/root/testdata/sf0.001").count() == 0)
+      rowless shouldBe empty
+      spark.streams.active shouldBe empty
+      (tables() -- tablesBefore) shouldBe empty
+      spark.conf.get("spark.sql.shuffle.partitions") shouldBe partitions
+    }
     "IntegratedSpec paging: POSTed items page back in id order" in {
       // reference IntegratedSpec.scala:275-363 — POST 250 items, page with
       // the default size, ids are monotonic and pages don't overlap

@@ -3,6 +3,9 @@
 # holding the sbt lock, with the same JVM flags as build.sbt's forked run.
 # Usage: tools/run.sh graft.Verify [args...], e.g.
 #   tools/run.sh graft.Probe <sf_dir> time q1_agg 3
+#   tools/run.sh graft.Verify <sf_dir> <out_dir> _stream_
+# (Verify's optional 3rd arg is comma-separated entry-name substrings;
+# `_stream_` reruns exactly the 12 streaming gates.)
 # Env: SPARK_DRIVER_MEM (default below), SPARK_GRAFT_CPUS (cores; read by
 # Verify, Bench and Probe).
 MAIN=$1; shift
