@@ -33,6 +33,8 @@ import org.apache.spark.sql.SparkSession
   *     selection ([[graft.indexing.QueryPlanner]]'s de-facto EXPLAIN).
   *   - `index.rows.scanned`, `index.rows.accepted`, `index.rows.skipped`
   *     — index-served scans, when the residual guard measures them.
+  *   - `index.rewrites` — whole-table index rewrites after a merge
+  *     ([[graft.indexing.IndexStore]]: scattered roots or outgrown parts).
   *   - `write.batches` — [[HyperStorage.applyOps]] invocations.
   *   - `write.ops.rejected` — per-op 404/409 outcomes, counted by an
   *     accumulator riding applyOps' own fold (rejections never reach the

@@ -138,14 +138,14 @@ final class IndexManager(val storage: HyperStorage,
     store.saveDefs(defs.values)
     try {
       // apply the storage's partition pruner like every per-URI read —
-      // a ContentStore-backed build scans one directory partition. The
-      // collection revision the index reflects is observed on that scan
-      // by the build job itself: no separate job over the content log
+      // a ContentStore-backed build scans one directory partition, whose
+      // estimated size sets the index table's part count. The collection
+      // revision the index reflects is observed on that scan by the build
+      // job itself: no separate job over the content log
+      val scan = storage.log.filter(storage.uriPruner(uri) && col("document_uri") === uri)
       val scanned = new Observation()
       val items = Content.visible(
-          Content.latestRows(storage.log.filter(
-              storage.uriPruner(uri) && col("document_uri") === uri)
-            .observe(scanned, max("revision").as("revision"))))
+          Content.latestRows(scan.observe(scanned, max("revision").as("revision"))))
         .filter(col("item_id") =!= "")
       val built = materialize(items, indexing)
       // read only after the build job ran (get blocks until then); a scan
@@ -154,7 +154,7 @@ final class IndexManager(val storage: HyperStorage,
         case Some(r: Long) => r
         case _ => 0L
       }
-      store.writeTable(uri, indexId, built, revision)
+      store.writeTable(uri, indexId, built, revision, IndexStore.estimatedBytes(scan))
       val normal = indexing.copy(status = StatusNormal)
       defs += (uri, indexId) -> normal
       store.saveDefs(defs.values)
@@ -223,7 +223,7 @@ final class IndexManager(val storage: HyperStorage,
       // defs.size): which indexed collections the batch touches, which
       // carry a collection-level tombstone (item_id = "") — those cascade
       // to a full index drop (PrimaryWorker.scala:310-328;
-      // IndexingSpec.scala:655-692) — which item-hash partitions each
+      // IndexingSpec.scala:655-692) — which logical item-hash parts each
       // touches, and the collection revision each reaches
       val uriStats = relevant.groupBy("document_uri")
         .agg(

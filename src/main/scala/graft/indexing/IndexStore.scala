@@ -2,9 +2,9 @@ package graft.indexing
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, IntegerType, StructType}
+import org.apache.spark.sql.types.{DataType, StructType}
 import org.apache.hadoop.fs.Path
-import graft.engine.TableCommit
+import graft.engine.{EngineMetrics, TableCommit}
 import TableCommit.{readSwapped, writeSwapped}
 import java.net.{URLDecoder, URLEncoder}
 
@@ -21,13 +21,28 @@ import java.net.{URLDecoder, URLEncoder}
   *     _schema.json                  — driver-written Spark schema JSON
   *     _manifest                     — a line "revision<TAB>N": the
   *                                     collection revision the version
-  *                                     reflects; then lines
-  *                                     "ipart<TAB>root": which staging
-  *                                     root currently owns each partition
-  *     w-<G>/ipart=N/…parquet        — immutable staging roots, one per
+  *                                     reflects; a line "parts<TAB>n": the
+  *                                     physical part count; then lines
+  *                                     "p<TAB>root": which staging root
+  *                                     currently owns physical part p
+  *     w-<G>/ipart=p/…parquet        — immutable staging roots, one per
   *                                     build/merge job
   * }}}
-  * Index rows are hash-clustered by `crc32(item_id) % IndexPartitions`.
+  * Every row has a logical item hash `crc32(item_id) % IndexPartitions`
+  * ([[ipartCol]]) and lives in physical part `ipart mod n`, where n is a
+  * power of two, 1 ≤ n ≤ IndexPartitions, fixed per table version. A
+  * manifest without a parts line predates the rule and reads as
+  * n = IndexPartitions, the layout it was written in.
+  *
+  * n is sized to the table's bytes: a whole-table write (build or
+  * compaction) takes the smallest n with bytes / n ≤
+  * `spark.sql.files.openCostInBytes` ([[partsFor]]) — Spark's own estimate
+  * of the size at which a file is worth opening — from optimizer
+  * statistics, so choosing it launches no job. A small index is one file,
+  * read by one scan task and rewritten by one write task; a 100 TB index
+  * stays at IndexPartitions parts. Merges keep n; once a merge leaves the
+  * table larger than 2 · n · openCost, the table is rewritten at the n its
+  * size asks for.
   *
   * The manifest's revision line is the commit record of the index as a
   * sink: the collection revision its rows reflect (the latest revision of
@@ -36,18 +51,19 @@ import java.net.{URLDecoder, URLEncoder}
   * the content log, and since one manifest read yields both the parts and
   * the revision, they always come from the same version.
   *
-  * The item-hash partitioning makes incremental maintenance
-  * PARTITION-SCOPED: a feed batch touching k items reads and rewrites at
-  * most min(k, IndexPartitions) partitions into a NEW immutable staging
-  * root, then commits through the manifest swap, so the merge is atomic
-  * across every touched partition. The row-wise Cassandra MERGE the reference performs
+  * The item-hash layout makes incremental maintenance PART-SCOPED: a feed
+  * batch touching k items reads and rewrites at most min(k, n) physical
+  * parts into a NEW immutable staging root, then commits through the
+  * manifest swap, so the merge is atomic across every touched part. The
+  * row-wise Cassandra MERGE the reference performs
   * (BackgroundContentTaskCompleter.scala:126-188) is thus expressed as
-  * bulk partition rewrites with lineage truncated at every batch.
+  * bulk part rewrites with lineage truncated at every batch. The commit
+  * deletes the part directories it superseded inside roots that stay live.
   *
-  * When merges scatter a table's partitions across more than
+  * When merges scatter a table's parts across more than
   * [[IndexStore.MaxRoots]] roots, the table is compacted back into one
-  * root (full rewrite, amortized over many merges) so read plans stay a
-  * bounded union and small files don't accumulate.
+  * root (full rewrite, amortized over many merges) so small files don't
+  * accumulate.
   *
   * Single writer per store path, mirroring the reference's one-owner-per-
   * shard discipline (ShardProcessor); readers re-open per query, as
@@ -117,78 +133,77 @@ final class IndexStore(val spark: SparkSession, val path: String) {
     val revision = lines.collectFirst { case Array(RevisionKey, r) => r.toLong }
       .getOrElse(throw new IllegalStateException(
         s"${TableCommit.manifest(dir)} records no revision; rebuild the index store"))
-    Manifest(lines.collect {
-      case Array(p, root) if p != RevisionKey => p.toInt -> root
+    val n = lines.collectFirst { case Array(PartsKey, n) => n.toInt }
+      .getOrElse(IndexPartitions)
+    Manifest(n, lines.collect {
+      case Array(p, root) if p != RevisionKey && p != PartsKey => p.toInt -> root
     }.toMap, revision)
   }
 
   /** A table version is exactly what its manifest lists. */
   private def commitManifest(dir: String, m: Manifest): Unit =
     TableCommit.commit(fs, dir,
-      (s"$RevisionKey\t${m.revision}" +:
-        m.parts.toSeq.sorted.map { case (p, root) => s"$p\t$root" }).mkString("\n"),
-      m.parts.values.toSet)
-
-  /** The ipart dirs a staging write actually produced (a partition whose
-    * merge result is empty emits no dir — it simply leaves the manifest). */
-  private def writtenParts(root: Path): Seq[Int] =
-    Option(fs.globStatus(new Path(root, "ipart=*"))).getOrElse(Array.empty)
-      .flatMap(_.getPath.getName.stripPrefix("ipart=").toIntOption).toSeq
+      (Seq(s"$RevisionKey\t${m.revision}", s"$PartsKey\t${m.n}") ++
+        m.roots.toSeq.sorted.map { case (p, root) => s"$p\t$root" }).mkString("\n"),
+      m.roots.values.toSet)
 
   // ------------------------------------------------------------ tables
 
-  /** Full (re)build: one fresh staging root owning every partition. The
-    * schema anchor is a swapped write (a crash can never leave it
-    * truncated), and it lands before the manifest commit; a table's
-    * schema is a pure function of its IndexDef — a schema CHANGE always
-    * goes through dropTable (delete + create) — so the
-    * new-schema-over-old-manifest crash window rewrites an identical
+  /** Full (re)build: one fresh staging root owning every part, at the part
+    * count `bytes` asks for — the caller's optimizer estimate of the
+    * source it builds from. The schema anchor is a swapped write (a crash
+    * can never leave it truncated), and it lands before the manifest
+    * commit; a table's schema is a pure function of its IndexDef — a
+    * schema CHANGE always goes through dropTable (delete + create) — so
+    * the new-schema-over-old-manifest crash window rewrites an identical
     * schema and is benign. `revision` is evaluated after the rows are
     * written, so it may read an observation of the write job. */
   def writeTable(uri: String, indexId: String, rows: DataFrame,
-      revision: => Long): Unit = {
+      revision: => Long, bytes: BigInt): Unit = {
     val dir = tableDir(uri, indexId)
-    val root = TableCommit.nextRoot(fs, dir)
-    writePartitioned(rows, s"$dir/$root")
+    val n = partsFor(bytes)
+    val roots = writePartitioned(dir, rows, n)
     writeSwapped(fs, schemaAnchor(dir), rows.schema.json)
-    commitManifest(dir, Manifest(
-      writtenParts(new Path(dir, root)).map(_ -> root).toMap, revision))
+    commitManifest(dir, Manifest(n, roots, revision))
   }
 
-  /** Cluster rows by their target directory before the partitioned write:
-    * without the repartition every input task opens a writer per ipart it
-    * touches (up to tasks×IndexPartitions tiny files — the classic
-    * small-files problem); with it each directory is written by exactly
-    * one task per job. */
-  private def writePartitioned(rows: DataFrame, dir: String): Unit = {
-    rows.withColumn("ipart", ipartCol(col("item_id")))
-      .repartition(IndexPartitions, col("ipart"))
-      .write.partitionBy("ipart").mode(SaveMode.Overwrite).parquet(dir)
-    ()
+  /** Write `rows` into a fresh staging root laid out in `n` parts; returns
+    * the parts it produced (a part whose rows are all gone emits no
+    * directory — it simply leaves the manifest). Rows are clustered by
+    * their target directory before the partitioned write: without the
+    * repartition every input task opens a writer per part it touches (up
+    * to tasks×n tiny files — the classic small-files problem); with it
+    * each directory is written by exactly one task per job. The
+    * repartition takes no count, so AQE coalesces it to as few tasks as
+    * the bytes need. */
+  private def writePartitioned(dir: String, rows: DataFrame, n: Int): Map[Int, String] = {
+    val root = TableCommit.nextRoot(fs, dir)
+    rows.withColumn("ipart", ipartCol(col("item_id"), n))
+      .repartition(col("ipart"))
+      .write.partitionBy("ipart").mode(SaveMode.Overwrite).parquet(s"$dir/$root")
+    Option(fs.globStatus(new Path(s"$dir/$root/ipart=*"))).getOrElse(Array.empty)
+      .flatMap(_.getPath.getName.stripPrefix("ipart=").toIntOption)
+      .map(_ -> root).toMap
   }
 
   /** Open the committed table version: one manifest read yields its rows,
-    * with the anchored schema — zero-row tables and merge-emptied
-    * partitions read as empty DataFrames, not errors — and the collection
-    * revision they reflect. */
+    * with the anchored schema — zero-row tables and merge-emptied parts
+    * read as empty DataFrames, not errors — and the collection revision
+    * they reflect. */
   def openVersion(uri: String, indexId: String): IndexVersion = {
     val dir = tableDir(uri, indexId)
     val m = loadManifest(dir)
-    IndexVersion(openParts(dir, m.parts, m.parts.keys).drop("ipart"), m.revision)
+    IndexVersion(openParts(dir, m, m.roots.keys), m.revision)
   }
 
-  /** Committed rows of the given partitions only (directory-level pruning
+  /** Committed rows of the given physical parts only, in ONE scan over
+    * their directories in whatever roots own them (directory-level pruning
     * through the manifest — no file listing outside the named parts). */
-  private def openParts(dir: String, m: Map[Int, String],
-      parts: Iterable[Int]): DataFrame = {
-    val schema = tableSchema(dir).add("ipart", IntegerType)
-    val byRoot = parts.toSeq.flatMap(p => m.get(p).map(root => (root, p)))
-      .groupBy(_._1)
-    byRoot.toSeq.sortBy(_._1).map { case (root, ps) =>
-      spark.read.option("basePath", s"$dir/$root").schema(schema)
-        .parquet(ps.map(p => s"$dir/$root/ipart=${p._2}"): _*)
-    }.reduceOption(_.unionByName(_)).getOrElse(
-      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema))
+  private def openParts(dir: String, m: Manifest, parts: Iterable[Int]): DataFrame = {
+    val schema = tableSchema(dir)
+    val paths = parts.toSeq.sorted.flatMap(p => m.roots.get(p).map(root => s"$dir/$root/ipart=$p"))
+    if (paths.isEmpty) spark.createDataFrame(java.util.List.of[Row](), schema)
+    else spark.read.schema(schema).parquet(paths: _*)
   }
 
   def dropTable(uri: String, indexId: String): Unit = {
@@ -196,15 +211,15 @@ final class IndexStore(val spark: SparkSession, val path: String) {
     ()
   }
 
-  /** Partition-scoped merge: drop all index rows of `touchedItems`, insert
-    * `replacement`, rewriting only `parts` — the item-hash partitions
-    * ([[ipartCol]]) of the touched items, which the caller has already
-    * aggregated — and raise the committed revision to `revision` (the
-    * batch's). The new staging root fully materializes BEFORE the manifest
-    * swap, so the scoped self-read never races the rewrite, and a crash at
-    * any point leaves the previous committed version intact (atomicity
-    * across all touched partitions — the manifest swap is the single
-    * commit point). */
+  /** Part-scoped merge: drop all index rows of `touchedItems`, insert
+    * `replacement`, rewriting only the physical parts of `parts` — the
+    * logical item hashes ([[ipartCol]]) of the touched items, which the
+    * caller has already aggregated — and raise the committed revision to
+    * `revision` (the batch's). The new staging root fully materializes
+    * BEFORE the manifest swap, so the scoped self-read never races the
+    * rewrite, and a crash at any point leaves the previous committed
+    * version intact (atomicity across all touched parts — the manifest
+    * swap is the single commit point). */
   def mergeTable(uri: String, indexId: String, touchedItems: DataFrame,
       replacement: DataFrame, revision: Long, parts: Seq[Int]): Unit = {
     val dir = tableDir(uri, indexId)
@@ -215,37 +230,52 @@ final class IndexStore(val spark: SparkSession, val path: String) {
       commitManifest(dir, m.copy(revision = rev))
       return
     }
-    val scoped = openParts(dir, m.parts, parts).drop("ipart")
-    val updated = scoped
+    val touched = parts.map(_ % m.n).distinct
+    val updated = openParts(dir, m, touched)
       .join(broadcast(touchedItems.select("item_id")), Seq("item_id"), "left_anti")
       .unionByName(replacement)
-    val root = TableCommit.nextRoot(fs, dir)
-    writePartitioned(updated, s"$dir/$root")
-    val merged = Manifest((m.parts -- parts) ++
-      writtenParts(new Path(dir, root)).map(_ -> root), rev)
+    val merged = m.copy(roots = (m.roots -- touched) ++ writePartitioned(dir, updated, m.n),
+      revision = rev)
     commitManifest(dir, merged)
-    compactIfScattered(dir, merged)
+    // the superseded copies in roots that stay live go like whole roots
+    // do: a reader re-opens per read (TableCommit)
+    for (p <- touched; root <- m.roots.get(p) if merged.roots.values.exists(_ == root))
+      fs.delete(new Path(s"$dir/$root/ipart=$p"), true)
+    compactIfNeeded(dir, merged)
   }
 
-  /** Bound read-plan width and file count: when a table's partitions are
-    * scattered over more than [[MaxRoots]] staging roots, rewrite it into
-    * one root (cost: one full-table job, amortized over the ≥MaxRoots
-    * merges that caused it — the same background-compaction bargain
-    * cluster table formats strike). The rows are unchanged, so the
-    * revision carries forward. */
-  private def compactIfScattered(dir: String, m: Manifest): Unit =
-    if (m.parts.values.toSet.size > MaxRoots) {
-      val rows = openParts(dir, m.parts, m.parts.keys).drop("ipart")
-      val root = TableCommit.nextRoot(fs, dir)
-      writePartitioned(rows, s"$dir/$root")
-      commitManifest(dir, m.copy(parts =
-        writtenParts(new Path(dir, root)).map(_ -> root).toMap))
+  /** Rewrite the whole table into one fresh root at the part count its
+    * bytes ask for, when either
+    *  - merges scattered its parts over more than [[MaxRoots]] staging
+    *    roots (cost: one full-table job, amortized over the ≥MaxRoots
+    *    merges that caused it — the same background-compaction bargain
+    *    cluster table formats strike), or
+    *  - it grew past 2 · n · openCost, so its parts have outgrown the size
+    *    a file is worth opening at.
+    * The rows are unchanged, so the revision carries forward. */
+  private def compactIfNeeded(dir: String, m: Manifest): Unit = {
+    lazy val rows = openParts(dir, m, m.roots.keys)
+    lazy val bytes = estimatedBytes(rows)
+    if (m.roots.values.toSet.size > MaxRoots ||
+        (m.n < IndexPartitions && bytes > 2 * m.n * BigInt(openCost))) {
+      EngineMetrics(spark).inc("index.rewrites")
+      val n = partsFor(bytes)
+      commitManifest(dir, m.copy(n = n, roots = writePartitioned(dir, rows, n)))
     }
+  }
+
+  private def openCost: Long = spark.sessionState.conf.filesOpenCostInBytes
+
+  /** The physical part count for a table of `bytes`: the smallest power of
+    * two n with bytes / n ≤ openCost, capped at IndexPartitions. */
+  private def partsFor(bytes: BigInt): Int =
+    Iterator.iterate(1)(_ * 2)
+      .find(n => n == IndexPartitions || bytes <= n * BigInt(openCost)).get
 }
 
 object IndexStore {
-  /** Item-hash partition count for index tables. Small enough to keep
-    * little indexes compact; a 100 TB deployment raises it the same way
+  /** Logical item-hash count of index tables, and the most physical parts a
+    * table is laid out in. A 100 TB deployment raises it the same way
     * ContentStore.NumPartitions scales with the content log. */
   val IndexPartitions = 32
 
@@ -253,15 +283,25 @@ object IndexStore {
     * across before it is rewritten into one. */
   val MaxRoots = 8
 
-  /** A table version as its manifest records it: ipart → staging-root
-    * name (relative to the table dir), and the collection revision. */
-  private final case class Manifest(parts: Map[Int, String], revision: Long)
+  /** A table version as its manifest records it: its physical part count
+    * n, physical part → staging-root name (relative to the table dir), and
+    * the collection revision. */
+  private final case class Manifest(n: Int, roots: Map[Int, String], revision: Long)
 
-  /** The manifest line key of the revision record. */
+  /** The optimizer's size estimate of `df`: file sizes for a file scan,
+    * read without launching a job. */
+  def estimatedBytes(df: DataFrame): BigInt =
+    df.queryExecution.optimizedPlan.stats.sizeInBytes
+
+  /** The manifest line keys of the revision record and the part count. */
   private val RevisionKey = "revision"
+  private val PartsKey = "parts"
 
-  def ipartCol(itemId: Column): Column =
-    pmod(crc32(itemId), lit(IndexPartitions)).cast("int")
+  /** The item hash of `itemId` modulo `n`: its logical part at the
+    * default n = IndexPartitions, its physical part in an n-part layout
+    * (n divides IndexPartitions, so that is the logical part mod n). */
+  def ipartCol(itemId: Column, n: Int = IndexPartitions): Column =
+    pmod(crc32(itemId), lit(n)).cast("int")
 
   private def enc(s: String): String = URLEncoder.encode(s, "UTF-8")
 

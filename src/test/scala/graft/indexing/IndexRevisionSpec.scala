@@ -131,18 +131,26 @@ class IndexRevisionSpec extends AnyFreeSpec with Matchers with SparkFixture {
     }
   }
 
+  /** [[runSequence]] on one-byte files, so the table is laid out in many
+    * parts and its single-item merges scatter it until it is compacted. */
+  private def runCompacting(m: Mode): Unit =
+    withConf("spark.sql.files.openCostInBytes", "1") {
+      val rewrites = EngineMetrics(spark).get("index.rewrites")
+      runSequence(m)
+      EngineMetrics(spark).get("index.rewrites") should be > rewrites
+    }
+
   "index-served results report the content log's revision" - {
     "durable mode: build, batches, reopen, merges past compaction" in {
       val m = new StoreMode
-      runSequence(m)
-      // the merges did scatter the table enough to be compacted
+      runCompacting(m)
       val roots = new java.io.File(new IndexStore(spark, m.indexPath).tableDir(Uri, "byX"))
         .listFiles().count(_.getName.startsWith("w-"))
       roots should be <= IndexStore.MaxRoots
     }
 
     "store-less mode: build, batches, merges" in {
-      runSequence(new MemoryMode)
+      runCompacting(new MemoryMode)
     }
   }
 

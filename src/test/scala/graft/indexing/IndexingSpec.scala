@@ -378,6 +378,10 @@ class IndexingSpec extends AnyFreeSpec with Matchers with SparkFixture {
       (HyperStorage(spark, r.log.persist()),
         java.nio.file.Files.createTempDirectory("graft_idx").toString)
     }
+    def roots(store: IndexStore, id: String): Int =
+      new java.io.File(store.tableDir("collection-1~", id)).listFiles()
+        .count(_.getName.startsWith("w-"))
+    val OpenCost = "spark.sql.files.openCostInBytes"
     def items(im: IndexManager, id: String): Seq[String] =
       im.indexTable("collection-1~", id).get
         .select("item_id").collect().map(_.getString(0)).sorted.toSeq
@@ -464,26 +468,28 @@ class IndexingSpec extends AnyFreeSpec with Matchers with SparkFixture {
       (plan should include).regex("PushedFilters: \\[[^\\]]*d0")
     }
 
-    "pushdown survives a multi-root (post-merge) table: filters land at every scan" in {
+    "pushdown survives a multi-root (post-merge) table: filters land at every scan" in withConf(OpenCost, "1") {
+      // one-byte files: the table is laid out in many parts
       val (st, path) = newStoragePath()
-      val im = new IndexManager(st, Some(new IndexStore(spark, path)))
+      val store = new IndexStore(spark, path)
+      val im = new IndexManager(st, Some(store))
       im.createIndex("collection-1~", "byB",
         Seq(IndexSortItem("b", Some("decimal"), Some("asc"))), None)
       // a merge scatters the table across two staging roots
       val r = st.applySeq(Seq(
         WriteOp(10, "PUT", "collection-1~/item4", """{"a":"m","b":77}""")))
       im.applyFeed(r.feed)
+      roots(store, "byB") shouldBe 2
       val (p, q) = QueryPlanner.query(im, "collection-1~",
         Some("b > 10"), Seq(SortBy("b")), 50)
       p.source shouldBe "byB"
       ids(q) shouldBe Seq("item3", "item4", "item1")
-      val plan = q.rows.queryExecution.executedPlan.toString
-      // Catalyst pushes the filter through the union: every parquet scan
-      // of the manifest's roots carries the typed d0 predicate
-      val pushed = "PushedFilters: \\[[^\\]]*d0".r.findAllIn(plan).size
-      val scans = "PushedFilters: \\[".r.findAllIn(plan).size
-      scans should be >= 2
-      pushed shouldBe scans
+      // ONE parquet scan reads the parts of both roots and carries the
+      // typed d0 predicate
+      val scans = q.rows.queryExecution.sparkPlan.collect {
+        case s: org.apache.spark.sql.execution.FileSourceScanExec => s }
+      scans.size shouldBe 1
+      (scans.head.metadata("PushedFilters") should include).regex("\\bd0\\b")
     }
 
     "a crashed merge (staging root, no manifest swap) leaves the committed version intact" in {
@@ -507,11 +513,13 @@ class IndexingSpec extends AnyFreeSpec with Matchers with SparkFixture {
       new java.io.File(s"$dir/w-999").exists() shouldBe false
     }
 
-    "repeated merges compact back into a bounded number of staging roots" in {
+    "repeated merges compact back into a bounded number of staging roots" in withConf(OpenCost, "1") {
+      // one-byte files: every merge leaves a part in a new root
       val (st, path) = newStoragePath()
       val store = new IndexStore(spark, path)
       val im = new IndexManager(st, Some(store))
       im.createIndex("collection-1~", "index1", Nil, None)
+      val rewrites = EngineMetrics(spark).get("index.rewrites")
       val n = IndexStore.MaxRoots + 2
       for (i <- 0 until n) {
         val r = st.applySeq(Seq(WriteOp(100 + i, "PUT",
@@ -520,9 +528,8 @@ class IndexingSpec extends AnyFreeSpec with Matchers with SparkFixture {
       }
       items(im, "index1") should contain allElementsOf
         (0 until n).map(i => s"extra$i") ++ Seq("item1", "item2", "item3")
-      val roots = new java.io.File(store.tableDir("collection-1~", "index1"))
-        .listFiles().count(_.getName.startsWith("w-"))
-      roots should be <= IndexStore.MaxRoots
+      EngineMetrics(spark).get("index.rewrites") should be > rewrites
+      roots(store, "index1") should be <= IndexStore.MaxRoots
     }
 
     "an interrupted build is resumable (pending_index semantics)" in {

@@ -6,9 +6,14 @@
 #   tools/run.sh graft.Verify <sf_dir> <out_dir> _stream_
 # (Verify's optional 3rd arg is comma-separated entry-name substrings;
 # `_stream_` reruns exactly the 12 streaming gates.)
+# Runs the classes of the checkout the script sits in (build them first with
+# `sbt compile`), so each checkout's copy runs its own code.
 # Env: SPARK_DRIVER_MEM (default below), SPARK_GRAFT_CPUS (cores; read by
-# Verify, Bench and Probe).
+# Verify, Bench and Probe), SPARK_HOME (the Spark distribution whose jars
+# to use; else the one spark-submit belongs to).
 MAIN=$1; shift
+CLASSES="$(cd "$(dirname "${BASH_SOURCE[0]}")/.." && pwd)/target/scala-2.13/classes"
+JARS="${SPARK_HOME:-$(dirname "$(dirname "$(readlink -f "$(command -v spark-submit)")")")}/jars"
 ADDOPENS=""
 for p in java.base/java.lang java.base/java.lang.invoke java.base/java.lang.reflect \
          java.base/java.io java.base/java.net java.base/java.nio java.base/java.util \
@@ -29,5 +34,5 @@ fi
 exec java $ADDOPENS \
   -Xmx${SPARK_DRIVER_MEM} -XX:ReservedCodeCacheSize=1g \
   -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
-  -cp "/root/repo/target/scala-2.13/classes:/opt/spark/jars/*" \
+  -cp "$CLASSES:$JARS/*" \
   "$MAIN" "$@"
