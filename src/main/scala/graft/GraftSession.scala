@@ -18,7 +18,7 @@ object GraftSession {
     val s = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus.toLong)
-      // SparkEntry.events reads TIMESTAMP(NANOS) parquet as longs
+      // EntryHelpers.events reads TIMESTAMP(NANOS) parquet as longs
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       // events() MICROS normalization is value-preserving only under UTC;
       // pin it in the builder, not just the launcher's -D flag

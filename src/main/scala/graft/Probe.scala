@@ -32,29 +32,6 @@ object Probe {
         println(s"[fplans] wrote $outDir/${q}_$suffix.txt")
       }
     }
-    if (what == "o4") {
-      // decompose o4: adaptation/persist vs guard agg vs top-k
-      import graft.engine._
-      def tick[A](label: String)(f: => A): A = {
-        val t0 = System.nanoTime()
-        val a = f
-        println(f"[o4] $label ${(System.nanoTime() - t0) / 1e9}%.2f s"); a
-      }
-      for (r <- 1 to 3) {
-        val log = tick("fromTable+persist") {
-          val l = Content.fromTable(
-            spark.read.parquet(s"$dir/orders.parquet"), "orders~", "o_orderkey").persist()
-          l.count(); l
-        }
-        val st = HyperStorage(spark, log)
-        val res = tick("query()") {
-          st.query("orders~", filter = Some("o_totalprice > 1000"),
-            sort = Seq(SortBy("o_totalprice", descending = true)), size = 50)
-        }
-        tick("topk count") { res.rows.count() }
-        log.unpersist(true)
-      }
-    }
     if (what == "time") {
       // Probe <dir> time <query,query,...> [reps] — per-run seconds
       val names = args(2).split(",").toSeq

@@ -1,7928 +1,34 @@
 package graft
 
-import graft.engine._
-import graft.indexing.{IndexManager, IndexSortItem, QueryPlanner}
-import graft.pipeline.{Dedup, Multimodal, Similarity, TextAnalysis}
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
+import graft.entries._
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Driver contract — one `queries` entry per implemented operator from
+/** Driver contract — one [[entries.Entry]] per implemented operator from
   * SURVEY.md §2 (+ the LLM-pipeline families), each with a DuckDB-runnable
   * oracle over the same parquet tables. Column names are aligned on both
-  * sides (the driver's compare sorts columns by name before hashing). */
+  * sides (the driver's compare sorts columns by name before hashing). The
+  * entries live in one file per family under `graft/entries/`, each Spark
+  * body next to its oracle. */
 object SparkEntry {
 
-  // ---------------------------------------------------------------- helpers
+  /** Every entry, family by family. */
+  val entries: Seq[Entry] = Seq(EngineEntries.all, IndexEntries.all,
+    StreamEntries.all, AnalyticsEntries.all, DedupEntries.all,
+    SimilarityEntries.all, TextEntries.all, SamplingEntries.all,
+    MultimodalEntries.all).flatten
 
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
-
-  /** events.parquet has carried `ts` as either TIMESTAMP(NANOS) — which
-    * Spark reads only as a nanosecond Long under the legacy conf — or
-    * TIMESTAMP(MICROS), which it reads as TIMESTAMP_NTZ. Normalize both to
-    * the nanosecond-Long form every downstream query assumes (the session
-    * timezone is pinned to UTC, so the NTZ→TZ cast is value-preserving),
-    * plus an exact millisecond column via integer division (double division
-    * would lose precision at 1e18 ns). */
-  private def events(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = t(s, dir, "events")
-    val nanos = raw.schema("ts").dataType match {
-      case LongType => raw
-      case _ => raw.withColumn(
-        "ts", unix_micros(col("ts").cast(TimestampType)) * 1000L)
-    }
-    nanos.withColumn("ts_ms", expr("ts div 1000000"))
+  locally {
+    val dups = entries.groupBy(_.name).collect { case (n, es) if es.size > 1 => n }
+    require(dups.isEmpty, s"duplicate entry names: ${dups.toSeq.sorted.mkString(", ")}")
   }
 
-  private def j(body: String, field: String) =
-    get_json_object(col(body), "$." + field)
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
+    entries.map(e => e.name -> e.run).toMap
 
-  /** PUT WriteOps for every row of a table into `uri` (seq = id column). */
-  private def putOps(s: SparkSession, df: DataFrame, uri: String,
-      idCol: String, bodyCols: Seq[String]): Dataset[WriteOp] = {
-    import s.implicits._
-    df.select(
-      col(idCol).cast("long").as("seq"),
-      lit("PUT").as("method"),
-      concat(lit(uri + "/"), col(idCol).cast("string")).as("path"),
-      to_json(struct(bodyCols.map(col): _*)).as("body")
-    ).as[WriteOp]
-  }
-
-  private def emptyStore(s: SparkSession) = HyperStorage(s, Content.empty(s))
-
-  /** A FIXED per-(purpose, sfDir) scratch dir, wiped on entry — repeated
-    * Verify/Bench runs reuse one path instead of leaking a nanoTime-named
-    * tree per invocation. */
-  private def scratchDir(s: SparkSession, purpose: String, dir: String): String = {
-    val path = s"/tmp/graft_${purpose}_${dir.replace('/', '_')}"
-    val p = new org.apache.hadoop.fs.Path(path)
-    p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-    path
-  }
-
-  /** Run `body` with `spark.sql.shuffle.partitions` temporarily set to
-    * `n`, restoring the previous setting even on failure.
-    *
-    * NOTE: the override is SESSION-GLOBAL for the duration of `body` —
-    * safe because Bench and Verify execute entries strictly
-    * sequentially (one entry at a time on one SparkSession); if entries
-    * are ever run concurrently on a shared session, this must become a
-    * per-query conf override instead. */
-  private def withShufflePartitions[T](s: SparkSession, n: Int)(
-      body: => T): T = {
-    val prev = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", n.toString)
-    try body finally s.conf.set("spark.sql.shuffle.partitions", prev)
-  }
-
-  // ------------------------------------------------- streaming-gate helpers
-  // Every `*_stream_*` entry replays its arrival schedule through these;
-  // each gate keeps its own operator, output mode, sink and result query.
-
-  /** Write each chunk as one append-mode parquet file under a fresh
-    * `path`, in order, and pin strictly increasing mtimes in write order
-    * (chunk i of n gets now − (n − i) min). FileStreamSource orders files
-    * by MODIFICATION TIME only, and two tiny sequential writes can land
-    * in the same local-FS millisecond, so without the pin the trigger
-    * order is not the write order. */
-  private[graft] def writeArrivals(s: SparkSession, path: String,
-      chunks: DataFrame*): Unit = {
-    val dirPath = new org.apache.hadoop.fs.Path(path)
-    val fs = dirPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-    def dataFiles(): Set[org.apache.hadoop.fs.Path] =
-      fs.listStatus(dirPath).map(_.getPath).filterNot(p =>
-        p.getName.startsWith("_") || p.getName.startsWith(".")).toSet
-    val t0 = System.currentTimeMillis()
-    var seen = Set.empty[org.apache.hadoop.fs.Path]
-    chunks.zipWithIndex.foreach { case (chunk, i) =>
-      chunk.coalesce(1).write.mode("append").parquet(path)
-      val now = dataFiles()
-      val mtime = t0 - (chunks.size - i) * 60000L
-      (now -- seen).foreach(fs.setTimes(_, mtime, -1L))
-      seen = now
-    }
-  }
-
-  /** The file-source stream over an arrival schedule: the schema of the
-    * written chunks, one file per trigger. */
-  private[graft] def readArrivals(s: SparkSession, path: String): DataFrame =
-    s.readStream.schema(s.read.parquet(path).schema)
-      .option("maxFilesPerTrigger", 1).parquet(path)
-
-  /** Shuffle partitions while a gate's query drains. Every gate's
-    * shuffles are small: the sketch and monitor gates key on 5 sources or
-    * ~8 event types, and the rest replay two triggers of sf-scale input
-    * (st10's per-trigger probe jobs included). Every state partition pays
-    * per-batch checkpoint-delta file I/O whether or not it holds a key,
-    * and a stream-stream join runs four state stores per side per
-    * partition, so the default 32 partitions price 4× the file ops of 8
-    * (probed 4/8/16/32: st6 2.9 s at 8 vs 4.0 s at 32, st9 2.3 s vs
-    * 3.9 s). This is the knob a deployment sizes to its key cardinality;
-    * every gate's result is partition-count-independent (the oracles pin
-    * them), and the stateless gates (st15, st18) plan no shuffle (st18's
-    * one exchange is its broadcast). */
-  private[graft] val StatePartitions = 8
-
-  /** Start `writer` on checkpoint `ckpt` under StatePartitions, process
-    * every available file, and stop the query, also when a batch fails
-    * (the failure is rethrown). */
-  private[graft] def drain(s: SparkSession,
-      writer: org.apache.spark.sql.streaming.DataStreamWriter[_],
-      ckpt: String): Unit =
-    withShufflePartitions(s, StatePartitions) {
-      val q = writer.option("checkpointLocation", ckpt).start()
-      try q.processAllAvailable() finally q.stop()
-    }
-
-  /** A memory sink's rows as a DataFrame, with the sink's temp view
-    * dropped so no later entry can observe it (the DataFrame keeps the
-    * rows). */
-  private def memorySinkRows(s: SparkSession, name: String): DataFrame = {
-    val rows = s.table(name)
-    s.catalog.dropTempView(name)
-    rows
-  }
-
-  /** Process-level memo for per-(entry, sfDir) SETUP that is not the
-    * operator under measurement — index builds behind scan entries,
-    * persisted sketch tables. The first call in a JVM pays the build; the
-    * bench's second full pass then times the operator alone, so its
-    * min-of-two-passes records the query, not its scaffolding. Verify runs
-    * each entry once per JVM and is unaffected. The memo is kept per
-    * session object (a weak map, as EngineMetrics keys its registries), so
-    * a memo can never cross SparkSessions: a memoized index manager points
-    * into a temp dir that stopping its session's context deletes. */
-  private val prepCache: java.util.Map[SparkSession,
-      scala.collection.concurrent.TrieMap[String, Any]] =
-    java.util.Collections.synchronizedMap(new java.util.WeakHashMap())
-  private def prepared[T](s: SparkSession, key: String)(build: => T): T =
-    prepCache.computeIfAbsent(s, _ => scala.collection.concurrent.TrieMap())
-      .getOrElseUpdate(key, build).asInstanceOf[T]
-
-  /** The deterministic-PNG media fixture shared by mm_decode and
-    * mm_resize: one congruence-pixel PNG per document, encoded once per
-    * (session, sf) and persisted — the PNG WRITER is scaffolding, the
-    * decode stages are the operators under measurement. The blobs are
-    * tiny (4-8 × 4-6 px ⇒ a few hundred bytes each). */
-  private def preparedPng(s: SparkSession, dir: String): DataFrame =
-    prepared(s, s"mmpng:$dir") {
-      Multimodal.syntheticPng(t(s, dir, "documents"), "doc_id").persist()
-    }
-
-  /** st19/st20 shared input fixture: chronologically-split view/click
-    * chunks with a ride-along far-future sentinel per stream (see
-    * st19_stream_outer_join's comment for the layout), written through
-    * writeArrivals so the chronological split IS the trigger order;
-    * built once per (session, sf) — both interval-join gates replay the
-    * SAME arrival schedule, so they differ only in joinType. */
-  private def st19Input(s: SparkSession, dir: String): String =
-    prepared(s, s"st19in:$dir") {
-        val b = scratchDir(s, "st19in", dir)
-        val ev = events(s, dir)
-          .withColumn("ets", timestamp_micros(expr("ts div 1000")))
-        val views = ev.filter(col("event_type") === "view")
-          .select(col("event_id").as("view_id"), col("user_id").as("v_user"),
-            col("ets").as("vts"))
-        val clicks = ev.filter(col("event_type") === "click")
-          .select(col("event_id").as("click_id"), col("user_id").as("c_user"),
-            col("ets").as("cts"))
-        val mm = ev.agg(min("ets"), max("ets")).collect()(0)
-        val midMs =
-          (mm.getTimestamp(0).getTime + mm.getTimestamp(1).getTime) / 2
-        val sentMs = mm.getTimestamp(1).getTime + 100L * 24 * 3600 * 1000
-        // the sentinel RIDES in the second chunk: the watermark is the
-        // per-batch max event time, so batch 2 processes the late-half
-        // rows on time (late = vs batch 1's watermark) AND advances the
-        // watermark past every real window — one trigger cheaper than
-        // a separate sentinel file, identical final table
-        def writeChrono(df: DataFrame, tsCol: String, sub: String,
-            sentinel: DataFrame): Unit =
-          writeArrivals(s, s"$b/$sub",
-            df.filter(col(tsCol) <= timestamp_millis(lit(midMs))),
-            df.filter(col(tsCol) > timestamp_millis(lit(midMs)))
-              .unionByName(sentinel))
-        writeChrono(views, "vts", "v", s.range(1).select(
-          lit(-1L).as("view_id"), lit(-1L).as("v_user"),
-          timestamp_millis(lit(sentMs)).as("vts")))
-        writeChrono(clicks, "cts", "c", s.range(1).select(
-          lit(-1L).as("click_id"), lit(-1L).as("c_user"),
-          timestamp_millis(lit(sentMs)).as("cts")))
-        b
-    }
-
-  /** Decimal → double through the decimal's string rendering. Both Spark and
-    * DuckDB parse decimal strings with correctly-rounded double conversion,
-    * so the result is bit-identical on both sides — unlike a direct
-    * decimal→double cast, whose rounding path is engine-specific at scale 18.
-    * CORRECTNESS_r02 flagged the three DECIMAL-output entries red despite
-    * value equality at 3 SFs; round 3's double/decimal/varchar probe
-    * bisection (CORRECTNESS_r03) confirmed the driver's hasher diverges on
-    * DECIMAL columns only, so every decimal result routes through this. */
-  private def decAsDouble(c: org.apache.spark.sql.Column) =
-    c.cast("string").cast("double")
-
-  /** Shared builder for q1_agg: exact decimal sums per return status. */
-  private def q1Rows(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "lineitem")
-      .groupBy("l_returnflag", "l_linestatus")
-      .agg(
-        sum(col("l_quantity").cast(DecimalType(18, 2)))
-          .cast(DecimalType(38, 2)).as("sum_qty"),
-        sum(col("l_extendedprice").cast(DecimalType(18, 2)))
-          .cast(DecimalType(38, 2)).as("sum_base"),
-        count(lit(1)).as("cnt"))
-      .orderBy("l_returnflag", "l_linestatus")
-
-  /** Shared builder for q3_shipping: top-10 revenue, exact decimal agg;
-    * ordering is decided on the decimal BEFORE any representation cast. */
-  private def q3Rows(s: SparkSession, dir: String): DataFrame = {
-    val cust = t(s, dir, "customer").filter(col("c_mktsegment") === "BUILDING")
-    val ord = t(s, dir, "orders")
-    val li = t(s, dir, "lineitem")
-    // small dimension side broadcast — no shuffle of lineitem for the join
-    li.join(ord.join(broadcast(cust), col("o_custkey") === col("c_custkey")),
-        col("l_orderkey") === col("o_orderkey"))
-      .groupBy("l_orderkey")
-      .agg(sum((col("l_extendedprice").cast(DecimalType(18, 2)) *
-          (lit(1.0d) - col("l_discount")).cast(DecimalType(18, 2))))
-        .cast(DecimalType(38, 4)).as("revenue"))
-      .orderBy(col("revenue").desc, col("l_orderkey"))
-      .limit(10)
-  }
-
-  /** Shared builder for m6_index_build: filtered decimal-sorted index rows. */
-  private def m6IndexRows(s: SparkSession, dir: String): DataFrame = {
-    // the adapted collection is setup; the index BUILD is the operator this
-    // entry measures, so it runs on every call (fresh IndexManager — defs
-    // are per-instance, so repeated builds don't 409)
-    val st = prepared(s, s"m6st:$dir") {
-      collection(s, dir, "supplier", "s_suppkey", "suppliers~")
-    }
-    val im = new IndexManager(st)
-    im.createIndex("suppliers~", "by_acctbal",
-      Seq(IndexSortItem("s_acctbal", Some("decimal"), Some("asc"))),
-      Some("s_acctbal > 1000"))
-    im.indexTable("suppliers~", "by_acctbal").get
-  }
-
-  private def collection(s: SparkSession, dir: String, table: String,
-      idCol: String, uri: String): HyperStorage =
-    // NOT persisted, NOT pre-repartitioned: since query() caches its
-    // latest-revision fold, the raw log is read exactly once per query —
-    // a log cache was one more cache write with no second reader
-    // (measured: o3 1.25 → 1.05 s without it), and an up-front
-    // repartition of the source costs more than it spreads on
-    // every collection size tried (quiet interleaved A/Bs: customer-size
-    // fold-only 0.44 s vs rebalanced 0.63 s; orders-size 0.69 vs 0.75 —
-    // the fold's own exchange already distributes the aggregate, and the
-    // remaining single-task map side is just the projection).
-    HyperStorage(s, Content.fromTable(t(s, dir, table), uri, idCol))
-
-  // ------------------------------------------------------------- the queries
+  val oracleSql: Map[String, String] =
+    entries.map(e => e.name -> e.oracleSql).toMap
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
     queries("q3_shipping")(spark, "/root/testdata/sf0.001")
-
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-
-    // ---- S: scans / sources --------------------------------------------
-    "s1_point_get" -> ((s, dir) => {
-      val st = collection(s, dir, "nation", "n_nationkey", "nations~")
-      st.getDF("nations~/7").select(
-        col("item_id"),
-        j("body", "n_name").as("name"),
-        j("body", "n_regionkey").cast("int").as("regionkey"))
-    }),
-
-    "s2_range_scan" -> ((s, dir) => {
-      val st = collection(s, dir, "customer", "c_custkey", "customers~")
-      st.query("customers~", itemIdFilter = Some((">", "1200")), size = 30)
-        .rows.select(col("item_id"),
-          j("body", "c_name").as("name"),
-          j("body", "c_acctbal").cast("double").as("acctbal"))
-    }),
-
-    "s2_range_scan_desc" -> ((s, dir) => {
-      val st = collection(s, dir, "customer", "c_custkey", "customers~")
-      st.query("customers~", itemIdFilter = Some(("<", "1200")), size = 25,
-          ascending = false)
-        .rows.select(col("item_id"), j("body", "c_name").as("name"))
-    }),
-
-    "s2_store_scan" -> ((s, dir) => {
-      // through the crc32-partitioned parquet store: the per-URI read
-      // prunes to one directory partition (ContentStoreSpec pins the plan)
-      val path = scratchDir(s, "store", dir)
-      ContentStore.write(
-        Content.fromTable(t(s, dir, "customer"), "customers~", "c_custkey"),
-        path, org.apache.spark.sql.SaveMode.Overwrite)
-      ContentStore.open(s, path)
-        .query("customers~", itemIdFilter = Some((">", "500")), size = 40)
-        .rows.select(col("item_id"), j("body", "c_name").as("name"))
-    }),
-
-    "s2_compact_store" -> ((s, dir) => {
-      // compaction (the reference's Cassandra-compaction role): a store
-      // holding one row per WRITE shrinks to one row per KEY with reads
-      // invariant — latest bodies, revisions, pruning all preserved
-      import s.implicits._
-      val base = scratchDir(s, "compact", dir)
-      val nat = t(s, dir, "nation")
-      val r1 = emptyStore(s).applyOps(
-        putOps(s, nat, "nations~", "n_nationkey", Seq("n_name")))
-      ContentStore.write(r1.log, s"$base/store",
-        org.apache.spark.sql.SaveMode.Overwrite)
-      val st1 = ContentStore.open(s, s"$base/store")
-      val patches = nat.filter(col("n_nationkey") < 10).select(
-        (col("n_nationkey") + 100).cast("long").as("seq"),
-        lit("PATCH").as("method"),
-        concat(lit("nations~/"), col("n_nationkey").cast("string")).as("path"),
-        to_json(struct(lit(2).as("v"))).as("body")).as[WriteOp]
-      val r2 = st1.applyOps(patches)
-      ContentStore.write(r2.appended, s"$base/store")
-      ContentStore.compact(s, s"$base/store")
-      val st2 = ContentStore.open(s, s"$base/store")
-      val keys = nat.count()
-      val physical = st2.log.count()
-      require(physical == keys, s"compaction left $physical rows for $keys keys")
-      st2.query("nations~", size = 100).rows.select(
-        col("item_id"), col("revision"),
-        j("body", "n_name").as("name"),
-        j("body", "v").cast("int").as("v"))
-    }),
-
-    "s3_static_revision" -> ((s, dir) => {
-      import s.implicits._
-      val ops = putOps(s, t(s, dir, "nation"), "nations~", "n_nationkey",
-        Seq("n_name", "n_regionkey"))
-      val st = emptyStore(s)
-      val applied = HyperStorage(s, st.applyOps(ops).log)
-      Seq(applied.revisionOf("nations~")).toDF("revision")
-    }),
-
-    "s8_ledger_complete" -> ((s, dir) => {
-      val ops = putOps(s, t(s, dir, "region"), "regions~", "r_regionkey",
-        Seq("r_name"))
-      val feed = emptyStore(s).applyOps(ops).feed
-      val ledger = Ledger.fromFeed(feed, batchTsMillis = 0L)
-      val done = Ledger.complete(ledger, ledger.select("txn_id"))
-      done.select(col("txn_id"), col("completed"), col("revision"))
-        .orderBy("txn_id")
-    }),
-
-    "s10_checkpoint" -> ((s, dir) => {
-      // two batches in different quanta; batch 1 completed, batch 2 not →
-      // checkpoint = quantum(batch1) per touched partition
-      val ops = putOps(s, t(s, dir, "region"), "regions~", "r_regionkey",
-        Seq("r_name"))
-      val feed = emptyStore(s).applyOps(ops).feed
-      val l1 = Ledger.complete(Ledger.fromFeed(feed, 60000L),
-        Ledger.fromFeed(feed, 60000L).select("txn_id"))
-      val l2 = Ledger.fromFeed(feed, 120000L)
-      Ledger.checkpoints(l1.unionByName(l2))
-        .select(col("checkpoint_quantum")).distinct()
-    }),
-
-    // ---- F: filters ----------------------------------------------------
-    "f1_filter_numeric" -> ((s, dir) => {
-      val st = collection(s, dir, "customer", "c_custkey", "customers~")
-      st.query("customers~",
-          filter = Some("c_acctbal > 1000 and c_acctbal < 5000"), size = 1000)
-        .rows.select(col("item_id"),
-          j("body", "c_acctbal").cast("double").as("acctbal"),
-          j("body", "c_mktsegment").as("mktsegment"))
-    }),
-
-    "f1_filter_text" -> ((s, dir) => {
-      val st = collection(s, dir, "part", "p_partkey", "parts~")
-      st.query("parts~", filter = Some("p_brand = \"Brand#4\""), size = 200)
-        .rows.select(col("item_id"),
-          j("body", "p_brand").as("brand"),
-          j("body", "p_size").cast("int").as("psize"))
-    }),
-
-    "f2_filter_or_has" -> ((s, dir) => {
-      val st = collection(s, dir, "customer", "c_custkey", "customers~")
-      st.query("customers~",
-          filter = Some("c_mktsegment has [\"BUILDING\",\"AUTOMOBILE\"] or c_acctbal < 0"),
-          size = 2000)
-        .rows.select(col("item_id"),
-          j("body", "c_mktsegment").as("mktsegment"),
-          j("body", "c_acctbal").cast("double").as("acctbal"))
-    }),
-
-    "f5_filter_constfold" -> ((s, dir) => {
-      val st = collection(s, dir, "part", "p_partkey", "parts~")
-      // ~11% selectivity: at sf0.1 the default 10k skip cap would trip
-      // (correct per the reference contract); raise it for the entry
-      st.query("parts~",
-          filter = Some("p_size > 2 * 20 + 5 and p_retailprice <= 1500"),
-          size = 3000, skipMax = 500000)
-        .rows.select(col("item_id"),
-          j("body", "p_size").cast("int").as("psize"),
-          j("body", "p_retailprice").cast("double").as("retailprice"))
-    }),
-
-    "f6_filter_validation" -> ((s, dir) => {
-      // F6 under the gate: createIndex validates filterBy BEFORE persisting
-      // the def (reference IndexDefTaskWorker rejects malformed filters at
-      // the API edge) — each case attempts a REAL createIndex; a rejected
-      // filter must throw and leave no def behind, an accepted one builds
-      import s.implicits._
-      val st = collection(s, dir, "region", "r_regionkey", "regions~")
-      val im = new IndexManager(st)
-      val cases = Seq(
-        "r_regionkey > 2",             // plain comparison — valid
-        "r_regionkey >",               // parse error
-        "frobnicate(r_name) != \"x\"", // unknown function
-        "5 and 4",                     // constant subtree fails boolean eval
-        "length(r_name, 2, 3) > 1",    // arity error
-        "x and b > 5")                 // unresolved identifiers alone are fine
-      val rows = cases.zipWithIndex.map { case (f, i) =>
-        val accepted =
-          try { im.createIndex("regions~", s"v$i", Nil, Some(f)); true }
-          catch { case _: IllegalArgumentException => false }
-        (i.toLong, f, accepted)
-      }
-      require(im.indexDefs("regions~").size == rows.count(_._3),
-        "rejected filters must not leave index defs behind")
-      s.createDataset(rows).toDF("case_id", "filter", "accepted")
-        .orderBy("case_id")
-    }),
-
-    "f11_sql_surface" -> ((s, dir) => {
-      // the SQL extension surface under the gate: hql() (the reference's
-      // filter language as a plan-time-translated SQL predicate),
-      // json_merge_patch and json_null_strip, all through spark.sql
-      GraftFunctions.register(s)
-      Content.fromTable(t(s, dir, "customer"), "customers~", "c_custkey")
-        .createOrReplaceTempView("f11_content")
-      s.sql("""
-        SELECT item_id,
-               get_json_object(json_merge_patch(body, '{"tag":"rich","c_comment":null}'),
-                               '$.tag') AS tag,
-               CAST(get_json_object(body, '$.c_acctbal') AS DOUBLE) AS acctbal
-        FROM f11_content
-        WHERE hql(body, 'c_acctbal > 9000 and c_mktsegment != "MACHINERY"')
-        ORDER BY item_id""")
-    }),
-
-    "f8_null_strip" -> ((s, dir) => {
-      import s.implicits._
-      val ops = t(s, dir, "region").select(
-        col("r_regionkey").cast("long").as("seq"),
-        lit("PUT").as("method"),
-        concat(lit("regions~/"), col("r_regionkey").cast("string")).as("path"),
-        concat(lit("{\"name\":\""), col("r_name"), lit("\",\"tmp\":null}")).as("body")
-      ).as[WriteOp]
-      val log = emptyStore(s).applyOps(ops).log
-      HyperStorage(s, log).query("regions~").rows.select(
-        col("item_id"), j("body", "name").as("name"),
-        j("body", "tmp").as("tmp"))
-    }),
-
-    // ---- O: sort / limit / paging --------------------------------------
-    "o2_sort_multifield" -> ((s, dir) => {
-      val st = collection(s, dir, "customer", "c_custkey", "customers~")
-      st.query("customers~",
-          sort = Seq(SortBy("c_mktsegment"), SortBy("c_acctbal", descending = true)),
-          size = 50)
-        .rows.select(col("item_id"),
-          j("body", "c_mktsegment").as("mktsegment"),
-          j("body", "c_acctbal").cast("double").as("acctbal"))
-    }),
-
-    "o2_sort_missing_fields" -> ((s, dir) => {
-      import s.implicits._
-      // `region` present only on even keys: missing fields sort LAST asc
-      val ops = t(s, dir, "nation").select(
-        col("n_nationkey").cast("long").as("seq"),
-        lit("PUT").as("method"),
-        concat(lit("nations~/"), col("n_nationkey").cast("string")).as("path"),
-        to_json(struct(col("n_name").as("name"),
-          when(col("n_nationkey") % 2 === 0, col("n_regionkey")).as("region"))).as("body")
-      ).as[WriteOp]
-      val log = emptyStore(s).applyOps(ops).log
-      HyperStorage(s, log).query("nations~", sort = Seq(SortBy("region")))
-        .rows.select(col("item_id"), j("body", "region").cast("int").as("region"))
-    }),
-
-    "o3_default_page" -> ((s, dir) => {
-      val st = collection(s, dir, "orders", "o_orderkey", "orders~")
-      st.query("orders~").rows.select(col("item_id"),
-        j("body", "o_orderstatus").as("status"))
-    }),
-
-    "o4_topk_overfetch" -> ((s, dir) => {
-      val st = collection(s, dir, "orders", "o_orderkey", "orders~")
-      st.query("orders~", filter = Some("o_totalprice > 1000"),
-          sort = Seq(SortBy("o_totalprice", descending = true)), size = 50)
-        .rows.select(col("item_id"),
-          j("body", "o_totalprice").cast("double").as("totalprice"))
-    }),
-
-    "o6_pagination" -> ((s, dir) => {
-      val st = collection(s, dir, "customer", "c_custkey", "customers~")
-      val sort = Seq(SortBy("c_mktsegment"))
-      val p1 = st.query("customers~", sort = sort, size = 100)
-      val last = p1.rows.collect().last
-      st.queryAfter("customers~", last, sort = sort, size = 100)
-        .rows.select(col("item_id"), j("body", "c_mktsegment").as("mktsegment"))
-    }),
-
-    // ---- M: mutations ---------------------------------------------------
-    "m1_put_get" -> ((s, dir) => {
-      val ops = putOps(s, t(s, dir, "region"), "regions~", "r_regionkey",
-        Seq("r_name"))
-      val log = emptyStore(s).applyOps(ops).log
-      HyperStorage(s, log).query("regions~").rows.select(
-        col("item_id"), j("body", "r_name").as("name"))
-    }),
-
-    "m2_patch_null_delete" -> ((s, dir) => {
-      import s.implicits._
-      val n = t(s, dir, "nation")
-      val puts = putOps(s, n, "nations~", "n_nationkey", Seq("n_name", "n_regionkey"))
-      val patches = n.select(
-        (col("n_nationkey") + 1000).cast("long").as("seq"),
-        lit("PATCH").as("method"),
-        concat(lit("nations~/"), col("n_nationkey").cast("string")).as("path"),
-        lit("{\"n_regionkey\":null,\"patched\":true}").as("body")
-      ).as[WriteOp]
-      val log = emptyStore(s).applyOps(puts.unionByName(patches)).log
-      HyperStorage(s, log).query("nations~").rows.select(
-        col("item_id"), j("body", "n_name").as("name"),
-        j("body", "patched").cast("boolean").as("patched"),
-        j("body", "n_regionkey").cast("int").as("regionkey"))
-    }),
-
-    "m3_delete_collection" -> ((s, dir) => {
-      import s.implicits._
-      val r = t(s, dir, "region")
-      val putsA = putOps(s, r, "regions-a~", "r_regionkey", Seq("r_name"))
-      val putsB = putOps(s, r, "regions-b~", "r_regionkey", Seq("r_name"))
-      val delA = s.createDataset(Seq(
-        WriteOp(100L, "DELETE", "regions-a~", null)))
-      val log = emptyStore(s)
-        .applyOps(putsA.unionByName(putsB).unionByName(delA)).log
-      Content.latestView(log) // collection tombstone hides all of regions-a~
-        .select(col("document_uri"), col("item_id"),
-          j("body", "r_name").as("name"))
-        .orderBy("document_uri", "item_id")
-    }),
-
-    "m4_delete_items" -> ((s, dir) => {
-      import s.implicits._
-      val sup = t(s, dir, "supplier")
-      val puts = putOps(s, sup, "suppliers~", "s_suppkey", Seq("s_name", "s_acctbal"))
-      val dels = sup.filter(col("s_suppkey") <= 50).select(
-        (col("s_suppkey") + 1000).cast("long").as("seq"),
-        lit("DELETE").as("method"),
-        concat(lit("suppliers~/"), col("s_suppkey").cast("string")).as("path"),
-        lit(null).cast("string").as("body")
-      ).as[WriteOp]
-      val log = emptyStore(s).applyOps(puts.unionByName(dels)).log
-      HyperStorage(s, log).query("suppliers~", size = 200).rows.select(
-        col("item_id"), j("body", "s_name").as("name"),
-        j("body", "s_acctbal").cast("double").as("acctbal"))
-    }),
-
-    "m5_post_idgen" -> ((s, dir) => {
-      import s.implicits._
-      val ops = t(s, dir, "region").select(
-        col("r_regionkey").cast("long").as("seq"),
-        lit("POST").as("method"),
-        lit("posted~").as("path"),
-        to_json(struct(col("r_name").as("name"))).as("body")
-      ).as[WriteOp]
-      val log = emptyStore(s).applyOps(ops).log
-      HyperStorage(s, log).query("posted~").rows.select(
-        col("item_id"), j("body", "name").as("name"),
-        j("body", "id").as("injected_id"))
-    }),
-
-    "m9_rejected_ops" -> ((s, dir) => {
-      import s.implicits._
-      val patches = t(s, dir, "nation").filter(col("n_nationkey") < 5).select(
-        col("n_nationkey").cast("long").as("seq"),
-        lit("PATCH").as("method"),
-        concat(lit("ghost~/"), col("n_nationkey").cast("string")).as("path"),
-        lit("{\"x\":1}").as("body")
-      ).as[WriteOp]
-      val collPut = s.createDataset(Seq(
-        WriteOp(100L, "PUT", "ghost~", "{}")))
-      emptyStore(s).applyOps(patches.unionByName(collPut))
-        .rejected.select(col("seq"), col("path"), col("method"), col("code"))
-        .orderBy("seq")
-    }),
-
-    "m10_timestamps" -> ((s, dir) => {
-      import s.implicits._
-      val nat = t(s, dir, "nation")
-      val puts = putOps(s, nat, "nations~", "n_nationkey", Seq("n_name"))
-      val r1 = emptyStore(s).applyOps(puts, batchTsMillis = 60000L)
-      // second batch re-PUTs every item: created_at must survive,
-      // modified_at must move to the new batch time
-      val updates = nat.select(
-        (col("n_nationkey") + 100).cast("long").as("seq"),
-        lit("PUT").as("method"),
-        concat(lit("nations~/"), col("n_nationkey").cast("string")).as("path"),
-        to_json(struct(col("n_name"), lit(2).as("v"))).as("body")).as[WriteOp]
-      val r2 = HyperStorage(s, r1.log).applyOps(updates, batchTsMillis = 120000L)
-      Content.latestView(r2.log)
-        .select(col("item_id"),
-          unix_millis(col("created_at")).as("created_ms"),
-          unix_millis(col("modified_at")).as("modified_ms"))
-        .orderBy("item_id")
-    }),
-
-    // ---- S4/M6/M8: materialized secondary indexes -----------------------
-    "m6_index_build" -> ((s, dir) =>
-      m6IndexRows(s, dir)
-        .select(col("item_id"), decAsDouble(col("d0")).as("d0"))
-        .orderBy("item_id")),
-
-    "s4_index_scan" -> ((s, dir) => {
-      // the index BUILD is scaffolding here (m6 is the entry that measures
-      // a build); memoized so the bench's second pass times the
-      // index-served SCAN alone
-      val im = prepared(s, s"s4idx:$dir") {
-        val st = collection(s, dir, "customer", "c_custkey", "customers~")
-        val im0 = new IndexManager(st)
-        im0.createIndex("customers~", "by_acctbal",
-          Seq(IndexSortItem("c_acctbal", Some("decimal"), Some("asc"))),
-          Some("c_acctbal > 0"))
-        im0
-      }
-      val (plan, q) = QueryPlanner.query(im, "customers~",
-        Some("c_acctbal > 1000 and c_acctbal < 5000"),
-        Seq(SortBy("c_acctbal")), size = 1000)
-      require(plan.source == "by_acctbal", s"expected index scan, got ${plan.source}")
-      q.rows.select(col("item_id"),
-        j("body", "c_acctbal").cast("double").as("acctbal"))
-    }),
-
-    "o6_index_pagination" -> ((s, dir) => {
-      // O6 on the index path: page 2 fetched THROUGH the chosen index with
-      // typed resume-key filters (IndexLogic.leastRowsFilterFields), not a
-      // primary-path overfetch — both pages must stay on the index source
-      val st = collection(s, dir, "customer", "c_custkey", "customers~")
-      val im = new IndexManager(st)
-      im.createIndex("customers~", "by_acctbal",
-        Seq(IndexSortItem("c_acctbal", Some("decimal"), Some("asc"))), None)
-      val sort = Seq(SortBy("c_acctbal"))
-      val (p1, q1) = QueryPlanner.query(im, "customers~", None, sort, size = 100)
-      require(p1.source == "by_acctbal", s"expected index scan, got ${p1.source}")
-      val last = q1.rows.collect().last
-      val (p2, q2) = QueryPlanner.queryAfter(im, "customers~", last, None, sort,
-        size = 100)
-      require(p2.source == "by_acctbal", s"expected index page 2, got ${p2.source}")
-      q2.rows.select(col("item_id"), decAsDouble(col("d0")).as("acctbal"))
-        .orderBy("item_id")
-    }),
-
-    "o4_index_skipmax" -> ((s, dir) => {
-      // index-served query WITH the skipped-rows guard active: the
-      // residual mktsegment filter rejects scanned index rows, but the
-      // page fills early in index order, so the guard passes exactly
-      // where the primary path's positional semantics would
-      val st = collection(s, dir, "customer", "c_custkey", "customers~")
-      val im = new IndexManager(st)
-      im.createIndex("customers~", "by_acctbal",
-        Seq(IndexSortItem("c_acctbal", Some("decimal"), Some("asc"))),
-        Some("c_acctbal > 0"))
-      val (plan, q) = QueryPlanner.query(im, "customers~",
-        Some("c_acctbal > 0 and c_mktsegment = \"BUILDING\""),
-        Seq(SortBy("c_acctbal")), size = 10)
-      require(plan.source == "by_acctbal", s"expected index scan, got ${plan.source}")
-      q.rows.select(col("item_id"), decAsDouble(col("d0")).as("acctbal"))
-    }),
-
-    "s2_asof_scan" -> ((s, dir) => {
-      import s.implicits._
-      // TIME TRAVEL over the revisioned content log: the same collection
-      // scanned live AND as of the pre-patch revision cutoff — the
-      // snapshot-read capability the revision model buys (superseded
-      // rows survive until compaction, as in the reference's Cassandra
-      // log). asOf is a log filter BELOW the latest-revision window,
-      // landing on the scan next to the partition pruning
-      val sup = t(s, dir, "supplier")
-      val puts = sup.select(
-        col("s_suppkey").cast("long").as("seq"), lit("PUT").as("method"),
-        concat(lit("suppliers~/"), col("s_suppkey").cast("string")).as("path"),
-        to_json(struct(col("s_acctbal").as("acctbal"))).as("body")).as[WriteOp]
-      val r1 = emptyStore(s).applyOps(puts)
-      val st1 = HyperStorage(s, r1.log.persist())
-      val patches = sup.filter(col("s_suppkey") <= 20).select(
-        (col("s_suppkey") + 1000).cast("long").as("seq"),
-        lit("PATCH").as("method"),
-        concat(lit("suppliers~/"), col("s_suppkey").cast("string")).as("path"),
-        to_json(struct((col("s_acctbal") + 10000).as("acctbal"))).as("body"))
-        .as[WriteOp]
-      // the pre-patch snapshot cutoff is the collection revision after
-      // the PUT batch — read through the engine's own static-revision API
-      val cut = st1.revisionOf("suppliers~")
-      val st = HyperStorage(s, st1.applyOps(patches).log.persist())
-      val now = st.query("suppliers~", size = Int.MaxValue, skipMax = -1)
-        .rows.select(col("item_id"),
-          j("body", "acctbal").cast("double").as("acctbal_now"))
-      val v1 = st.asOf(cut).query("suppliers~", size = Int.MaxValue, skipMax = -1)
-        .rows.select(col("item_id"),
-          j("body", "acctbal").cast("double").as("acctbal_v1"))
-      now.join(v1, "item_id").orderBy("item_id")
-    }),
-
-    "m8_index_maintenance" -> ((s, dir) => {
-      import s.implicits._
-      val sup = t(s, dir, "supplier")
-      val puts = sup.select(
-        col("s_suppkey").cast("long").as("seq"),
-        lit("PUT").as("method"),
-        concat(lit("suppliers~/"), col("s_suppkey").cast("string")).as("path"),
-        to_json(struct(col("s_acctbal").as("acctbal"))).as("body")).as[WriteOp]
-      val r1 = emptyStore(s).applyOps(puts)
-      // materialize the applied log once (in production it lands in
-      // storage); otherwise every downstream action replays the cogroup
-      val st = HyperStorage(s, r1.log.persist())
-      // durable manager: the maintenance below is a partition-scoped
-      // parquet merge, not an in-memory union chain
-      val im = new IndexManager(st,
-        Some(new graft.indexing.IndexStore(s, scratchDir(s, "idx", dir))))
-      im.createIndex("suppliers~", "rich", Nil, Some("acctbal > 5000"))
-      val patches = sup.filter(col("s_suppkey") <= 20).select(
-        (col("s_suppkey") + 1000).cast("long").as("seq"),
-        lit("PATCH").as("method"),
-        concat(lit("suppliers~/"), col("s_suppkey").cast("string")).as("path"),
-        to_json(struct((col("s_acctbal") + 10000).as("acctbal"))).as("body")).as[WriteOp]
-      val r2 = st.applyOps(patches)
-      im.applyFeed(r2.feed) // incremental: touched items re-evaluated
-      im.indexTable("suppliers~", "rich").get
-        .select(col("item_id"), j("body", "acctbal").cast("double").as("acctbal"))
-        .orderBy("item_id")
-    }),
-
-    "m7_index_drop_durable" -> ((s, dir) => {
-      // M7 end-to-end durable: create two indexes, drop one, REOPEN the
-      // store (fresh IndexManager over the same IndexStore path — defs
-      // reload from the durable manifest, exactly what a restarted node
-      // does); the dropped index must stay gone, the survivor must serve
-      val st = collection(s, dir, "supplier", "s_suppkey", "suppliers~")
-      val path = scratchDir(s, "m7drop", dir)
-      val im = new IndexManager(st, Some(new graft.indexing.IndexStore(s, path)))
-      im.createIndex("suppliers~", "by_acctbal",
-        Seq(IndexSortItem("s_acctbal", Some("decimal"), Some("asc"))), None)
-      im.createIndex("suppliers~", "rich", Nil, Some("s_acctbal > 5000"))
-      im.deleteIndex("suppliers~", "by_acctbal")
-      val reopened =
-        new IndexManager(st, Some(new graft.indexing.IndexStore(s, path)))
-      require(reopened.indexDefs("suppliers~").map(_.indexId) == Seq("rich"),
-        s"expected only 'rich' to survive the drop+reopen")
-      require(reopened.indexTable("suppliers~", "by_acctbal").isEmpty,
-        "dropped index table must not reopen")
-      reopened.indexTable("suppliers~", "rich").get
-        .select(col("item_id"),
-          j("body", "s_acctbal").cast("double").as("acctbal"))
-        .orderBy("item_id")
-    }),
-
-    // ---- ST: streaming-shape (batch equivalents) ------------------------
-    "st1_feed_events" -> ((s, dir) => {
-      import s.implicits._
-      val r = t(s, dir, "region")
-      val puts = putOps(s, r, "regions~", "r_regionkey", Seq("r_name"))
-      val dels = r.filter(col("r_regionkey") < 2).select(
-        (col("r_regionkey") + 10).cast("long").as("seq"),
-        lit("DELETE").as("method"),
-        concat(lit("regions~/"), col("r_regionkey").cast("string")).as("path"),
-        lit(null).cast("string").as("body")
-      ).as[WriteOp]
-      emptyStore(s).applyOps(puts.unionByName(dels)).feed
-        .select(col("item_id"), col("method"), col("revision"))
-        .orderBy("revision")
-    }),
-
-    "st2_pipeline_ledger" -> ((s, dir) => {
-      // the assembled reliable-write loop in batch form: applyOps →
-      // ledger intent → content write-back → ordered publish → completion
-      // markers; the oracle checks the folded ledger output
-      val base = scratchDir(s, "pipe", dir)
-      val ops = putOps(s, t(s, dir, "region"), "regions~", "r_regionkey",
-        Seq("r_name"))
-      graft.streaming.FeedPipeline.runBatch(
-        ops, 60000L, s"$base/store", s"$base/ledger")(_ => ())
-      graft.streaming.FeedPipeline.ledgerState(s, s"$base/ledger")
-        .select(col("txn_id"), col("revision"), col("completed"),
-          col("dt_quantum"))
-        .orderBy("txn_id")
-    }),
-
-    "st2_pipeline_indexed" -> ((s, dir) => {
-      // the loop WITH in-loop secondary-index maintenance: batch 1 builds
-      // the store, batch 2 flips memberships; the index table (durable,
-      // manifest-committed, merged per batch) is the checked result.
-      // Load-sized shuffle partitions (r12 verdict #5): the two batches
-      // run 50 small jobs (checkpoint/ledger/content/index/publish per
-      // batch — the job COUNT is the loop's structure, not waste) over a
-      // 10k-row supplier input; 32-partition shuffles price pure task
-      // scheduling on every one of them, so the same keyspace-sizing the
-      // stateful gates got applies — 8 partitions, oracle unchanged
-      import s.implicits._
-      val base = scratchDir(s, "pipeidx", dir)
-      withShufflePartitions(s, 8) {
-        val im = new IndexManager(
-          ContentStore.openOrEmpty(s, s"$base/store"),
-          Some(new graft.indexing.IndexStore(s, s"$base/idx")))
-        im.createIndex("suppliers~", "rich", Nil, Some("acctbal > 5000"))
-        val sup = t(s, dir, "supplier")
-        val puts = sup.select(
-          col("s_suppkey").cast("long").as("seq"),
-          lit("PUT").as("method"),
-          concat(lit("suppliers~/"), col("s_suppkey").cast("string")).as("path"),
-          to_json(struct(col("s_acctbal").as("acctbal"))).as("body")).as[WriteOp]
-        graft.streaming.FeedPipeline.runBatch(
-          puts, 60000L, s"$base/store", s"$base/ledger", Some(im))(_ => ())
-        val patches = sup.filter(col("s_suppkey") <= 20).select(
-          (col("s_suppkey") + 10000).cast("long").as("seq"),
-          lit("PATCH").as("method"),
-          concat(lit("suppliers~/"), col("s_suppkey").cast("string")).as("path"),
-          to_json(struct((col("s_acctbal") + 10000).as("acctbal"))).as("body"))
-          .as[WriteOp]
-        graft.streaming.FeedPipeline.runBatch(
-          patches, 120000L, s"$base/store", s"$base/ledger", Some(im))(_ => ())
-        im.indexTable("suppliers~", "rich").get
-          .select(col("item_id"),
-            j("body", "acctbal").cast("double").as("acctbal"))
-          .orderBy("item_id")
-      }
-    }),
-
-    "st6_stream_revisions" -> ((s, dir) => {
-      // ST6 under a REAL micro-batch executor: flatMapGroupsWithState over
-      // a file source, ≥2 triggers (one per arrival file) — per-key
-      // revision state must carry ACROSS batches. Output
-      // pins gaplessness: per uri, revisions are exactly {1..n} iff
-      // count=n ∧ distinct=n ∧ max=n ∧ sum=n(n+1)/2.
-      import s.implicits._
-      val base = scratchDir(s, "st6", dir)
-      val ops = t(s, dir, "customer").select(
-        col("c_custkey").cast("long").as("seq"),
-        lit("PUT").as("method"),
-        concat(lit("bucket"), pmod(col("c_custkey"), lit(8)).cast("string"),
-          lit("~/"), col("c_custkey").cast("string")).as("path"),
-        lit("{}").as("body"))
-      writeArrivals(s, s"$base/in",
-        ops.filter(col("seq") % 2 === 0), ops.filter(col("seq") % 2 === 1))
-      drain(s, graft.streaming.ChangeFeed.assignRevisions(
-          readArrivals(s, s"$base/in").as[WriteOp])
-        .writeStream.format("memory").queryName("st6_revs")
-        .outputMode("append"), s"$base/ckpt")
-      memorySinkRows(s, "st6_revs")
-        .groupBy(col("document_uri"))
-        .agg(count(lit(1)).as("events"),
-          max(col("revision")).as("max_rev"),
-          sum(col("revision")).as("rev_sum"),
-          countDistinct(col("revision")).as("distinct_revs"))
-        .orderBy("document_uri")
-    }),
-
-    "st4_transaction_list" -> ((s, dir) => {
-      // pending-transaction visibility: two batches of writes, the first
-      // completed — readers see only the second batch's txns per document
-      val r1 = emptyStore(s).applyOps(
-        putOps(s, t(s, dir, "region"), "regions~", "r_regionkey", Seq("r_name")))
-      val l1 = Ledger.fromFeed(r1.feed, 60000L)
-      val done = Ledger.complete(l1, l1.select("txn_id"))
-      val st = HyperStorage(s, r1.log)
-      val r2 = st.applyOps(
-        t(s, dir, "region").filter(col("r_regionkey") < 3).select(
-          (col("r_regionkey") + 100).cast("long").as("seq"),
-          lit("PATCH").as("method"),
-          concat(lit("regions~/"), col("r_regionkey").cast("string")).as("path"),
-          lit("""{"touched":true}""").as("body"))
-          .as[WriteOp](HyperStorage.writeOpEncoder))
-      val ledger = done.unionByName(Ledger.fromFeed(r2.feed, 120000L))
-      Ledger.transactionList(ledger)
-        .select(col("document_uri"),
-          concat_ws(",", col("transaction_list")).as("pending"))
-        .orderBy("document_uri")
-    }),
-
-    "st5_quantize" -> ((s, dir) => {
-      events(s, dir)
-        .select(Ledger.quantum(col("ts_ms")).as("quantum"))
-        .groupBy("quantum").agg(count(lit(1)).as("cnt"))
-        .orderBy("quantum")
-    }),
-
-    "st7_windowed_counts" -> ((s, dir) => {
-      // the Structured Streaming windowed-agg operator in its batch shape
-      // (withWatermark is a no-op in batch) — the streaming semantics
-      // (finalize-on-watermark, late-drop) are pinned in StreamsSpec
-      graft.streaming.Streams.windowedCounts(
-          events(s, dir).select(timestamp_millis(col("ts_ms")).as("t")),
-          "t", "1 minute", "1 minute")
-        .select(unix_millis(col("window_start")).as("window_ms"), col("cnt"))
-        .orderBy("window_ms")
-    }),
-
-    "st15_stream_file_sink" -> ((s, dir) => {
-      // exactly-once parquet FILE SINK: the streaming write commits files
-      // through the _spark_metadata log, so a reader sees only committed
-      // batches (the lake-ingest tail of the feed pipeline — crash mid-
-      // batch leaves no partial files visible). Two triggers stream the
-      // corpus through; the identity oracle proves nothing is lost or
-      // duplicated across the trigger boundary
-      val base = scratchDir(s, "st15", dir)
-      val docs = t(s, dir, "documents")
-      writeArrivals(s, s"$base/in",
-        docs.filter(col("doc_id") % 2 === 0),
-        docs.filter(col("doc_id") % 2 === 1))
-      drain(s, readArrivals(s, s"$base/in").writeStream.format("parquet")
-        .option("path", s"$base/out").outputMode("append"), s"$base/ckpt")
-      s.read.parquet(s"$base/out")
-        .select("doc_id", "text", "lang", "source", "n_chars")
-        .orderBy("doc_id")
-    }),
-
-    "st14_trending_topk" -> ((s, dir) => {
-      // per-minute trending event types: windowed counts (the streaming
-      // stage) + per-window rank over finalized windows (the sink-side
-      // stage) — top 3 per window, count DESC then key
-      graft.streaming.Streams.trendingTopK(
-          events(s, dir).select(timestamp_millis(col("ts_ms")).as("t"),
-            col("event_type")),
-          "t", col("event_type"), "1 minute", "1 minute", k = 3)
-        .select(unix_millis(col("window_start")).as("window_ms"),
-          col("key"), col("cnt"), col("rank"))
-        .orderBy("window_ms", "rank")
-    }),
-
-    // ---- analytics (joins/aggs/windows — Spark built-ins over the engine's
-    // tables; the reference has none of these, SURVEY §2.3-2.5) ----------
-    "q1_agg" -> ((s, dir) =>
-      q1Rows(s, dir).select(
-        col("l_returnflag"), col("l_linestatus"),
-        decAsDouble(col("sum_qty")).as("sum_qty"),
-        decAsDouble(col("sum_base")).as("sum_base"),
-        col("cnt"))),
-    "q3_shipping" -> ((s, dir) =>
-      q3Rows(s, dir).select(
-        col("l_orderkey"), decAsDouble(col("revenue")).as("revenue"))),
-
-    "q5_local_supplier" -> ((s, dir) => {
-      val reg = t(s, dir, "region").filter(col("r_name") === "ASIA")
-      val nat = t(s, dir, "nation")
-      val sup = t(s, dir, "supplier")
-      val cust = t(s, dir, "customer")
-      val ord = t(s, dir, "orders")
-      val li = t(s, dir, "lineitem")
-      li.join(ord, col("l_orderkey") === col("o_orderkey"))
-        .join(broadcast(sup), col("l_suppkey") === col("s_suppkey"))
-        .join(broadcast(cust), col("o_custkey") === col("c_custkey") &&
-          col("c_nationkey") === col("s_nationkey"))
-        .join(broadcast(nat), col("s_nationkey") === col("n_nationkey"))
-        .join(broadcast(reg), col("n_regionkey") === col("r_regionkey"))
-        .groupBy("n_name")
-        // exact decimal sum internally; output is the string-rendered
-        // double (decimal outputs hash-bomb on trailing zeros — r8)
-        .agg(decAsDouble(sum((col("l_extendedprice").cast(DecimalType(18, 2)) *
-            (lit(1.0d) - col("l_discount")).cast(DecimalType(18, 2))))
-          .cast(DecimalType(38, 4))).as("revenue"))
-        .orderBy(col("revenue").desc, col("n_name"))
-    }),
-
-    "q8_market_share" -> ((s, dir) => {
-      // TPC-H Q8 shape: a supplier nation's yearly share of PROMO-part
-      // revenue sold into ASIA — the classic many-dim star join. Fact
-      // table shuffles ONCE (orders equi-join); every dimension side is
-      // broadcast; exact decimal volume sums, share = one double
-      // division of the string-rendered decimals
-      val reg = t(s, dir, "region").filter(col("r_name") === "ASIA")
-      val natC = t(s, dir, "nation")
-      val natS = t(s, dir, "nation").select(
-        col("n_nationkey").as("sn_key"), col("n_name").as("supp_nation"))
-      val prt = t(s, dir, "part").filter(col("p_type") === "PROMO")
-      val vol = (col("l_extendedprice").cast(DecimalType(18, 2)) *
-        (lit(1.0d) - col("l_discount")).cast(DecimalType(18, 2)))
-      t(s, dir, "lineitem")
-        .join(t(s, dir, "orders"), col("l_orderkey") === col("o_orderkey"))
-        .join(broadcast(prt), col("l_partkey") === col("p_partkey"))
-        .join(broadcast(t(s, dir, "supplier")),
-          col("l_suppkey") === col("s_suppkey"))
-        .join(broadcast(natS), col("s_nationkey") === col("sn_key"))
-        .join(broadcast(t(s, dir, "customer")),
-          col("o_custkey") === col("c_custkey"))
-        .join(broadcast(natC), col("c_nationkey") === col("n_nationkey"))
-        .join(broadcast(reg), col("n_regionkey") === col("r_regionkey"))
-        .select(year(col("o_orderdate")).as("o_year"), vol.as("vol"),
-          (col("supp_nation") === "NATION_1").as("is_n"))
-        .groupBy("o_year")
-        .agg(
-          // exact decimal sums internally; the OUTPUT columns are the
-          // string-rendered doubles (r8 finding: a decimal output column
-          // is a hasher bomb — any value with a trailing zero in its
-          // decimal rendering, e.g. 15832061.2200, string-compares
-          // differently from the float64 repr 15832061.22 the oracle
-          // side carries; render once via the exact decimal string and
-          // both engines parse the identical double)
-          decAsDouble(coalesce(sum(when(col("is_n"), col("vol"))),
-              lit(0).cast(DecimalType(38, 4))).cast(DecimalType(38, 4)))
-            .as("nation_volume"),
-          decAsDouble(sum(col("vol")).cast(DecimalType(38, 4)))
-            .as("total_volume"))
-        .withColumn("mkt_share",
-          col("nation_volume") / col("total_volume"))
-        .orderBy("o_year")
-    }),
-
-    "w2_running_total" -> ((s, dir) => {
-      // per-customer order timeline: exact decimal running revenue +
-      // days since the previous order — lag/cumsum window shapes over a
-      // unique (date, key) ordering so RANGE vs ROWS framing can't
-      // diverge; one shuffle on the partition key
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
-      t(s, dir, "orders")
-        // the running sum is EXACT decimal arithmetic; only the OUTPUT is
-        // the string-rendered double (r8 finding: decimal output columns
-        // are hasher bombs — 303981.10 vs the oracle float64's 303981.1)
-        .select(col("o_custkey"), col("o_orderkey"), col("o_orderdate"),
-          col("o_totalprice").cast(DecimalType(18, 2)).as("price_dec"))
-        .withColumn("run_total",
-          decAsDouble(sum(col("price_dec")).over(w).cast(DecimalType(38, 2))))
-        .withColumn("gap_days",
-          datediff(col("o_orderdate"), lag(col("o_orderdate"), 1).over(w)))
-        .select(col("o_custkey"), col("o_orderkey"),
-          decAsDouble(col("price_dec")).as("price"),
-          col("run_total"), col("gap_days"))
-        .orderBy("o_custkey", "o_orderkey")
-    }),
-
-    "q4_order_priority" -> ((s, dir) => {
-      // EXISTS semi-join (TPC-H Q4 shape on this schema): orders in a
-      // half-year window having at least one RETURNED lineitem, counted
-      // per priority. LEFT SEMI keeps the probe side duplicate-free (a
-      // multi-lineitem order counts once, no post-join distinct);
-      // integer counts end-to-end
-      val ret = t(s, dir, "lineitem").filter(col("l_returnflag") === "R")
-        .select(col("l_orderkey"))
-      t(s, dir, "orders")
-        .filter(col("o_orderdate") >= expr("TIMESTAMP '1996-01-01 00:00:00'") &&
-          col("o_orderdate") < expr("TIMESTAMP '1996-07-01 00:00:00'"))
-        .join(ret, col("o_orderkey") === col("l_orderkey"), "left_semi")
-        .groupBy("o_orderpriority").agg(count(lit(1)).as("n_orders"))
-        .orderBy("o_orderpriority")
-    }),
-
-    "q13_customer_distribution" -> ((s, dir) => {
-      // LEFT OUTER join + two-level aggregation (TPC-H Q13 shape):
-      // orders-per-customer histogram, zero-order customers kept by the
-      // outer join (the right side is pre-filtered, equivalent to the
-      // ON-clause predicate and the better plan); integer counts only
-      val ord = t(s, dir, "orders").filter(col("o_orderstatus") =!= "F")
-      t(s, dir, "customer")
-        .join(ord, col("c_custkey") === col("o_custkey"), "left")
-        .groupBy("c_custkey").agg(count(col("o_orderkey")).as("c_count"))
-        .groupBy("c_count").agg(count(lit(1)).as("custdist"))
-        .orderBy(col("custdist").desc, col("c_count").desc)
-    }),
-
-    "w3_moving_avg" -> ((s, dir) => {
-      // frame-bounded sliding window (ROWS BETWEEN 6 PRECEDING AND
-      // CURRENT ROW): 7-order moving revenue per customer. The frame sum
-      // is EXACT decimal rendered once via the string→double cast
-      // (decimal outputs are hasher bombs — r8); the average is ONE IEEE
-      // division of that double by the exact frame row count. Unique
-      // (date, key) ordering inside each partition, one shuffle
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
-        .rowsBetween(-6, 0)
-      t(s, dir, "orders").filter(pmod(col("o_custkey"), lit(10)) === 0)
-        .select(col("o_custkey"), col("o_orderkey"), col("o_orderdate"),
-          col("o_totalprice").cast(DecimalType(18, 2)).as("price_dec"))
-        .withColumn("mov_sum",
-          decAsDouble(sum(col("price_dec")).over(w).cast(DecimalType(38, 2))))
-        .withColumn("n_win", count(lit(1)).over(w))
-        .select(col("o_custkey"), col("o_orderkey"), col("mov_sum"),
-          (col("mov_sum") / col("n_win")).as("mov_avg"), col("n_win"))
-        .orderBy("o_custkey", "o_orderkey")
-    }),
-
-    "w4_rank_family" -> ((s, dir) => {
-      // the remaining rank-function family in one gate: dense_rank,
-      // percent_rank, ntile, cume_dist over a UNIQUE ordering (price
-      // ties broken by key, so every rank is deterministic; with a
-      // unique ordering percent_rank and cume_dist reduce to single
-      // IEEE divisions of exact integer positions — engine-identical)
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy("o_orderpriority")
-        .orderBy(col("o_totalprice"), col("o_orderkey"))
-      t(s, dir, "orders").filter(pmod(col("o_custkey"), lit(20)) === 0)
-        .select(col("o_orderkey"), col("o_orderpriority"),
-          dense_rank().over(w).cast("long").as("drnk"),
-          percent_rank().over(w).as("prank"),
-          ntile(4).over(w).cast("long").as("ntile4"),
-          cume_dist().over(w).as("cdist"))
-        .orderBy("o_orderkey")
-    }),
-
-    "e12_gap_fill" -> ((s, dir) => {
-      // calendar gap-fill: per-type daily event counts with missing days
-      // zero-filled over each type's own [min, max] day span — the
-      // scaffold every time-series model consumes (a bare groupBy emits
-      // no row for an empty day). Day numbers are exact integer division
-      // of epoch ms; the scaffold is a span-bounded per-type sequence()
-      // explode, counts join back on (type, day)
-      val ev = events(s, dir)
-        .select(col("event_type"), expr("ts_ms div 86400000").as("day_no"))
-      val counts = ev.groupBy("event_type", "day_no")
-        .agg(count(lit(1)).as("c"))
-      val spans = ev.groupBy("event_type")
-        .agg(min("day_no").as("d0"), max("day_no").as("d1"))
-      spans.select(col("event_type"),
-          explode(sequence(col("d0"), col("d1"))).as("day_no"))
-        .join(counts, Seq("event_type", "day_no"), "left")
-        .select(col("event_type"), col("day_no"),
-          coalesce(col("c"), lit(0L)).as("cnt"))
-        .orderBy("event_type", "day_no")
-    }),
-
-    "q6_date_range" -> ((s, dir) => {
-      t(s, dir, "orders")
-        .filter(col("o_orderdate") >= expr("TIMESTAMP '1996-01-01 00:00:00'") &&
-          col("o_orderdate") < expr("TIMESTAMP '1997-01-01 00:00:00'"))
-        .groupBy(date_trunc("month", col("o_orderdate")).cast("date").as("month"))
-        // exact decimal sum internally; output is the string-rendered
-        // double (decimal outputs hash-bomb on trailing zeros — r8)
-        .agg(count(lit(1)).as("cnt"),
-          decAsDouble(sum(col("o_totalprice").cast(DecimalType(18, 2)))
-            .cast(DecimalType(38, 2))).as("total"))
-        .orderBy("month")
-    }),
-
-    "q7_stats" -> ((s, dir) => {
-      // statistical aggregates (variance / stddev / correlation) derived
-      // from EXACT decimal power sums, converted once via the string
-      // rendering, then identical scalar IEEE formulas on both engines —
-      // a direct stddev_samp/corr would differ in summation order and
-      // fail the bit-exact hash
-      val q = col("l_quantity").cast(DecimalType(18, 2))
-      val p = col("l_extendedprice").cast(DecimalType(18, 2))
-      def dsum(c: org.apache.spark.sql.Column, scale: Int) =
-        decAsDouble(sum(c).cast(DecimalType(38, scale)))
-      val a = t(s, dir, "lineitem").groupBy("l_returnflag").agg(
-        count(lit(1)).as("cnt"),
-        count(lit(1)).cast("double").as("nd"),
-        dsum(q, 2).as("sq"), dsum(p, 2).as("sp"),
-        dsum((q * q).cast(DecimalType(38, 4)), 4).as("sqq"),
-        dsum((p * p).cast(DecimalType(38, 4)), 4).as("spp"),
-        dsum((p * q).cast(DecimalType(38, 4)), 4).as("spq"))
-      val vq = (col("sqq") - col("sq") * col("sq") / col("nd")) / (col("nd") - 1)
-      val vp = (col("spp") - col("sp") * col("sp") / col("nd")) / (col("nd") - 1)
-      val cov = (col("spq") - col("sp") * col("sq") / col("nd")) / (col("nd") - 1)
-      a.select(col("l_returnflag"), col("cnt"),
-          vq.as("var_qty"), sqrt(vp).as("sd_price"),
-          (cov / (sqrt(vq) * sqrt(vp))).as("corr_qty_price"))
-        .orderBy("l_returnflag")
-    }),
-
-    "w1_window_rank" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
-      events(s, dir).filter(col("user_id") < 20)
-        .select(col("event_id"), col("user_id"),
-          row_number().over(w).cast("long").as("rn"),
-          lag(col("event_id"), 1).over(w).as("prev_event_id"))
-        .orderBy("event_id")
-    }),
-
-    "st8_session_windows" -> ((s, dir) => {
-      // native gap-based session windows (streaming-capable shape run in
-      // batch); microsecond precision on BOTH sides so the gap rule can
-      // never straddle a rounding boundary
-      val ev = events(s, dir).filter(col("user_id") < 50)
-        .withColumn("t", timestamp_micros(expr("ts div 1000")))
-      graft.streaming.Streams
-        .sessionCounts(ev, "user_id", "t", "30 minutes", "1 minute")
-        .select(col("user_id"),
-          unix_micros(col("session_start")).as("session_start_us"),
-          col("n_events"))
-        .orderBy("user_id", "session_start_us")
-    }),
-
-    "st9_stream_dedup" -> ((s, dir) => {
-      // streaming dedup-on-arrival under a REAL micro-batch executor
-      // (file source, one file per trigger, 2 triggers): originals arrive
-      // in batch 1; exact copies + intra-batch duplicate synthetics in
-      // batch 2. First-arrival state must drop every cross-batch copy and
-      // keep the min-id synthetic within its batch.
-      import s.implicits._
-      val base = scratchDir(s, "st9", dir)
-      val docs = t(s, dir, "documents")
-      val originals = docs.select(col("doc_id"), md5(col("text")).as("h"))
-      val copies = docs.filter(col("doc_id") % 7 === 0)
-        .select((col("doc_id") + 100000L).as("doc_id"), md5(col("text")).as("h"))
-      val synth = s.range(10).select((col("id") + 200000L).as("doc_id"),
-        md5(concat(lit("synthetic "),
-          pmod(col("id"), lit(5)).cast("string"))).as("h"))
-      writeArrivals(s, s"$base/in", originals, copies.unionByName(synth))
-      val stream = readArrivals(s, s"$base/in")
-        .select(col("doc_id").as("_1"), col("h").as("_2"))
-        .as[(Long, String)]
-      drain(s, graft.streaming.Streams.dedupFirstArrival(stream)
-        .toDF("doc_id", "h")
-        .writeStream.format("memory").queryName("st9_dedup")
-        .outputMode("append"), s"$base/ckpt")
-      memorySinkRows(s, "st9_dedup").orderBy("doc_id")
-    }),
-
-    "st10_stream_corpus_dedup" -> ((s, dir) => {
-      // the continuous-ingestion dedup loop under a REAL micro-batch
-      // executor: the accumulated corpus's shingle + banded-signature
-      // tables live as parquet (the production layout,
-      // minhashDedupAgainstTables), each arriving micro-batch probes
-      // those FILES via foreachBatch, and flagged pairs append to the
-      // store. Two arrival files -> two triggers; the final table is
-      // independent of the trigger split because every batch row probes
-      // the static corpus alone — so the batch entry's exact oracle
-      // applies unchanged
-      // the accumulated corpus's stored tables and the arrival chunks
-      // are FIXTURE (index build + arrival schedule): built once per
-      // (session, sf) — the bench then times the per-batch probe loop,
-      // which is the operator. Checkpoint + output stay per-run.
-      val inBase = prepared(s, s"st10in:$dir") {
-        val fx = scratchDir(s, "st10in", dir)
-        val docs = t(s, dir, "documents")
-        val shC = Dedup.shingled(docs.filter(col("doc_id") % 2 === 0),
-          "text", "doc_id", 3)
-        shC.write.mode("overwrite").parquet(s"$fx/corpus_shingles")
-        Dedup.bandedSignatures(Dedup.minhashSignatures(shC, 32),
-            "id", "sig", 16, 32)
-          .write.mode("overwrite").parquet(s"$fx/corpus_banded")
-        writeArrivals(s, s"$fx/in",
-          docs.filter(col("doc_id") % 4 === 1),
-          docs.filter(col("doc_id") % 4 === 3))
-        fx
-      }
-      val base = scratchDir(s, "st10", dir)
-      drain(s, readArrivals(s, s"$inBase/in").writeStream
-        .foreachBatch { (b: DataFrame, _: Long) =>
-          val res = Dedup.minhashDedupAgainstTables(
-            s.read.parquet(s"$inBase/corpus_shingles"),
-            s.read.parquet(s"$inBase/corpus_banded"),
-            b, "text", "doc_id", n = 3, k = 32, bands = 16,
-            threshold = 0.5)
-          res.select("batch_id", "corpus_id", "jaccard")
-            .write.mode("append").parquet(s"$base/out")
-          res.unpersist() // caller-owned cache, one per trigger
-          ()
-        }, s"$base/ckpt")
-      s.read.parquet(s"$base/out")
-        .select("batch_id", "corpus_id").orderBy("batch_id", "corpus_id")
-    }),
-
-    "st11_stream_stream_join" -> ((s, dir) => {
-      // stream-stream time-interval join under a REAL micro-batch
-      // executor: views and clicks arrive as two independent file-source
-      // streams (two chunks each, one per trigger), inner-joined on
-      // user within [click-10min, click]. Watermarks bound the join state
-      // in production (state ∝ rate × disorder bound); the replay uses a
-      // full-span bound so NOTHING is ever late and the final table is
-      // exactly the batch join — which is what the oracle replays.
-      // Event time = µs timestamps derived from the normalized ns longs.
-      // Input chunks are SETUP (identical every call) — built once per
-      // (session, sf); the streaming run gets fresh out/ckpt dirs so the
-      // micro-batch executor replays fully each call.
-      val inBase = prepared(s, s"st11in:$dir") {
-        val b = scratchDir(s, "st11in", dir)
-        val ev = events(s, dir)
-          .withColumn("ets", timestamp_micros(expr("ts div 1000")))
-        val views = ev.filter(col("event_type") === "view")
-          .select(col("event_id").as("view_id"), col("user_id").as("v_user"),
-            col("ets").as("vts"))
-        val clicks = ev.filter(col("event_type") === "click")
-          .select(col("event_id").as("click_id"), col("user_id").as("c_user"),
-            col("ets").as("cts"))
-        writeArrivals(s, s"$b/v", views.filter(col("view_id") % 2 === 0),
-          views.filter(col("view_id") % 2 === 1))
-        writeArrivals(s, s"$b/c", clicks.filter(col("click_id") % 2 === 0),
-          clicks.filter(col("click_id") % 2 === 1))
-        b
-      }
-      val base = scratchDir(s, "st11", dir)
-      // the library operator owns the watermark/interval contract
-      // (Streams.intervalJoin — state ∝ rate × (delay + lookback));
-      // this REPLAY passes a full-span delay so nothing is ever late
-      // and the final table equals the batch join the oracle replays.
-      // The production contract (late rows dropped, state bounded) is
-      // spec-pinned in StreamsSpec with a tight delay.
-      drain(s, graft.streaming.Streams.intervalJoin(
-          readArrivals(s, s"$inBase/v"), "vts", "40 days",
-          readArrivals(s, s"$inBase/c"), "cts", "40 days",
-          col("c_user") === col("v_user"), "10 minutes")
-        .select("click_id", "view_id")
-        .writeStream.format("parquet")
-        .option("path", s"$base/out"), s"$base/ckpt")
-      s.read.parquet(s"$base/out").orderBy("click_id", "view_id")
-    }),
-
-    "st18_stream_static_join" -> ((s, dir) => {
-      // stream-STATIC enrichment join under a REAL micro-batch executor:
-      // the static dimension (per-type counts — a catalog dimension
-      // table in production) sits in parquet and joins into every
-      // micro-batch with NO streaming state (stateless per-row
-      // enrichment, the most common production streaming shape after
-      // aggregation); the final table is independent of the trigger
-      // split, which is exactly what the batch oracle replays
-      val base = scratchDir(s, "st18", dir)
-      val ev = events(s, dir).select(col("event_id"), col("user_id"),
-        col("event_type"))
-      ev.groupBy("event_type").agg(count(lit(1)).as("type_cnt"))
-        .coalesce(1).write.mode("overwrite").parquet(s"$base/dim")
-      writeArrivals(s, s"$base/in", ev.filter(col("event_id") % 2 === 0),
-        ev.filter(col("event_id") % 2 === 1))
-      val dim = s.read.parquet(s"$base/dim")
-      drain(s, readArrivals(s, s"$base/in").filter(col("user_id") < 20)
-        .join(broadcast(dim), "event_type")
-        .select("event_id", "event_type", "type_cnt")
-        .writeStream.format("parquet")
-        .option("path", s"$base/out"), s"$base/ckpt")
-      s.read.parquet(s"$base/out").orderBy("event_id")
-    }),
-
-    "st19_stream_outer_join" -> ((s, dir) => {
-      // funnel-drop analysis as a streaming LEFT-OUTER interval join:
-      // every click emits — joined to same-user views in [click−10min,
-      // click], or with a null view once the watermark PROVES no view
-      // can still arrive (Streams.intervalJoin joinType=left_outer).
-      // Unlike st11's full-span replay bound, the delay here is a REAL
-      // 1-minute disorder bound (state ∝ rate × 11 min): the input
-      // files split CHRONOLOGICALLY (nothing is ever late) and one
-      // far-future sentinel row per stream closes every real window —
-      // the no-data micro-batch after the sentinel trigger flushes the
-      // held outer rows, so the final table equals the batch left join
-      // the oracle replays. Null view_ids coalesce to −1 on both sides
-      // (a nullable int column would float-ify in the driver comparer).
-      // Input chunks are SETUP (identical every call) — built once per
-      // (session, sf), like st11's; fresh out/ckpt per call below.
-      val inBase = st19Input(s, dir)
-      val base = scratchDir(s, "st19", dir)
-      drain(s, graft.streaming.Streams.intervalJoin(
-          readArrivals(s, s"$inBase/v"), "vts", "1 minute",
-          readArrivals(s, s"$inBase/c"), "cts", "1 minute",
-          col("c_user") === col("v_user"), "10 minutes",
-          joinType = "left_outer")
-        .select(col("click_id"),
-          coalesce(col("view_id"), lit(-1L)).as("view_id"))
-        .writeStream.format("parquet")
-        .option("path", s"$base/out"), s"$base/ckpt")
-      s.read.parquet(s"$base/out").filter(col("click_id") >= 0)
-        .orderBy("click_id", "view_id")
-    }),
-
-    "st20_stream_right_join" -> ((s, dir) => {
-      // the mirror funnel question as a streaming RIGHT-OUTER interval
-      // join: every VIEW emits — joined to the same-user clicks whose
-      // 10-minute lookback window it fell in, or with a null click once
-      // the CLICK watermark passes vts + 10min (no click can still claim
-      // it) — "views that never converted", WITHOUT hand-swapping the
-      // asymmetric delay/lookback operands (the error-prone rewrite
-      // right_outer exists to avoid; joinType passes straight through to
-      // the one probe-driven join call). Input chunks are st19's EXACT
-      // fixture (same chronological split + ride-along sentinel), so the
-      // two entries differ only in joinType — the cleanest A/B of outer-
-      // side semantics the driver gate can replay. Null click_ids
-      // coalesce to −1 (nullable ints float-ify in the comparer).
-      val inBase = st19Input(s, dir)
-      val base = scratchDir(s, "st20", dir)
-      drain(s, graft.streaming.Streams.intervalJoin(
-          readArrivals(s, s"$inBase/v"), "vts", "1 minute",
-          readArrivals(s, s"$inBase/c"), "cts", "1 minute",
-          col("c_user") === col("v_user"), "10 minutes",
-          joinType = "right_outer")
-        .select(col("view_id"),
-          coalesce(col("click_id"), lit(-1L)).as("click_id"))
-        .writeStream.format("parquet")
-        .option("path", s"$base/out"), s"$base/ckpt")
-      s.read.parquet(s"$base/out").filter(col("view_id") >= 0)
-        .orderBy("view_id", "click_id")
-    }),
-
-    "st12_stream_hll" -> ((s, dir) => {
-      // always-on distinct counting: per-source HLL registers maintained
-      // across micro-batches (flatMapGroupsWithState state = 2^6 bytes +
-      // a counter per group, bounded FOREVER — the sketch never grows).
-      // Two triggers split the corpus by doc parity; because the merge is
-      // an elementwise max, the registers after each group's last update
-      // equal the one-shot batch sketch, so the stat_hll oracle applies
-      // unchanged — the gate itself verifies the streaming-merge identity
-      import s.implicits._
-      // the two-chunk input layout is FIXTURE (the arrival schedule, not
-      // the operator): derive + write it once per (session, sf) — the
-      // bench's second pass then times the streaming maintenance, not the
-      // shingle explode + md5 + parquet writes. The CHECKPOINT stays
-      // per-run (wiped scratch): reusing one would make a later run
-      // resume past both files and process nothing.
-      val base = prepared(s, s"st12in:$dir") {
-        val out = scratchDir(s, "st12", dir)
-        val rows = t(s, dir, "documents")
-          .select(col("doc_id"), col("source"),
-            explode(graft.pipeline.Dedup.shingles(col("text"), 3)).as("sh"))
-          .select(col("doc_id"), col("source"),
-            graft.pipeline.Sampling.md5Hash60(col("sh")).as("h"))
-        writeArrivals(s, s"$out/in",
-          rows.filter(col("doc_id") % 2 === 0).select("source", "h"),
-          rows.filter(col("doc_id") % 2 === 1).select("source", "h"))
-        out
-      }
-      val ckpt = scratchDir(s, "st12ckpt", dir)
-      val stream = readArrivals(s, s"$base/in")
-        .select(col("source").as("_1"), col("h").as("_2")).as[(String, Long)]
-      drain(s, graft.streaming.Streams.hllMaintain(stream, p = 6)
-        .toDF("source", "upd", "regs")
-        .writeStream.format("memory").queryName("st12_hll")
-        .outputMode("update"), ckpt)
-      val finalRegs = memorySinkRows(s, "st12_hll")
-        .groupBy("source").agg(max_by(col("regs"), col("upd")).as("regs"))
-      graft.pipeline.Stats.hllEstimate(finalRegs, "source", p = 6)
-        .orderBy("source")
-    }),
-
-    "st16_stream_ewma" -> ((s, dir) => {
-      // always-on smoothed-rate monitoring: per-type EWMA folded across
-      // micro-batches (flatMapGroupsWithState state = TWO numbers per
-      // group — last bucket + last ewma — bounded forever; frontier
-      // monotone, so re-delivered or late buckets are dropped). Two
-      // in-order triggers (pinned mtimes) make the streamed fold equal
-      // the batch fold, so the e9 oracle applies unchanged — the gate
-      // verifies the streaming-identity
-      import s.implicits._
-      // the pinned-mtime chunk layout is fixture, built once per
-      // (session, sf) — mtimes persist with the files, so the in-order
-      // contract survives the memo; checkpoint per-run (as in st12)
-      val base = prepared(s, s"st16in:$dir") {
-        orderedCountFiles(s, dir, "st16")
-      }
-      val ckpt = scratchDir(s, "st16ckpt", dir)
-      val stream = readArrivals(s, s"$base/in")
-        .select(col("event_type").as("_1"), col("bucket").as("_2"),
-          col("cnt").as("_3")).as[(String, Long, Long)]
-      drain(s, graft.streaming.Streams.ewmaMaintain(stream, alpha = 0.25)
-        .toDF("event_type", "bucket", "cnt", "ewma")
-        .writeStream.format("memory").queryName("st16_ewma")
-        .outputMode("update"), ckpt)
-      memorySinkRows(s, "st16_ewma").orderBy("event_type", "bucket")
-    }),
-
-    "st17_stream_anomaly" -> ((s, dir) => {
-      // always-on anomaly ALARMS: the trailing-24-bucket baseline of
-      // e7_count_anomaly maintained across micro-batches (state = the
-      // frontier + ≤ 24 (bucket, cnt) pairs per type, bounded forever);
-      // in-order triggers ⇒ streamed flags ≡ the batch operator
-      // row-for-row, verified against the SAME e7 oracle
-      import s.implicits._
-      // fixture memo + per-run checkpoint: the st16 discipline
-      val base = prepared(s, s"st17in:$dir") {
-        orderedCountFiles(s, dir, "st17")
-      }
-      val ckpt = scratchDir(s, "st17ckpt", dir)
-      val stream = readArrivals(s, s"$base/in")
-        .select(col("event_type").as("_1"), col("bucket").as("_2"),
-          col("cnt").as("_3")).as[(String, Long, Long)]
-      drain(s, graft.streaming.Streams.anomalyMaintain(stream,
-          window = 24, factor = 2L)
-        .toDF("event_type", "bucket", "cnt", "trail_n", "trail_sum",
-          "anomaly")
-        .writeStream.format("memory").queryName("st17_anomaly")
-        .outputMode("update"), ckpt)
-      memorySinkRows(s, "st17_anomaly").orderBy("event_type", "bucket")
-    }),
-
-    "st13_stream_cms" -> ((s, dir) => {
-      // always-on frequency monitoring: per-source Count-Min counters
-      // maintained across micro-batches (state = 4×512 longs + a counter
-      // per group, bounded forever). Two triggers split the corpus by doc
-      // parity; counter ADDITION is batch-associative, so the counters
-      // after each group's last update equal the one-shot batch sketch —
-      // the gate verifies that identity by probing the global top-10
-      // tokens against per-source exact counts
-      import s.implicits._
-      // input chunks AND the exact-count probe side (global top-10
-      // tokens × per-source counts — a pure function of the corpus, i.e.
-      // the expected side of the gate, not the operator) are fixture:
-      // built once per (session, sf); the checkpoint stays per-run, as
-      // in st12
-      val base = prepared(s, s"st13in:$dir") {
-        val out = scratchDir(s, "st13", dir)
-        val rows = t(s, dir, "documents")
-          .select(col("doc_id"), col("source"),
-            explode(split(col("text"), " ")).as("tok"))
-          .filter(col("tok") =!= "")
-        val hashed = rows.select(col("doc_id"), col("source"),
-          graft.pipeline.Sampling.md5Hash60(col("tok")).as("h"))
-        writeArrivals(s, s"$out/in",
-          hashed.filter(col("doc_id") % 2 === 0).select("source", "h"),
-          hashed.filter(col("doc_id") % 2 === 1).select("source", "h"))
-        val top = rows.groupBy("tok").agg(count(lit(1)).as("g"))
-          .orderBy(col("g").desc, col("tok")).limit(10).select("tok")
-        rows.join(broadcast(top), "tok")
-          .groupBy("source", "tok").agg(count(lit(1)).as("cnt"))
-          .coalesce(1).write.mode("overwrite").parquet(s"$out/probe")
-        out
-      }
-      val ckpt = scratchDir(s, "st13ckpt", dir)
-      val stream = readArrivals(s, s"$base/in")
-        .select(col("source").as("_1"), col("h").as("_2")).as[(String, Long)]
-      drain(s, graft.streaming.Streams.cmsMaintain(stream, d = 4, wlog = 9)
-        .toDF("source", "upd", "cnts")
-        .writeStream.format("memory").queryName("st13_cms")
-        .outputMode("update"), ckpt)
-      val finalCnts = memorySinkRows(s, "st13_cms")
-        .groupBy("source").agg(max_by(col("cnts"), col("upd")).as("__cms"))
-      s.read.parquet(s"$base/probe").join(broadcast(finalCnts), "source")
-        .withColumn("est", graft.pipeline.Stats.cmsEstimateExpr(
-          col("__cms"), col("tok"), d = 4, wlog = 9))
-        .select(col("source"), col("tok").as("token"), col("cnt"), col("est"))
-        .orderBy("source", "token")
-    }),
-
-    "e3_asof_attribution" -> ((s, dir) => {
-      // backward as-of join (purchase ← latest prior click per user):
-      // union-tagged single-shuffle window plan, no range-join explosion
-      val ev = events(s, dir)
-      val purchases = ev.filter(col("event_type") === "purchase")
-        .select("event_id", "user_id", "ts")
-      val clicks = ev.filter(col("event_type") === "click")
-        .select(col("user_id"), col("ts"),
-          col("event_id").as("click_id"), col("value").as("click_value"))
-      graft.pipeline.AsOfJoin.asof(purchases, clicks, "user_id", "ts",
-          rightCols = Seq("click_id", "click_value"), suffix = "")
-        .select(col("event_id"), col("user_id"),
-          col("click_id"), col("click_value"))
-        .orderBy("event_id")
-    }),
-
-    "e8_asof_forward" -> ((s, dir) => {
-      // forward as-of: for each purchase, the NEXT view by the same user
-      // (time-to-next-impression) — the time-mirrored single-shuffle
-      // window plan, same cost shape as the backward e3
-      val ev = events(s, dir)
-      val purchases = ev.filter(col("event_type") === "purchase")
-        .select("event_id", "user_id", "ts")
-      val views = ev.filter(col("event_type") === "view")
-        .select(col("user_id"), col("ts"),
-          col("event_id").as("view_id"), col("value").as("view_value"))
-      graft.pipeline.AsOfJoin.asof(purchases, views, "user_id", "ts",
-          rightCols = Seq("view_id", "view_value"), suffix = "",
-          forward = true)
-        .select(col("event_id"), col("user_id"),
-          col("view_id"), col("view_value"))
-        .orderBy("event_id")
-    }),
-
-    "e2_props_extract" -> ((s, dir) => {
-      events(s, dir)
-        .select(col("event_type"),
-          get_json_object(col("props"), "$.k").cast("long").as("k"))
-        .groupBy("event_type")
-        .agg(sum("k").as("sum_k"), count(lit(1)).as("cnt"))
-        .orderBy("event_type")
-    }),
-
-    "e1_sessionize" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
-      val gapped = events(s, dir).filter(col("user_id") < 50)
-        .withColumn("prev_ts_ms", lag(col("ts_ms"), 1).over(w))
-        .withColumn("new_session",
-          when(col("prev_ts_ms").isNull ||
-            col("ts_ms") - col("prev_ts_ms") > 30 * 60 * 1000L, 1L)
-          .otherwise(0L))
-      gapped.groupBy("user_id")
-        .agg(sum("new_session").as("n_sessions"), count(lit(1)).as("n_events"))
-        .orderBy("user_id")
-    }),
-
-    "src_json_roundtrip" -> ((s, dir) => {
-      // JSON-lines ingestion path (the reference's native document
-      // format): corpus → gzip JSONL → read back under an EXPLICIT schema
-      // (schema inference is a second full pass at 100 TB — never rely on
-      // it) → byte-identical rows. The oracle is the identity SELECT, so
-      // the gate proves the round trip preserves every value (unicode,
-      // quotes, embedded newlines) through the codec
-      val base = scratchDir(s, "srcjson", dir)
-      val docs = t(s, dir, "documents")
-      docs.write.option("compression", "gzip").json(s"$base/docs")
-      s.read.schema(docs.schema).json(s"$base/docs")
-        .select(docs.columns.map(col): _*).orderBy("doc_id")
-    }),
-
-    "src_orc_roundtrip" -> ((s, dir) => {
-      // same contract through the ORC reader/writer (columnar alternative
-      // when the lake standard isn't parquet); explicit schema, identity
-      // oracle
-      val base = scratchDir(s, "srcorc", dir)
-      val docs = t(s, dir, "documents")
-      docs.write.orc(s"$base/docs")
-      s.read.schema(docs.schema).orc(s"$base/docs")
-        .select(docs.columns.map(col): _*).orderBy("doc_id")
-    }),
-
-    "src_schema_evolution" -> ((s, dir) => {
-      // lake reality: a writer adds a column mid-corpus. Batch 1 lacks
-      // `quality`, batch 2 carries it; a mergeSchema read presents ONE
-      // unified schema with nulls for the old files — the contract that
-      // lets a 100 TB corpus evolve without rewriting history
-      val base = scratchDir(s, "srcevo", dir)
-      val docs = t(s, dir, "documents")
-      docs.select("doc_id", "text", "lang")
-        .filter(col("doc_id") % 2 === 0).write.parquet(s"$base/b1")
-      docs.select(col("doc_id"), col("text"), col("lang"),
-          (col("n_chars").cast("double") / 100).as("quality"))
-        .filter(col("doc_id") % 2 === 1).write.parquet(s"$base/b2")
-      s.read.option("mergeSchema", "true")
-        .parquet(s"$base/b1", s"$base/b2")
-        .select("doc_id", "lang", "quality").orderBy("doc_id")
-    }),
-
-    "src_partitioned_layout" -> ((s, dir) => {
-      // Hive-style partitioned lake layout: one directory per lang, so a
-      // lang predicate prunes to 1/5 of the files BEFORE any IO
-      // (PartitionFilters — plan-pinned in LayoutSpec); the partition
-      // column comes back from directory names, not file bytes
-      val base = scratchDir(s, "srcpart", dir)
-      t(s, dir, "documents").write.partitionBy("lang")
-        .mode("overwrite").parquet(s"$base/docs")
-      s.read.parquet(s"$base/docs").filter(col("lang") === "en")
-        .select(col("doc_id"), col("lang"), col("n_chars"))
-        .orderBy("doc_id")
-    }),
-
-    "src_csv_roundtrip" -> ((s, dir) => {
-      // CSV ingestion path (the interchange format curation pipelines
-      // still receive): RFC-style quoting (quote doubled as escape) so
-      // commas/quotes in text survive; explicit schema on read (inference
-      // is a second full pass at 100 TB), identity oracle proves the
-      // round trip byte-exact
-      val base = scratchDir(s, "srccsv", dir)
-      val docs = t(s, dir, "documents")
-      docs.write.option("header", "true").option("escape", "\"")
-        .csv(s"$base/docs")
-      s.read.schema(docs.schema).option("header", "true")
-        .option("escape", "\"").csv(s"$base/docs")
-        .select(docs.columns.map(col): _*).orderBy("doc_id")
-    }),
-
-    "e5_funnel" -> ((s, dir) => {
-      // strictly-ordered first-completion funnel view → click → purchase:
-      // each stage scans the log filtered to its own type and joins the
-      // user-sized accumulator; strict > keeps simultaneous events out
-      // identically on both engines
-      // full-precision ts (ns long), NOT ts_ms: the oracle compares µs
-      // timestamps, and ms truncation could merge a strictly-later event
-      // into equality
-      graft.pipeline.EventAnalytics.funnel(
-          events(s, dir), "user_id", "event_type", "ts",
-          Seq("view", "click", "purchase"))
-        .orderBy("step_no")
-    }),
-
-    "e6_retention" -> ((s, dir) => {
-      // weekly retention triangle: log collapses to distinct (user, week)
-      // in one two-phase aggregate; cohort = first active week; all
-      // integer arithmetic
-      graft.pipeline.EventAnalytics.retentionCohorts(
-          events(s, dir), "user_id", col("ts_ms"), bucket = 604800000L)
-        .orderBy("cohort", "offset")
-    }),
-
-    "e7_count_anomaly" -> ((s, dir) => {
-      // rolling-rate anomaly: per event type, hourly counts vs 2× the
-      // trailing-24-observed-buckets mean — integer cross-multiplied
-      // flag, window over the compressed (type, bucket) table
-      graft.pipeline.EventAnalytics.countAnomalies(
-          events(s, dir), "event_type", col("ts_ms"),
-          bucketMs = 3600000L, window = 24)
-        .orderBy("event_type", "bucket")
-    }),
-
-    "e11_markov_transitions" -> ((s, dir) => {
-      // the Markov-chain view of the event log: per-user consecutive
-      // (from, to) type pairs, counts + row-normalized probabilities;
-      // one user-key shuffle for adjacency, |types|² output
-      graft.pipeline.EventAnalytics.transitionMatrix(
-          events(s, dir), "user_id", "event_type",
-          col("ts"), col("event_id"))
-        .orderBy("from_type", "to_type")
-    }),
-
-    "e10_user_paths" -> ((s, dir) => {
-      // top-20 first-5-event paths: one shuffle on the user key, ≤ depth
-      // rows per user survive the rank filter, ordered reassembly via
-      // GetArrayStructFields, two-phase path count + TakeOrdered
-      graft.pipeline.EventAnalytics.topPaths(
-        events(s, dir), "user_id", "event_type",
-        col("ts"), col("event_id"), depth = 5, k = 20)
-    }),
-
-    "e9_ewma_smooth" -> ((s, dir) => {
-      // EWMA-smoothed hourly event rates (α=1/4, dyadic): the codegen'd
-      // SeriesKernels.ewma left fold over each type's observed buckets —
-      // two IEEE roundings per step, replayed in the oracle by
-      // list_reduce over the same prefix
-      graft.pipeline.EventAnalytics.ewmaSmooth(
-          events(s, dir), "event_type", col("ts_ms"),
-          bucketMs = 3600000L, alpha = 0.25)
-        .orderBy("event_type", "bucket")
-    }),
-
-    "e4_interval_join" -> ((s, dir) => {
-      // banded range join: per event, how many same-type events follow
-      // within 10 minutes (+ the first one's timestamp) — an equi join on
-      // (event_type, time bucket), never a nested-loop range join
-      val ev = events(s, dir).select("event_id", "event_type", "ts_ms")
-      graft.pipeline.IntervalJoin.followWithin(ev, ev, "event_id", "ts_ms",
-          spanMs = 600000L, equi = Seq("event_type"))
-        .select(col("event_id"), col("matches"), col("next_ts_ms"))
-        .orderBy("event_id")
-    }),
-
-    "dedup_norm_survivor" -> ((s, dir) => {
-      // normalized-granularity dedup with a QUALITY survivor policy:
-      // whitespace/punctuation variants (injected here so the operator
-      // is exercised) collapse to one fingerprint group; the LONGEST raw
-      // copy survives (tie → min id) — "keep the richest variant", one
-      // two-phase max_by aggregate, no window. ASCII-only perturbation:
-      // engine-specific unicode CASING rules never enter the key
-      val docs = t(s, dir, "documents").select("doc_id", "text")
-      val pert = docs.filter(col("doc_id") % 3 === 0).select(
-        (col("doc_id") + 1000000L).as("doc_id"),
-        concat(lit("  "), col("text"), lit(" !!")).as("text"))
-      graft.pipeline.Dedup.normSurvivors(
-          docs.unionByName(pert), "text", "doc_id")
-        .orderBy("doc_id")
-    }),
-
-    "dedup_cdc_chunks" -> ((s, dir) => {
-      // content-defined chunking: boundaries depend only on content, so
-      // the injected PREFIX-SHIFTED copies (the case every fixed-stride
-      // window scheme misses) still share every interior chunk with
-      // their originals — the cross-doc repeated-chunk report proves the
-      // shift-robustness the technique exists for
-      val docs = t(s, dir, "documents").select("doc_id", "text")
-      val shifted = docs.select((col("doc_id") + 1000000L).as("doc_id"),
-        concat(lit("shiftedprefixtoken "), col("text")).as("text"))
-      graft.pipeline.Dedup.cdcChunkDupCounts(
-        docs.unionByName(shifted), "doc_id", col("text"), maskBits = 3)
-    }),
-
-    "dedup_minhash_est" -> ((s, dir) => {
-      // the 100 TB verify: Jaccard ESTIMATED from signature agreement
-      // (matches/k over the k longs both docs already carry) instead of
-      // re-joining shingle sets; candidates from band collisions, corpus
-      // doubled so exact duplicates exercise the est=1.0 ceiling
-      val docs = t(s, dir, "documents").select("doc_id", "text")
-      val doubled = docs.unionByName(
-        docs.select((col("doc_id") + 1000000).as("doc_id"), col("text")))
-      graft.pipeline.Dedup.minhashEstimates(doubled, "doc_id", col("text"),
-          shingleN = 3, k = 8, bands = 4)
-        .orderBy("id_a", "id_b")
-    }),
-
-    // ---- LLM-pipeline: dedup -------------------------------------------
-    "dedup_exact" -> ((s, dir) => {
-      val docs = t(s, dir, "documents").select("doc_id", "text")
-      val doubled = docs.unionByName(
-        docs.select((col("doc_id") + 1000000).as("doc_id"), col("text")))
-      Dedup.exactSurvivors(doubled, "text", "doc_id")
-        .select(col("doc_id"), col("copies")).orderBy("doc_id")
-    }),
-
-    "dedup_soft_weights" -> ((s, dir) => {
-      // soft dedup: keep every copy, weight it 1/copies so duplicated
-      // content's total training mass is one copy — every third doc is
-      // re-injected (+1000000 ids) and both the original and the clone
-      // must carry copies=2, weight=0.5
-      val docs = t(s, dir, "documents").select(col("doc_id"), col("text"))
-      val doubled = docs.unionByName(
-        docs.filter(col("doc_id") % 3 === 0)
-          .select((col("doc_id") + 1000000L).as("doc_id"), col("text")))
-      Dedup.softDedupWeights(doubled, "text", "doc_id").orderBy("doc_id")
-    }),
-
-    "dedup_ngram_jaccard" -> ((s, dir) => {
-      Dedup.ngramJaccardPairs(t(s, dir, "documents"), "text", "doc_id",
-          n = 3, threshold = 0.5)
-        .select(col("id_a"), col("id_b")).orderBy("id_a", "id_b")
-    }),
-
-    "graph_knn_components" -> ((s, dir) => {
-      // connected components over the k-NN graph — the cluster structure
-      // SemDeDup pruning and diversity sampling consume; min-label
-      // propagation (O(diameter) shuffle rounds, duplicateClusters),
-      // isolated vectors are their own component
-      val emb = t(s, dir, "embeddings")
-      val edges = Similarity.knnGraph(emb, "vec_id", "embedding",
-          k = 3, planes = 6, dim = 64)
-        .select(col("node_id").as("id_a"), col("neighbor_id").as("id_b"))
-      val comp = Dedup.duplicateClusters(edges)
-        .withColumnRenamed("id", "vec_id")
-        .withColumnRenamed("cluster_id", "component_id")
-      emb.select(col("vec_id"))
-        .join(comp, Seq("vec_id"), "left_outer")
-        .select(col("vec_id"),
-          coalesce(col("component_id"), col("vec_id")).as("component_id"))
-        .orderBy("vec_id")
-    }),
-
-    "graph_triangles" -> ((s, dir) => {
-      // exact per-node triangle counts over the k-NN graph — the local
-      // clustering signal next to PageRank centrality; degree-ordered
-      // orientation bounds wedge volume at scale, counts are exact
-      // integers; isolated vectors count zero
-      val emb = t(s, dir, "embeddings")
-      val edges = Similarity.knnGraph(emb, "vec_id", "embedding",
-          k = 3, planes = 6, dim = 64)
-        .select(col("node_id").as("id_a"), col("neighbor_id").as("id_b"))
-      val tri = graft.pipeline.GraphAnalytics.trianglesPerNode(edges)
-        .withColumnRenamed("node", "vec_id")
-      emb.select(col("vec_id"))
-        .join(tri, Seq("vec_id"), "left_outer")
-        .select(col("vec_id"),
-          coalesce(col("triangles"), lit(0L)).as("triangles"))
-        .orderBy("vec_id")
-    }),
-
-    "graph_components_star" -> ((s, dir) => {
-      // the SAME component structure via alternating large-star/small-star
-      // rounds (O(log² n) regardless of diameter — the extreme-scale path
-      // where label propagation's O(diameter) loop is the bottleneck);
-      // gated against the identical transitive-closure oracle
-      val emb = t(s, dir, "embeddings")
-      val edges = Similarity.knnGraph(emb, "vec_id", "embedding",
-          k = 3, planes = 6, dim = 64)
-        .select(col("node_id").as("id_a"), col("neighbor_id").as("id_b"))
-      val comp = Dedup.duplicateClustersStar(edges)
-        .withColumnRenamed("id", "vec_id")
-        .withColumnRenamed("cluster_id", "component_id")
-      emb.select(col("vec_id"))
-        .join(comp, Seq("vec_id"), "left_outer")
-        .select(col("vec_id"),
-          coalesce(col("component_id"), col("vec_id")).as("component_id"))
-        .orderBy("vec_id")
-    }),
-
-    "dedup_fuzzy_keys" -> ((s, dir) => {
-      // fuzzy key matching (entity resolution): deterministic single-
-      // char-deletion typos injected on every 5th key (+1000000 ids),
-      // recovered via q-gram-blocked candidates + ONE exact integer
-      // Levenshtein per candidate; the oracle replays injection,
-      // blocking, prune and the identical DP distance
-      val base = t(s, dir, "documents").filter(col("lang") === "en")
-        .select(col("doc_id"), substring(col("text"), 1, 24).as("k"))
-        .filter(length(col("k")) === 24)
-      val typos = base.filter(col("doc_id") % 5 === 0)
-        .select(col("doc_id"),
-          concat(
-            expr("substring(k, 1, cast(doc_id % 20 as int))"),
-            expr("substring(k, cast(doc_id % 20 as int) + 2, 24)")).as("k2"))
-        .select((col("doc_id") + 1000000L).as("doc_id"), col("k2").as("k"))
-      Dedup.fuzzyKeyPairs(base.unionByName(typos), "k", "doc_id",
-          maxEdits = 1, q = 4, maxGramFreq = Some(100))
-        .orderBy("id_a", "id_b")
-    }),
-
-    "dedup_jaccard_prefix" -> ((s, dir) => {
-      // prefix-filtered set-similarity join (AllPairs/ppjoin): LOSSLESS
-      // candidate pruning for Jaccard >= t — candidates come only from
-      // collisions among each set's rarest |s|−⌈t·|s|⌉+1 shingles, yet
-      // the gate verifies the output equals the BRUTE-FORCE ground
-      // truth (the oracle is the same full cross check the unfiltered
-      // path gates against)
-      Dedup.ngramJaccardPairsPrefix(t(s, dir, "documents"), "text",
-          "doc_id", n = 3, threshold = 0.9)
-        .select(col("id_a"), col("id_b")).orderBy("id_a", "id_b")
-    }),
-
-    "dedup_containment" -> ((s, dir) => {
-      // asymmetric containment (overlap coefficient): the doc-inside-doc
-      // signal Jaccard dilutes — integer threshold test so the pair set
-      // is engine-exact, one IEEE division for the reported score
-      Dedup.containmentPairs(t(s, dir, "documents"), "text", "doc_id",
-          n = 3, pct = 80)
-        .select(col("id_a"), col("id_b"), col("containment"))
-        .orderBy("id_a", "id_b")
-    }),
-
-    "dedup_clusters" -> ((s, dir) => {
-      // pairwise near-dups → connected components → one canonical
-      // survivor (min doc_id) per cluster; singletons survive themselves
-      val docs = t(s, dir, "documents")
-      val pairs = Dedup.ngramJaccardPairs(docs, "text", "doc_id",
-        n = 3, threshold = 0.5)
-      val clusters = Dedup.duplicateClusters(pairs)
-        .withColumnRenamed("id", "doc_id")
-      docs.select(col("doc_id"))
-        .join(clusters, Seq("doc_id"), "left_outer")
-        .select(col("doc_id"),
-          coalesce(col("cluster_id"), col("doc_id")).as("cluster_id"))
-        .withColumn("survivor", col("cluster_id") === col("doc_id"))
-        .orderBy("doc_id")
-    }),
-
-    "dedup_minhash_lsh" -> ((s, dir) => {
-      Dedup.minhashDedupPairs(t(s, dir, "documents"), "text", "doc_id",
-          n = 3, k = 32, bands = 16, threshold = 0.5)
-        .select(col("id_a"), col("id_b")).orderBy("id_a", "id_b")
-    }),
-
-    "dedup_incremental" -> ((s, dir) => {
-      // continuous ingestion: even doc_ids play the accumulated corpus,
-      // odd the incoming batch — flag batch docs that near-duplicate
-      // something already stored (batch-internal dups are minhash_lsh's job)
-      val docs = t(s, dir, "documents")
-      Dedup.minhashDedupAgainst(
-          docs.filter(col("doc_id") % 2 === 0),
-          docs.filter(col("doc_id") % 2 === 1),
-          "text", "doc_id", n = 3, k = 32, bands = 16, threshold = 0.5)
-        .select(col("batch_id"), col("corpus_id"))
-        .orderBy("batch_id", "corpus_id")
-    }),
-
-    "dedup_simhash" -> ((s, dir) => {
-      // md5-derived 60-bit token hash so the fingerprints (and thus the
-      // exact-Hamming pair set) are reproducible in the DuckDB oracle;
-      // production callers default to xxhash64/64-bit
-      Dedup.simhashPairs(t(s, dir, "documents"), "text", "doc_id",
-          maxHamming = 3, bands = 4, width = 60,
-          tokenHash = Dedup.md5TokenHash)
-        .select(col("id_a"), col("id_b"), col("hamming").cast("long").as("hamming"))
-        .orderBy("id_a", "id_b")
-    }),
-
-    "dedup_embedding_cosine_exact" -> ((s, dir) => {
-      // exact all-pairs oracle baseline (quadratic by construction);
-      // the production 100x-scale binding is the _lsh entry below
-      Similarity.cosineNearDupPairs(t(s, dir, "embeddings"), "vec_id", "embedding",
-          threshold = 0.4)
-        .select(col("id_a"), col("id_b")).orderBy("id_a", "id_b")
-    }),
-
-    "dedup_embedding_cosine_lsh" -> ((s, dir) => {
-      // the 100×-scale path for embedding near-dup: sign-bucket LSH with
-      // Hamming-1 multiprobe + exact verify — oracle replays the exact
-      // bucketing (inlined hyperplanes), so the approximate path is
-      // hash-checked, not rows-only
-      Similarity.cosineNearDupPairsLsh(t(s, dir, "embeddings"), "vec_id",
-          "embedding", threshold = 0.4, planes = 6, dim = 64)
-        .select(col("id_a"), col("id_b")).orderBy("id_a", "id_b")
-    }),
-
-    "dedup_substring" -> ((s, dir) => {
-      // exact-substring (memorized-span) dedup: docs sharing a 40-char
-      // window sampled every 10 chars; ubiquitous windows (>50 docs)
-      // pruned as boilerplate before the self-join
-      graft.pipeline.Dedup.substringDupPairs(t(s, dir, "documents"),
-          "text", "doc_id", width = 40, stride = 10,
-          maxDocsPerWindow = Some(50))
-        .orderBy("id_a", "id_b")
-    }),
-
-    "dedup_semantic" -> ((s, dir) => {
-      // cluster-then-compare (the SemDeDup recipe): near-dup search scoped
-      // to deterministic coarse-centroid cells — pairwise cost ∝ cell
-      // occupancy, never corpus²; the oracle replays the exact centroid
-      // structure, so the approximate path is hash-checked
-      Similarity.semanticDedupPairs(t(s, dir, "embeddings"), "vec_id",
-          "embedding", threshold = 0.4, nlist = 16)
-        .select(col("cid"), col("id_a"), col("id_b")).orderBy("id_a", "id_b")
-    }),
-
-    // ---- LLM-pipeline: similarity search -------------------------------
-    "pipeline_rag_prep" -> ((s, dir) => {
-      // RAG-side capstone — the retrieval pipeline as ONE DAG: overlapping
-      // token chunks (narrow, in-scan) → deterministic hash embeddings
-      // (md5-derived doubles, the honest stand-in for a model encoder:
-      // same schema/partitioning/score path as a real one) → cosine top-3
-      // chunks per question (queries broadcast, corpus never shuffles).
-      // The 8-term dot chain is left-associated on both engines, so
-      // scores are bit-identical and the ranking replays exactly
-      val chunks = graft.pipeline.TextAnalysis.chunkByTokens(
-          t(s, dir, "documents"), "doc_id", col("text"),
-          chunkTokens = 32, stride = 24)
-        .select((col("id") * RagChunkShift + col("chunk_idx")).as("id"),
-          col("chunk_text").as("txt"))
-      val questions = RagQuestions.map { case (qid, q) => (qid, q) }
-      val qdf = s.createDataFrame(questions).toDF("id", "txt")
-      val all = chunks.unionByName(qdf)
-      val dim = 8
-      val emb = all.select(col("id"), array((0 until dim).map(j =>
-        graft.pipeline.Sampling.md5Hash60(
-            concat(lit(s"$j|"), col("txt"))).cast("double") /
-          lit(math.pow(2.0, 60))): _*).as("embedding"))
-      graft.pipeline.Similarity.cosineTopK(emb, "id", "embedding",
-          col("id") >= RagQuerySentinel, k = 3)
-        .select(col("query_id"), col("neighbor_id"),
-          col("rank").cast("long").as("rank"))
-        .orderBy("query_id", "rank")
-    }),
-
-    "ann_cosine_topk" -> ((s, dir) => {
-      Similarity.cosineTopK(t(s, dir, "embeddings"), "vec_id", "embedding",
-          col("vec_id") < 10, k = 5)
-        .select(col("query_id"), col("neighbor_id"), col("rank").cast("long").as("rank"))
-        .orderBy("query_id", "rank")
-    }),
-
-    "ann_knn_graph" -> ((s, dir) => {
-      // k-NN GRAPH construction — the neighborhood structure SemDeDup-
-      // style dedup, graph clustering and diversity pruning consume:
-      // every corpus vector's 3 nearest neighbors among its sign-LSH
-      // Hamming-1 multiprobe candidates (exact cosine, per-node rank) —
-      // the whole-corpus companion to ann_lsh_topk's query-set search
-      graft.pipeline.Similarity.knnGraph(t(s, dir, "embeddings"),
-          "vec_id", "embedding", k = 3, planes = 6, dim = 64)
-        .select(col("node_id"), col("neighbor_id"),
-          col("rank").cast("long").as("rank"))
-        .orderBy("node_id", "rank")
-    }),
-
-    "graph_pagerank" -> ((s, dir) => {
-      // PageRank centrality over the k-NN graph — the diversity/quality
-      // weighting signal graph-based corpus pruning consumes (rank a
-      // document by how central its embedding neighborhood is). INTEGER-
-      // scaled exact arithmetic (rank·10^12 longs, floor divisions):
-      // every update is order-independent, so the 3-round fixpoint
-      // replays bit-identically in the oracle. One src-keyed join + one
-      // dst-keyed aggregation per round (the Pregel shape), nothing
-      // corpus-sized on the driver.
-      val edges = Similarity.knnGraph(t(s, dir, "embeddings"),
-        "vec_id", "embedding", k = 3, planes = 6, dim = 64)
-      graft.pipeline.GraphAnalytics.pageRank(edges, "node_id", "neighbor_id",
-          iters = 3)
-        .select(col("node").as("vec_id"), col("rank_scaled"))
-        .orderBy("vec_id")
-    }),
-
-    "graph_pagerank_dangling" -> ((s, dir) => {
-      // PageRank with uniform dangling-mass redistribution on an edge
-      // table WITH sinks: customer → its nation, nation → its region
-      // (region nodes emit nothing). The per-round dangling sum is one
-      // BIGINT aggregate and its per-node share a floor division, so the
-      // 4-round fixpoint stays integer-exact and replays bit-identically
-      val custE = t(s, dir, "customer").select(
-        (col("c_custkey").cast("long") + lit(100000L)).as("src"),
-        col("c_nationkey").cast("long").as("dst"))
-      val natE = t(s, dir, "nation").select(
-        col("n_nationkey").cast("long").as("src"),
-        (col("n_regionkey").cast("long") + lit(900000L)).as("dst"))
-      graft.pipeline.GraphAnalytics.pageRank(custE.unionByName(natE),
-          "src", "dst", iters = 4, danglingRedistribution = true)
-        .select(col("node"), col("rank_scaled"))
-        .orderBy("node")
-    }),
-
-    "graph_pagerank_personal" -> ((s, dir) => {
-      // personalized PageRank: teleport restricted to a curated SEED set
-      // (every 10th customer) over the same sink-bearing customer →
-      // nation → region graph — the seed-based quality-propagation
-      // signal corpus curation scores crawl sources with. Dangling mass
-      // (the region sinks) returns to the SEEDS, not to every node;
-      // non-seed customers have no in-edges and converge to exactly 0
-      // ("no trust path"). Integer-scaled floor arithmetic throughout,
-      // so the 4-round fixpoint replays bit-identically in the oracle
-      val custE = t(s, dir, "customer").select(
-        (col("c_custkey").cast("long") + lit(100000L)).as("src"),
-        col("c_nationkey").cast("long").as("dst"))
-      val natE = t(s, dir, "nation").select(
-        col("n_nationkey").cast("long").as("src"),
-        (col("n_regionkey").cast("long") + lit(900000L)).as("dst"))
-      val seeds = t(s, dir, "customer")
-        .filter(col("c_custkey") % 10 === 0)
-        .select((col("c_custkey").cast("long") + lit(100000L)).as("node"))
-      graft.pipeline.GraphAnalytics.personalizedPageRank(
-          custE.unionByName(natE), "src", "dst", seeds, "node", iters = 4)
-        .select(col("node"), col("rank_scaled"))
-        .orderBy("node")
-    }),
-
-    "embed_robust_scale" -> ((s, dir) => {
-      // robust per-dimension whitening (median/MAD — the RobustScaler
-      // shape): calibration from the FULL corpus as exact order
-      // statistics, output the scaled values of the first 50 vectors;
-      // (x − med)/mad is one exact IEEE subtraction + one correctly-
-      // rounded division ⇒ bit-identical external replay (a mean/std
-      // whitening could never gate: float sums are shuffle-order-
-      // dependent)
-      Similarity.robustScale(t(s, dir, "embeddings"), "vec_id", "embedding")
-        .filter(col("id") < 50)
-        .select(col("id").as("vec_id"),
-          col("dim_idx").cast("long").as("dim_idx"), col("scaled"))
-        .orderBy("vec_id", "dim_idx")
-    }),
-
-    "ann_lsh_topk" -> ((s, dir) => {
-      Similarity.annLshTopK(t(s, dir, "embeddings"), "vec_id", "embedding",
-          col("vec_id") < 10, k = 5, planes = 4, dim = 64)
-        .select(col("query_id"), col("neighbor_id"), col("rank").cast("long").as("rank"))
-        .orderBy("query_id", "rank")
-    }),
-
-    "ann_ivf_topk" -> ((s, dir) => {
-      Similarity.annIvfTopK(t(s, dir, "embeddings"), "vec_id", "embedding",
-          col("vec_id") < 10, k = 5, nlist = 16, nprobe = 4)
-        .select(col("query_id"), col("neighbor_id"), col("rank").cast("long").as("rank"))
-        .orderBy("query_id", "rank")
-    }),
-
-    "rag_mmr" -> ((s, dir) => {
-      // diversified retrieval: MMR-greedy pick of 5 from each query's
-      // 20 nearest — near-duplicate passages stop crowding out coverage;
-      // the sequential greedy runs per query as a bounded typed kernel,
-      // queries parallelize, and the dyadic λ=½ keeps every step an
-      // exact IEEE op the chained-CTE oracle replays
-      Similarity.mmrRerank(t(s, dir, "embeddings"), "vec_id", "embedding",
-          col("vec_id") < 3, poolK = 20, outK = 5)
-        .orderBy("query_id", "mmr_rank")
-    }),
-
-    "ann_ivfpq_residual" -> ((s, dir) => {
-      // FAISS-default residual IVF-PQ: codes quantize v − centroid
-      // (float-quantized residuals keep every product exact), score is
-      // the inner-product expansion q·c + ADC — the higher-recall form
-      // at identical index storage. The residual codebook is BUILD-time
-      // work, memoized like the raw-PQ books; the bench times the search
-      val book = prepared(s, s"residbook:$dir:16:8:8:2") {
-        Similarity.trainResidualPq(t(s, dir, "embeddings"), "vec_id",
-          "embedding", nlist = 16, m = 8, ncodes = 8, trainIters = 2)
-      }
-      Similarity.annIvfPqResidualTopK(t(s, dir, "embeddings"), "vec_id",
-          "embedding", col("vec_id") < 10, k = 5, nlist = 16, nprobe = 4,
-          m = 8, ncodes = 8, trainIters = 2, trained = Some(book))
-        .select(col("query_id"), col("neighbor_id"),
-          col("rank").cast("long").as("rank"))
-        .orderBy("query_id", "rank")
-    }),
-
-    "ann_ivfpq_residual_tables" -> ((s, dir) => {
-      // the RESIDUAL index as three durable parquet tables — residual
-      // codes (cid, id, k0..k7), coarse centroids, residual codebook:
-      // the serving form of the FAISS-default by_residual index (the
-      // r11 verdict's top gap). The query batch reads all three and
-      // computes only its own probes — the q·c expansion term comes
-      // from dotting each probe's query vector with the STORED cv, so
-      // nothing per-corpus-vector beyond the codes is materialized;
-      // per-batch cost is independent of the corpus, results bit-equal
-      // to the inline form (the same oracle replays both)
-      val root = prepared(s, s"annivfpqresidtables:$dir") {
-        val out = scratchDir(s, "annivfpqresid_index", dir)
-        val book = prepared(s, s"residbook:$dir:16:8:8:2") {
-          Similarity.trainResidualPq(t(s, dir, "embeddings"), "vec_id",
-            "embedding", nlist = 16, m = 8, ncodes = 8, trainIters = 2)
-        }
-        val cents = Similarity.centroidTable(t(s, dir, "embeddings"),
-          "vec_id", "embedding", nlist = 16)
-        Similarity.annIvfPqResidualEncodeTable(t(s, dir, "embeddings"),
-            "vec_id", "embedding", book, cents)
-          .write.mode("overwrite").parquet(s"$out/codes")
-        cents.write.mode("overwrite").parquet(s"$out/centroids")
-        Similarity.pqBookTable(s, book)
-          .write.mode("overwrite").parquet(s"$out/book")
-        out
-      }
-      val book = Similarity.pqBookFromTable(s.read.parquet(s"$root/book"))
-      Similarity.annIvfPqResidualTopKFromTables(
-          s.read.parquet(s"$root/codes"), s.read.parquet(s"$root/centroids"),
-          book, t(s, dir, "embeddings"), "vec_id", "embedding",
-          col("vec_id") < 10, k = 5, nprobe = 4)
-        .select(col("query_id"), col("neighbor_id"),
-          col("rank").cast("long").as("rank"))
-        .orderBy("query_id", "rank")
-    }),
-
-    "ann_recall" -> ((s, dir) => {
-      // the index-tuning loop's feedback metric: recall@5 of the IVF
-      // search (nlist=16, nprobe=4) against brute-force cosine — per
-      // query an integer hit count and one exact division; both inputs
-      // are the same ranked lists their own entries gate
-      val emb = t(s, dir, "embeddings")
-      val exact = Similarity.cosineTopK(emb, "vec_id", "embedding",
-        col("vec_id") < 10, k = 5)
-      val approx = Similarity.annIvfTopK(emb, "vec_id", "embedding",
-        col("vec_id") < 10, k = 5, nlist = 16, nprobe = 4)
-      Similarity.recallAtK(approx, exact, k = 5).orderBy("query_id")
-    }),
-
-    "ann_ivf_trained_topk" -> ((s, dir) => {
-      // IVF with a TRAINED coarse quantizer: centroids from 2
-      // deterministic k-medians rounds (exact medians ⇒ the trained
-      // vectors replay in the oracle) instead of first-nlist seeds —
-      // balanced lists are what bound probe cost at scale. Training is
-      // BUILD-time work, memoized like the PQ codebooks; the bench's
-      // second pass times the search
-      val cents = trainedQuantizer(s, dir)
-      Similarity.annIvfTopKWithCentroids(t(s, dir, "embeddings"), "vec_id",
-          "embedding", col("vec_id") < 10, k = 5, nprobe = 4, cents)
-        .select(col("query_id"), col("neighbor_id"),
-          col("rank").cast("long").as("rank"))
-        .orderBy("query_id", "rank")
-    }),
-
-    "dedup_semantic_trained" -> ((s, dir) => {
-      // SemDeDup with the TRAINED quantizer — balanced cells bound the
-      // within-cluster pairwise cost first-nlist seeding leaves to luck;
-      // shares the memoized k-medians build with the trained-IVF entry
-      val cents = trainedQuantizer(s, dir)
-      Similarity.semanticDedupPairsTrained(t(s, dir, "embeddings"),
-          "vec_id", "embedding", threshold = 0.4, cents)
-        .select(col("cid"), col("id_a"), col("id_b"))
-        .orderBy("id_a", "id_b")
-    }),
-
-    "embed_outliers" -> ((s, dir) => {
-      // curation screen: top-25 embeddings farthest (1 − cosine) from
-      // their assigned trained centroid — off-distribution candidates to
-      // review before they poison an index; reuses the memoized k-medians
-      // quantizer the trained-IVF entry builds
-      val cents = trainedQuantizer(s, dir)
-      Similarity.centroidOutliers(t(s, dir, "embeddings"), "vec_id",
-          "embedding", cents, k = 25)
-        .select(col("id").as("vec_id"), col("cid"), col("outlier_score"))
-    }),
-
-    "ann_pq_topk" -> ((s, dir) => {
-      // product-quantization ANN: corpus stored as 8 byte-sized codes per
-      // vector (vectors never leave the encode scan), queries score by
-      // asymmetric distance — the memory-compression scale path that makes
-      // a billion-vector index fit executor RAM; codebooks train with 2
-      // deterministic median-update Lloyd rounds; oracle replays training,
-      // L2 encoding and ADC scoring exactly. Training is BUILD-time work
-      // (a stored artifact at scale), memoized per (corpus, params) like
-      // the index builds behind the scan entries — the bench's second pass
-      // times the ANN query, not the Lloyd rounds (ivfpq shares the book)
-      Similarity.annPqTopK(t(s, dir, "embeddings"), "vec_id", "embedding",
-          col("vec_id") < 10, k = 5, m = 8, ncodes = 8,
-          trained = Some(prepared(s, s"pqbook:$dir:8:8:2") {
-            Similarity.trainPq(t(s, dir, "embeddings"), "vec_id", "embedding",
-              m = 8, ncodes = 8, trainIters = 2)
-          }))
-        .select(col("query_id"), col("neighbor_id"), col("rank").cast("long").as("rank"))
-        .orderBy("query_id", "rank")
-    }),
-
-    "ann_ivfpq_topk" -> ((s, dir) => {
-      // the composed billion-vector index: IVF prunes WHICH vectors are
-      // scored (nprobe of nlist inverted lists), PQ shrinks WHAT is
-      // stored (m codes per entry); candidates join on the probed list id
-      // — an equi join with the query side broadcast — and are scored by
-      // ADC without decompression
-      Similarity.annIvfPqTopK(t(s, dir, "embeddings"), "vec_id", "embedding",
-          col("vec_id") < 10, k = 5, nlist = 16, nprobe = 4, m = 8, ncodes = 8,
-          trained = Some(prepared(s, s"pqbook:$dir:8:8:2") {
-            Similarity.trainPq(t(s, dir, "embeddings"), "vec_id", "embedding",
-              m = 8, ncodes = 8, trainIters = 2)
-          }))
-        .select(col("query_id"), col("neighbor_id"), col("rank").cast("long").as("rank"))
-        .orderBy("query_id", "rank")
-    }),
-
-    "ann_pq_tables" -> ((s, dir) => {
-      // the production SERVING shape: the PQ index is a DURABLE parquet
-      // artifact — the code table and codebook are written once at
-      // index-build time (memoized like the index builds behind the scan
-      // entries) and every query batch READS them, so repeated batches
-      // over a static corpus never pay train or encode again — the
-      // minhashDedupAgainstTables pattern applied to ANN. Codes are exact
-      // ints and codeword doubles round-trip parquet bit-exactly, so the
-      // inline ann_pq oracle replays this entry unchanged (equivalence
-      // additionally spec-pinned through a real round trip).
-      val root = prepared(s, s"annpqtables:$dir") {
-        val out = scratchDir(s, "annpq_index", dir)
-        val book = prepared(s, s"pqbook:$dir:8:8:2") {
-          Similarity.trainPq(t(s, dir, "embeddings"), "vec_id", "embedding",
-            m = 8, ncodes = 8, trainIters = 2)
-        }
-        Similarity.annPqEncodeTable(t(s, dir, "embeddings"), "vec_id",
-            "embedding", book)
-          .write.mode("overwrite").parquet(s"$out/codes")
-        Similarity.pqBookTable(s, book)
-          .write.mode("overwrite").parquet(s"$out/book")
-        out
-      }
-      val book = Similarity.pqBookFromTable(s.read.parquet(s"$root/book"))
-      Similarity.annPqTopKFromTable(s.read.parquet(s"$root/codes"),
-          t(s, dir, "embeddings"), "vec_id", "embedding",
-          col("vec_id") < 10, k = 5, book)
-        .select(col("query_id"), col("neighbor_id"), col("rank").cast("long").as("rank"))
-        .orderBy("query_id", "rank")
-    }),
-
-    "ann_ivfpq_tables" -> ((s, dir) => {
-      // the composed index as THREE durable parquet tables — codes
-      // (cid, id, k0..k7), coarse centroids, codebook; the query batch
-      // reads all three and computes only its own probes. Per-batch cost
-      // is independent of the corpus: no training rounds, no assignment
-      // scan, no encode — what a 100 TB serving deployment actually runs.
-      val root = prepared(s, s"annivfpqtables:$dir") {
-        val out = scratchDir(s, "annivfpq_index", dir)
-        val book = prepared(s, s"pqbook:$dir:8:8:2") {
-          Similarity.trainPq(t(s, dir, "embeddings"), "vec_id", "embedding",
-            m = 8, ncodes = 8, trainIters = 2)
-        }
-        val cents = Similarity.centroidTable(t(s, dir, "embeddings"),
-          "vec_id", "embedding", nlist = 16)
-        Similarity.annIvfPqEncodeTable(t(s, dir, "embeddings"), "vec_id",
-            "embedding", book, cents)
-          .write.mode("overwrite").parquet(s"$out/codes")
-        cents.write.mode("overwrite").parquet(s"$out/centroids")
-        Similarity.pqBookTable(s, book)
-          .write.mode("overwrite").parquet(s"$out/book")
-        out
-      }
-      val book = Similarity.pqBookFromTable(s.read.parquet(s"$root/book"))
-      Similarity.annIvfPqTopKFromTables(
-          s.read.parquet(s"$root/codes"), s.read.parquet(s"$root/centroids"),
-          book, t(s, dir, "embeddings"), "vec_id", "embedding",
-          col("vec_id") < 10, k = 5, nprobe = 4)
-        .select(col("query_id"), col("neighbor_id"), col("rank").cast("long").as("rank"))
-        .orderBy("query_id", "rank")
-    }),
-
-    // ---- LLM-pipeline: text analysis -----------------------------------
-    "text_tokens" -> ((s, dir) => {
-      t(s, dir, "documents").select(col("doc_id"),
-        TextAnalysis.tokenCount(col("text")).cast("long").as("ws_tokens"),
-        TextAnalysis.bpeTokenCount(col("text")).cast("long").as("bpe_tokens"))
-        .orderBy("doc_id")
-    }),
-
-    "text_ngram_repetition" -> ((s, dir) => {
-      // Gopher within-doc repetition gates: duplicate-bigram fraction,
-      // top-bigram character dominance, duplicate pseudo-paragraph
-      // fraction — catches template spam / generation loops exact dedup
-      // can't see. One shuffle-free codegen'd kernel pass per row; a
-      // synthetic looped document (-1) is injected on BOTH sides so
-      // every gate provably fires
-      val docs = t(s, dir, "documents").select(col("doc_id"), col("text"))
-        .unionByName(s.range(1).select(lit(-1L).as("doc_id"),
-          concat(lit("begin "), repeat(lit("spam loop "), 40), lit("end"))
-            .as("text")))
-      TextAnalysis.repetitionStats(docs, "doc_id", col("text"),
-          n = 2, chunkWords = 8)
-        .orderBy("doc_id")
-    }),
-
-    "text_quality" -> ((s, dir) => {
-      TextAnalysis.qualityFeatures(t(s, dir, "documents"), "text")
-        .select(col("doc_id"), col("n_tokens").cast("long").as("n_tokens"),
-          col("mean_token_len"), col("alpha_ratio"), col("punct_ratio"),
-          col("quality_score"))
-        .orderBy("doc_id")
-    }),
-
-    "text_corpus_filter" -> ((s, dir) => {
-      // the composed C4-style corpus cleanup in ONE shuffle-free,
-      // codegen'd projection pass: language gate + quality gate + token
-      // bounds — what a training pipeline runs before dedup
-      val q = TextAnalysis.qualityFeatures(t(s, dir, "documents"), "text")
-        .withColumn("lang_pred", TextAnalysis.langId(col("text")))
-      q.filter(col("lang_pred") === "en" && col("quality_score") >= 0.5 &&
-          col("n_tokens").between(20, 1000))
-        .select(col("doc_id"), col("n_tokens").cast("long").as("n_tokens"),
-          col("quality_score"))
-        .orderBy("doc_id")
-    }),
-
-    "text_fingerprint" -> ((s, dir) => {
-      t(s, dir, "documents").select(col("doc_id"),
-        TextAnalysis.fingerprint(col("text")).as("fp")).orderBy("doc_id")
-    }),
-
-    "text_langid" -> ((s, dir) => {
-      t(s, dir, "documents").select(col("doc_id"),
-        TextAnalysis.langId(col("text")).as("lang_pred")).orderBy("doc_id")
-    }),
-
-    "text_repetition" -> ((s, dir) => {
-      // Gopher-style repetition gates, shuffle-free: one codegen'd kernel
-      // pass per row computes [total, distinct, top]; the oracle replays
-      // the same numbers with the explode→two-groupBy SQL formulation this
-      // per-row shape deliberately avoids at corpus scale
-      val st = TextAnalysis.tokenStats(col("text"))
-      t(s, dir, "documents").select(col("doc_id"),
-          element_at(st, 1).as("n_tokens"),
-          element_at(st, 2).as("distinct_tokens"),
-          (element_at(st, 3).cast("double") / element_at(st, 1))
-            .as("top_ratio"))
-        .orderBy("doc_id")
-    }),
-
-    "text_redact_pii" -> ((s, dir) => {
-      // PII scrubbing gate: the corpus has no PII, so both sides inject a
-      // deterministic email+phone per doc, then redact — the oracle proves
-      // pattern-for-pattern replacement parity (Java regex vs RE2)
-      val injected = concat(
-        substring(col("text"), 1, 40),
-        lit(" contact "), col("source"), lit("_"),
-        col("doc_id").cast("string"), lit("@mail.example.com or +1-555-"),
-        lpad(pmod(col("doc_id"), lit(10000)).cast("string"), 4, "0"))
-      t(s, dir, "documents").select(col("doc_id"),
-          TextAnalysis.redactPii(injected).as("redacted"))
-        .orderBy("doc_id")
-    }),
-
-    "text_decontaminate" -> ((s, dir) => {
-      // benchmark decontamination: flag training docs sharing a 3-shingle
-      // with the held-out slice (doc_id % 97 == 0 plays the eval set). The
-      // eval n-gram set is broadcast — the corpus never shuffles for
-      // candidates; the hit-count shuffle carries contaminated grams only
-      val docs = t(s, dir, "documents")
-      graft.pipeline.Decontaminate.overlapHits(
-          docs.filter(col("doc_id") % 97 =!= 0),
-          docs.filter(col("doc_id") % 97 === 0),
-          "doc_id", "text", n = 3)
-        .orderBy("doc_id")
-    }),
-
-    "text_decontaminate_fuzzy" -> ((s, dir) => {
-      // FUZZY benchmark decontamination: MinHash-signature agreement
-      // between training docs and the held-out slice (doc_id % 97 == 0),
-      // the paraphrase-robust companion to text_decontaminate's exact
-      // 3-gram gate. Planted leaks (eval docs re-labeled +1000000 into
-      // the training side) exercise the matches = k ceiling alongside
-      // any natural near-dups; eval bands broadcast, the corpus pays one
-      // signature shuffle
-      val docs = t(s, dir, "documents").select("doc_id", "text")
-      val heldOut = docs.filter(col("doc_id") % 97 === 0)
-      val train = docs.filter(col("doc_id") % 97 =!= 0).unionByName(
-        heldOut.select((col("doc_id") + 1000000).as("doc_id"), col("text")))
-      graft.pipeline.Dedup.fuzzyDecontaminate(train, heldOut, "doc_id",
-          col("text"), shingleN = 3, k = 8, bands = 4, minMatches = 4)
-        .orderBy("doc_id")
-    }),
-
-    "text_top_terms" -> ((s, dir) => {
-      // per-doc distinctive terms: TF-IDF ordering realized with INTEGER
-      // keys (tf DESC, df ASC, token) — same order as any monotone idf,
-      // but exact and engine-replayable (no ln() rounding divergence)
-      TextAnalysis.topTerms(t(s, dir, "documents"), "doc_id", "text", k = 3)
-        .select(col("doc_id"), col("token"), col("tf"), col("df"),
-          col("rank").cast("long").as("rank"))
-        .orderBy("doc_id", "rank")
-    }),
-
-    "text_classifier" -> ((s, dir) => {
-      // model-based quality gate: linear scorer over integer features with
-      // dyadic weights — every product/sum exact in doubles, so the logit
-      // replays bit-identically in the oracle; threshold splits the corpus
-      // near its median
-      val score = TextAnalysis.classifierScore(col("text"))
-      t(s, dir, "documents")
-        .select(col("doc_id"), score.as("score"), (score >= 5.5).as("keep"))
-        .orderBy("doc_id")
-    }),
-
-    "text_c4_clean" -> ((s, dir) => {
-      // rule-based segment cleanup: a blocklisted phrase is injected on
-      // every fourth doc (the synthetic corpus carries none) so the
-      // blocklist rule actually fires; the short-segment rule prunes each
-      // doc's ragged final chunk; terminal-punctuation rule is spec-pinned
-      // (no punctuation exists in this corpus). One shuffle-free filter
-      // pass, then per-doc reassembly
-      val docs = t(s, dir, "documents").withColumn("text",
-        when(col("doc_id") % 4 === 0,
-          concat(col("text"),
-            lit(" javascript cookie banner click here accept all terms")))
-          .otherwise(col("text")))
-      TextAnalysis.ruleClean(docs, "doc_id",
-          graft.functions.TextFunctions.word_chunks(col("text"), 8),
-          minWords = 4, banned = Seq("javascript", "lorem ipsum", "{"),
-          requireTerminal = false, minKeptLines = 2)
-        .select(col("id").as("doc_id"), col("clean_text"), col("kept_lines"))
-        .orderBy("doc_id")
-    }),
-
-    "text_ngram_novelty" -> ((s, dir) => {
-      // integer-exact redundancy ranking: share of each doc's distinct
-      // trigrams that exist nowhere else — one explode, one two-phase df
-      // aggregation, one merge-hinted join back; the division is the only
-      // float op
-      TextAnalysis.ngramNovelty(t(s, dir, "documents"), "doc_id",
-          col("text"), n = 3)
-        .select(col("id").as("doc_id"), col("n_shingles"),
-          col("unique_shingles"), col("novelty"))
-        .orderBy("doc_id")
-    }),
-
-    "text_line_dedup" -> ((s, dir) => {
-      // cross-document boilerplate removal: an 8-word header is injected
-      // on every fifth doc (the synthetic corpus carries no real
-      // boilerplate) so the removal path is actually exercised — the
-      // header lines vanish, near-dup-shared chunks go with them, and the
-      // rest reassembles in order; 8-word pseudo-paragraphs stand in for
-      // real lines
-      val docs = t(s, dir, "documents").withColumn("text",
-        when(col("doc_id") % 5 === 0,
-          concat(lit("standard header boilerplate notice applies here today ok "),
-            col("text"))).otherwise(col("text")))
-      TextAnalysis.boilerplateLineDedup(docs, "doc_id",
-          graft.functions.TextFunctions.word_chunks(col("text"), 8),
-          maxDocFreq = 1)
-        .orderBy("id")
-    }),
-
-    "pack_sequences" -> ((s, dir) => {
-      // deterministic concat-and-chunk packing for training batches:
-      // md5-hash order, 8 shards, 512-token budget; a doc belongs to the
-      // pack where its first token lands, start_tok gives the loader the
-      // exact slice offset. One shuffle (shard), per-shard window sort
-      graft.pipeline.Packing.packSequences(t(s, dir, "documents"), "doc_id",
-          TextAnalysis.tokenCount(col("text")), budget = 512, shards = 8)
-        .select(col("doc_id"), col("shard"), col("pack_no"), col("start_tok"))
-        .orderBy("doc_id")
-    }),
-
-    "pack_shards" -> ((s, dir) => {
-      // export-shard manifest: hash-assign every doc to one of 16 shards
-      // and reduce each to the integrity line an exporter publishes next
-      // to its files — rows, token/byte mass, id range, and an order-
-      // independent content checksum (Σ md5-hash mod p: commutative, so
-      // the manifest is partitioning-invariant). One partial aggregation;
-      // the shuffle carries ≤ partitions×shards rows at any corpus size
-      graft.pipeline.Packing.shardManifest(t(s, dir, "documents"), "doc_id",
-          TextAnalysis.tokenCount(col("text")), col("n_chars"),
-          graft.pipeline.Sampling.md5Hash60(col("text")), shards = 16)
-        .orderBy("shard")
-    }),
-
-    "sample_token_budget" -> ((s, dir) => {
-      // fixed-token-budget corpus slice: systematic selection in md5-hash
-      // order until each of 8 shards fills its share of a 16k-token
-      // budget (overshoot ≤ one doc tail per shard); integer-exact,
-      // nested (a bigger budget only adds docs), one shuffle
-      graft.pipeline.Sampling.tokenBudgetSample(t(s, dir, "documents"),
-          "doc_id", TextAnalysis.tokenCount(col("text")),
-          budget = 16000L, shards = 8)
-        .select(col("doc_id"), col("shard"), col("start_tok"), col("n_tok"))
-        .orderBy("doc_id")
-    }),
-
-    "sample_epochs" -> ((s, dir) => {
-      // epoch-aware upsampling: src0 repeated to 60 rows (whole epochs +
-      // a hash-truncated partial), src1 cut to 10 — the "small source × N
-      // epochs" mixing recipe; unlisted sources drop. Rows duplicate in a
-      // narrow post-window explode, never through a shuffle
-      graft.pipeline.Sampling.upsampleEpochs(t(s, dir, "documents"),
-          "source", "doc_id", Map("src0" -> 60L, "src1" -> 10L))
-        .select(col("doc_id"), col("source"), col("epoch"))
-        .orderBy("doc_id", "epoch")
-    }),
-
-    "sample_importance" -> ((s, dir) => {
-      // DSIR-style importance weighting: target = the English slice, raw =
-      // whole corpus; token mass bucketed into 256 hashed buckets (two
-      // 256-row BROADCAST tables — the "model" never scales with the
-      // vocabulary), per-doc INTEGER mass sums, one final division;
-      // kept = more target-like than the raw average
-      val docs = t(s, dir, "documents")
-      graft.pipeline.Sampling.importanceWeights(
-          docs, "doc_id", col("text"),
-          docs.filter(col("lang") === "en"), col("text"), buckets = 256)
-        .orderBy("doc_id")
-    }),
-
-    "sample_split" -> ((s, dir) => {
-      // deterministic train/val/test assignment: hash-range boundaries,
-      // shuffle-free, and stable under corpus growth (a doc's split never
-      // changes when other docs arrive — random splits leak on refresh)
-      graft.pipeline.Sampling.assignSplits(t(s, dir, "documents"),
-          "doc_id", Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1))
-        .select(col("doc_id"), col("split")).orderBy("doc_id")
-    }),
-
-    "sample_weighted" -> ((s, dir) => {
-      // DSIR resample: keep-probability min(1, 0.3·weight) decided by
-      // the deterministic hash threshold — a shuffle-free filter over
-      // the weighting output; rows with higher importance survive at
-      // proportionally higher rates, samples nest in both arguments
-      val docs = t(s, dir, "documents")
-      val weighted = graft.pipeline.Sampling.importanceWeights(
-        docs, "doc_id", col("text"),
-        docs.filter(col("lang") === "en"), col("text"), buckets = 256)
-      graft.pipeline.Sampling.weightedHashSample(
-          weighted, "doc_id", col("weight"), fraction = 0.3)
-        .select(col("doc_id"), col("weight"))
-        .orderBy("doc_id")
-    }),
-
-    "sample_shuffle" -> ((s, dir) => {
-      // deterministic per-epoch corpus shuffle as a PERMUTATION COLUMN:
-      // sharded md5-hash order (one shuffle + per-shard window sort),
-      // exact global positions via shard-offset cumsum over the 8-row
-      // count table
-      graft.pipeline.Sampling.shuffleOrder(t(s, dir, "documents"),
-          "doc_id", shards = 8)
-        .select(col("doc_id"), col("shard"), col("pos"), col("global_pos"))
-        .orderBy("doc_id")
-    }),
-
-    "text_bm25" -> ((s, dir) => {
-      // ranked retrieval: BM25 with the rational (un-logged) RSJ idf —
-      // every step an exact-input IEEE op, term sum in fixed query order,
-      // so the score hash-replays; candidate shuffle carries only the
-      // query terms' postings, corpus stats are one broadcast row
-      graft.pipeline.Retrieval.bm25TopK(t(s, dir, "documents"), "doc_id",
-          col("text"), terms = Seq("spark", "customer", "window"), topK = 10)
-        .orderBy("rank")
-    }),
-
-    "text_bm25_prf" -> ((s, dir) => {
-      // pseudo-relevance-feedback expansion (the RM3 core): top-5 docs
-      // by the original terms donate their 5 most frequent new terms
-      // (len >= 3, ties by term), and the union set re-retrieves through
-      // the batch scorer's canonical term-sorted fold — the classic
-      // recall lever when queries underspecify the corpus vocabulary.
-      // Two corpus scans + one feedback-id-filtered mine; the expanded
-      // vocabulary rides into round 2 as the TermCounts kernel's
-      // plan-time lookup
-      graft.pipeline.Retrieval.bm25PrfTopK(t(s, dir, "documents"),
-          "doc_id", col("text"), terms = Seq("spark", "customer"),
-          fbDocs = 5, fbTerms = 5, topK = 10)
-        .orderBy("rank")
-    }),
-
-    "rag_ndcg" -> ((s, dir) => {
-      // graded retrieval quality: nDCG@5 with binary relevance (the
-      // hard-negatives positive set) — DCG folds literal discounts
-      // left-to-right, ideal DCG is a prefix-sum literal, one division
-      val docs = t(s, dir, "documents")
-      val cands = graft.pipeline.Retrieval.bm25BatchTopKLocal(docs,
-        "doc_id", col("text"), BatchQueries, topK = 5)
-      val qrels = docs.select(
-        (col("doc_id") % 7 + 1).as("query_id"), col("doc_id"))
-      graft.pipeline.Retrieval.ndcgAtK(cands, qrels, k = 5)
-        .orderBy("query_id")
-    }),
-
-    "rag_mrr" -> ((s, dir) => {
-      // retrieval-quality gate: reciprocal rank of the first relevant
-      // result per query (relevance = the hard-negatives positive set);
-      // queries whose candidates hold no positive emit rr = 0.0 with a
-      // −1 sentinel rank (nullable ints float-ify in the driver comparer)
-      val docs = t(s, dir, "documents")
-      val cands = graft.pipeline.Retrieval.bm25BatchTopKLocal(docs,
-        "doc_id", col("text"), BatchQueries, topK = 5)
-      val qrels = docs.select(
-        (col("doc_id") % 7 + 1).as("query_id"), col("doc_id"))
-      graft.pipeline.Retrieval.reciprocalRank(cands, qrels, k = 5)
-        .select(col("query_id"),
-          coalesce(col("first_rel_rank"), lit(-1L)).as("first_rel_rank"),
-          col("rr"))
-        .orderBy("query_id")
-    }),
-
-    "text_bm25_tables" -> ((s, dir) => {
-      // lexical retrieval's SERVING shape: the inverted index is three
-      // durable parquet tables (postings, doclens, stats) written once
-      // at build time — query batches read term-pruned postings and
-      // never re-tokenize the corpus; exact integers throughout, so the
-      // inline text_bm25 oracle replays this entry unchanged
-      val root = prepared(s, s"bm25tables:$dir") {
-        val out = scratchDir(s, "bm25_index", dir)
-        val (postings, doclens, stats) = graft.pipeline.Retrieval
-          .bm25IndexTables(t(s, dir, "documents"), "doc_id", col("text"))
-        postings.write.mode("overwrite").parquet(s"$out/postings")
-        doclens.write.mode("overwrite").parquet(s"$out/doclens")
-        stats.write.mode("overwrite").parquet(s"$out/stats")
-        out
-      }
-      graft.pipeline.Retrieval.bm25TopKFromTables(
-          s.read.parquet(s"$root/postings"), s.read.parquet(s"$root/doclens"),
-          s.read.parquet(s"$root/stats"), "doc_id",
-          terms = Seq("spark", "customer", "window"), topK = 10)
-        .orderBy("rank")
-    }),
-
-    "rag_hard_negatives" -> ((s, dir) => {
-      // contrastive-training negative mining: depth-20 BM25 candidates
-      // per query, anti-joined against the known-positive table (every
-      // doc is a positive for query doc_id % 7 + 1), re-ranked by
-      // retriever order and cut to 5 negatives per query
-      import s.implicits._
-      val docs = t(s, dir, "documents")
-      val queriesDf = BatchQueries.toDF("query_id", "term")
-      val positives = docs.select(
-        (col("doc_id") % 7 + 1).as("query_id"), col("doc_id"))
-      graft.pipeline.Retrieval.hardNegatives(docs, "doc_id", col("text"),
-          queriesDf, positives, topK = 5, depth = 20)
-        .orderBy("query_id", "neg_rank")
-    }),
-
-    "rag_rrf_fusion" -> ((s, dir) => {
-      // hybrid retrieval: BM25 lexical top-20 + dense cosine top-20
-      // (query vector 7), fused by reciprocal rank — only RANKS enter
-      // the formula, so the two retrievers' incomparable score scales
-      // never meet; the fusion join is candidate-sized (the retrievers
-      // already did the corpus-scale work). The lexical side serves
-      // from the STORED postings index (shared bm25tables fixture;
-      // bm25TopKFromTables ≡ inline bm25TopK is spec-pinned bit-equal),
-      // which is how a production hybrid retriever actually runs — no
-      // per-query corpus re-tokenization.
-      val root = prepared(s, s"bm25tables:$dir") {
-        val out = scratchDir(s, "bm25_index", dir)
-        val (postings, doclens, stats) = graft.pipeline.Retrieval
-          .bm25IndexTables(t(s, dir, "documents"), "doc_id", col("text"))
-        postings.write.mode("overwrite").parquet(s"$out/postings")
-        doclens.write.mode("overwrite").parquet(s"$out/doclens")
-        stats.write.mode("overwrite").parquet(s"$out/stats")
-        out
-      }
-      val lex = graft.pipeline.Retrieval.bm25TopKFromTables(
-          s.read.parquet(s"$root/postings"), s.read.parquet(s"$root/doclens"),
-          s.read.parquet(s"$root/stats"), "doc_id",
-          terms = Seq("spark", "customer", "window"), topK = 20)
-        .select(col("doc_id"), col("rank"))
-      val den = Similarity.cosineTopK(t(s, dir, "embeddings"), "vec_id",
-          "embedding", col("vec_id") === 7, k = 20)
-        .select(col("neighbor_id").as("doc_id"), col("rank"))
-      graft.pipeline.Retrieval.rrfFuse(Seq(lex, den), Seq("doc_id"),
-          c = 60, topK = 10)
-        .orderBy("rank")
-    }),
-
-    "text_bm25_batch" -> ((s, dir) => {
-      // batched retrieval: a 5-query table against the corpus in ONE job
-      // (eval-set retrieval / hard-negative mining); per-(query, doc)
-      // term partials fold in canonical term order, so even the float
-      // sum replays; query 5's term never occurs — the query simply
-      // yields no rows
-      graft.pipeline.Retrieval.bm25BatchTopKLocal(t(s, dir, "documents"),
-          "doc_id", col("text"), BatchQueries, topK = 5)
-        .orderBy("query_id", "rank")
-    }),
-
-    "text_bm25_batch_tables" -> ((s, dir) => {
-      // mining-scale serving (the r11 verdict's #2): the SAME 5-query
-      // batch as text_bm25_batch served from the STORED postings index —
-      // the scan touches only the query terms' postings (isin prune;
-      // term-partitioned postings prune to files at scale), the corpus
-      // text is never re-tokenized, and the canonical-order seqSum fold
-      // makes the scores bit-equal to the inline batch (one oracle for
-      // both). Shares the durable index build with text_bm25_tables.
-      val root = prepared(s, s"bm25tables:$dir") {
-        val out = scratchDir(s, "bm25_index", dir)
-        val (postings, doclens, stats) = graft.pipeline.Retrieval
-          .bm25IndexTables(t(s, dir, "documents"), "doc_id", col("text"))
-        postings.write.mode("overwrite").parquet(s"$out/postings")
-        doclens.write.mode("overwrite").parquet(s"$out/doclens")
-        stats.write.mode("overwrite").parquet(s"$out/stats")
-        out
-      }
-      graft.pipeline.Retrieval.bm25BatchTopKFromTables(
-          s.read.parquet(s"$root/postings"), s.read.parquet(s"$root/doclens"),
-          s.read.parquet(s"$root/stats"), "doc_id", BatchQueries, topK = 5)
-        .orderBy("query_id", "rank")
-    }),
-
-    "text_bm25_append" -> ((s, dir) => {
-      // incremental index maintenance (the r12 verdict's #1, mirroring
-      // the ANN append gates): the corpus splits into a base build and
-      // an appended batch — postings/doclens land via parquet
-      // mode("append") (old files never rewritten: O(|batch|) at scale,
-      // not O(corpus)), the one-row stats folds incrementally — and the
-      // appended index must serve the FULL-corpus BM25 oracle
-      // bit-for-bit, because per-term dfs derive at query time from the
-      // pruned postings, so nothing stored goes stale.
-      val root = prepared(s, s"bm25append:$dir") {
-        val out = scratchDir(s, "bm25_append_index", dir)
-        val docsT = t(s, dir, "documents")
-        val (p0, d0, st0) = graft.pipeline.Retrieval.bm25IndexTables(
-          docsT.filter(col("doc_id") % 10 =!= 0), "doc_id", col("text"))
-        p0.write.mode("overwrite").parquet(s"$out/postings")
-        d0.write.mode("overwrite").parquet(s"$out/doclens")
-        st0.write.mode("overwrite").parquet(s"$out/stats")
-        val (pd, dd, merged) = graft.pipeline.Retrieval.bm25AppendToTables(
-          docsT.filter(col("doc_id") % 10 === 0), "doc_id", col("text"),
-          s.read.parquet(s"$out/stats"))
-        // fold the merged row before the overwrite replaces its own input
-        val mergedRows = merged.collect().toSeq
-        pd.write.mode("append").parquet(s"$out/postings")
-        dd.write.mode("append").parquet(s"$out/doclens")
-        s.createDataFrame(s.sparkContext.parallelize(mergedRows),
-            merged.schema)
-          .write.mode("overwrite").parquet(s"$out/stats")
-        out
-      }
-      graft.pipeline.Retrieval.bm25TopKFromTables(
-          s.read.parquet(s"$root/postings"), s.read.parquet(s"$root/doclens"),
-          s.read.parquet(s"$root/stats"), "doc_id",
-          terms = Seq("spark", "customer", "window"), topK = 10)
-        .orderBy("rank")
-    }),
-
-    "text_bm25_delete" -> ((s, dir) => {
-      // the OTHER half of index maintenance: a full-corpus index built
-      // once, then every 10th document DELETED incrementally
-      // (bm25DeleteFromTables: anti-joined postings/doclens + the
-      // one-row stats folded DOWN, realized here as the snapshot
-      // rewrite) — the shrunk index must serve the REMAINING-corpus
-      // BM25 oracle bit-for-bit, because per-term dfs derive at query
-      // time so deleted docs vanish from every term's df with no
-      // term-level bookkeeping. Build + delete are fixture (the index
-      // lifecycle); the entry times the serving query.
-      val root = prepared(s, s"bm25delete:$dir") {
-        val out = scratchDir(s, "bm25_delete_index", dir)
-        val docsT = t(s, dir, "documents")
-        val (p0, d0, st0) = graft.pipeline.Retrieval.bm25IndexTables(
-          docsT, "doc_id", col("text"))
-        p0.write.mode("overwrite").parquet(s"$out/full_postings")
-        d0.write.mode("overwrite").parquet(s"$out/full_doclens")
-        st0.write.mode("overwrite").parquet(s"$out/full_stats")
-        val (p1, d1, st1) = graft.pipeline.Retrieval.bm25DeleteFromTables(
-          docsT.filter(col("doc_id") % 10 === 0).select(col("doc_id")),
-          "doc_id",
-          s.read.parquet(s"$out/full_postings"),
-          s.read.parquet(s"$out/full_doclens"),
-          s.read.parquet(s"$out/full_stats"))
-        p1.write.mode("overwrite").parquet(s"$out/postings")
-        d1.write.mode("overwrite").parquet(s"$out/doclens")
-        st1.write.mode("overwrite").parquet(s"$out/stats")
-        out
-      }
-      graft.pipeline.Retrieval.bm25TopKFromTables(
-          s.read.parquet(s"$root/postings"), s.read.parquet(s"$root/doclens"),
-          s.read.parquet(s"$root/stats"), "doc_id",
-          terms = Seq("spark", "customer", "window"), topK = 10)
-        .orderBy("rank")
-    }),
-
-    "text_normalize" -> ((s, dir) => {
-      // canonical pre-tokenization normalization; the corpus is ASCII and
-      // single-spaced, so typographic punctuation and ragged whitespace
-      // are injected on BOTH sides — curly-quoted lead token, em-dash,
-      // NBSP, a tab run and a curly apostrophe on every third doc
-      val injected = concat(
-        lit("\u201C"), col("source"), lit("\u201D\u2014\u00A0"), col("text"),
-        when(col("doc_id") % 3 === 0, lit("  \tEnd\u2019s "))
-          .otherwise(lit("")))
-      t(s, dir, "documents").select(col("doc_id"),
-          TextAnalysis.normalizeText(injected).as("norm_text"))
-        .orderBy("doc_id")
-    }),
-
-    // ---- LLM-pipeline: sampling & corpus statistics ---------------------
-    "sample_hash" -> ((s, dir) => {
-      // shuffle-free deterministic sample: a pure filter on the md5-derived
-      // key hash — the 100 TB sampling path (no RNG, no state, no shuffle)
-      graft.pipeline.Sampling.hashSample(t(s, dir, "documents"), "doc_id", 0.25)
-        .select(col("doc_id"), col("lang")).orderBy("doc_id")
-    }),
-
-    "sample_stratified" -> ((s, dir) => {
-      // exact per-language quota: ceil(0.2 · n) rows per stratum in
-      // deterministic hash order (one shuffle on the stratum key)
-      graft.pipeline.Sampling.stratifiedExact(
-          t(s, dir, "documents"), "lang", "doc_id", 0.2)
-        .select(col("doc_id"), col("lang")).orderBy("doc_id")
-    }),
-
-    "sample_mix" -> ((s, dir) => {
-      // domain mixing: re-weight sources to a target composition — exact
-      // ceil(fᵢ·n) per source, deterministic hash order, one shuffle;
-      // unlisted sources keep the default fraction
-      graft.pipeline.Sampling.mixExact(t(s, dir, "documents"),
-          "source", "doc_id",
-          Map("src0" -> 0.5, "src1" -> 0.25, "src2" -> 1.0), default = 0.1)
-        .select(col("doc_id"), col("source")).orderBy("doc_id")
-    }),
-
-    "sample_temperature" -> ((s, dir) => {
-      // temperature-flattened mixing (τ = ½): per-source quota =
-      // min(n_s, ceil(sqrt(n_min·n_s))) — geometric-mean cut toward the
-      // smallest source, no upsampling; every arithmetic step a single
-      // correctly-rounded IEEE op, rows chosen in md5-hash order
-      // the corpus sources are uniform, so inject a skewed stratum (10%
-      // 'rare' vs 90% 'common') on BOTH sides — the cut is actually
-      // exercised: rare keeps all n_min, common keeps ceil(sqrt(n_min·n))
-      graft.pipeline.Sampling.temperatureHalf(
-          t(s, dir, "documents").withColumn("stratum",
-            when(col("doc_id") % 10 === 0, "rare").otherwise("common")),
-          "stratum", "doc_id")
-        .select(col("doc_id"), col("stratum")).orderBy("doc_id")
-    }),
-
-    "stat_vocab_coverage" -> ((s, dir) => {
-      // tokenizer sizing: smallest count-threshold vocabulary covering
-      // ≥95% of token mass; the cutoff search windows the COMPRESSED
-      // (count value, types, mass) table (groupQuantiles' trick), and the
-      // share test is integer-exact (100·cum ≥ 95·total, no division)
-      graft.pipeline.Stats.vocabCoverage(
-        t(s, dir, "documents"), col("text"), sharePct = 95)
-    }),
-
-    "embed_kmedians" -> ((s, dir) => {
-      // deterministic Lloyd-style clustering: shuffle-free literal-centroid
-      // assignment + exact component-wise MEDIAN update (order-independent
-      // selection — a distributed double mean would depend on summation
-      // order and could never hash-match an external replay)
-      graft.pipeline.Clustering.kmediansAssign(t(s, dir, "embeddings"),
-          "vec_id", "embedding", k = 8, iters = 2)
-        .select(col("id").as("vec_id"), col("cluster")).orderBy("vec_id")
-    }),
-
-    "stat_quantiles" -> ((s, dir) => {
-      // exact per-language token-count quantiles via distinct-value
-      // compression (never sorts raw rows inside a stratum)
-      graft.pipeline.Stats.groupQuantiles(t(s, dir, "documents"), "lang",
-          TextAnalysis.tokenCount(col("text")).cast("long"),
-          Seq(0.5, 0.9, 0.99))
-        .select(col("lang"), col("p"), col("q"))
-        .orderBy("lang", "p")
-    }),
-
-    "stat_winsorize" -> ((s, dir) => {
-      // quantile clipping (winsorization): per-lang token counts clamped
-      // into [q05, q95] of their own language — the outlier-clamp step
-      // before a length feature feeds a model. Exact discrete quantiles
-      // (groupQuantiles), group-sized broadcast bounds, shuffle-free
-      // clamp projection; integers end-to-end
-      val docs = t(s, dir, "documents").select(col("doc_id"), col("lang"),
-        TextAnalysis.tokenCount(col("text")).cast("long").as("raw_tokens"))
-      graft.pipeline.Stats.winsorize(docs, "lang", col("raw_tokens"),
-          pLo = 0.05, pHi = 0.95)
-        .select(col("doc_id"), col("lang"), col("raw_tokens"),
-          col("winsorized"))
-        .orderBy("doc_id")
-    }),
-
-    "src_bucketed_join" -> ((s, dir) => {
-      // co-located bucketed join ON the oracle board: both sides written
-      // bucketBy(16) on the join key once (memoized setup — the 100 TB
-      // bargain: one bucketed write buys every later join/agg on that
-      // key), then orders⋈customer + the per-customer aggregate plan
-      // ZERO Exchange (asserted below); bucketing must not change a
-      // single value, so the oracle replays the plain join on raw tables
-      val tag = dir.replaceAll("[^A-Za-z0-9]", "_").toLowerCase
-      prepared(s, s"bucketed:$dir") {
-        // clear BOTH layers: the in-memory catalog dies with the JVM but
-        // the warehouse directory survives — a stale location blocks
-        // saveAsTable even in Overwrite mode (BucketedStoreSpec's lesson)
-        for (name <- Seq(s"b_orders$tag", s"b_customer$tag")) {
-          s.sql(s"DROP TABLE IF EXISTS $name")
-          val p = new org.apache.hadoop.fs.Path(
-            s.conf.get("spark.sql.warehouse.dir"), name)
-          p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-        }
-        graft.sources.BucketedStore.write(
-          t(s, dir, "orders"), s"b_orders$tag", "o_custkey", 16)
-        graft.sources.BucketedStore.write(
-          t(s, dir, "customer").select(col("c_custkey").as("o_custkey"),
-            col("c_mktsegment")), s"b_customer$tag", "o_custkey", 16)
-      }
-      // group by the RAW bucket-key attribute: an aliased grouping
-      // expression defeats the planner's partitioning-subset check and
-      // reintroduces the exchange the layout paid to remove
-      val agg = graft.sources.BucketedStore
-        .colocatedJoin(s, s"b_orders$tag", s"b_customer$tag", "o_custkey")
-        .groupBy("o_custkey", "c_mktsegment")
-        .agg(count(lit(1)).as("n_orders"),
-          decAsDouble(sum(col("o_totalprice").cast(DecimalType(18, 2)))
-            .cast(DecimalType(38, 2))).as("total"))
-      // ban SHUFFLE exchanges only (ShuffleExchangeExec renders as bare
-      // "Exchange …"): at gate scale the planner rightly broadcasts the
-      // small dim side — a BroadcastExchange moves no fact rows and the
-      // aggregate still reuses the bucketed partitioning; at corpus scale
-      // the same layout serves the zero-shuffle sort-merge join. The
-      // letter lookbehind also clears ReusedExchange, whose inner
-      // "Exchange" a Broadcast-only lookbehind would flag (review)
-      require("(?<![A-Za-z])Exchange".r
-          .findFirstIn(agg.queryExecution.executedPlan.toString).isEmpty,
-        "bucketed join + bucket-key aggregate must plan zero shuffle Exchange")
-      agg.select(col("o_custkey").as("custkey"),
-          col("c_mktsegment").as("mktsegment"),
-          col("n_orders"), col("total"))
-        .orderBy("custkey")
-    }),
-
-    "stat_rollup" -> ((s, dir) => {
-      // hierarchical corpus report in ONE pass: per (lang, source), per
-      // lang, and grand total via ROLLUP — integer aggregates only, so
-      // every level replays exactly; Spark plans this as a single
-      // expand+aggregate, not three scans
-      t(s, dir, "documents")
-        .rollup(col("lang"), col("source"))
-        .agg(count(lit(1)).as("docs"),
-          sum(TextAnalysis.tokenCount(col("text")).cast("long")).as("tokens"),
-          max(col("n_chars")).as("max_chars"))
-        .orderBy(col("lang").asc_nulls_first, col("source").asc_nulls_first)
-    }),
-
-    "stat_cube" -> ((s, dir) => {
-      // full CUBE over (lang, source): all four grouping levels in ONE
-      // expand+aggregate pass (never four scans), levels disambiguated by
-      // the SQL-standard grouping_id bitmask (lang as MSB on both
-      // engines) so rolled-up NULLs can't conflate with data NULLs
-      t(s, dir, "documents")
-        .cube(col("lang"), col("source"))
-        .agg(grouping_id().cast("long").as("gid"),
-          count(lit(1)).as("docs"),
-          max(col("n_chars")).cast("long").as("max_chars"))
-        .orderBy(col("lang").asc_nulls_first,
-          col("source").asc_nulls_first, col("gid"))
-    }),
-
-    "stat_grouping_sets" -> ((s, dir) => {
-      // GROUPING SETS — the asymmetric general form cube/rollup can't
-      // express: exactly ((lang, source), (source), ()) in ONE
-      // expand+aggregate pass (the UNION-ALL formulation is three full
-      // corpus scans at 100 TB); grouping_id disambiguates rolled-up
-      // NULLs from data NULLs, as in stat_cube
-      t(s, dir, "documents")
-        .groupingSets(
-          Seq(Seq(col("lang"), col("source")), Seq(col("source")), Seq()),
-          col("lang"), col("source"))
-        .agg(grouping_id().cast("long").as("gid"),
-          count(lit(1)).as("docs"),
-          sum(col("n_chars")).cast("long").as("chars"))
-        .orderBy(col("lang").asc_nulls_first,
-          col("source").asc_nulls_first, col("gid"))
-    }),
-
-    "stat_unpivot" -> ((s, dir) => {
-      // wide-to-long reshaping: the per-source metric report unpivoted to
-      // (source, metric, value) rows — a narrow in-partition expand after
-      // one aggregate, no extra shuffle
-      val perSource = t(s, dir, "documents").groupBy("source")
-        .agg(count(lit(1)).as("docs"),
-          sum(col("n_chars")).cast("long").as("chars"),
-          max(col("n_chars")).cast("long").as("max_chars"))
-      perSource.unpivot(
-          Array(col("source")),
-          Array(col("chars"), col("docs"), col("max_chars")),
-          "metric", "value")
-        .orderBy("source", "metric")
-    }),
-
-    "stat_heavy_hitters" -> ((s, dir) => {
-      // exact top-25 tokens: two-phase count absorbs token skew map-side,
-      // TakeOrdered picks the head without a global sort
-      graft.pipeline.Stats.topTokens(t(s, dir, "documents"), "text", 25)
-        .orderBy(col("cnt").desc, col("token"))
-    }),
-
-    "corpus_diff" -> ((s, dir) => {
-      // snapshot delta after a simulated refresh: docs ≡3 (mod 10)
-      // dropped, ≡7 rewritten, a shifted-id block of new docs appended;
-      // only the delta leaves the join (rows collapse to id+hash first)
-      val old = t(s, dir, "documents")
-      val cur = old.filter(col("doc_id") % 10 =!= 3)
-        .withColumn("text",
-          when(col("doc_id") % 10 === 7, concat(col("text"), lit(" v2")))
-            .otherwise(col("text")))
-        .unionByName(old.filter(col("doc_id") % 10 === 4)
-          .withColumn("doc_id", col("doc_id") + 1000000))
-        .select(old.columns.map(col): _*)
-      graft.pipeline.Snapshot.diff(old, cur, "doc_id", "text").orderBy("id")
-    }),
-
-    "stat_corpus_overlap" -> ((s, dir) => {
-      // pairwise source containment/jaccard from exact distinct-shingle
-      // counts — "is crawl B already covered by A" before paying for a
-      // cross-corpus dedup; divisions are single IEEE ops (engine-exact)
-      graft.pipeline.Stats.corpusOverlap(
-          t(s, dir, "documents"), "source", "text", n = 3)
-        .orderBy("src_a", "src_b")
-    }),
-
-    "stat_source_drift" -> ((s, dir) => {
-      // per-source composition drift vs the rest of the corpus: exact
-      // total-variation distance of token distributions via an
-      // integer-scaled numerator (order-independent sum); the final
-      // division is the only float op
-      graft.pipeline.Stats.tokenDrift(t(s, dir, "documents"), "source",
-          col("text"))
-        .select(col("g").as("source"), col("n_tokens"), col("drift_num"),
-          col("tvd"))
-        .orderBy("source")
-    }),
-
-    "pipeline_train_prep" -> ((s, dir) => {
-      // THE capstone composition: the full training-prep pipeline as ONE
-      // Spark DAG — C4-style gates → exact dedup → domain mix → sequence
-      // packing — every stage the same library operator its own entry
-      // gates, fused by Catalyst into one job (one scan feeds the gate;
-      // dedup/mix/pack each add exactly one shuffle)
-      val q = TextAnalysis.qualityFeatures(t(s, dir, "documents"), "text")
-        .withColumn("lang_pred", TextAnalysis.langId(col("text")))
-      val gated = q.filter(col("lang_pred") === "en" &&
-          col("quality_score") >= 0.5 && col("n_tokens").between(20, 1000))
-        .select(col("doc_id"), col("source"), col("text"), col("n_tokens"))
-      // windowed first-occurrence dedup (not survivors + join-back: the
-      // survivor list is corpus-sized at scale, so the semi join would
-      // re-shuffle both sides; the window pays its one content-hash
-      // shuffle and keeps every column)
-      val byHash = org.apache.spark.sql.expressions.Window
-        .partitionBy(sha2(col("text"), 256)).orderBy(col("doc_id"))
-      val ded = gated
-        .withColumn("__rn", row_number().over(byHash))
-        .filter(col("__rn") === 1).drop("__rn")
-      val mixed = graft.pipeline.Sampling.mixExact(ded, "source", "doc_id",
-        Map("src0" -> 1.0, "src1" -> 0.5), default = 0.25)
-      graft.pipeline.Packing.packSequences(mixed, "doc_id",
-          col("n_tokens"), budget = 512, shards = 4)
-        .select(col("doc_id"), col("source"), col("shard"), col("pack_no"),
-          col("start_tok"))
-        .orderBy("doc_id")
-    }),
-
-    "text_html_strip" -> ((s, dir) => {
-      // markup extraction: wrap each doc in a deterministic HTML page
-      // (script + style + entities, injected on BOTH sides) and strip it
-      // back to text — one codegen'd projection, no UDF/parser per row
-      val page = concat(
-        lit("<html><head><script type=\"text/javascript\">var x = 1 &amp;&amp; 2;" +
-          "</script><style>p { color: red; }</style></head><body><h1>Doc "),
-        col("doc_id").cast("string"), lit("</h1><p>"), col("text"),
-        lit("</p><div class=\"f\">&amp; footer &lt;end&gt;</div></body></html>"))
-      t(s, dir, "documents")
-        .select(col("doc_id"),
-          graft.pipeline.TextAnalysis.stripMarkup(page).as("clean_text"))
-        .orderBy("doc_id")
-    }),
-
-    "url_domain_cap" -> ((s, dir) => {
-      // per-domain frequency cap: documents carry no URL column, so inject
-      // deterministic URLs (23 synthetic hosts) on BOTH sides; host =
-      // split algebra (engine-portable), survivors = 10 per host in
-      // md5-hash order — one shuffle, window-local sort
-      val docs = t(s, dir, "documents").withColumn("url",
-        concat(lit("https://Site"), (col("doc_id") % 23).cast("string"),
-          lit(".example.com/p/"), col("doc_id").cast("string")))
-      graft.pipeline.Urls.domainCap(docs, col("url"), col("doc_id"), cap = 10)
-        .select(col("doc_id"), col("host")).orderBy("doc_id")
-    }),
-
-    "url_normalize" -> ((s, dir) => {
-      // canonical URL form before url-keyed dedup: fragments stripped,
-      // utm_*/fbclid/gclid tracking params dropped (other params kept in
-      // order), scheme+host lowercased, empty '?' removed — a pure
-      // per-row projection (zero shuffles); deterministic URLs injected
-      // on BOTH sides exercise every rule
-      val u = concat(
-        lit("https://Site"), (col("doc_id") % 23).cast("string"),
-        lit(".Example.com/P/"), col("doc_id").cast("string"),
-        when(col("doc_id") % 4 === 0,
-          concat(lit("?keep="), col("doc_id").cast("string"),
-            lit("&utm_medium=email&gclid=zz")))
-          .when(col("doc_id") % 2 === 0, lit("?utm_source=feed&fbclid=abc"))
-          .otherwise(lit("")),
-        when(col("doc_id") % 3 === 0, lit("#section")).otherwise(lit("")))
-      t(s, dir, "documents")
-        .select(col("doc_id"), u.as("url"),
-          graft.pipeline.Urls.normalizeUrl(u).as("url_norm"))
-        .orderBy("doc_id")
-    }),
-
-    "text_bigram_lift" -> ((s, dir) => {
-      // collocation discovery: top-100 bigrams by lift (= monotone order of
-      // PMI, no transcendental log — integer counts, one IEEE division);
-      // bigrams from the codegen'd WordPairs kernel in one corpus pass,
-      // vocabulary-sized merge joins, TakeOrdered top-k
-      graft.pipeline.TextAnalysis.collocations(
-        t(s, dir, "documents"), col("text"), minCount = 5L, k = 100)
-    }),
-
-    "text_bpe_learn" -> ((s, dir) => {
-      // BPE tokenizer TRAINING (Sennrich-style): nMerges rounds of "merge
-      // the most frequent adjacent symbol pair" over the WORD-FREQUENCY
-      // table — the corpus is scanned once, every round after is a
-      // vocabulary-sized job; driver state = one (pair, count) row per
-      // round. Integer counts + (total DESC, pair ASC) tie-break + single-
-      // pass left-to-right replace ⇒ the oracle replays the whole loop
-      val (merges, words) = graft.pipeline.Bpe.learn(
-        t(s, dir, "documents"), col("text"), BpeMerges)
-      words.unpersist()
-      graft.pipeline.Bpe.mergesDF(s, merges)
-    }),
-
-    "text_bpe_vocab" -> ((s, dir) => {
-      // token vocabulary induced by the learned merges: top-50 tokens by
-      // weighted frequency over the final symbolization (vocabulary-sized
-      // aggregation + TakeOrdered; learning memoized as setup so the bench
-      // times the vocabulary derivation, not a second training run)
-      val (_, words) = bpeModel(s, dir)
-      graft.pipeline.Bpe.vocab(words, 50)
-    }),
-
-    "text_bpe_count" -> ((s, dir) => {
-      // corpus token counting under the LEARNED tokenizer — the "how many
-      // training tokens is this corpus" pass: per doc, words joined to
-      // the trained word table (vocabulary-sized merge join, the bigram-
-      // lift shape) and each word contributes its symbol count, read off
-      // the symbolization with codegen'd string algebra (spaces − 1 —
-      // no interpreted filter/size HOF)
-      val (_, words) = bpeModel(s, dir)
-      val perWord = words.select(col("w"),
-        (length(col("sym")) -
-          length(replace(col("sym"), lit(" "), lit(""))) - 1)
-          .cast("long").as("toks_per_word"))
-      t(s, dir, "documents")
-        .select(col("doc_id"), explode(split(col("text"), " ")).as("w"))
-        .filter(col("w") =!= "")
-        .hint("merge")
-        .join(perWord.hint("merge"), "w")
-        .groupBy("doc_id").agg(count(lit(1)).as("n_words"),
-          sum("toks_per_word").as("n_bpe_tokens"))
-        .orderBy("doc_id")
-    }),
-
-    "text_bpe_encode" -> ((s, dir) => {
-      // token-ID encoding under the LEARNED tokenizer — the
-      // tokenize-to-ids step between learning and packing (what a
-      // training pipeline actually ships): ids are the full-vocabulary
-      // rank (weighted count DESC, token ASC), each doc becomes its
-      // dense id sequence; the gate checks total length + the first 48
-      // ids EXPLODED to one scalar row per (doc, position) — the
-      // driver's comparer sorts with pandas and cannot hash list cells
-      // (r8 finding), so the library keeps the array shape and the gate
-      // flattens it
-      val (_, words) = bpeModel(s, dir)
-      graft.pipeline.Bpe.encode(t(s, dir, "documents"), col("doc_id"),
-          col("text"), words, headIds = 48)
-        .withColumnRenamed("id", "doc_id")
-        .select(col("doc_id"), col("n_tokens"),
-          posexplode(col("head_ids")).as(Seq("pos0", "tok_id")))
-        .select(col("doc_id"), col("n_tokens"),
-          (col("pos0") + 1).cast("int").as("pos"), col("tok_id"))
-      // no ORDER BY: the driver comparer sorts rows itself, and a global
-      // sort of the exploded gate rows would bill the entry for work the
-      // operator doesn't do
-    }),
-
-    "text_bigram_next" -> ((s, dir) => {
-      // the bigram-LM table ("most likely successor per token") — see
-      // TextAnalysis.bigramSuccessors for the shape
-      graft.pipeline.TextAnalysis.bigramSuccessors(
-          t(s, dir, "documents"), col("text"), minTotal = 10L)
-        .orderBy("w1")
-    }),
-
-    "text_chunk" -> ((s, dir) => {
-      // RAG/context-window chunking: 32-token windows every 24 tokens
-      // (8-token overlap). Pure narrow transform — zero shuffles, runs
-      // inside the scan stage; the ORDER BY is gate-only
-      graft.pipeline.TextAnalysis.chunkByTokens(
-          t(s, dir, "documents"), "doc_id", col("text"),
-          chunkTokens = 32, stride = 24)
-        .orderBy("id", "chunk_idx")
-    }),
-
-    "text_lm_score" -> ((s, dir) => {
-      // corpus-frequency LM quality proxy: mean floor(log2(token corpus
-      // count)) per document — the CCNet perplexity-filter shape with the
-      // LM swapped for an exact-replayable statistic (bit-length bucket,
-      // no float log); vocabulary-sized merge joins, one doc aggregate
-      graft.pipeline.TextAnalysis.lmBucketScore(
-          t(s, dir, "documents"), "doc_id", col("text"))
-        .orderBy("id")
-    }),
-
-    "dedup_bloom_prefilter" -> ((s, dir) => {
-      // Bloom-gated blocklist membership (the decontamination shape): the
-      // reference set (10% of docs by fingerprint) compresses to an 8192-bit
-      // array; the batch probe is a shuffle-free codegen'd mask test inside
-      // the scan, and only candidates pay the exact verify join. The
-      // deterministic md5 positions make the exact false-positive set
-      // replay in the oracle.
-      val keyed = t(s, dir, "documents")
-        .select(col("doc_id"), md5(col("text")).as("k"))
-      val ref = keyed.filter(col("doc_id") % 10 === 0)
-      graft.pipeline.Bloom.prefilterVerify(keyed, ref, "k", m = 8192, j = 3)
-        .select(col("doc_id"), col("confirmed")).orderBy("doc_id")
-    }),
-
-    "stat_kmv_incremental" -> ((s, dir) => {
-      // persisted-sketch increment (the production cadence: sketch each
-      // slice once, estimate forever): per-source token sketches of the
-      // even and odd half-corpora are WRITTEN as parquet tables, read
-      // back, and merged WITHOUT touching the corpus again. The sketch
-      // identity bottom-k(bottom-k(A) ∪ bottom-k(B)) = bottom-k(A ∪ B) is
-      // exact, so the oracle replays the DIRECT whole-corpus sketch — the
-      // gate itself verifies the merge identity
-      // the sketch-table WRITES are the production backfill, not the
-      // incremental operator (the merge) this entry measures — memoized so
-      // the bench's second pass times the merge alone
-      val base = prepared(s, s"kmvinc:$dir") {
-        val b = scratchDir(s, "kmvinc", dir)
-        val docs = t(s, dir, "documents")
-        def toks(part: org.apache.spark.sql.DataFrame) = part
-          .select(col("source"), explode(split(col("text"), " ")).as("tok"))
-          .filter(col("tok") =!= "")
-        graft.pipeline.Stats.kmvSketches(
-            toks(docs.filter(col("doc_id") % 2 === 0)), "source", col("tok"), 64)
-          .write.mode("overwrite").parquet(s"$b/sk_even")
-        graft.pipeline.Stats.kmvSketches(
-            toks(docs.filter(col("doc_id") % 2 =!= 0)), "source", col("tok"), 64)
-          .write.mode("overwrite").parquet(s"$b/sk_odd")
-        b
-      }
-      val merged = graft.pipeline.Stats.kmvMergeSketches(
-        s.read.parquet(s"$base/sk_even")
-          .unionByName(s.read.parquet(s"$base/sk_odd")), "source", 64)
-      graft.pipeline.Stats.kmvEstimate(merged, "source", 64).orderBy("source")
-    }),
-
-    "stat_kmv_distinct" -> ((s, dir) => {
-      // per-source vocabulary-size estimate via the KMV bottom-k sketch:
-      // aggregate state is at most k longs per group (native
-      // BottomKDistinct with map-side partials) — never the distinct set;
-      // the md5-hash basis makes the whole sketch replay exactly in SQL
-      graft.pipeline.Stats.kmvDistinct(
-          t(s, dir, "documents")
-            .select(col("source"), explode(split(col("text"), " ")).as("tok"))
-            .filter(col("tok") =!= ""),
-          "source", col("tok"), k = 64)
-        .orderBy("source")
-    }),
-
-    "text_langid_confusion" -> ((s, dir) => {
-      // classifier QUALITY EVAL: labeled lang × predicted lang confusion
-      // matrix — one conditional-aggregation pass (explicit pivot values,
-      // no driver-side distinct scan), the accuracy report behind the
-      // text_langid gate
-      val langs = Seq("en", "de", "fr", "es", "zh", "und")
-      t(s, dir, "documents")
-        .select(col("lang"),
-          TextAnalysis.langId(col("text")).as("lang_pred"))
-        .groupBy("lang").pivot("lang_pred", langs).count()
-        .na.fill(0L, langs)
-        .orderBy("lang")
-    }),
-
-    "stat_pivot" -> ((s, dir) => {
-      // wide composition report: docs per (lang × source) as one row per
-      // lang with a column per source. The pivot values are EXPLICIT —
-      // pivot without a value list runs a driver-side distinct scan
-      // first, a second full pass at 100 TB; with the list it is ONE
-      // Expand-free conditional aggregation pass. Empty cells filled 0
-      // (Spark pivot yields null; the oracle's COUNT FILTER yields 0)
-      val sources = (0 until 20).map(i => s"src$i")
-      t(s, dir, "documents")
-        .groupBy("lang").pivot("source", sources).count()
-        .na.fill(0L, sources)
-        .orderBy("lang")
-    }),
-
-    "stat_quantile_sketch" -> ((s, dir) => {
-      // continuous-domain quantiles (event values are doubles — the exact
-      // distinct-value-compressed path would sort nearly every row):
-      // q(p) estimated from a deterministic 256-row uniform sample per
-      // event_type, carried by the mergeable bottom-k-pairs aggregate
-      // (state ≤ k pairs per group per task, KMV-style re-cap merge)
-      graft.pipeline.Stats.sampleQuantiles(events(s, dir),
-          "event_type", col("event_id"), col("value"),
-          k = 256, ps = Seq(0.5, 0.9, 0.99))
-        .orderBy("event_type", "p")
-    }),
-
-    "stat_hll" -> ((s, dir) => {
-      // per-source distinct-shingle estimate via HyperLogLog: fixed
-      // 2^6-byte register state per group (vs KMV's 8k bytes), elementwise
-      // max merge; registers and the scaled-integer harmonic sum replay
-      // exactly in SQL, the estimate is one correctly-rounded division
-      graft.pipeline.Stats.hllDistinct(
-          t(s, dir, "documents")
-            .select(col("source"),
-              explode(graft.pipeline.Dedup.shingles(col("text"), 3)).as("sh")),
-          "source", col("sh"), p = 6)
-        .orderBy("source")
-    }),
-
-    "embed_project" -> ((s, dir) => {
-      // JL random projection: 64-dim embeddings into 8 deterministic
-      // hash-derived directions (the ANN-prefilter / cheap-similarity
-      // space) — 8 codegen'd dot kernels against plan-time literal
-      // directions, shuffle-free, no model table
-      graft.pipeline.Similarity.randomProjection(
-          t(s, dir, "embeddings"), "vec_id", "embedding", k = 8)
-        .orderBy("id")
-    }),
-
-    "embed_quantize_sq8" -> ((s, dir) => {
-      // scalar int8 embedding quantization: per-dimension global
-      // [min,max] calibration (one dim-bounded aggregate, inlined as
-      // literals), then a shuffle-free codegen'd projection maps every
-      // component to its 0..255 code — the memory-compression companion
-      // to the PQ codebooks (8x vs doubles, ADC-style readback).
-      // Exploded to one scalar row per (vector, dimension) for the gate —
-      // the driver's comparer cannot hash list cells (r8 finding); the
-      // library API keeps the packed array shape
-      // flattening rides an exploded LITERAL index sequence + one array
-      // read, NOT posexplode(codes): InferFiltersFromGenerate would infer
-      // `size(codes) > 0` from a generator over the computed array and
-      // push the whole 64-expression quantization INTO the scan filter —
-      // observed doubling the entry's per-row work; over the literal
-      // sequence the inferred guard constant-folds away
-      graft.pipeline.Similarity.scalarQuantize(
-          t(s, dir, "embeddings"), "vec_id", "embedding")
-        .withColumnRenamed("id", "vec_id")
-        .select(col("vec_id"), col("codes"),
-          explode(sequence(lit(0), lit(63))).as("dim0"))
-        .select(col("vec_id"), (col("dim0") + 1).cast("int").as("dim"),
-          col("codes")(col("dim0")).as("code"))
-      // no ORDER BY: the driver comparer sorts rows itself (see
-      // text_bpe_encode)
-    }),
-
-    "stat_hll_overlap" -> ((s, dir) => {
-      // pairwise source overlap from HLL register ALGEBRA: union = the
-      // elementwise register max (sketch-sized pair join — groups²·2^p
-      // rows, corpus scanned once), inclusion–exclusion for the
-      // intersection; the sketch answer to the question
-      // stat_corpus_overlap pays a distinct-set self-join for
-      graft.pipeline.Stats.hllOverlap(
-          t(s, dir, "documents")
-            .select(col("source"),
-              explode(graft.pipeline.Dedup.shingles(col("text"), 3)).as("sh")),
-          "source", col("sh"), p = 6)
-        .orderBy("src_a", "src_b")
-    }),
-
-    "stat_vocab_growth" -> ((s, dir) => {
-      // the Heaps'-law curve: distinct types + token mass after the
-      // first c docs in the deterministic hash permutation — exact
-      // integer counts, checkpoints joined as a broadcast literal table
-      graft.pipeline.Stats.vocabGrowth(t(s, dir, "documents"), "doc_id",
-        col("text"), checkpoints = Seq(50, 100, 200, 400, 800, 1600))
-    }),
-
-    "stat_token_gini" -> ((s, dir) => {
-      // lexical concentration per source: Gini of the token-frequency
-      // distribution from exact rank algebra over the COMPRESSED (count
-      // value, types) table — tie blocks contribute v·m·(2s+m−1) to 2A,
-      // DECIMAL(38,0) sums (n·S passes 2⁶³ at real scale), one double
-      // division of the string-rendered decimals
-      graft.pipeline.Stats.tokenGini(
-          t(s, dir, "documents"), "source", col("text"))
-        .orderBy("source")
-    }),
-
-    "stat_token_simpson" -> ((s, dir) => {
-      // diversity without transcendentals: simpson = Σc²/S² (collision
-      // probability) and eff_types = S²/Σc² (effective vocabulary size /
-      // Rényi-2 perplexity) from exact DECIMAL(38,0) integer aggregates
-      // + one string-rendered-decimal division each — the replayable
-      // stand-in for Shannon entropy's order-dependent c·log c sum
-      graft.pipeline.Stats.tokenSimpson(
-          t(s, dir, "documents"), "source", col("text"))
-        .orderBy("source")
-    }),
-
-    "stat_lsh_bands" -> ((s, dir) => {
-      // the MinHash-LSH dry-run report: per band, bucket count / largest
-      // bucket / singletons / candidate-pair workload Σ c(c−1)/2 — what
-      // you check BEFORE running the 100 TB band join (skew or candidate
-      // explosion ⇒ re-tune bands/rows or cap stop-shingles). Bucket
-      // identity = the literal r-tuple of md5-seeded signature mins, so
-      // the whole report is exact and replayed in the oracle
-      graft.pipeline.Dedup.lshBandStats(
-        t(s, dir, "documents"), "doc_id", col("text"),
-        shingleN = 3, k = 8, bands = 4)
-    }),
-
-    "stat_ks_drift" -> ((s, dir) => {
-      // two-sample KS between the purchase and view value distributions —
-      // the continuous-column drift alarm; one aggregation to the
-      // distinct-value table, one window over VALUES, per-value gap =
-      // two divisions (no integer cross-product: overflow-safe at any n)
-      graft.pipeline.Stats.ksDrift(
-          events(s, dir).filter(col("event_type").isin("purchase", "view")),
-          col("value"), col("event_type") === "purchase")
-    }),
-
-    "stat_dup_rate" -> ((s, dir) => {
-      // per-source duplication report: docs vs distinct normalized
-      // fingerprints (the dedup dashboard stat that decides which crawl
-      // sources need attention) — one two-phase aggregate over (source,
-      // fingerprint), integer counts, one final division
-      t(s, dir, "documents")
-        .groupBy("source")
-        .agg(count(lit(1)).as("docs"),
-          countDistinct(TextAnalysis.fingerprint(col("text")))
-            .as("distinct_docs"))
-        .withColumn("dup_rate",
-          (col("docs") - col("distinct_docs")).cast("double") /
-            col("docs").cast("double"))
-        .orderBy("source")
-    }),
-
-    "stat_k_anonymity" -> ((s, dir) => {
-      // re-identification risk audit before a corpus release: quasi-
-      // identifier = (lang, source, n_chars div 64) — each column
-      // harmless alone, the COMBINATION singles records out; emit every
-      // group with < 5 members (what a k-anonymous release must suppress
-      // or generalize — the gate PII redaction can't provide). One hash
-      // aggregate with map-side combine + a size filter; the shuffle
-      // carries |distinct QI tuples|, the output only the sub-k tail
-      graft.pipeline.Stats.kAnonymityRisk(t(s, dir, "documents"),
-          Seq(col("lang"), col("source"),
-            expr("n_chars div 64").as("len_bucket")), k = 5)
-        .orderBy("lang", "source", "len_bucket")
-    }),
-
-    "stat_cms" -> ((s, dir) => {
-      // Count-Min frequency sketch: one pass folds every token occurrence
-      // into 4×512 counters (vector-add merge, map-side partials); the
-      // exact top-25 tokens then probe the BROADCAST sketch in a
-      // codegen'd projection — est ≥ cnt, equality when no row collides
-      val docs = t(s, dir, "documents")
-      val top = docs
-        .select(explode(split(col("text"), " ")).as("token"))
-        .filter(col("token") =!= "")
-        .groupBy("token").agg(count(lit(1)).as("cnt"))
-        .orderBy(col("cnt").desc, col("token")).limit(25)
-      graft.pipeline.Stats.cmsTokenEstimates(docs, col("text"), top,
-          "token", d = 4, wlog = 9)
-        .select(col("token"), col("cnt"), col("est"))
-        .orderBy(col("cnt").desc, col("token"))
-    }),
-
-    "layout_zorder" -> ((s, dir) => {
-      // z-order layout: cluster documents by Morton(doc_id, n_chars) so a
-      // range filter on EITHER column prunes files via footer stats; the
-      // entry runs the real write-side operator (range partition + sort
-      // within partitions) and emits the addresses for the oracle to replay
-      graft.sources.Layout.zorder(t(s, dir, "documents"),
-          "doc_id", "n_chars", bits = 16, numFiles = 8)
-        .select(col("doc_id"), col("z")).orderBy("doc_id")
-    }),
-
-    "layout_compaction" -> ((s, dir) => {
-      // small-file compaction planning (OPTIMIZE bin packing) over a file
-      // INVENTORY: partition = lang, file = floor(sqrt(doc_id mod 1600))
-      // (a deliberately skewed layout — file k holds 2k+1 id slots, the
-      // 1:79 size spread incremental writers really produce), bytes =
-      // Σ n_chars. Target = 1.5× the mean file size, derived ONCE from
-      // the inventory (memoized fixture — the planner's input is a
-      // metadata table, its sizing a config decision); files already at
-      // target keep bin −1, the rest bin-pack largest-first per
-      // partition. One hash shuffle + one metadata-sized window sort
-      val inv = t(s, dir, "documents")
-        .groupBy(col("lang").as("part"),
-          floor(sqrt((col("doc_id") % 1600).cast("double")))
-            .cast("long").as("file_no"))
-        .agg(sum("n_chars").cast("long").as("bytes"))
-      val target = prepared(s, s"compact_target:$dir") {
-        val r = inv.agg(sum("bytes").as("tot"), count(lit(1)).as("nf"))
-          .collect()(0)
-        3L * r.getLong(0) / (2L * r.getLong(1))
-      }
-      graft.sources.Layout.compactionPlan(inv, "part", "file_no", "bytes",
-          targetBytes = target)
-        .select(col("part"), col("file_no"), col("bytes"),
-          col("start_byte"), col("bin"))
-        .orderBy("part", "file_no")
-    }),
-
-    // ---- LLM-pipeline: multimodal binary columns ------------------------
-    "mm_blob_stats" -> ((s, dir) => {
-      val media = Multimodal.fromText(t(s, dir, "documents"), "doc_id", "text")
-      Multimodal.withBlobStats(media)
-        .withColumn("n_frames",
-          ceil(col("n_bytes").cast("double") / 64).cast("long"))
-        .select(col("media_id"), col("n_bytes").cast("long").as("n_bytes"),
-          col("n_frames"))
-        .orderBy("media_id")
-    }),
-
-    "mm_decode" -> ((s, dir) => {
-      // REAL codec round trip: encode one deterministic PNG per document
-      // on the executors (JDK ImageIO), decode the compressed bytes back
-      // to pixels, reduce to geometry + exact per-channel means — the
-      // oracle replays the congruence pixel function in pure SQL.
-      // The encoded-blob fixture is SETUP, not the operator: it is
-      // memoized + persisted once per (session, sf) and SHARED with
-      // mm_resize, so each entry times its decode, not the PNG writer.
-      val media = preparedPng(s, dir)
-      Multimodal.decodeImages(media)
-        .select(col("media_id"), col("decoded_ok"), col("width"),
-          col("height"), col("mean_r"), col("mean_g"), col("mean_b"))
-        .orderBy("media_id")
-    }),
-
-    "mm_resize" -> ((s, dir) => {
-      // decode → nearest-neighbor 2× downsample → re-encode PNG → decode
-      // again; output pixel (x,y) = source pixel (2x,2y), so the resized
-      // geometry and channel means replay exactly in the oracle.
-      // Fixture shared with mm_decode (preparedPng).
-      val media = preparedPng(s, dir)
-      Multimodal.decodeImages(Multimodal.resizeImages(media, factor = 2))
-        .select(col("media_id"), col("width"), col("height"),
-          col("mean_r"), col("mean_g"), col("mean_b"))
-        .orderBy("media_id")
-    }),
-
-    "mm_aspect_buckets" -> ((s, dir) => {
-      // aspect-ratio bucketing for image-training batch assembly (the
-      // SDXL recipe: batches resize to ONE canonical shape): nearest
-      // bucket by |w/h - bn/bd|, ties to the earliest — computed in
-      // exact integer cross-multiplication over the REAL decoded
-      // geometry (shared PNG fixture), so the assignment replays
-      // verbatim in the oracle's analytic-geometry formula. Pure
-      // codegen'd projection: no shuffle, no float ratios
-      val media = preparedPng(s, dir)
-      Multimodal.aspectBuckets(Multimodal.decodeImages(media),
-          col("width"), col("height"), AspectBucketList)
-        .select(col("media_id"), col("width"), col("height"),
-          col("bucket_n"), col("bucket_d"))
-        .orderBy("media_id")
-    }),
-
-    "mm_image_dedup" -> ((s, dir) => {
-      // perceptual near-dup over REAL decoded pixels: every 7th document's
-      // image is re-posted under a new id (same pixel basis ⇒ the copy is
-      // a hamming-0 dup of its original). The PNG encode AND the
-      // decode→dHash pass are ingest-time work (16 bytes per asset): they
-      // build the durable fingerprint table ONCE — the same serving shape
-      // its audio twin uses (the r12 verdict's #2) — and the entry times
-      // the banded Hamming-≤3 pairing over the stored fingerprints, the
-      // sweep a production dedup actually re-runs; the oracle
-      // brute-forces the same fingerprints analytically from the
-      // congruence pixel function
-      val root = prepared(s, s"mmpngfp7:$dir") {
-        val out = scratchDir(s, "mmpng_fp", dir)
-        val base = t(s, dir, "documents").select(col("doc_id"))
-        val ids = base
-          .select(col("doc_id").as("media_id"), col("doc_id").as("basis"))
-          .unionByName(base.filter(col("doc_id") % 7 === 0)
-            .select((-(col("doc_id") + lit(1L))).as("media_id"),
-              col("doc_id").as("basis")))
-        Multimodal.imageDHash(
-            Multimodal.syntheticPngNoisy(ids, "media_id",
-              basisCol = "basis"))
-          .filter(col("decoded_ok"))
-          .select(col("media_id").as("id"), col("lo"), col("hi"))
-          .write.mode("overwrite").parquet(out)
-        out
-      }
-      Multimodal.fingerprintDedupPairs(s.read.parquet(root), maxHamming = 3)
-        .orderBy("id_a", "id_b")
-    }),
-
-    "mm_fingerprint_incremental" -> ((s, dir) => {
-      // continuous media ingestion: an arriving batch's dHash
-      // fingerprints probe the STORED corpus fingerprint table — the
-      // minhashDedupAgainstTables shape for media: the corpus never
-      // self-joins and never re-decodes, each batch pays only its own
-      // bipartite banded probe, flagged assets append their 16 bytes
-      // afterwards. Corpus = even doc_ids; batch = every 7th document
-      // re-posted under a new id (so copies of EVEN multiples of 7 must
-      // pair with their stored original at hamming 0; odd-based copies
-      // have no original in the corpus). Both fingerprint tables are
-      // ingest-time fixture; the entry times the probe — the per-batch
-      // cost of the production loop. The oracle brute-forces the cross
-      // pairs from the congruence pixel function.
-      val root = prepared(s, s"mmfpinc:$dir") {
-        val out = scratchDir(s, "mmfp_inc", dir)
-        val docs = t(s, dir, "documents").select(col("doc_id"))
-        val corpusIds = docs.filter(col("doc_id") % 2 === 0)
-          .select(col("doc_id").as("media_id"), col("doc_id").as("basis"))
-        val batchIds = docs.filter(col("doc_id") % 7 === 0)
-          .select((-(col("doc_id") + lit(1L))).as("media_id"),
-            col("doc_id").as("basis"))
-        def fps(ids: DataFrame) = Multimodal.imageDHash(
-            Multimodal.syntheticPngNoisy(ids, "media_id",
-              basisCol = "basis"))
-          .filter(col("decoded_ok"))
-          .select(col("media_id").as("id"), col("lo"), col("hi"))
-        fps(corpusIds).write.mode("overwrite").parquet(s"$out/corpus")
-        fps(batchIds).write.mode("overwrite").parquet(s"$out/batch")
-        out
-      }
-      Multimodal.fingerprintDedupAgainst(
-          s.read.parquet(s"$root/batch"), s.read.parquet(s"$root/corpus"),
-          maxHamming = 3)
-        .orderBy("batch_id", "corpus_id")
-    }),
-
-    "mm_audio_dedup" -> ((s, dir) => {
-      // acoustic near-dup over REAL decoded PCM: every 9th document's
-      // clip re-posted under a new id; amplitude-gradient dHash from the
-      // decoded samples, banded Hamming-≤3 pairing, brute-force oracle.
-      // The WAV encode AND the decode→dHash pass are ingest-time work (16
-      // bytes per asset): they build the durable fingerprint table ONCE
-      // (the r11 verdict's shared-decoded-pass item) and the entry times
-      // the banded pairing over the stored fingerprints — the sweep a
-      // production dedup actually re-runs
-      val root = prepared(s, s"mmwavfp9:$dir") {
-        val out = scratchDir(s, "mmwav_fp", dir)
-        val base = t(s, dir, "documents").select(col("doc_id"))
-        val ids = base
-          .select(col("doc_id").as("media_id"), col("doc_id").as("basis"))
-          .unionByName(base.filter(col("doc_id") % 9 === 0)
-            .select((-(col("doc_id") + lit(1L))).as("media_id"),
-              col("doc_id").as("basis")))
-        Multimodal.audioDHash(
-            Multimodal.syntheticWav(ids, "media_id",
-              basisCol = "basis", noisy = true))
-          .filter(col("decoded_ok"))
-          .select(col("media_id").as("id"), col("lo"), col("hi"))
-          .write.mode("overwrite").parquet(out)
-        out
-      }
-      Multimodal.fingerprintDedupPairs(s.read.parquet(root), maxHamming = 3)
-        .orderBy("id_a", "id_b")
-    }),
-
-    "mm_audio_decode" -> ((s, dir) => {
-      // REAL audio codec round trip: encode one deterministic PCM-16 WAV
-      // per document on the executors (JDK javax.sound.sampled), decode
-      // the container back to samples, reduce to integer features —
-      // the oracle replays the congruence sample function in pure SQL.
-      // WAV-encode fixture memoized (see mm_decode's preparedPng note).
-      val media = prepared(s, s"mmwav:$dir") {
-        Multimodal.syntheticWav(t(s, dir, "documents"), "doc_id").persist()
-      }
-      Multimodal.decodeAudio(media)
-        .select(col("media_id"), col("decoded_ok"), col("n_samples"),
-          col("sample_rate"), col("sum_amp"), col("peak"))
-        .orderBy("media_id")
-    }),
-
-    "mm_frames" -> ((s, dir) => {
-      val media = Multimodal.fromText(t(s, dir, "documents"), "doc_id", "text")
-      Multimodal.frameSample(media, chunkBytes = 64)
-        .select(col("media_id"), col("frame_idx").cast("long").as("frame_idx"))
-        .orderBy("media_id", "frame_idx")
-    }),
-
-    "mm_frame_dedup" -> ((s, dir) => {
-      // near-dup media by sampled-frame checksum sets: Jaccard ≥ 0.5 over
-      // DISTINCT md5(64-byte frame) sets, frames shared by > 20 assets
-      // dropped as boilerplate (black frames / shared intros); candidate
-      // pairs ∝ Σ df² with df capped — never |A|×|B|, blobs never
-      // shuffle. The blob read + chunk + checksum pass is ingest-time
-      // work: it builds the durable (media_id, fh) table ONCE (the same
-      // serving split as the two perceptual dedups) and the entry times
-      // the Jaccard sweep over the stored checksums — the pass a
-      // production dedup re-runs when re-tuning maxDf / minJaccard
-      val root = prepared(s, s"mmframes:$dir") {
-        val out = scratchDir(s, "mm_frames", dir)
-        val media = Multimodal.fromText(t(s, dir, "documents"),
-          "doc_id", "text")
-        Multimodal.frameChecksumTable(media, chunkBytes = 64)
-          .write.mode("overwrite").parquet(out)
-        out
-      }
-      Multimodal.frameDedupFromTable(s.read.parquet(root), maxDf = 20,
-          minJaccard = 0.5)
-        .orderBy("id_a", "id_b")
-    }),
-
-    "mm_frame_incremental" -> ((s, dir) => {
-      // continuous media ingestion, frame-set form: an arriving batch's
-      // frame checksums probe the STORED corpus frame table (the corpus
-      // never self-joins, never re-chunks) — batch = every 7th document
-      // re-posted under id+1000000, so each copy must pair with its
-      // original at jaccard 1.0; boilerplate is judged by CORPUS df and
-      // dropped from both sides. Both checksum tables are ingest-time
-      // fixture (shared corpus table with mm_frame_dedup); the entry
-      // times the bipartite probe — the per-batch cost of the loop.
-      val corpusRoot = prepared(s, s"mmframes:$dir") {
-        val out = scratchDir(s, "mm_frames", dir)
-        val media = Multimodal.fromText(t(s, dir, "documents"),
-          "doc_id", "text")
-        Multimodal.frameChecksumTable(media, chunkBytes = 64)
-          .write.mode("overwrite").parquet(out)
-        out
-      }
-      val batchRoot = prepared(s, s"mmframesb:$dir") {
-        val out = scratchDir(s, "mm_frames_batch", dir)
-        val copies = t(s, dir, "documents")
-          .filter(col("doc_id") % 7 === 0)
-          .select((col("doc_id") + 1000000L).as("doc_id"), col("text"))
-        Multimodal.frameChecksumTable(
-            Multimodal.fromText(copies, "doc_id", "text"), chunkBytes = 64)
-          .write.mode("overwrite").parquet(out)
-        out
-      }
-      Multimodal.frameDedupAgainst(s.read.parquet(batchRoot),
-          s.read.parquet(corpusRoot), maxDf = 20, minJaccard = 0.5)
-        .orderBy("batch_id", "corpus_id")
-    }),
-
-    "st3_recovery_worklist" -> ((s, dir) => {
-      // batch 1 (regions, quantum 1) completed; batch 2 (nations, quantum
-      // 2) incomplete → the recovery pass must re-drive exactly batch 2 in
-      // (uri, revision) order
-      val rFeed = emptyStore(s).applyOps(putOps(s, t(s, dir, "region"),
-        "regions~", "r_regionkey", Seq("r_name"))).feed
-      val nFeed = emptyStore(s).applyOps(putOps(s, t(s, dir, "nation"),
-        "nations~", "n_nationkey", Seq("n_name"))).feed
-      val l1 = Ledger.fromFeed(rFeed, 60000L)
-      val ledger = Ledger.complete(l1, l1.select("txn_id"))
-        .unionByName(Ledger.fromFeed(nFeed, 120000L))
-      Ledger.recoveryWorkList(ledger, 0L, 10L)
-        .select(col("document_uri"), col("txn_id"), col("revision"))
-    })
-  )
-
-  // ------------------------------------------------------------ the oracles
-
-  def oracleSql: Map[String, String] = Map(
-    "s1_point_get" ->
-      """SELECT CAST(n_nationkey AS VARCHAR) AS item_id, n_name AS name,
-        |       CAST(n_regionkey AS INTEGER) AS regionkey
-        |FROM nation WHERE n_nationkey = 7""".stripMargin,
-
-    "s2_range_scan" ->
-      """SELECT CAST(c_custkey AS VARCHAR) AS item_id, c_name AS name,
-        |       c_acctbal AS acctbal
-        |FROM customer WHERE CAST(c_custkey AS VARCHAR) > '1200'
-        |ORDER BY item_id LIMIT 30""".stripMargin,
-
-    "s2_range_scan_desc" ->
-      """SELECT CAST(c_custkey AS VARCHAR) AS item_id, c_name AS name
-        |FROM customer WHERE CAST(c_custkey AS VARCHAR) < '1200'
-        |ORDER BY item_id DESC LIMIT 25""".stripMargin,
-
-    "s2_store_scan" ->
-      """SELECT CAST(c_custkey AS VARCHAR) AS item_id, c_name AS name
-        |FROM customer WHERE CAST(c_custkey AS VARCHAR) > '500'
-        |ORDER BY item_id LIMIT 40""".stripMargin,
-
-    // revisions are per-collection sequential: batch 1 assigns 1..N in seq
-    // order (seq = n_nationkey), batch 2's patches continue at N+1
-    "s2_compact_store" ->
-      """SELECT CAST(n_nationkey AS VARCHAR) AS item_id,
-        |  CAST(CASE WHEN n_nationkey < 10
-        |       THEN (SELECT COUNT(*) FROM nation) + 1 + n_nationkey
-        |       ELSE n_nationkey + 1 END AS BIGINT) AS revision,
-        |  n_name AS name,
-        |  CASE WHEN n_nationkey < 10 THEN 2 ELSE NULL END AS v
-        |FROM nation ORDER BY item_id""".stripMargin,
-
-    "s3_static_revision" ->
-      "SELECT COUNT(*) AS revision FROM nation",
-
-    "s8_ledger_complete" ->
-      """SELECT 'regions~/' || CAST(r_regionkey AS VARCHAR) || '#' ||
-        |       CAST(ROW_NUMBER() OVER (ORDER BY r_regionkey) AS VARCHAR) AS txn_id,
-        |       TRUE AS completed,
-        |       ROW_NUMBER() OVER (ORDER BY r_regionkey) AS revision
-        |FROM region ORDER BY txn_id""".stripMargin,
-
-    "s10_checkpoint" ->
-      "SELECT CAST(1 AS BIGINT) AS checkpoint_quantum",
-
-    "f1_filter_numeric" ->
-      """SELECT CAST(c_custkey AS VARCHAR) AS item_id, c_acctbal AS acctbal,
-        |       c_mktsegment AS mktsegment
-        |FROM customer WHERE c_acctbal > 1000 AND c_acctbal < 5000
-        |ORDER BY item_id LIMIT 1000""".stripMargin,
-
-    "f1_filter_text" ->
-      """SELECT CAST(p_partkey AS VARCHAR) AS item_id, p_brand AS brand,
-        |       CAST(p_size AS INTEGER) AS psize
-        |FROM part WHERE p_brand = 'Brand#4' ORDER BY item_id LIMIT 200""".stripMargin,
-
-    "f2_filter_or_has" ->
-      """SELECT CAST(c_custkey AS VARCHAR) AS item_id,
-        |       c_mktsegment AS mktsegment, c_acctbal AS acctbal
-        |FROM customer
-        |WHERE c_mktsegment IN ('BUILDING','AUTOMOBILE') OR c_acctbal < 0
-        |ORDER BY item_id LIMIT 2000""".stripMargin,
-
-    "f5_filter_constfold" ->
-      """SELECT CAST(p_partkey AS VARCHAR) AS item_id,
-        |       CAST(p_size AS INTEGER) AS psize, p_retailprice AS retailprice
-        |FROM part WHERE p_size > 45 AND p_retailprice <= 1500
-        |ORDER BY item_id LIMIT 3000""".stripMargin,
-
-    // fixed-outcome oracle: the validation verdicts are the spec — the
-    // Spark side must reproduce them through the real createIndex path
-    "f6_filter_validation" ->
-      """SELECT * FROM (VALUES
-        |  (CAST(0 AS BIGINT), 'r_regionkey > 2', TRUE),
-        |  (1, 'r_regionkey >', FALSE),
-        |  (2, 'frobnicate(r_name) != "x"', FALSE),
-        |  (3, '5 and 4', FALSE),
-        |  (4, 'length(r_name, 2, 3) > 1', FALSE),
-        |  (5, 'x and b > 5', TRUE)
-        |) AS t(case_id, filter, accepted) ORDER BY case_id""".stripMargin,
-
-    "f11_sql_surface" ->
-      """SELECT CAST(c_custkey AS VARCHAR) AS item_id, 'rich' AS tag,
-        |       c_acctbal AS acctbal
-        |FROM customer
-        |WHERE c_acctbal > 9000 AND c_mktsegment != 'MACHINERY'
-        |ORDER BY item_id""".stripMargin,
-
-    "f8_null_strip" ->
-      """SELECT CAST(r_regionkey AS VARCHAR) AS item_id, r_name AS name,
-        |       CAST(NULL AS VARCHAR) AS tmp
-        |FROM region ORDER BY item_id""".stripMargin,
-
-    "o2_sort_multifield" ->
-      """SELECT CAST(c_custkey AS VARCHAR) AS item_id,
-        |       c_mktsegment AS mktsegment, c_acctbal AS acctbal
-        |FROM customer
-        |ORDER BY c_mktsegment ASC, c_acctbal DESC, item_id ASC LIMIT 50""".stripMargin,
-
-    "o2_sort_missing_fields" ->
-      """SELECT CAST(n_nationkey AS VARCHAR) AS item_id,
-        |       CASE WHEN n_nationkey % 2 = 0 THEN CAST(n_regionkey AS INTEGER) END
-        |         AS region
-        |FROM nation
-        |ORDER BY (CASE WHEN n_nationkey % 2 = 0 THEN 0 ELSE 1 END),
-        |         (CASE WHEN n_nationkey % 2 = 0 THEN n_regionkey END),
-        |         item_id""".stripMargin,
-
-    // gaps-and-islands at MICROsecond precision: new session iff the gap
-    // to the previous event is >= 30 min (an event exactly at the
-    // previous window's end opens a new session, like session_window)
-    "st8_session_windows" ->
-      """WITH e AS (
-        |  SELECT user_id, epoch_us(ts) AS us FROM events WHERE user_id < 50),
-        |g AS (
-        |  SELECT user_id, us,
-        |    CASE WHEN lag(us) OVER w IS NULL
-        |           OR us - lag(us) OVER w >= 1800000000 THEN 1 ELSE 0 END
-        |      AS new_s
-        |  FROM e WINDOW w AS (PARTITION BY user_id ORDER BY us)),
-        |s AS (
-        |  SELECT user_id, us,
-        |    SUM(new_s) OVER (PARTITION BY user_id ORDER BY us
-        |                     ROWS UNBOUNDED PRECEDING) AS sid
-        |  FROM g)
-        |SELECT user_id, MIN(us) AS session_start_us, COUNT(*) AS n_events
-        |FROM s GROUP BY user_id, sid
-        |ORDER BY user_id, session_start_us""".stripMargin,
-
-    // right-side (user, ts) ties pre-collapsed to the GREATEST payload —
-    // the Spark side's documented tie rule — because native ASOF leaves
-    // tie choice unspecified; a no-op on tie-free data, deterministic if
-    // a future generator ever emits ties
-    "e3_asof_attribution" ->
-      """SELECT p.event_id, p.user_id,
-        |       c.event_id AS click_id, c.value AS click_value
-        |FROM (SELECT * FROM events WHERE event_type = 'purchase') p
-        |ASOF LEFT JOIN (
-        |  SELECT * FROM events WHERE event_type = 'click'
-        |  QUALIFY ROW_NUMBER() OVER (PARTITION BY user_id, ts
-        |            ORDER BY event_id DESC, value DESC) = 1) c
-        |  ON p.user_id = c.user_id AND p.ts >= c.ts
-        |ORDER BY p.event_id""".stripMargin,
-
-    // same tie pre-collapse as e3 (see the comment there)
-    "e8_asof_forward" ->
-      """SELECT p.event_id, p.user_id,
-        |       v.event_id AS view_id, v.value AS view_value
-        |FROM (SELECT * FROM events WHERE event_type = 'purchase') p
-        |ASOF LEFT JOIN (
-        |  SELECT * FROM events WHERE event_type = 'view'
-        |  QUALIFY ROW_NUMBER() OVER (PARTITION BY user_id, ts
-        |            ORDER BY event_id DESC, value DESC) = 1) v
-        |  ON p.user_id = v.user_id AND p.ts <= v.ts
-        |ORDER BY p.event_id""".stripMargin,
-
-    "e2_props_extract" ->
-      """SELECT event_type,
-        |       CAST(SUM(CAST(json_extract_string(props, '$.k') AS BIGINT))
-        |            AS BIGINT) AS sum_k,
-        |       COUNT(*) AS cnt
-        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
-
-    "o3_default_page" ->
-      """SELECT CAST(o_orderkey AS VARCHAR) AS item_id,
-        |       o_orderstatus AS status
-        |FROM orders ORDER BY item_id LIMIT 100""".stripMargin,
-
-    "o4_topk_overfetch" ->
-      """SELECT CAST(o_orderkey AS VARCHAR) AS item_id,
-        |       o_totalprice AS totalprice
-        |FROM orders WHERE o_totalprice > 1000
-        |ORDER BY o_totalprice DESC, item_id ASC LIMIT 50""".stripMargin,
-
-    "o6_pagination" ->
-      """SELECT item_id, mktsegment FROM (
-        |  SELECT CAST(c_custkey AS VARCHAR) AS item_id,
-        |         c_mktsegment AS mktsegment
-        |  FROM customer ORDER BY c_mktsegment, item_id LIMIT 100 OFFSET 100
-        |) ORDER BY mktsegment, item_id""".stripMargin,
-
-    "m1_put_get" ->
-      """SELECT CAST(r_regionkey AS VARCHAR) AS item_id, r_name AS name
-        |FROM region ORDER BY item_id""".stripMargin,
-
-    "m2_patch_null_delete" ->
-      """SELECT CAST(n_nationkey AS VARCHAR) AS item_id, n_name AS name,
-        |       TRUE AS patched, CAST(NULL AS INTEGER) AS regionkey
-        |FROM nation ORDER BY item_id""".stripMargin,
-
-    "m3_delete_collection" ->
-      """SELECT 'regions-b~' AS document_uri,
-        |       CAST(r_regionkey AS VARCHAR) AS item_id, r_name AS name
-        |FROM region ORDER BY document_uri, item_id""".stripMargin,
-
-    "m4_delete_items" ->
-      """SELECT CAST(s_suppkey AS VARCHAR) AS item_id, s_name AS name,
-        |       s_acctbal AS acctbal
-        |FROM supplier WHERE s_suppkey > 50 ORDER BY item_id LIMIT 200""".stripMargin,
-
-    "m5_post_idgen" ->
-      """SELECT lpad(CAST(ROW_NUMBER() OVER (ORDER BY r_regionkey) AS VARCHAR), 19, '0')
-        |         AS item_id,
-        |       r_name AS name,
-        |       lpad(CAST(ROW_NUMBER() OVER (ORDER BY r_regionkey) AS VARCHAR), 19, '0')
-        |         AS injected_id
-        |FROM region ORDER BY item_id""".stripMargin,
-
-    "m9_rejected_ops" ->
-      """SELECT CAST(n_nationkey AS BIGINT) AS seq,
-        |       'ghost~/' || CAST(n_nationkey AS VARCHAR) AS path,
-        |       'PATCH' AS method, 'not-found' AS code
-        |FROM nation WHERE n_nationkey < 5
-        |UNION ALL
-        |SELECT 100, 'ghost~', 'PUT', 'collection-put-not-implemented'
-        |ORDER BY seq""".stripMargin,
-
-    "m10_timestamps" ->
-      """SELECT CAST(n_nationkey AS VARCHAR) AS item_id,
-        |       CAST(60000 AS BIGINT) AS created_ms,
-        |       CAST(120000 AS BIGINT) AS modified_ms
-        |FROM nation ORDER BY item_id""".stripMargin,
-
-    // decimal results are emitted as doubles on both sides: the driver's
-    // hasher diverges on DECIMAL columns (see decAsDouble scaladoc)
-    "m6_index_build" ->
-      """SELECT CAST(s_suppkey AS VARCHAR) AS item_id, s_acctbal AS d0
-        |FROM supplier WHERE s_acctbal > 1000 ORDER BY item_id""".stripMargin,
-
-    "s4_index_scan" ->
-      """SELECT CAST(c_custkey AS VARCHAR) AS item_id, c_acctbal AS acctbal
-        |FROM customer WHERE c_acctbal > 1000 AND c_acctbal < 5000
-        |ORDER BY c_acctbal, item_id LIMIT 1000""".stripMargin,
-
-    "o6_index_pagination" ->
-      """SELECT item_id, acctbal FROM (
-        |  SELECT CAST(c_custkey AS VARCHAR) AS item_id, c_acctbal AS acctbal
-        |  FROM customer ORDER BY c_acctbal, item_id LIMIT 100 OFFSET 100
-        |) ORDER BY item_id""".stripMargin,
-
-    "o4_index_skipmax" ->
-      """SELECT CAST(c_custkey AS VARCHAR) AS item_id, c_acctbal AS acctbal
-        |FROM customer
-        |WHERE c_acctbal > 0 AND c_mktsegment = 'BUILDING'
-        |ORDER BY c_acctbal, item_id LIMIT 10""".stripMargin,
-
-    "s2_asof_scan" ->
-      """SELECT CAST(s_suppkey AS VARCHAR) AS item_id,
-        |       CASE WHEN s_suppkey <= 20 THEN s_acctbal + 10000
-        |            ELSE s_acctbal END AS acctbal_now,
-        |       s_acctbal AS acctbal_v1
-        |FROM supplier ORDER BY item_id""".stripMargin,
-
-    "m8_index_maintenance" ->
-      """SELECT CAST(s_suppkey AS VARCHAR) AS item_id,
-        |       CASE WHEN s_suppkey <= 20 THEN s_acctbal + 10000
-        |            ELSE s_acctbal END AS acctbal
-        |FROM supplier
-        |WHERE (CASE WHEN s_suppkey <= 20 THEN s_acctbal + 10000
-        |            ELSE s_acctbal END) > 5000
-        |ORDER BY item_id""".stripMargin,
-
-    "m7_index_drop_durable" ->
-      """SELECT CAST(s_suppkey AS VARCHAR) AS item_id, s_acctbal AS acctbal
-        |FROM supplier WHERE s_acctbal > 5000 ORDER BY item_id""".stripMargin,
-
-    "st1_feed_events" ->
-      """WITH puts AS (
-        |  SELECT CAST(r_regionkey AS VARCHAR) AS item_id, 'feed:put' AS method,
-        |         ROW_NUMBER() OVER (ORDER BY r_regionkey) AS revision
-        |  FROM region),
-        |dels AS (
-        |  SELECT CAST(r_regionkey AS VARCHAR) AS item_id, 'feed:delete' AS method,
-        |         (SELECT COUNT(*) FROM region) +
-        |         ROW_NUMBER() OVER (ORDER BY r_regionkey) AS revision
-        |  FROM region WHERE r_regionkey < 2)
-        |SELECT * FROM puts UNION ALL SELECT * FROM dels ORDER BY revision""".stripMargin,
-
-    "st2_pipeline_ledger" ->
-      """SELECT 'regions~/' || CAST(r_regionkey AS VARCHAR) || '#' ||
-        |       CAST(ROW_NUMBER() OVER (ORDER BY r_regionkey) AS VARCHAR)
-        |         AS txn_id,
-        |       ROW_NUMBER() OVER (ORDER BY r_regionkey) AS revision,
-        |       TRUE AS completed, CAST(1 AS BIGINT) AS dt_quantum
-        |FROM region ORDER BY txn_id""".stripMargin,
-
-    "st2_pipeline_indexed" ->
-      """SELECT CAST(s_suppkey AS VARCHAR) AS item_id,
-        |       CASE WHEN s_suppkey <= 20 THEN s_acctbal + 10000
-        |            ELSE s_acctbal END AS acctbal
-        |FROM supplier
-        |WHERE (CASE WHEN s_suppkey <= 20 THEN s_acctbal + 10000
-        |            ELSE s_acctbal END) > 5000
-        |ORDER BY item_id""".stripMargin,
-
-    "st6_stream_revisions" ->
-      """SELECT 'bucket' || CAST(c_custkey % 8 AS VARCHAR) || '~' AS document_uri,
-        |       COUNT(*) AS events,
-        |       COUNT(*) AS max_rev,
-        |       CAST(COUNT(*) * (COUNT(*) + 1) // 2 AS BIGINT) AS rev_sum,
-        |       COUNT(*) AS distinct_revs
-        |FROM customer GROUP BY 1 ORDER BY document_uri""".stripMargin,
-
-    "st4_transaction_list" ->
-      """WITH n AS (SELECT COUNT(*) AS c FROM region)
-        |SELECT 'regions~' AS document_uri,
-        |       string_agg('regions~/' || CAST(r_regionkey AS VARCHAR) || '#' ||
-        |                  CAST(c + r_regionkey + 1 AS VARCHAR), ','
-        |                  ORDER BY r_regionkey) AS pending
-        |FROM region, n WHERE r_regionkey < 3 GROUP BY 1""".stripMargin,
-
-    "st5_quantize" ->
-      """SELECT epoch_ms(ts) // 60000 AS quantum, COUNT(*) AS cnt
-        |FROM events GROUP BY 1 ORDER BY quantum""".stripMargin,
-
-    "st7_windowed_counts" ->
-      """SELECT (epoch_ms(ts) // 60000) * 60000 AS window_ms, COUNT(*) AS cnt
-        |FROM events GROUP BY 1 ORDER BY window_ms""".stripMargin,
-
-    "st15_stream_file_sink" ->
-      """SELECT doc_id, text, lang, source, n_chars
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    "st14_trending_topk" ->
-      """WITH c AS (
-        |  SELECT (epoch_ms(ts) // 60000) * 60000 AS window_ms,
-        |         event_type AS key, CAST(COUNT(*) AS BIGINT) AS cnt
-        |  FROM events GROUP BY 1, 2),
-        |r AS (
-        |  SELECT window_ms, key, cnt,
-        |         CAST(ROW_NUMBER() OVER (PARTITION BY window_ms
-        |                ORDER BY cnt DESC, key) AS BIGINT) AS rank
-        |  FROM c)
-        |SELECT window_ms, key, cnt, rank FROM r
-        |WHERE rank <= 3 ORDER BY window_ms, rank""".stripMargin,
-
-    "q1_agg" ->
-      """SELECT l_returnflag, l_linestatus,
-        |  CAST(CAST(CAST(SUM(CAST(l_quantity AS DECIMAL(18,2)))
-        |       AS DECIMAL(38,2)) AS VARCHAR) AS DOUBLE) AS sum_qty,
-        |  CAST(CAST(CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)))
-        |       AS DECIMAL(38,2)) AS VARCHAR) AS DOUBLE) AS sum_base,
-        |  COUNT(*) AS cnt
-        |FROM lineitem GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-
-    "q3_shipping" ->
-      """SELECT l_orderkey, CAST(CAST(revenue AS VARCHAR) AS DOUBLE) AS revenue
-        |FROM (
-        |  SELECT l_orderkey,
-        |    CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) *
-        |             CAST(1 - l_discount AS DECIMAL(18,2))) AS DECIMAL(38,4)) AS revenue
-        |  FROM lineitem
-        |  JOIN orders ON l_orderkey = o_orderkey
-        |  JOIN customer ON o_custkey = c_custkey
-        |  WHERE c_mktsegment = 'BUILDING'
-        |  GROUP BY l_orderkey ORDER BY revenue DESC, l_orderkey LIMIT 10)
-        |ORDER BY revenue DESC, l_orderkey""".stripMargin,
-
-    "q5_local_supplier" ->
-      """SELECT n_name,
-        |  CAST(CAST(CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) *
-        |           CAST(1 - l_discount AS DECIMAL(18,2))) AS DECIMAL(38,4))
-        |       AS VARCHAR) AS DOUBLE) AS revenue
-        |FROM lineitem
-        |JOIN orders ON l_orderkey = o_orderkey
-        |JOIN supplier ON l_suppkey = s_suppkey
-        |JOIN customer ON o_custkey = c_custkey AND c_nationkey = s_nationkey
-        |JOIN nation ON s_nationkey = n_nationkey
-        |JOIN region ON n_regionkey = r_regionkey
-        |WHERE r_name = 'ASIA'
-        |GROUP BY n_name ORDER BY revenue DESC, n_name""".stripMargin,
-
-    // Q8 shape: same decimal volume algebra as q5, conditional numerator,
-    // share = one double division of the string-rendered decimals;
-    // year() is BIGINT in DuckDB — cast to match Spark's INT
-    "q8_market_share" ->
-      """WITH v AS (
-        |  SELECT CAST(year(o_orderdate) AS INTEGER) AS o_year,
-        |         CAST(l_extendedprice AS DECIMAL(18,2)) *
-        |           CAST(1 - l_discount AS DECIMAL(18,2)) AS vol,
-        |         n2.n_name = 'NATION_1' AS is_n
-        |  FROM lineitem
-        |  JOIN orders ON l_orderkey = o_orderkey
-        |  JOIN part ON l_partkey = p_partkey AND p_type = 'PROMO'
-        |  JOIN supplier ON l_suppkey = s_suppkey
-        |  JOIN nation n2 ON s_nationkey = n2.n_nationkey
-        |  JOIN customer ON o_custkey = c_custkey
-        |  JOIN nation n1 ON c_nationkey = n1.n_nationkey
-        |  JOIN region ON n1.n_regionkey = r_regionkey AND r_name = 'ASIA'),
-        |a AS (
-        |  SELECT o_year,
-        |         CAST(CAST(CAST(COALESCE(SUM(CASE WHEN is_n THEN vol END), 0)
-        |              AS DECIMAL(38,4)) AS VARCHAR) AS DOUBLE)
-        |           AS nation_volume,
-        |         CAST(CAST(CAST(SUM(vol) AS DECIMAL(38,4)) AS VARCHAR)
-        |              AS DOUBLE) AS total_volume
-        |  FROM v GROUP BY o_year)
-        |SELECT o_year, nation_volume, total_volume,
-        |       nation_volume / total_volume AS mkt_share
-        |FROM a ORDER BY o_year""".stripMargin,
-
-    // unique (date, orderkey) window ordering: RANGE-vs-ROWS default
-    // framing cannot diverge; date_diff is BIGINT in DuckDB — cast to
-    // Spark's INT
-    "w2_running_total" ->
-      """SELECT o_custkey, o_orderkey,
-        |       CAST(CAST(CAST(o_totalprice AS DECIMAL(18,2)) AS VARCHAR)
-        |            AS DOUBLE) AS price,
-        |       CAST(CAST(CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) OVER w
-        |            AS DECIMAL(38,2)) AS VARCHAR) AS DOUBLE) AS run_total,
-        |       CAST(date_diff('day', LAG(o_orderdate) OVER w, o_orderdate)
-        |            AS INTEGER) AS gap_days
-        |FROM orders
-        |WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey)
-        |ORDER BY o_custkey, o_orderkey""".stripMargin,
-
-    "q4_order_priority" ->
-      """SELECT o_orderpriority, COUNT(*) AS n_orders
-        |FROM orders o
-        |WHERE o.o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
-        |  AND o.o_orderdate < TIMESTAMP '1996-07-01 00:00:00'
-        |  AND EXISTS (SELECT 1 FROM lineitem l
-        |              WHERE l.l_orderkey = o.o_orderkey
-        |                AND l.l_returnflag = 'R')
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "q13_customer_distribution" ->
-      """SELECT c_count, COUNT(*) AS custdist FROM (
-        |  SELECT c_custkey, COUNT(o_orderkey) AS c_count
-        |  FROM customer LEFT JOIN orders
-        |    ON c_custkey = o_custkey AND o_orderstatus != 'F'
-        |  GROUP BY 1)
-        |GROUP BY 1 ORDER BY custdist DESC, c_count DESC""".stripMargin,
-
-    "w3_moving_avg" ->
-      """SELECT o_custkey, o_orderkey,
-        |       CAST(CAST(CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) OVER w
-        |            AS DECIMAL(38,2)) AS VARCHAR) AS DOUBLE) AS mov_sum,
-        |       CAST(CAST(CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) OVER w
-        |            AS DECIMAL(38,2)) AS VARCHAR) AS DOUBLE)
-        |         / COUNT(*) OVER w AS mov_avg,
-        |       COUNT(*) OVER w AS n_win
-        |FROM orders WHERE o_custkey % 10 = 0
-        |WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
-        |             ROWS BETWEEN 6 PRECEDING AND CURRENT ROW)
-        |ORDER BY o_custkey, o_orderkey""".stripMargin,
-
-    "w4_rank_family" ->
-      """SELECT o_orderkey, o_orderpriority,
-        |       DENSE_RANK() OVER w AS drnk,
-        |       PERCENT_RANK() OVER w AS prank,
-        |       NTILE(4) OVER w AS ntile4,
-        |       CUME_DIST() OVER w AS cdist
-        |FROM orders WHERE o_custkey % 20 = 0
-        |WINDOW w AS (PARTITION BY o_orderpriority
-        |             ORDER BY o_totalprice, o_orderkey)
-        |ORDER BY o_orderkey""".stripMargin,
-
-    "e12_gap_fill" ->
-      """WITH ev AS (
-        |  SELECT event_type, epoch_ms(ts) // 86400000 AS day_no
-        |  FROM events),
-        |counts AS (SELECT event_type, day_no, COUNT(*) AS c
-        |           FROM ev GROUP BY 1, 2),
-        |spans AS (SELECT event_type, MIN(day_no) AS d0, MAX(day_no) AS d1
-        |          FROM ev GROUP BY 1),
-        |scaffold AS (SELECT event_type, unnest(range(d0, d1 + 1)) AS day_no
-        |             FROM spans)
-        |SELECT s.event_type, s.day_no,
-        |       CAST(COALESCE(c.c, 0) AS BIGINT) AS cnt
-        |FROM scaffold s LEFT JOIN counts c USING (event_type, day_no)
-        |ORDER BY event_type, day_no""".stripMargin,
-
-    "q6_date_range" ->
-      """SELECT date_trunc('month', o_orderdate) AS month, COUNT(*) AS cnt,
-        |       CAST(CAST(CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2)))
-        |            AS DECIMAL(38,2)) AS VARCHAR) AS DOUBLE) AS total
-        |FROM orders
-        |WHERE o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
-        |  AND o_orderdate < TIMESTAMP '1997-01-01 00:00:00'
-        |GROUP BY 1 ORDER BY month""".stripMargin,
-
-    // same exact-decimal power sums, same string→double conversion, same
-    // scalar formula text ⇒ bit-identical doubles on both engines
-    "q7_stats" ->
-      """WITH a AS (
-        |  SELECT l_returnflag,
-        |    COUNT(*) AS cnt, CAST(COUNT(*) AS DOUBLE) AS nd,
-        |    CAST(CAST(CAST(SUM(CAST(l_quantity AS DECIMAL(18,2)))
-        |         AS DECIMAL(38,2)) AS VARCHAR) AS DOUBLE) AS sq,
-        |    CAST(CAST(CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)))
-        |         AS DECIMAL(38,2)) AS VARCHAR) AS DOUBLE) AS sp,
-        |    CAST(CAST(CAST(SUM(CAST(CAST(l_quantity AS DECIMAL(18,2)) *
-        |                            CAST(l_quantity AS DECIMAL(18,2))
-        |                       AS DECIMAL(38,4)))
-        |         AS DECIMAL(38,4)) AS VARCHAR) AS DOUBLE) AS sqq,
-        |    CAST(CAST(CAST(SUM(CAST(CAST(l_extendedprice AS DECIMAL(18,2)) *
-        |                            CAST(l_extendedprice AS DECIMAL(18,2))
-        |                       AS DECIMAL(38,4)))
-        |         AS DECIMAL(38,4)) AS VARCHAR) AS DOUBLE) AS spp,
-        |    CAST(CAST(CAST(SUM(CAST(CAST(l_extendedprice AS DECIMAL(18,2)) *
-        |                            CAST(l_quantity AS DECIMAL(18,2))
-        |                       AS DECIMAL(38,4)))
-        |         AS DECIMAL(38,4)) AS VARCHAR) AS DOUBLE) AS spq
-        |  FROM lineitem GROUP BY 1)
-        |SELECT l_returnflag, cnt,
-        |  (sqq - sq * sq / nd) / (nd - 1) AS var_qty,
-        |  sqrt((spp - sp * sp / nd) / (nd - 1)) AS sd_price,
-        |  ((spq - sp * sq / nd) / (nd - 1)) /
-        |    (sqrt((sqq - sq * sq / nd) / (nd - 1)) *
-        |     sqrt((spp - sp * sp / nd) / (nd - 1))) AS corr_qty_price
-        |FROM a ORDER BY l_returnflag""".stripMargin,
-
-    "w1_window_rank" ->
-      """SELECT event_id, user_id,
-        |       ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY ts, event_id) AS rn,
-        |       LAG(event_id, 1) OVER (PARTITION BY user_id ORDER BY ts, event_id)
-        |         AS prev_event_id
-        |FROM events WHERE user_id < 20 ORDER BY event_id""".stripMargin,
-
-    // the stream-stream join's final table is exactly the batch
-    // time-interval join (full-span watermark: nothing late in replay)
-    "st11_stream_stream_join" ->
-      """WITH v AS (
-        |  SELECT event_id AS view_id, user_id, ts AS vts FROM events
-        |  WHERE event_type = 'view'),
-        |c AS (
-        |  SELECT event_id AS click_id, user_id, ts AS cts FROM events
-        |  WHERE event_type = 'click')
-        |SELECT c.click_id, v.view_id
-        |FROM c JOIN v ON c.user_id = v.user_id
-        | AND v.vts <= c.cts AND v.vts >= c.cts - INTERVAL 10 MINUTE
-        |ORDER BY click_id, view_id""".stripMargin,
-
-    // the streamed left-outer table equals the batch left join: real
-    // watermark (1 min), chronological triggers, sentinel-closed windows
-    "st19_stream_outer_join" ->
-      """WITH v AS (
-        |  SELECT event_id AS view_id, user_id, ts AS vts FROM events
-        |  WHERE event_type = 'view'),
-        |c AS (
-        |  SELECT event_id AS click_id, user_id, ts AS cts FROM events
-        |  WHERE event_type = 'click')
-        |SELECT c.click_id, COALESCE(v.view_id, -1) AS view_id
-        |FROM c LEFT JOIN v ON c.user_id = v.user_id
-        | AND v.vts <= c.cts AND v.vts >= c.cts - INTERVAL 10 MINUTE
-        |ORDER BY click_id, view_id""".stripMargin,
-
-    // the mirror outer side over the SAME fixture: every view retained,
-    // null-extended when no click's lookback window covered it
-    "st20_stream_right_join" ->
-      """WITH v AS (
-        |  SELECT event_id AS view_id, user_id, ts AS vts FROM events
-        |  WHERE event_type = 'view'),
-        |c AS (
-        |  SELECT event_id AS click_id, user_id, ts AS cts FROM events
-        |  WHERE event_type = 'click')
-        |SELECT v.view_id, COALESCE(c.click_id, -1) AS click_id
-        |FROM v LEFT JOIN c ON c.user_id = v.user_id
-        | AND v.vts <= c.cts AND v.vts >= c.cts - INTERVAL 10 MINUTE
-        |ORDER BY view_id, click_id""".stripMargin,
-
-    // identity: the entries exist to prove the JSON/ORC round trip
-    // changes nothing
-    "src_json_roundtrip" ->
-      """SELECT doc_id, text, lang, source, n_chars
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    "src_orc_roundtrip" ->
-      """SELECT doc_id, text, lang, source, n_chars
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    "src_csv_roundtrip" ->
-      """SELECT doc_id, text, lang, source, n_chars
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    "src_partitioned_layout" ->
-      """SELECT doc_id, lang, n_chars FROM documents
-        |WHERE lang = 'en' ORDER BY doc_id""".stripMargin,
-    "src_schema_evolution" ->
-      """SELECT doc_id, lang, CAST(NULL AS DOUBLE) AS quality
-        |FROM documents WHERE doc_id % 2 = 0
-        |UNION ALL
-        |SELECT doc_id, lang, CAST(n_chars AS DOUBLE) / 100 AS quality
-        |FROM documents WHERE doc_id % 2 = 1
-        |ORDER BY doc_id""".stripMargin,
-
-    // same strictly-ordered first-completion chain, stage CTE per step;
-    // counts only, so timestamp representation never reaches the output
-    "e5_funnel" ->
-      """WITH s0 AS (
-        |  SELECT user_id, MIN(ts) AS t0 FROM events
-        |  WHERE event_type = 'view' GROUP BY user_id),
-        |s1 AS (
-        |  SELECT e.user_id, s0.t0, MIN(e.ts) AS t1
-        |  FROM events e JOIN s0 USING (user_id)
-        |  WHERE e.event_type = 'click' AND e.ts > s0.t0
-        |  GROUP BY e.user_id, s0.t0),
-        |s2 AS (
-        |  SELECT e.user_id, MIN(e.ts) AS t2
-        |  FROM events e JOIN s1 USING (user_id)
-        |  WHERE e.event_type = 'purchase' AND e.ts > s1.t1
-        |  GROUP BY e.user_id, s1.t0, s1.t1)
-        |SELECT * FROM (
-        |  SELECT 'view' AS step, CAST(1 AS BIGINT) AS step_no,
-        |         (SELECT COUNT(*) FROM s0) AS users
-        |  UNION ALL
-        |  SELECT 'click', CAST(2 AS BIGINT), (SELECT COUNT(*) FROM s1)
-        |  UNION ALL
-        |  SELECT 'purchase', CAST(3 AS BIGINT), (SELECT COUNT(*) FROM s2))
-        |ORDER BY step_no""".stripMargin,
-
-    // weekly retention triangle from distinct (user, epoch-ms week);
-    // integer arithmetic only
-    "e6_retention" ->
-      """WITH up AS (
-        |  SELECT DISTINCT user_id AS u, epoch_ms(ts) // 604800000 AS w
-        |  FROM events),
-        |c AS (SELECT u, MIN(w) AS cohort FROM up GROUP BY u)
-        |SELECT c.cohort, up.w - c.cohort AS "offset", COUNT(*) AS users
-        |FROM up JOIN c USING (u)
-        |GROUP BY c.cohort, up.w - c.cohort
-        |ORDER BY cohort, "offset"""".stripMargin,
-
-    // trailing-row-window anomaly replay; window SUM/COUNT cast from
-    // HUGEINT, flag is the same integer cross-multiplication
-    "e7_count_anomaly" -> countAnomalyOracle,
-
-    // streaming anomaly ≡ batch anomaly when finalized buckets arrive in
-    // order (pinned-mtime two-trigger harness): the gate checks the
-    // identity against the SAME replay
-    "st17_stream_anomaly" -> countAnomalyOracle,
-
-    // transition replay: same (ts, event_id) lag adjacency, integer
-    // counts, one division per cell
-    "e11_markov_transitions" ->
-      """WITH p AS (
-        |  SELECT LAG(event_type) OVER w AS from_type,
-        |         event_type AS to_type
-        |  FROM events
-        |  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-        |c AS (
-        |  SELECT from_type, to_type, CAST(COUNT(*) AS BIGINT) AS cnt
-        |  FROM p WHERE from_type IS NOT NULL GROUP BY 1, 2)
-        |SELECT from_type, to_type, cnt,
-        |       CAST(SUM(cnt) OVER (PARTITION BY from_type) AS BIGINT)
-        |         AS row_total,
-        |       CAST(cnt AS DOUBLE) /
-        |         CAST(CAST(SUM(cnt) OVER (PARTITION BY from_type)
-        |              AS BIGINT) AS DOUBLE) AS prob
-        |FROM c ORDER BY from_type, to_type""".stripMargin,
-
-    // path replay: same (ts, event_id) rank, ordered string_agg join
-    "e10_user_paths" ->
-      """WITH r AS (
-        |  SELECT user_id, event_type,
-        |         ROW_NUMBER() OVER (PARTITION BY user_id
-        |                            ORDER BY ts, event_id) AS rn
-        |  FROM events),
-        |p AS (
-        |  SELECT user_id, string_agg(event_type, '>' ORDER BY rn) AS path
-        |  FROM r WHERE rn <= 5 GROUP BY user_id)
-        |SELECT path, CAST(COUNT(*) AS BIGINT) AS users
-        |FROM p GROUP BY path ORDER BY users DESC, path LIMIT 20""".stripMargin,
-
-    // EWMA replay: same compressed (type, bucket) table, per-row prefix
-    // fold via list_reduce — identical order, identical IEEE ops (0.25
-    // and 0.75 are dyadic, so the DECIMAL→DOUBLE literal conversion is
-    // exact); single-element prefix = the seed, matching out(0) = x(0)
-    "e9_ewma_smooth" -> ewmaOracle,
-
-    // streaming EWMA ≡ batch EWMA when finalized buckets arrive in order
-    // (two bucket-split triggers): the gate checks the identity against
-    // the SAME replay
-    "st16_stream_ewma" -> ewmaOracle,
-
-    "e1_sessionize" ->
-      """WITH g AS (
-        |  SELECT user_id,
-        |         CASE WHEN LAG(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id)
-        |                IS NULL
-        |              OR epoch_ms(ts) - epoch_ms(LAG(ts) OVER
-        |                (PARTITION BY user_id ORDER BY ts, event_id)) > 1800000
-        |              THEN 1 ELSE 0 END AS new_session
-        |  FROM events WHERE user_id < 50)
-        |SELECT user_id, CAST(SUM(new_session) AS BIGINT) AS n_sessions,
-        |       COUNT(*) AS n_events
-        |FROM g GROUP BY user_id ORDER BY user_id""".stripMargin,
-
-    "e4_interval_join" ->
-      """SELECT a.event_id,
-        |       CAST(COUNT(b.ts) AS BIGINT) AS matches,
-        |       MIN(epoch_ms(b.ts)) AS next_ts_ms
-        |FROM events a LEFT JOIN events b
-        |  ON b.event_type = a.event_type
-        | AND epoch_ms(b.ts) > epoch_ms(a.ts)
-        | AND epoch_ms(b.ts) <= epoch_ms(a.ts) + 600000
-        |GROUP BY a.event_id ORDER BY a.event_id""".stripMargin,
-
-    "dedup_exact" ->
-      """SELECT MIN(doc_id) AS doc_id, CAST(2 * COUNT(*) AS BIGINT) AS copies
-        |FROM documents GROUP BY text ORDER BY doc_id""".stripMargin,
-
-    // same re-injection as the entry; copies per TEXT equivalence class
-    // (sha-256 keying and text equality partition rows identically),
-    // weight = one double division of the exact integer count
-    "dedup_soft_weights" ->
-      """WITH d AS (
-        |  SELECT doc_id, text FROM documents
-        |  UNION ALL
-        |  SELECT doc_id + 1000000, text FROM documents WHERE doc_id % 3 = 0),
-        |counts AS (
-        |  SELECT text, CAST(COUNT(*) AS BIGINT) AS copies FROM d GROUP BY text)
-        |SELECT d.doc_id, counts.copies,
-        |       CAST(1 AS DOUBLE) / counts.copies AS weight
-        |FROM d JOIN counts USING (text) ORDER BY doc_id""".stripMargin,
-
-    // survivor-policy replay: same injected ASCII perturbation, same
-    // normalization fingerprint, longest-then-min-id via a window (the
-    // Spark side rides max_by on (len, −id) — same total order)
-    "dedup_norm_survivor" ->
-      """WITH ad AS (
-        |  SELECT doc_id, text FROM documents
-        |  UNION ALL
-        |  SELECT doc_id + 1000000, '  ' || text || ' !!'
-        |  FROM documents WHERE doc_id % 3 = 0),
-        |f AS (
-        |  SELECT doc_id,
-        |         md5(trim(regexp_replace(regexp_replace(lower(text),
-        |           '[^a-z0-9]+', ' ', 'g'), ' +', ' ', 'g'))) AS norm_fp,
-        |         length(text) AS len
-        |  FROM ad),
-        |r AS (
-        |  SELECT norm_fp, doc_id, len,
-        |         ROW_NUMBER() OVER (PARTITION BY norm_fp
-        |                            ORDER BY len DESC, doc_id) AS rn,
-        |         COUNT(*) OVER (PARTITION BY norm_fp) AS copies,
-        |         MAX(len) OVER (PARTITION BY norm_fp) AS max_len
-        |  FROM f)
-        |SELECT norm_fp, doc_id, CAST(copies AS BIGINT) AS copies,
-        |       CAST(max_len AS BIGINT) AS max_len
-        |FROM r WHERE rn = 1 ORDER BY doc_id""".stripMargin,
-
-    "dedup_ngram_jaccard" -> jaccardOracle,
-    // the prefix-filtered path must reproduce the brute-force ground
-    // truth EXACTLY — losslessness is what the gate verifies; t = 0.9
-    // is the technique's regime (prefix ≈ 10% of each set)
-    "dedup_jaccard_prefix" -> jaccardOracleAt("0.9"),
-
-    "dedup_fuzzy_keys" ->
-      """WITH base AS (
-        |  SELECT doc_id, substring(text, 1, 24) AS k FROM documents
-        |  WHERE lang = 'en' AND length(substring(text, 1, 24)) = 24),
-        |typo0 AS (
-        |  SELECT doc_id,
-        |         substring(k, 1, CAST(doc_id % 20 AS INT)) ||
-        |         substring(k, CAST(doc_id % 20 AS INT) + 2, 24) AS k2
-        |  FROM base WHERE doc_id % 5 = 0),
-        |typos AS (SELECT doc_id + 1000000 AS doc_id, k2 AS k FROM typo0),
-        |ak AS (SELECT * FROM base UNION ALL SELECT * FROM typos),
-        |grams AS (
-        |  SELECT doc_id, unnest(list_distinct(
-        |    [substring(k, p, 4) FOR p IN range(1, len(k) - 4 + 2)])) AS g
-        |  FROM ak WHERE len(k) >= 4),
-        |f AS (SELECT g FROM grams GROUP BY g HAVING COUNT(*) <= 100),
-        |gg AS (SELECT doc_id, grams.g FROM grams JOIN f USING (g)),
-        |cand AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-        |         FROM gg a JOIN gg b ON a.g = b.g AND a.doc_id < b.doc_id)
-        |SELECT id_a, id_b,
-        |       CAST(levenshtein(ka.k, kb.k) AS BIGINT) AS dist
-        |FROM cand JOIN ak ka ON cand.id_a = ka.doc_id
-        |          JOIN ak kb ON cand.id_b = kb.doc_id
-        |WHERE levenshtein(ka.k, kb.k) <= 1
-        |ORDER BY id_a, id_b""".stripMargin,
-
-    // brute-force containment ground truth: candidates-from-shared-shingles
-    // is exactly the inter > 0 pair set, so the full cross check replays
-    // the candidate path; integer threshold, one division for the score
-    "dedup_containment" ->
-      """WITH toks AS (
-        |  SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-        |sh AS (
-        |  SELECT doc_id,
-        |    CASE WHEN len(t) >= 3
-        |         THEN list_distinct([array_to_string(t[i:i+2], ' ')
-        |                             FOR i IN range(1, len(t) - 1)])
-        |         ELSE [array_to_string(t, ' ')] END AS s
-        |  FROM toks),
-        |pairs AS (
-        |  SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-        |         len(list_intersect(a.s, b.s)) AS inter,
-        |         LEAST(len(a.s), len(b.s)) AS min_sz
-        |  FROM sh a JOIN sh b ON a.doc_id < b.doc_id)
-        |SELECT id_a, id_b, CAST(inter AS DOUBLE) / min_sz AS containment
-        |FROM pairs
-        |WHERE inter > 0 AND inter * 100 >= min_sz * 80
-        |ORDER BY id_a, id_b""".stripMargin,
-    "dedup_minhash_lsh" -> jaccardOracle,
-
-    // CDC replay: same injected shifted copies, same md5-boundary rule,
-    // boundary-count window, ordered chunk reassembly, chunk-hash counts
-    "dedup_cdc_chunks" ->
-      """WITH ad AS (
-        |  SELECT doc_id, text FROM documents
-        |  UNION ALL
-        |  SELECT doc_id + 1000000, 'shiftedprefixtoken ' || text
-        |  FROM documents),
-        |toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM ad),
-        |tk AS (
-        |  SELECT doc_id,
-        |         unnest([{'p': i, 'tok': t[i]}
-        |                 FOR i IN range(1, len(t) + 1)]) AS u
-        |  FROM toks),
-        |t2 AS (SELECT doc_id, u.p AS pos, u.tok AS tok FROM tk
-        |       WHERE u.tok != ''),
-        |f AS (
-        |  SELECT doc_id, pos, tok,
-        |         CASE WHEN ('0x' || substr(md5(tok), 1, 15))::BIGINT % 8 = 0
-        |              THEN 1 ELSE 0 END AS b
-        |  FROM t2),
-        |c AS (
-        |  SELECT doc_id, pos, tok,
-        |         COALESCE(SUM(b) OVER (PARTITION BY doc_id ORDER BY pos
-        |           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-        |           AS chunk
-        |  FROM f),
-        |ch AS (
-        |  SELECT doc_id, chunk, string_agg(tok, ' ' ORDER BY pos)
-        |           AS chunk_text
-        |  FROM c GROUP BY 1, 2)
-        |SELECT md5(chunk_text) AS chunk_hash,
-        |       CAST(COUNT(DISTINCT doc_id) AS BIGINT) AS n_docs,
-        |       CAST(COUNT(*) AS BIGINT) AS n_occurrences
-        |FROM ch GROUP BY 1 HAVING COUNT(DISTINCT doc_id) > 1
-        |ORDER BY n_docs DESC, n_occurrences DESC, chunk_hash""".stripMargin,
-
-    // signature-agreement estimator replay: same doubled corpus, same
-    // seeded md5 signature mins, candidates from band-key equality,
-    // matches counted per seed, one division
-    "dedup_minhash_est" ->
-      """WITH ad AS (
-        |  SELECT doc_id, text FROM documents
-        |  UNION ALL SELECT doc_id + 1000000, text FROM documents),
-        |toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM ad),
-        |sh AS (
-        |  SELECT doc_id,
-        |    CASE WHEN len(t) >= 3
-        |         THEN list_distinct([array_to_string(t[i:i+2], ' ')
-        |                             FOR i IN range(1, len(t) - 1)])
-        |         ELSE [array_to_string(t, ' ')] END AS s
-        |  FROM toks),
-        |ex AS (SELECT doc_id, unnest(s) AS g FROM sh),
-        |hx AS (
-        |  SELECT doc_id, i,
-        |         MIN(('0x' || substr(md5(CAST(i AS VARCHAR) || '|' || g),
-        |                             1, 15))::BIGINT) AS m
-        |  FROM ex CROSS JOIN (SELECT unnest(range(0, 8)) AS i)
-        |  GROUP BY doc_id, i),
-        |bk AS (
-        |  SELECT doc_id, CAST(i // 2 AS INTEGER) AS band,
-        |         list(m ORDER BY i) AS key
-        |  FROM hx GROUP BY doc_id, band),
-        |cand AS (
-        |  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-        |  FROM bk a JOIN bk b
-        |    ON a.band = b.band AND a.key = b.key AND a.doc_id < b.doc_id),
-        |ag AS (
-        |  SELECT c.id_a, c.id_b,
-        |         CAST(SUM(CASE WHEN ha.m = hb.m THEN 1 ELSE 0 END)
-        |              AS BIGINT) AS matches
-        |  FROM cand c
-        |  JOIN hx ha ON ha.doc_id = c.id_a
-        |  JOIN hx hb ON hb.doc_id = c.id_b AND hb.i = ha.i
-        |  GROUP BY 1, 2)
-        |SELECT id_a, id_b, matches,
-        |       CAST(matches AS DOUBLE) / 8.0 AS est_jaccard
-        |FROM ag ORDER BY id_a, id_b""".stripMargin,
-
-    "text_decontaminate_fuzzy" ->
-      """WITH ev AS (
-        |  SELECT doc_id, text FROM documents WHERE doc_id % 97 = 0),
-        |ad AS (
-        |  SELECT 't' AS side, doc_id, text FROM documents
-        |  WHERE doc_id % 97 <> 0
-        |  UNION ALL SELECT 't', doc_id + 1000000, text FROM ev
-        |  UNION ALL SELECT 'e', doc_id, text FROM ev),
-        |toks AS (SELECT side, doc_id, string_split(text, ' ') AS t FROM ad),
-        |sh AS (
-        |  SELECT side, doc_id,
-        |    CASE WHEN len(t) >= 3
-        |         THEN list_distinct([array_to_string(t[i:i+2], ' ')
-        |                             FOR i IN range(1, len(t) - 1)])
-        |         ELSE [array_to_string(t, ' ')] END AS s
-        |  FROM toks),
-        |ex AS (SELECT side, doc_id, unnest(s) AS g FROM sh),
-        |hx AS (
-        |  SELECT side, doc_id, i,
-        |         MIN(('0x' || substr(md5(CAST(i AS VARCHAR) || '|' || g),
-        |                             1, 15))::BIGINT) AS m
-        |  FROM ex CROSS JOIN (SELECT unnest(range(0, 8)) AS i)
-        |  GROUP BY side, doc_id, i),
-        |bk AS (
-        |  SELECT side, doc_id, CAST(i // 2 AS INTEGER) AS band,
-        |         list(m ORDER BY i) AS key
-        |  FROM hx GROUP BY side, doc_id, band),
-        |cand AS (
-        |  SELECT DISTINCT a.doc_id AS did, b.doc_id AS eid
-        |  FROM bk a JOIN bk b
-        |    ON a.band = b.band AND a.key = b.key
-        |   AND a.side = 't' AND b.side = 'e'),
-        |ag AS (
-        |  SELECT c.did, c.eid,
-        |         CAST(SUM(CASE WHEN ha.m = hb.m THEN 1 ELSE 0 END)
-        |              AS BIGINT) AS matches
-        |  FROM cand c
-        |  JOIN hx ha ON ha.side = 't' AND ha.doc_id = c.did
-        |  JOIN hx hb ON hb.side = 'e' AND hb.doc_id = c.eid AND hb.i = ha.i
-        |  GROUP BY 1, 2),
-        |best AS (
-        |  SELECT did, eid, matches,
-        |         ROW_NUMBER() OVER (PARTITION BY did
-        |                            ORDER BY matches DESC, eid) AS rn
-        |  FROM ag)
-        |SELECT did AS doc_id, eid AS eval_id, matches,
-        |       CAST(matches AS DOUBLE) / 8.0 AS est_jaccard
-        |FROM best WHERE rn = 1 AND matches >= 4
-        |ORDER BY doc_id""".stripMargin,
-
-    // cross-parity ground truth: same shingle semantics as jaccardOracle,
-    // odd (batch) rows joined against even (corpus) rows
-    "dedup_incremental" -> incrementalPairsOracle,
-    // the streaming loop produces the identical pair set: each micro-batch
-    // row probes the static corpus independently, so the trigger split is
-    // invisible in the final table
-    "st10_stream_corpus_dedup" -> incrementalPairsOracle,
-    "dedup_clusters" -> clustersOracle,
-    "dedup_simhash" -> simhashOracle,
-    "ann_lsh_topk" -> annLshOracle,
-    "ann_ivf_topk" -> annIvfOracle,
-    "ann_ivf_trained_topk" ->
-      annIvfTrainedOracle(nlist = 16, iters = 2, nprobe = 4, k = 5),
-
-    // trained SemDeDup replay: the Lloyd chain's centroids feed the same
-    // cluster-scoped pair search as the seeded dedup_semantic oracle
-    "dedup_semantic_trained" ->
-      (kmediansCtes(16, 2) +
-        s"""scored AS (
-           |  SELECT e.vec_id, e.v, c2.cid,
-           |         ROW_NUMBER() OVER (PARTITION BY e.vec_id
-           |            ORDER BY ${cosSql("e.v", "c2.cv")} DESC, c2.cid)
-           |           AS crn
-           |  FROM e CROSS JOIN c2),
-           |assign AS (SELECT vec_id, v, cid FROM scored WHERE crn = 1)
-           |SELECT a.cid, a.vec_id AS id_a, b.vec_id AS id_b
-           |FROM assign a JOIN assign b
-           |  ON a.cid = b.cid AND a.vec_id < b.vec_id
-           |WHERE ${cosSql("a.v", "b.v")} >= 0.4
-           |ORDER BY id_a, id_b""".stripMargin),
-
-    // outlier replay: the same trained-centroid chain, assigned-centroid
-    // cosine, one subtraction, top-k by (score DESC, id)
-    // per-dimension min/max over DOUBLE-cast components (float->double is
-    // lossless, so aggregating either side of the cast selects the same
-    // value), then the identical three-op map; a constant dimension
-    // yields code 0 on both engines
-    "embed_quantize_sq8" ->
-      """WITH ex AS (
-        |  SELECT vec_id, CAST(unnest(embedding) AS DOUBLE) AS e,
-        |         generate_subscripts(embedding, 1) AS i
-        |  FROM embeddings),
-        |cal AS (SELECT i, MIN(e) AS mn, MAX(e) AS mx FROM ex GROUP BY i),
-        |q AS (
-        |  SELECT vec_id, i,
-        |         CASE WHEN mx = mn THEN 0
-        |              ELSE CAST(round((e - mn) / (mx - mn) * 255) AS BIGINT)
-        |         END AS c
-        |  FROM ex JOIN cal USING (i))
-        |SELECT vec_id, CAST(i AS INTEGER) AS dim, c AS code
-        |FROM q ORDER BY vec_id, dim""".stripMargin,
-
-    "embed_outliers" ->
-      (kmediansCtes(16, 2) +
-        s"""scored AS (
-           |  SELECT e.vec_id, c2.cid, ${cosSql("e.v", "c2.cv")} AS csim,
-           |         ROW_NUMBER() OVER (PARTITION BY e.vec_id
-           |            ORDER BY ${cosSql("e.v", "c2.cv")} DESC, c2.cid)
-           |           AS crn
-           |  FROM e CROSS JOIN c2)
-           |SELECT vec_id, cid, 1.0::DOUBLE - csim AS outlier_score
-           |FROM scored WHERE crn = 1
-           |ORDER BY outlier_score DESC, vec_id LIMIT 25""".stripMargin),
-    "ann_pq_topk" -> annPqOracle(m = 8, ncodes = 8, sub = 8, k = 5, iters = 2),
-    "ann_ivfpq_topk" ->
-      annIvfPqOracle(nlist = 16, nprobe = 4, m = 8, ncodes = 8, sub = 8,
-        k = 5, iters = 2),
-    // the stored-table paths are bit-equivalent to the inline forms
-    // (integer codes; centroid/codeword doubles round-trip parquet
-    // exactly), so the same oracles replay them
-    "ann_pq_tables" -> annPqOracle(m = 8, ncodes = 8, sub = 8, k = 5, iters = 2),
-    "ann_ivfpq_tables" ->
-      annIvfPqOracle(nlist = 16, nprobe = 4, m = 8, ncodes = 8, sub = 8,
-        k = 5, iters = 2),
-    "dedup_embedding_cosine_lsh" -> cosineLshPairsOracle,
-
-    "ann_knn_graph" ->
-      s"""WITH e AS (
-         |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-         |bkt AS (
-         |  SELECT vec_id, v, ${bucketSql(6)} AS bucket FROM e),
-         |cand AS (
-         |  SELECT a.vec_id AS node_id, b.vec_id AS neighbor_id,
-         |         ${cosSql("a.v", "b.v")} AS sim
-         |  FROM bkt a JOIN bkt b ON a.vec_id != b.vec_id
-         |  WHERE bit_count(xor(CAST(a.bucket AS BIGINT),
-         |                      CAST(b.bucket AS BIGINT))) <= 1),
-         |ranked AS (
-         |  SELECT node_id, neighbor_id,
-         |         ROW_NUMBER() OVER (PARTITION BY node_id
-         |                            ORDER BY sim DESC, neighbor_id) AS rank
-         |  FROM cand)
-         |SELECT node_id, neighbor_id, rank FROM ranked WHERE rank <= 3
-         |ORDER BY node_id, rank""".stripMargin,
-
-    "graph_pagerank" -> pageRankOracle,
-    "graph_pagerank_dangling" -> pageRankDanglingOracle,
-    "graph_pagerank_personal" -> personalPageRankOracle,
-
-    "graph_knn_components" -> knnComponentsOracle,
-    // same closure oracle: the star algorithm must land the identical
-    // component minima the label-propagation entry lands
-    "graph_components_star" -> knnComponentsOracle,
-    "graph_triangles" -> knnTrianglesOracle,
-    "rag_mmr" -> mmrOracle(queryMax = 3, poolK = 20, outK = 5),
-    "ann_ivfpq_residual" -> annIvfPqResidualOracle(nlist = 16, nprobe = 4,
-      m = 8, ncodes = 8, sub = 8, k = 5, iters = 2),
-    // residual codes are exact integers and the stored centroid/codeword
-    // doubles round-trip parquet bit-exactly, so the inline residual
-    // oracle replays the stored-table serving path unchanged
-    "ann_ivfpq_residual_tables" -> annIvfPqResidualOracle(nlist = 16,
-      nprobe = 4, m = 8, ncodes = 8, sub = 8, k = 5, iters = 2),
-
-    "embed_robust_scale" ->
-      """WITH e AS (
-        |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-        |vals AS (
-        |  SELECT vec_id, generate_subscripts(v, 1) - 1 AS dim_idx,
-        |         unnest(v) AS x FROM e),
-        |cm AS (SELECT dim_idx, x, COUNT(*) AS c FROM vals GROUP BY 1, 2),
-        |cw AS (SELECT dim_idx, x,
-        |         SUM(c) OVER (PARTITION BY dim_idx ORDER BY x) AS cum,
-        |         SUM(c) OVER (PARTITION BY dim_idx) AS n
-        |       FROM cm),
-        |med AS (SELECT dim_idx, MIN(x) AS med FROM cw
-        |        WHERE cum >= GREATEST(1, CEIL(n * 0.5)) GROUP BY 1),
-        |dev AS (SELECT v.vec_id, v.dim_idx, v.x, m.med,
-        |               ABS(v.x - m.med) AS dv
-        |        FROM vals v JOIN med m USING (dim_idx)),
-        |dm AS (SELECT dim_idx, dv, COUNT(*) AS c FROM dev GROUP BY 1, 2),
-        |dw AS (SELECT dim_idx, dv,
-        |         SUM(c) OVER (PARTITION BY dim_idx ORDER BY dv) AS cum,
-        |         SUM(c) OVER (PARTITION BY dim_idx) AS n
-        |       FROM dm),
-        |mad AS (SELECT dim_idx, MIN(dv) AS mad FROM dw
-        |        WHERE cum >= GREATEST(1, CEIL(n * 0.5)) GROUP BY 1)
-        |SELECT d.vec_id, d.dim_idx,
-        |       CASE WHEN a.mad = 0 THEN 0.0
-        |            ELSE (d.x - d.med) / a.mad END AS scaled
-        |FROM dev d JOIN mad a USING (dim_idx)
-        |WHERE d.vec_id < 50
-        |ORDER BY vec_id, dim_idx""".stripMargin,
-
-    "dedup_substring" ->
-      """WITH w0 AS (
-        |  SELECT doc_id, unnest(list_distinct(
-        |    [substr(text, p, 40) FOR p IN range(1, len(text) - 40 + 2, 10)])) AS w
-        |  FROM documents WHERE len(text) >= 40),
-        |f AS (SELECT w FROM w0 GROUP BY w HAVING COUNT(*) <= 50),
-        |ww AS (SELECT doc_id, w0.w FROM w0 JOIN f USING (w))
-        |SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS shared
-        |FROM ww a JOIN ww b ON a.w = b.w AND a.doc_id < b.doc_id
-        |GROUP BY 1, 2 ORDER BY id_a, id_b""".stripMargin,
-
-    "dedup_semantic" ->
-      s"""WITH e AS (
-        |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-        |c AS (SELECT vec_id AS cid, v AS cv FROM e ORDER BY vec_id LIMIT 16),
-        |scored AS (
-        |  SELECT e.vec_id, e.v, c.cid,
-        |         ROW_NUMBER() OVER (PARTITION BY e.vec_id
-        |            ORDER BY ${cosSql("e.v", "c.cv")} DESC, c.cid) AS crn
-        |  FROM e CROSS JOIN c),
-        |assign AS (SELECT vec_id, v, cid FROM scored WHERE crn = 1)
-        |SELECT a.cid, a.vec_id AS id_a, b.vec_id AS id_b
-        |FROM assign a JOIN assign b
-        |  ON a.cid = b.cid AND a.vec_id < b.vec_id
-        |WHERE ${cosSql("a.v", "b.v")} >= 0.4
-        |ORDER BY id_a, id_b""".stripMargin,
-
-    "text_decontaminate" ->
-      """WITH toks AS (
-        |  SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-        |sh AS (
-        |  SELECT doc_id,
-        |    CASE WHEN len(t) >= 3
-        |         THEN list_distinct([array_to_string(t[i:i+2], ' ')
-        |                             FOR i IN range(1, len(t) - 1)])
-        |         ELSE [array_to_string(t, ' ')] END AS s
-        |  FROM toks),
-        |ev AS (SELECT DISTINCT g FROM sh, UNNEST(sh.s) AS u(g)
-        |       WHERE doc_id % 97 = 0)
-        |SELECT sh.doc_id, COUNT(DISTINCT g) AS ngram_hits
-        |FROM sh, UNNEST(sh.s) AS u(g)
-        |WHERE sh.doc_id % 97 != 0 AND g IN (SELECT g FROM ev)
-        |GROUP BY sh.doc_id ORDER BY sh.doc_id""".stripMargin,
-
-    "pack_sequences" ->
-      s"""WITH base AS (
-        |  SELECT doc_id,
-        |    ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15))::BIGINT AS h,
-        |    CAST(CASE WHEN length(trim(text)) = 0 THEN 0
-        |              ELSE $WsTokensSql END AS BIGINT) AS tok
-        |  FROM documents),
-        |packed AS (
-        |  SELECT doc_id, h % 8 AS shard, tok,
-        |    CAST(COALESCE(SUM(tok) OVER (
-        |      PARTITION BY h % 8 ORDER BY h, doc_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-        |      AS BIGINT) AS start_tok
-        |  FROM base)
-        |SELECT doc_id, shard,
-        |       CAST(FLOOR(start_tok / 512.0) AS BIGINT) AS pack_no, start_tok
-        |FROM packed ORDER BY doc_id""".stripMargin,
-
-    // shard-manifest replay: the same 60-bit md5 shard assignment, each
-    // shard reduced to its integrity line; every SUM re-cast to BIGINT
-    // (DuckDB widens SUM(BIGINT) to HUGEINT)
-    "pack_shards" ->
-      s"""WITH base AS (
-        |  SELECT doc_id,
-        |    ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15))::BIGINT
-        |      % 16 AS shard,
-        |    CAST(CASE WHEN length(trim(text)) = 0 THEN 0
-        |              ELSE $WsTokensSql END AS BIGINT) AS tok,
-        |    CAST(n_chars AS BIGINT) AS b,
-        |    ('0x' || substr(md5(text), 1, 15))::BIGINT % 1000000007 AS chk
-        |  FROM documents)
-        |SELECT shard, COUNT(*) AS n_docs,
-        |       CAST(SUM(tok) AS BIGINT) AS n_tokens,
-        |       CAST(SUM(b) AS BIGINT) AS n_bytes,
-        |       CAST(SUM(chk) AS BIGINT) AS checksum,
-        |       MIN(doc_id) AS min_id, MAX(doc_id) AS max_id
-        |FROM base GROUP BY shard ORDER BY shard""".stripMargin,
-
-    // epoch upsample replay: r = integer-ceil(quota/n) whole epochs, the
-    // last truncated to the quota − (r−1)·n smallest-hash rows
-    "sample_epochs" ->
-      """WITH c AS (SELECT source, count(*) AS n FROM documents GROUP BY 1),
-        |q AS (SELECT source, n,
-        |        CASE source WHEN 'src0' THEN 60 WHEN 'src1' THEN 10
-        |             ELSE 0 END AS q
-        |      FROM c),
-        |r AS (SELECT source, n, q, (q + n - 1) // n AS r
-        |      FROM q WHERE q > 0),
-        |ranked AS (
-        |  SELECT d.doc_id, d.source, r.n, r.q, r.r,
-        |    row_number() OVER (PARTITION BY d.source
-        |      ORDER BY ('0x' || substr(md5(CAST(d.doc_id AS VARCHAR)),
-        |                               1, 15))::BIGINT, d.doc_id) AS rn
-        |  FROM documents d JOIN r USING (source)),
-        |e AS (SELECT doc_id, source, n, q, r, rn,
-        |             unnest(range(r)) AS epoch FROM ranked)
-        |SELECT doc_id, source, CAST(epoch AS BIGINT) AS epoch
-        |FROM e
-        |WHERE epoch < r - 1 OR rn <= q - (r - 1) * n
-        |ORDER BY doc_id, epoch""".stripMargin,
-
-    // same cumsum replay as pack_sequences; quota = 16000/8 = 2000 per
-    // shard (no remainder), kept iff start_tok < quota
-    "sample_token_budget" ->
-      s"""WITH base AS (
-        |  SELECT doc_id,
-        |    ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15))::BIGINT AS h,
-        |    CAST(CASE WHEN length(trim(text)) = 0 THEN 0
-        |              ELSE $WsTokensSql END AS BIGINT) AS n_tok
-        |  FROM documents),
-        |laid AS (
-        |  SELECT doc_id, h % 8 AS shard, n_tok,
-        |    CAST(COALESCE(SUM(n_tok) OVER (
-        |      PARTITION BY h % 8 ORDER BY h, doc_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-        |      AS BIGINT) AS start_tok
-        |  FROM base)
-        |SELECT doc_id, shard, start_tok, n_tok
-        |FROM laid WHERE start_tok < 2000 ORDER BY doc_id""".stripMargin,
-
-    // RAG capstone replay: text_chunk's chunking, the same md5-derived
-    // embeddings (int→double cast is correctly rounded on both engines;
-    // /2^60 is exact), and an 8-term left-associated dot chain that
-    // matches the Java kernel's fold op-for-op — scores bit-identical,
-    // ranks deterministic (sim DESC, id)
-    "pipeline_rag_prep" ->
-      (s"""WITH t AS (SELECT doc_id, string_split(text, ' ') AS toks
-         |           FROM documents),
-         |s AS (SELECT doc_id, toks, unnest(range(0, len(toks), 24)) AS start
-         |      FROM t WHERE len(toks) > 0),
-         |ch AS (SELECT doc_id * 1048576 + start // 24 AS id,
-         |              array_to_string(toks[start+1 : start+32], ' ') AS txt
-         |       FROM s),
-         |qs AS (SELECT * FROM (VALUES """.stripMargin +
-        RagQuestions.map { case (id, q) => s"($id, '$q')" }.mkString(", ") +
-        """) v(id, txt)),
-         |ar AS (SELECT id, txt FROM ch UNION ALL SELECT id, txt FROM qs),
-         |emb AS (SELECT id,
-         |  [CAST(('0x' || substr(md5(CAST(j AS VARCHAR) || '|' || txt),
-         |                        1, 15))::BIGINT AS DOUBLE)
-         |     / 1152921504606846976.0 FOR j IN range(0, 8)] AS v
-         |  FROM ar),
-         |n AS (SELECT id, v,
-         |  sqrt(v[1]*v[1] + v[2]*v[2] + v[3]*v[3] + v[4]*v[4] + v[5]*v[5]
-         |       + v[6]*v[6] + v[7]*v[7] + v[8]*v[8]) AS nrm FROM emb),
-         |sims AS (SELECT q.id AS query_id, c.id AS neighbor_id,
-         |  (q.v[1]*c.v[1] + q.v[2]*c.v[2] + q.v[3]*c.v[3] + q.v[4]*c.v[4]
-         |   + q.v[5]*c.v[5] + q.v[6]*c.v[6] + q.v[7]*c.v[7]
-         |   + q.v[8]*c.v[8]) / (c.nrm * q.nrm) AS sim
-         |  FROM n q JOIN n c ON q.id >= 4611686018427387904 AND c.id != q.id),
-         |ranked AS (SELECT query_id, neighbor_id,
-         |  ROW_NUMBER() OVER (PARTITION BY query_id
-         |                     ORDER BY sim DESC, neighbor_id) AS rank
-         |  FROM sims)
-         |SELECT query_id, neighbor_id, rank FROM ranked
-         |WHERE rank <= 3 ORDER BY query_id, rank""".stripMargin),
-
-    "ann_cosine_topk" -> annCosineOracle,
-
-    // recall@5 of the IVF index against brute force: both ranked lists
-    // replay via their own entries' oracles (nested derived tables),
-    // hits is an integer intersection count, recall one IEEE division
-    "ann_recall" ->
-      s"""WITH approx AS (
-         |  SELECT query_id, neighbor_id FROM ($annIvfOracle)),
-         |exact AS (
-         |  SELECT query_id, neighbor_id FROM ($annCosineOracle)),
-         |hits AS (
-         |  SELECT query_id, CAST(COUNT(*) AS BIGINT) AS hits
-         |  FROM approx JOIN exact USING (query_id, neighbor_id)
-         |  GROUP BY 1),
-         |qs AS (SELECT DISTINCT query_id FROM exact)
-         |SELECT qs.query_id, COALESCE(hits.hits, CAST(0 AS BIGINT)) AS hits,
-         |       CAST(COALESCE(hits.hits, CAST(0 AS BIGINT)) AS DOUBLE) / 5
-         |         AS recall
-         |FROM qs LEFT JOIN hits USING (query_id)
-         |ORDER BY query_id""".stripMargin,
-
-    "text_tokens" ->
-      s"""SELECT doc_id,
-        |  CAST(CASE WHEN length(trim(text)) = 0 THEN 0
-        |            ELSE $WsTokensSql END AS BIGINT) AS ws_tokens,
-        |  CAST(len(regexp_extract_all(text, '\\w+|[^\\w\\s]')) AS BIGINT) AS bpe_tokens
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    // top gram ties break (cnt DESC, gram ASC) — the kernel's contract;
-    // docs with < 2 tokens have zero grams and 0.0 fractions both sides
-    // (the token-level sibling gates live under `text_repetition`)
-    "text_ngram_repetition" ->
-      """WITH d AS (
-        |  SELECT doc_id, text FROM documents
-        |  UNION ALL
-        |  SELECT -1, 'begin ' || repeat('spam loop ', 40) || 'end'),
-        |toks AS (
-        |  SELECT doc_id, string_split(text, ' ') AS t,
-        |         length(text) AS len FROM d),
-        |g AS (
-        |  SELECT doc_id, len,
-        |    CASE WHEN len(t) >= 2
-        |         THEN [array_to_string(t[i:i+1], ' ')
-        |               FOR i IN range(1, len(t))]
-        |         ELSE [] END AS grams,
-        |    [array_to_string(t[8*i+1 : 8*i+8], ' ')
-        |     FOR i IN range(0, CAST(ceil(len(t) / 8.0) AS INT))] AS chunks
-        |  FROM toks),
-        |gc AS (
-        |  SELECT doc_id, gram, COUNT(*) AS cnt
-        |  FROM g, UNNEST(grams) AS u(gram)
-        |  GROUP BY doc_id, gram),
-        |r AS (
-        |  SELECT doc_id, cnt, length(gram) AS gchars,
-        |         ROW_NUMBER() OVER (PARTITION BY doc_id
-        |            ORDER BY cnt DESC, gram ASC) AS rn
-        |  FROM gc),
-        |a AS (
-        |  -- SUM over BIGINT is HUGEINT in DuckDB (float-ifies in the
-        |  -- driver comparer) — pin it back to BIGINT
-        |  SELECT doc_id, CAST(SUM(cnt) AS BIGINT) AS total_grams,
-        |         COUNT(*) AS distinct_grams
-        |  FROM gc GROUP BY doc_id),
-        |top AS (SELECT doc_id, cnt AS top_cnt, gchars FROM r WHERE rn = 1)
-        |SELECT g.doc_id,
-        |  COALESCE(a.total_grams, 0) AS total_grams,
-        |  COALESCE(a.distinct_grams, 0) AS distinct_grams,
-        |  CASE WHEN a.total_grams > 0
-        |       THEN CAST('1' AS DOUBLE) - CAST(a.distinct_grams AS DOUBLE)
-        |              / CAST(a.total_grams AS DOUBLE)
-        |       ELSE CAST('0' AS DOUBLE) END AS dup_gram_frac,
-        |  CASE WHEN g.len > 0 AND top.top_cnt IS NOT NULL
-        |       THEN CAST(top.top_cnt * top.gchars AS DOUBLE)
-        |              / CAST(g.len AS DOUBLE)
-        |       ELSE CAST('0' AS DOUBLE) END AS top_gram_frac,
-        |  CASE WHEN len(g.chunks) > 0
-        |       THEN CAST('1' AS DOUBLE)
-        |              - CAST(len(list_distinct(g.chunks)) AS DOUBLE)
-        |              / CAST(len(g.chunks) AS DOUBLE)
-        |       ELSE CAST('0' AS DOUBLE) END AS dup_chunk_frac
-        |FROM g LEFT JOIN a USING (doc_id) LEFT JOIN top USING (doc_id)
-        |ORDER BY doc_id""".stripMargin,
-
-    "text_quality" ->
-      s"""SELECT doc_id,
-        |  CAST($WsTokensSql AS BIGINT) AS n_tokens,
-        |  (length(text) - ($WsTokensSql - 1))
-        |    / CAST($WsTokensSql AS DOUBLE) AS mean_token_len,
-        |  $AlphaRatioSql AS alpha_ratio,
-        |  length(regexp_replace(text, '[^.,;:!?]', '', 'g'))
-        |    / CAST(length(text) AS DOUBLE) AS punct_ratio,
-        |  $QualityScoreSql AS quality_score
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    // composed from the SAME SQL fragments the component oracles use —
-    // a formula tweak lands everywhere or nowhere
-    "text_corpus_filter" ->
-      s"""WITH q AS (
-        |  SELECT doc_id,
-        |    CAST($WsTokensSql AS BIGINT) AS n_tokens,
-        |    $QualityScoreSql AS quality_score,
-        |    $LangPredSql AS lang_pred
-        |  FROM documents)
-        |SELECT doc_id, n_tokens, quality_score FROM q
-        |WHERE lang_pred = 'en' AND quality_score >= 0.5
-        |  AND n_tokens BETWEEN 20 AND 1000
-        |ORDER BY doc_id""".stripMargin,
-
-    "text_fingerprint" ->
-      """SELECT doc_id,
-        |  md5(trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g'),
-        |                          ' +', ' ', 'g'))) AS fp
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    "text_langid" ->
-      s"""SELECT doc_id, $LangPredSql AS lang_pred
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    "text_repetition" ->
-      """WITH counts AS (
-        |  SELECT doc_id, tok, COUNT(*) AS c
-        |  FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS tok
-        |        FROM documents)
-        |  GROUP BY doc_id, tok)
-        |SELECT doc_id, CAST(SUM(c) AS BIGINT) AS n_tokens,
-        |       COUNT(*) AS distinct_tokens,
-        |       CAST(MAX(c) AS DOUBLE) / CAST(SUM(c) AS BIGINT) AS top_ratio
-        |FROM counts GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-
-    "text_redact_pii" ->
-      """WITH inj AS (
-        |  SELECT doc_id,
-        |         substring(text, 1, 40) || ' contact ' || source || '_' ||
-        |         CAST(doc_id AS VARCHAR) || '@mail.example.com or +1-555-' ||
-        |         lpad(CAST(doc_id % 10000 AS VARCHAR), 4, '0') AS s
-        |  FROM documents)
-        |SELECT doc_id,
-        |  regexp_replace(regexp_replace(regexp_replace(s,
-        |    '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '<EMAIL>', 'g'),
-        |    '\+?[0-9]{1,2}-[0-9]{3}-[0-9]{4}', '<PHONE>', 'g'),
-        |    '([0-9]{1,3}\.){3}[0-9]{1,3}', '<IP>', 'g') AS redacted
-        |FROM inj ORDER BY doc_id""".stripMargin,
-
-    // DSIR importance weighting: both bucket tables rebuilt in SQL from
-    // the same md5-derived hash; HUGEINT sums cast to BIGINT (the r5
-    // hasher lesson)
-    "sample_importance" ->
-      s"""$ImportanceCtes
-        |SELECT doc_id, t_mass, r_mass, weight, weight > 1.0 AS kept
-        |FROM iw ORDER BY doc_id""".stripMargin,
-
-    // split boundaries inlined from the SAME left-to-right partial-sum
-    // doubles the plan uses
-    "sample_split" -> {
-      val b1 = ((0.0 + 0.8) * (1L << 60)).toLong
-      val b2 = (((0.0 + 0.8) + 0.1) * (1L << 60)).toLong
-      s"""SELECT doc_id,
-         |  CASE WHEN ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15))::BIGINT
-         |            < $b1 THEN 'train'
-         |       WHEN ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15))::BIGINT
-         |            < $b2 THEN 'val'
-         |       ELSE 'test' END AS split
-         |FROM documents ORDER BY doc_id""".stripMargin
-    },
-
-    // DSIR resample: the weighted hash-threshold filter over the SAME
-    // importance CTEs — both sides compare double(hash) against
-    // min(1, f·weight)·2^60 in the identical op order
-    "sample_weighted" ->
-      s"""$ImportanceCtes
-        |SELECT doc_id, weight FROM iw
-        |WHERE CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15))::BIGINT
-        |           AS DOUBLE)
-        |      < least(1.0, CAST('0.3' AS DOUBLE) * weight)
-        |        * CAST(1152921504606846976 AS DOUBLE)
-        |ORDER BY doc_id""".stripMargin,
-
-    "sample_shuffle" ->
-      """WITH h AS (
-        |  SELECT doc_id,
-        |         ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15))::BIGINT
-        |           AS hv
-        |  FROM documents),
-        |s AS (SELECT doc_id, hv, hv % 8 AS shard FROM h)
-        |SELECT doc_id, shard,
-        |       CAST(ROW_NUMBER() OVER (PARTITION BY shard
-        |              ORDER BY hv, doc_id) AS BIGINT) AS pos,
-        |       CAST(ROW_NUMBER() OVER (ORDER BY shard, hv, doc_id) AS BIGINT)
-        |         - 1 AS global_pos
-        |FROM s ORDER BY doc_id""".stripMargin,
-
-    "text_bm25" -> graft.pipeline.Retrieval.bm25OracleSql(
-      "documents", "doc_id", Seq("spark", "customer", "window"), topK = 10),
-
-    // PRF replay: round 1 = the inline column-chain shape LIMITed to the
-    // feedback set, expansion mined from those docs' tokens, round 2 =
-    // the batch row-fold shape over originals UNION mined terms
-    "text_bm25_prf" -> graft.pipeline.Retrieval.bm25PrfOracleSql(
-      "documents", "doc_id", Seq("spark", "customer"),
-      fbDocs = 5, fbTerms = 5, topK = 10),
-
-    // the stored-index path must land the inline path's exact rows
-    "text_bm25_tables" -> graft.pipeline.Retrieval.bm25OracleSql(
-      "documents", "doc_id", Seq("spark", "customer", "window"), topK = 10),
-
-    "text_bm25_batch" -> graft.pipeline.Retrieval.bm25BatchOracleSql(
-      "documents", "doc_id", BatchQueries, topK = 5),
-
-    // the stored-postings batch path must land the inline batch's exact
-    // rows (same canonical-order fold; absent terms contribute +0.0)
-    "text_bm25_batch_tables" -> graft.pipeline.Retrieval.bm25BatchOracleSql(
-      "documents", "doc_id", BatchQueries, topK = 5),
-
-    // APPENDED index (base build + incremental batch) must land the
-    // full-corpus inline oracle's exact rows
-    "text_bm25_append" -> graft.pipeline.Retrieval.bm25OracleSql(
-      "documents", "doc_id", Seq("spark", "customer", "window"), topK = 10),
-
-    // DELETED index (full build − every 10th doc) must land the
-    // REMAINING-corpus inline oracle's exact rows
-    "text_bm25_delete" -> graft.pipeline.Retrieval.bm25OracleSql(
-      "(SELECT * FROM documents WHERE doc_id % 10 <> 0)", "doc_id",
-      Seq("spark", "customer", "window"), topK = 10),
-
-    // nDCG@5 replay: the SAME Scala-computed discount/prefix-sum doubles
-    // as the entry, embedded through VARCHAR casts (correctly-rounded
-    // literal path); term sums are exact (one nonzero per rank), the
-    // DCG fold and the final division share the entry's association
-    "rag_ndcg" -> {
-      val (discs, idcgs) = graft.pipeline.Retrieval.dcgDiscounts(5)
-      def dl(d: Double) = s"CAST('${d.toString}' AS DOUBLE)"
-      val termSelects = (1 to 5).map { i =>
-        s"SUM(CASE WHEN rank = $i AND rel = 1 THEN ${dl(discs(i - 1))} " +
-          s"ELSE CAST(0 AS DOUBLE) END) AS t$i"
-      }.mkString(",\n         ")
-      val idcgCase = (1 to 5).map { j =>
-        s"WHEN $j THEN ${dl(idcgs(j - 1))}"
-      }.mkString(" ")
-      s"""WITH cand AS (
-         |  SELECT query_id, doc_id, rank FROM (
-         |${graft.pipeline.Retrieval.bm25BatchOracleSql(
-             "documents", "doc_id", BatchQueries, topK = 5)})),
-         |qr AS (SELECT doc_id % 7 + 1 AS query_id, doc_id FROM documents),
-         |marked AS (
-         |  SELECT c.query_id, c.rank,
-         |         CASE WHEN qr.doc_id IS NOT NULL THEN 1 ELSE 0 END AS rel
-         |  FROM cand c LEFT JOIN qr
-         |    ON qr.query_id = c.query_id AND qr.doc_id = c.doc_id),
-         |terms AS (
-         |  SELECT query_id,
-         |         $termSelects
-         |  FROM marked GROUP BY 1),
-         |rc AS (SELECT query_id, CAST(COUNT(*) AS BIGINT) AS r
-         |       FROM qr GROUP BY 1),
-         |f AS (
-         |  SELECT t.query_id,
-         |         (((((CAST(0 AS DOUBLE) + t1) + t2) + t3) + t4) + t5)
-         |           AS dcg,
-         |         LEAST(COALESCE(rc.r, CAST(0 AS BIGINT)), 5) AS rk
-         |  FROM terms t LEFT JOIN rc USING (query_id))
-         |SELECT query_id, dcg,
-         |       CASE WHEN rk = 0 THEN CAST(0 AS DOUBLE)
-         |            ELSE dcg / (CASE rk $idcgCase END) END AS ndcg
-         |FROM f ORDER BY query_id""".stripMargin
-    },
-
-    // first-relevant rank per query from the nested batch oracle; the
-    // positive set is the same doc_id % 7 + 1 predicate; rr is one IEEE
-    // division, missing-positive queries carry the -1 sentinel
-    "rag_mrr" ->
-      s"""WITH cand AS (
-         |  SELECT query_id, doc_id, rank FROM (
-         |${graft.pipeline.Retrieval.bm25BatchOracleSql(
-             "documents", "doc_id", BatchQueries, topK = 5)})),
-         |rel AS (
-         |  SELECT query_id, MIN(rank) AS first_rel_rank FROM cand
-         |  WHERE doc_id % 7 + 1 = query_id GROUP BY 1),
-         |qs AS (SELECT DISTINCT query_id FROM cand)
-         |SELECT qs.query_id,
-         |       COALESCE(rel.first_rel_rank, CAST(-1 AS BIGINT))
-         |         AS first_rel_rank,
-         |       COALESCE(CAST(1 AS DOUBLE) / rel.first_rel_rank,
-         |                CAST(0 AS DOUBLE)) AS rr
-         |FROM qs LEFT JOIN rel USING (query_id)
-         |ORDER BY query_id""".stripMargin,
-
-    // depth-20 batch retrieval nested as a derived table; the positive
-    // set (query_id = doc_id % 7 + 1) becomes a NOT predicate, negatives
-    // re-numbered by retriever rank (unique per query — engine-exact)
-    "rag_hard_negatives" ->
-      s"""WITH cand AS (
-         |  SELECT query_id, doc_id, score, rank FROM (
-         |${graft.pipeline.Retrieval.bm25BatchOracleSql(
-             "documents", "doc_id", BatchQueries, topK = 20)})),
-         |neg AS (
-         |  SELECT query_id, doc_id, score,
-         |         CAST(ROW_NUMBER() OVER (PARTITION BY query_id
-         |                                 ORDER BY rank) AS BIGINT)
-         |           AS neg_rank
-         |  FROM cand WHERE NOT (doc_id % 7 + 1 = query_id))
-         |SELECT query_id, doc_id, score, neg_rank FROM neg
-         |WHERE neg_rank <= 5 ORDER BY query_id, neg_rank""".stripMargin,
-
-    // RRF: the full bm25 oracle nests as a derived table (lexical
-    // ranks), the dense ranks replay Spark's exact cosine expression
-    // (cosSql), and each fused term is one IEEE division of exact
-    // integers folded lex-then-dense — the entry's association
-    "rag_rrf_fusion" ->
-      s"""WITH lex AS (
-         |  SELECT doc_id, rank FROM (
-         |${graft.pipeline.Retrieval.bm25OracleSql(
-             "documents", "doc_id", Seq("spark", "customer", "window"),
-             topK = 20)})),
-         |e AS (
-         |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-         |sims AS (
-         |  SELECT c.vec_id AS doc_id, ${cosSql("q.v", "c.v")} AS sim
-         |  FROM e q JOIN e c ON q.vec_id = 7 AND c.vec_id != 7),
-         |den AS (
-         |  SELECT doc_id, rank FROM (
-         |    SELECT doc_id,
-         |           CAST(ROW_NUMBER() OVER (ORDER BY sim DESC, doc_id)
-         |                AS BIGINT) AS rank
-         |    FROM sims) WHERE rank <= 20),
-         |ids AS (SELECT doc_id FROM lex UNION SELECT doc_id FROM den),
-         |scored AS (
-         |  SELECT ids.doc_id,
-         |    COALESCE(CAST(1 AS DOUBLE) / (60 + lex.rank), CAST(0 AS DOUBLE))
-         |    + COALESCE(CAST(1 AS DOUBLE) / (60 + den.rank), CAST(0 AS DOUBLE))
-         |      AS rrf_score
-         |  FROM ids LEFT JOIN lex USING (doc_id) LEFT JOIN den USING (doc_id)),
-         |ranked AS (
-         |  SELECT doc_id, rrf_score,
-         |         CAST(ROW_NUMBER() OVER (ORDER BY rrf_score DESC, doc_id)
-         |              AS BIGINT) AS rank
-         |  FROM scored)
-         |SELECT doc_id, rrf_score, rank FROM ranked
-         |WHERE rank <= 10 ORDER BY rank""".stripMargin,
-
-    // same typographic injection as the entry (chr codes: 8220/8221 curly
-    // double quotes, 8216/8217 curly singles, 8211/8212 dashes, 160 NBSP,
-    // 9 tab); regexp_replace needs the 'g' flag — DuckDB defaults to
-    // first-match-only where Java replaces all
-    "text_normalize" ->
-      """WITH inj AS (
-        |  SELECT doc_id,
-        |         chr(8220) || source || chr(8221) || chr(8212) || chr(160)
-        |           || text ||
-        |         CASE WHEN doc_id % 3 = 0
-        |              THEN '  ' || chr(9) || 'End' || chr(8217) || 's '
-        |              ELSE '' END AS raw
-        |  FROM documents)
-        |SELECT doc_id,
-        |       lower(trim(regexp_replace(
-        |         translate(raw,
-        |           chr(8220)||chr(8221)||chr(8216)||chr(8217)
-        |             ||chr(8211)||chr(8212)||chr(160),
-        |           '""''''-- '),
-        |         '[ \t\n\r]+', ' ', 'g'))) AS norm_text
-        |FROM inj ORDER BY doc_id""".stripMargin,
-
-    // deterministic md5-keyed sampling — the threshold literal is
-    // Sampling.hashThreshold(0.25) inlined
-    "sample_hash" ->
-      s"""SELECT doc_id, lang FROM documents
-        |WHERE ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15))::BIGINT
-        |      < ${pipeline.Sampling.hashThreshold(0.25)}
-        |ORDER BY doc_id""".stripMargin,
-
-    "sample_stratified" ->
-      """WITH ranked AS (
-        |  SELECT doc_id, lang,
-        |         ROW_NUMBER() OVER (PARTITION BY lang
-        |           ORDER BY ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15))::BIGINT,
-        |                    doc_id) AS rn,
-        |         COUNT(*) OVER (PARTITION BY lang) AS n
-        |  FROM documents)
-        |SELECT doc_id, lang FROM ranked
-        |WHERE rn <= ceil(n * 0.2) ORDER BY doc_id""".stripMargin,
-
-    "sample_mix" ->
-      """WITH ranked AS (
-        |  SELECT doc_id, source,
-        |         ROW_NUMBER() OVER (PARTITION BY source
-        |           ORDER BY ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15))::BIGINT,
-        |                    doc_id) AS rn,
-        |         COUNT(*) OVER (PARTITION BY source) AS n
-        |  FROM documents)
-        |SELECT doc_id, source FROM ranked
-        |WHERE rn <= ceil(n * CASE source WHEN 'src0' THEN 0.5
-        |                                 WHEN 'src1' THEN 0.25
-        |                                 WHEN 'src2' THEN 1.0
-        |                                 ELSE 0.1 END)
-        |ORDER BY doc_id""".stripMargin,
-
-    "embed_kmedians" -> kmediansOracle(8, 2),
-
-    "text_top_terms" ->
-      """WITH toks AS (
-        |  SELECT doc_id, unnest(string_split(text, ' ')) AS token
-        |  FROM documents),
-        |tf AS (SELECT doc_id, token, COUNT(*) AS tf FROM toks
-        |       WHERE token != '' GROUP BY 1, 2),
-        |dfq AS (SELECT token, COUNT(*) AS df FROM tf GROUP BY 1),
-        |r AS (SELECT tf.doc_id, tf.token, tf.tf, dfq.df,
-        |        ROW_NUMBER() OVER (PARTITION BY tf.doc_id
-        |          ORDER BY tf.tf DESC, dfq.df ASC, tf.token ASC) AS rank
-        |      FROM tf JOIN dfq USING (token))
-        |SELECT doc_id, token, tf, df, rank FROM r
-        |WHERE rank <= 3 ORDER BY doc_id, rank""".stripMargin,
-
-    "st9_stream_dedup" ->
-      """WITH ev AS (
-        |  SELECT doc_id, md5(text) AS h, 0 AS b FROM documents
-        |  UNION ALL
-        |  SELECT doc_id + 100000, md5(text), 1 FROM documents
-        |  WHERE doc_id % 7 = 0
-        |  UNION ALL
-        |  SELECT 200000 + i, md5('synthetic ' || CAST(i % 5 AS VARCHAR)), 1
-        |  FROM range(10) t(i)),
-        |r AS (SELECT doc_id, h,
-        |        ROW_NUMBER() OVER (PARTITION BY h ORDER BY b, doc_id) AS rn
-        |      FROM ev)
-        |SELECT doc_id, h FROM r WHERE rn = 1 ORDER BY doc_id""".stripMargin,
-
-    "stat_winsorize" ->
-      s"""WITH base AS (
-        |  SELECT doc_id, lang,
-        |         CAST(CASE WHEN length(trim(text)) = 0 THEN 0
-        |                   ELSE $WsTokensSql END AS BIGINT) AS raw_tokens
-        |  FROM documents),
-        |counts AS (
-        |  SELECT lang, raw_tokens AS v, COUNT(*) AS c FROM base GROUP BY 1, 2),
-        |cum AS (
-        |  SELECT lang, v,
-        |         SUM(c) OVER (PARTITION BY lang ORDER BY v) AS cum,
-        |         SUM(c) OVER (PARTITION BY lang) AS n
-        |  FROM counts),
-        |qs AS (
-        |  SELECT lang, p, MIN(v) AS q
-        |  FROM cum CROSS JOIN
-        |    (SELECT unnest([0.05::DOUBLE, 0.95::DOUBLE]) AS p) ps
-        |  WHERE cum >= greatest(1, ceil(n * p))
-        |  GROUP BY 1, 2),
-        |lo AS (SELECT lang AS glo, q AS qlo FROM qs WHERE p = 0.05::DOUBLE),
-        |hi AS (SELECT lang AS ghi, q AS qhi FROM qs WHERE p = 0.95::DOUBLE)
-        |SELECT b.doc_id, b.lang, b.raw_tokens,
-        |       CASE WHEN b.raw_tokens IS NULL THEN NULL
-        |            ELSE LEAST(GREATEST(b.raw_tokens, qlo), qhi)
-        |       END AS winsorized
-        |FROM base b
-        |LEFT JOIN lo ON b.lang IS NOT DISTINCT FROM lo.glo
-        |LEFT JOIN hi ON b.lang IS NOT DISTINCT FROM hi.ghi
-        |ORDER BY doc_id""".stripMargin,
-
-    "src_bucketed_join" ->
-      """SELECT o_custkey AS custkey, c_mktsegment AS mktsegment,
-        |       COUNT(*) AS n_orders,
-        |       CAST(CAST(CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2)))
-        |            AS DECIMAL(38,2)) AS VARCHAR) AS DOUBLE) AS total
-        |FROM orders JOIN customer ON o_custkey = c_custkey
-        |GROUP BY 1, 2 ORDER BY custkey""".stripMargin,
-
-    "stat_quantiles" ->
-      s"""WITH counts AS (
-        |  SELECT lang,
-        |         CAST(CASE WHEN length(trim(text)) = 0 THEN 0
-        |                   ELSE $WsTokensSql END AS BIGINT) AS v,
-        |         COUNT(*) AS c
-        |  FROM documents GROUP BY 1, 2),
-        |cum AS (
-        |  SELECT lang, v,
-        |         SUM(c) OVER (PARTITION BY lang ORDER BY v) AS cum,
-        |         SUM(c) OVER (PARTITION BY lang) AS n
-        |  FROM counts)
-        |SELECT lang, p, MIN(v) AS q
-        |FROM cum CROSS JOIN
-        |  (SELECT unnest([0.5::DOUBLE, 0.9::DOUBLE, 0.99::DOUBLE]) AS p) ps
-        |WHERE cum >= greatest(1, ceil(n * p))
-        |GROUP BY lang, p ORDER BY lang, p""".stripMargin,
-
-    "stat_rollup" ->
-      s"""SELECT lang, source, CAST(COUNT(*) AS BIGINT) AS docs,
-        |  CAST(SUM(CAST(CASE WHEN length(trim(text)) = 0 THEN 0
-        |                     ELSE $WsTokensSql END AS BIGINT)) AS BIGINT) AS tokens,
-        |  MAX(n_chars) AS max_chars
-        |FROM documents GROUP BY ROLLUP (lang, source)
-        |ORDER BY lang ASC NULLS FIRST, source ASC NULLS FIRST""".stripMargin,
-
-    "st18_stream_static_join" ->
-      """WITH dim AS (
-        |  SELECT event_type, COUNT(*) AS type_cnt FROM events GROUP BY 1)
-        |SELECT event_id, event_type, type_cnt
-        |FROM events JOIN dim USING (event_type)
-        |WHERE user_id < 20 ORDER BY event_id""".stripMargin,
-
-    "stat_grouping_sets" ->
-      """SELECT lang, source,
-        |  CAST(GROUPING(lang, source) AS BIGINT) AS gid,
-        |  CAST(COUNT(*) AS BIGINT) AS docs,
-        |  CAST(SUM(n_chars) AS BIGINT) AS chars
-        |FROM documents GROUP BY GROUPING SETS ((lang, source), (source), ())
-        |ORDER BY lang ASC NULLS FIRST, source ASC NULLS FIRST, gid""".stripMargin,
-
-    "stat_cube" ->
-      """SELECT lang, source,
-        |  CAST(GROUPING(lang, source) AS BIGINT) AS gid,
-        |  CAST(COUNT(*) AS BIGINT) AS docs,
-        |  CAST(MAX(n_chars) AS BIGINT) AS max_chars
-        |FROM documents GROUP BY CUBE (lang, source)
-        |ORDER BY lang ASC NULLS FIRST, source ASC NULLS FIRST, gid""".stripMargin,
-
-    "stat_unpivot" ->
-      """WITH a AS (
-        |  SELECT source, CAST(COUNT(*) AS BIGINT) AS docs,
-        |         CAST(SUM(n_chars) AS BIGINT) AS chars,
-        |         CAST(MAX(n_chars) AS BIGINT) AS max_chars
-        |  FROM documents GROUP BY source)
-        |SELECT source, 'chars' AS metric, chars AS value FROM a
-        |UNION ALL SELECT source, 'docs', docs FROM a
-        |UNION ALL SELECT source, 'max_chars', max_chars FROM a
-        |ORDER BY source, metric""".stripMargin,
-
-    "stat_heavy_hitters" ->
-      """SELECT token, CAST(COUNT(*) AS BIGINT) AS cnt FROM (
-        |  SELECT unnest(string_split(text, ' ')) AS token FROM documents)
-        |WHERE token != ''
-        |GROUP BY token ORDER BY cnt DESC, token LIMIT 25""".stripMargin,
-
-    // integer features via the text_repetition counts CTE + per-occurrence
-    // stopword hits; weights CAST to DOUBLE (a bare literal is DECIMAL in
-    // DuckDB and the product would land in the hasher's decimal divergence)
-    "text_classifier" ->
-      """WITH counts AS (
-        |  SELECT doc_id, tok, COUNT(*) AS c
-        |  FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS tok
-        |        FROM documents)
-        |  GROUP BY doc_id, tok),
-        |st AS (SELECT doc_id, SUM(c) AS total, COUNT(*) AS dist, MAX(c) AS top
-        |       FROM counts GROUP BY doc_id),
-        |f AS (
-        |  SELECT d.doc_id, st.total, st.dist, st.top,
-        |    len(list_filter(regexp_split_to_array(lower(trim(d.text)), '\s+'),
-        |        x -> x IN ('the','and','of','to','in','is','that','with',
-        |                   'for','was'))) AS stop_hits,
-        |    length(d.text) AS chars
-        |  FROM documents d JOIN st USING (doc_id)),
-        |scored AS (
-        |  SELECT doc_id,
-        |    CAST(total AS BIGINT) * CAST(-0.03125 AS DOUBLE)
-        |      + dist * CAST(0.125 AS DOUBLE)
-        |      + top * CAST(-0.25 AS DOUBLE)
-        |      + stop_hits * CAST(0.5 AS DOUBLE)
-        |      + chars * CAST(0.015625 AS DOUBLE) AS score
-        |  FROM f)
-        |SELECT doc_id, score, score >= 5.5 AS keep
-        |FROM scored ORDER BY doc_id""".stripMargin,
-
-    // same injected header, same 8-word chunking, 1-based subscripts used
-    // only for ordering
-    "text_line_dedup" ->
-      """WITH d AS (
-        |  SELECT doc_id,
-        |         CASE WHEN doc_id % 5 = 0
-        |              THEN 'standard header boilerplate notice applies here today ok '
-        |                   || text
-        |              ELSE text END AS text
-        |  FROM documents),
-        |toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM d),
-        |l AS (
-        |  SELECT doc_id,
-        |         [array_to_string(t[8*i+1 : 8*i+8], ' ')
-        |          FOR i IN range(0, CAST(ceil(len(t) / 8.0) AS INT))] AS lines
-        |  FROM toks),
-        |e AS (
-        |  SELECT doc_id, unnest(lines) AS line,
-        |         generate_subscripts(lines, 1) AS pos
-        |  FROM l),
-        |b AS (SELECT line FROM e GROUP BY line
-        |      HAVING COUNT(DISTINCT doc_id) > 1),
-        |k AS (SELECT e.* FROM e ANTI JOIN b USING (line))
-        |SELECT doc_id AS id, string_agg(line, ' ' ORDER BY pos) AS clean_text,
-        |       COUNT(*) AS kept_lines
-        |FROM k GROUP BY doc_id ORDER BY id""".stripMargin,
-
-    // same injected phrase, same 8-word chunking as the entry; word count
-    // uses the quality-features whitespace formula, 1-based subscripts
-    // only for ordering
-    "text_c4_clean" ->
-      """WITH d AS (
-        |  SELECT doc_id,
-        |         CASE WHEN doc_id % 4 = 0
-        |              THEN text ||
-        |                   ' javascript cookie banner click here accept all terms'
-        |              ELSE text END AS text
-        |  FROM documents),
-        |toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM d),
-        |l AS (
-        |  SELECT doc_id,
-        |         [array_to_string(t[8*i+1 : 8*i+8], ' ')
-        |          FOR i IN range(0, CAST(ceil(len(t) / 8.0) AS INT))] AS lines
-        |  FROM toks),
-        |e AS (
-        |  SELECT doc_id, unnest(lines) AS line,
-        |         generate_subscripts(lines, 1) AS pos
-        |  FROM l),
-        |k AS (
-        |  SELECT * FROM e
-        |  WHERE len(regexp_split_to_array(trim(line), '\s+')) >= 4
-        |    AND NOT contains(lower(line), 'javascript')
-        |    AND NOT contains(lower(line), 'lorem ipsum')
-        |    AND NOT contains(lower(line), '{'))
-        |SELECT doc_id, string_agg(line, ' ' ORDER BY pos) AS clean_text,
-        |       COUNT(*) AS kept_lines
-        |FROM k GROUP BY doc_id HAVING COUNT(*) >= 2
-        |ORDER BY doc_id""".stripMargin,
-
-    // same shingle semantics as jaccardOracle; per-shingle row count IS
-    // document frequency because shingle sets are distinct per doc
-    "text_ngram_novelty" ->
-      """WITH toks AS (
-        |  SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-        |sh0 AS (
-        |  SELECT doc_id,
-        |    CASE WHEN len(t) >= 3
-        |         THEN list_distinct([array_to_string(t[i:i+2], ' ')
-        |                             FOR i IN range(1, len(t) - 1)])
-        |         ELSE [array_to_string(t, ' ')] END AS s
-        |  FROM toks),
-        |sh AS (SELECT doc_id, unnest(s) AS sh FROM sh0),
-        |f AS (SELECT sh, COUNT(*) AS df FROM sh GROUP BY sh)
-        |SELECT sh.doc_id, COUNT(*) AS n_shingles,
-        |       CAST(SUM(CASE WHEN f.df = 1 THEN 1 ELSE 0 END)
-        |            AS BIGINT) AS unique_shingles,
-        |       SUM(CASE WHEN f.df = 1 THEN 1 ELSE 0 END)
-        |         / CAST(COUNT(*) AS DOUBLE) AS novelty
-        |FROM sh JOIN f USING (sh)
-        |GROUP BY sh.doc_id ORDER BY sh.doc_id""".stripMargin,
-
-    // integer-scaled TVD: the numerator is a sum of |c_g·N_rest − c_r·N_g|
-    // over tokens present in the group plus the folded absent-token term
-    // N_g·(N_rest − Σ c_r) — same algebra, same single division
-    "stat_source_drift" ->
-      """WITH tok AS (
-        |  SELECT source AS g, unnest(string_split(text, ' ')) AS t
-        |  FROM documents),
-        |cs AS (SELECT g, t, COUNT(*) AS c FROM tok WHERE t != ''
-        |       GROUP BY g, t),
-        |tot AS (SELECT t, SUM(c) AS ct FROM cs GROUP BY t),
-        |ns AS (SELECT g, SUM(c) AS n FROM cs GROUP BY g),
-        |nall AS (SELECT SUM(n) AS na FROM ns),
-        |j AS (
-        |  SELECT cs.g, ns.n, nall.na - ns.n AS nrest,
-        |         ABS(cs.c * (nall.na - ns.n) - (tot.ct - cs.c) * ns.n) AS term,
-        |         tot.ct - cs.c AS r
-        |  FROM cs JOIN tot USING (t) JOIN ns USING (g) CROSS JOIN nall),
-        |a AS (SELECT g, n, nrest, SUM(term) AS insum, SUM(r) AS rs
-        |      FROM j GROUP BY g, n, nrest)
-        |SELECT g AS source, CAST(n AS BIGINT) AS n_tokens,
-        |       CAST(insum + n * (nrest - rs) AS BIGINT) AS drift_num,
-        |       CAST(insum + n * (nrest - rs) AS DOUBLE)
-        |         / CAST(2 * n * nrest AS DOUBLE) AS tvd
-        |FROM a ORDER BY source""".stripMargin,
-
-    // τ=½ temperature mix replayed: same integer product, one double
-    // cast, sqrt, ceil — all correctly-rounded single ops
-    "sample_temperature" ->
-      """WITH s AS (
-        |  SELECT doc_id,
-        |         CASE WHEN doc_id % 10 = 0 THEN 'rare' ELSE 'common' END
-        |           AS stratum
-        |  FROM documents),
-        |n AS (SELECT stratum, COUNT(*) AS n FROM s GROUP BY stratum),
-        |q AS (
-        |  SELECT stratum,
-        |         LEAST(n, CAST(ceil(sqrt(CAST((SELECT MIN(n) FROM n) * n
-        |                                      AS DOUBLE))) AS BIGINT)) AS quota
-        |  FROM n),
-        |r AS (
-        |  SELECT s.doc_id, s.stratum,
-        |         row_number() OVER (
-        |           PARTITION BY s.stratum
-        |           ORDER BY ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15))::BIGINT,
-        |                    doc_id) AS rn
-        |  FROM s)
-        |SELECT r.doc_id, r.stratum FROM r JOIN q USING (stratum)
-        |WHERE rn <= quota ORDER BY doc_id""".stripMargin,
-
-    // count-threshold vocabulary coverage over the compressed
-    // (count value, types, mass) table; RANGE≡ROWS here because the
-    // grouped count values are unique
-    "stat_vocab_coverage" ->
-      """WITH uc AS (
-        |  SELECT w, COUNT(*) AS c
-        |  FROM (SELECT unnest(string_split(text, ' ')) AS w FROM documents)
-        |  WHERE w != '' GROUP BY w),
-        |bv AS (SELECT c, COUNT(*) AS types, SUM(c) AS mass FROM uc GROUP BY c),
-        |cum AS (
-        |  SELECT c,
-        |         SUM(types) OVER (ORDER BY c DESC) AS cum_types,
-        |         SUM(mass) OVER (ORDER BY c DESC) AS cum_mass
-        |  FROM bv),
-        |tot AS (SELECT SUM(mass) AS total FROM bv)
-        |SELECT c AS cutoff_count, CAST(cum_types AS BIGINT) AS vocab_size,
-        |       CAST(cum_mass AS BIGINT) AS covered_tokens,
-        |       CAST(total AS BIGINT) AS total_tokens
-        |FROM cum CROSS JOIN tot
-        |WHERE cum_mass * 100 >= total * 95
-        |ORDER BY c DESC LIMIT 1""".stripMargin,
-
-    // the whole training-prep pipeline replayed CTE-for-stage from the
-    // SAME fragments the component oracles pin: gates (WsTokens/Quality/
-    // LangPred) → min-id per text → per-source ceil(f·n) in hash order →
-    // shard/cumsum packing
-    "pipeline_train_prep" ->
-      s"""WITH q AS (
-        |  SELECT doc_id, source, text,
-        |    CAST($WsTokensSql AS BIGINT) AS n_tokens,
-        |    $QualityScoreSql AS qs,
-        |    $LangPredSql AS lp
-        |  FROM documents),
-        |gated AS (
-        |  SELECT doc_id, source, text, n_tokens FROM q
-        |  WHERE lp = 'en' AND qs >= 0.5 AND n_tokens BETWEEN 20 AND 1000),
-        |sur AS (SELECT MIN(doc_id) AS doc_id FROM gated GROUP BY text),
-        |ded AS (SELECT g.* FROM gated g JOIN sur USING (doc_id)),
-        |mixn AS (SELECT source, COUNT(*) AS n FROM ded GROUP BY source),
-        |r AS (
-        |  SELECT d.*, mixn.n,
-        |         row_number() OVER (
-        |           PARTITION BY d.source
-        |           ORDER BY ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15))::BIGINT,
-        |                    doc_id) AS rn
-        |  FROM ded d JOIN mixn USING (source)),
-        |mixed AS (
-        |  SELECT doc_id, source, n_tokens FROM r
-        |  WHERE rn <= ceil(n * CASE source WHEN 'src0' THEN 1.0
-        |                                   WHEN 'src1' THEN 0.5
-        |                                   ELSE 0.25 END)),
-        |base AS (
-        |  SELECT doc_id, source,
-        |    ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15))::BIGINT AS h,
-        |    n_tokens AS tok
-        |  FROM mixed),
-        |packed AS (
-        |  SELECT doc_id, source, h % 4 AS shard,
-        |    CAST(COALESCE(SUM(tok) OVER (
-        |      PARTITION BY h % 4 ORDER BY h, doc_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-        |      AS BIGINT) AS start_tok
-        |  FROM base)
-        |SELECT doc_id, source, shard,
-        |       CAST(FLOOR(start_tok / 512.0) AS BIGINT) AS pack_no, start_tok
-        |FROM packed ORDER BY doc_id""".stripMargin,
-
-    // same injected page, same strip pipeline in RE2 (patterns chosen from
-    // the Java∩RE2 subset; DuckDB regexp_replace needs the explicit 'g')
-    "text_html_strip" ->
-      """WITH page AS (
-        |  SELECT doc_id,
-        |    '<html><head><script type="text/javascript">var x = 1 &amp;&amp; 2;'
-        |    || '</script><style>p { color: red; }</style></head><body><h1>Doc '
-        |    || doc_id || '</h1><p>' || text
-        |    || '</p><div class="f">&amp; footer &lt;end&gt;</div></body></html>'
-        |      AS html
-        |  FROM documents)
-        |SELECT doc_id, trim(regexp_replace(
-        |  replace(replace(replace(replace(replace(replace(
-        |    regexp_replace(
-        |      regexp_replace(
-        |        regexp_replace(html, '(?si)<script[^>]*>.*?</script>', ' ', 'g'),
-        |        '(?si)<style[^>]*>.*?</style>', ' ', 'g'),
-        |      '<[^>]+>', ' ', 'g'),
-        |    '&lt;', '<'), '&gt;', '>'), '&quot;', '"'), '&#39;', ''''),
-        |    '&nbsp;', ' '), '&amp;', '&'),
-        |  '[ \t\n\r\f\x0B]+', ' ', 'g')) AS clean_text
-        |FROM page ORDER BY doc_id""".stripMargin,
-
-    // same synthetic URLs, same split-algebra host (lowercased), same
-    // md5-hash-ordered cap at 10 per host
-    "url_domain_cap" ->
-      """WITH u AS (
-        |  SELECT doc_id,
-        |         'https://Site' || (doc_id % 23) || '.example.com/p/' || doc_id
-        |           AS url
-        |  FROM documents),
-        |h AS (
-        |  SELECT doc_id,
-        |         lower(split_part(split_part(url, '//', 2), '/', 1)) AS host
-        |  FROM u),
-        |r AS (
-        |  SELECT doc_id, host,
-        |         row_number() OVER (
-        |           PARTITION BY host
-        |           ORDER BY ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15))::BIGINT,
-        |                    doc_id) AS rn
-        |  FROM h)
-        |SELECT doc_id, host FROM r WHERE rn <= 10 ORDER BY doc_id""".stripMargin,
-
-    // same split algebra + RE2-safe tracking-param regex; DuckDB's
-    // regexp_replace needs the explicit 'g' flag (Spark's is global)
-    "url_normalize" ->
-      """WITH u AS (
-        |  SELECT doc_id,
-        |    'https://Site' || (doc_id % 23) || '.Example.com/P/' || doc_id ||
-        |    CASE WHEN doc_id % 4 = 0
-        |           THEN '?keep=' || doc_id || '&utm_medium=email&gclid=zz'
-        |         WHEN doc_id % 2 = 0 THEN '?utm_source=feed&fbclid=abc'
-        |         ELSE '' END ||
-        |    CASE WHEN doc_id % 3 = 0 THEN '#section' ELSE '' END AS url
-        |  FROM documents),
-        |pq AS (
-        |  SELECT doc_id, url,
-        |    split_part(split_part(url, '#', 1), '?', 1) AS base,
-        |    CASE WHEN strpos(split_part(url, '#', 1), '?') > 0
-        |         THEN substr(split_part(url, '#', 1),
-        |                     strpos(split_part(url, '#', 1), '?') + 1)
-        |         ELSE '' END AS q
-        |  FROM u),
-        |cl AS (
-        |  SELECT doc_id, url, base,
-        |    regexp_replace(
-        |      regexp_replace(q,
-        |        '(^|&)(utm_[A-Za-z0-9_]*|fbclid|gclid)=[^&]*', '', 'g'),
-        |      '^&', '') AS cq
-        |  FROM pq),
-        |nb AS (
-        |  SELECT doc_id, url, cq,
-        |    CASE WHEN strpos(base, '//') > 0 THEN
-        |      lower(substr(base, 1, strpos(base, '//') + 1) ||
-        |            split_part(substr(base, strpos(base, '//') + 2), '/', 1))
-        |      || substr(substr(base, strpos(base, '//') + 2),
-        |           length(split_part(substr(base, strpos(base, '//') + 2),
-        |                             '/', 1)) + 1)
-        |    ELSE base END AS normbase
-        |  FROM cl)
-        |SELECT doc_id, url,
-        |       CASE WHEN cq = '' THEN normbase
-        |            ELSE normbase || '?' || cq END AS url_norm
-        |FROM nb ORDER BY doc_id""".stripMargin,
-
-    // bigram lift replayed from scratch: same non-empty single-space
-    // tokens, same adjacent pairs with multiplicity, same integer-exact
-    // c_xy·N_uni²/(c_x·c_y·N_bi) with a single double division
-    "text_bigram_lift" ->
-      """WITH toks AS (
-        |  SELECT list_filter(string_split(text, ' '), x -> x != '') AS t
-        |  FROM documents),
-        |uc AS (
-        |  SELECT w, COUNT(*) AS c
-        |  FROM (SELECT unnest(t) AS w FROM toks) GROUP BY w),
-        |nu AS (SELECT SUM(c) AS n FROM uc),
-        |bc AS (
-        |  SELECT b, COUNT(*) AS cxy FROM (
-        |    SELECT unnest([t[i] || ' ' || t[i+1] FOR i IN range(1, len(t))])
-        |           AS b
-        |    FROM toks) GROUP BY b),
-        |nb AS (SELECT SUM(cxy) AS n FROM bc)
-        |SELECT split_part(b, ' ', 1) AS w1, split_part(b, ' ', 2) AS w2,
-        |       cxy, ux.c AS cx, uy.c AS cy,
-        |       (CAST(cxy AS DOUBLE) * CAST(nu.n AS DOUBLE)
-        |          * CAST(nu.n AS DOUBLE))
-        |         / (CAST(ux.c AS DOUBLE) * CAST(uy.c AS DOUBLE)
-        |              * CAST(nb.n AS DOUBLE)) AS lift
-        |FROM bc CROSS JOIN nu CROSS JOIN nb
-        |JOIN uc ux ON ux.w = split_part(b, ' ', 1)
-        |JOIN uc uy ON uy.w = split_part(b, ' ', 2)
-        |WHERE cxy >= 5
-        |ORDER BY lift DESC, w1, w2 LIMIT 100""".stripMargin,
-
-    // successor-table replay: same adjacent pairs with multiplicity, the
-    // struct-max argmax ≡ (cnt DESC, w2 DESC) rn=1
-    "text_bigram_next" ->
-      """WITH toks AS (
-        |  SELECT list_filter(string_split(text, ' '), x -> x != '') AS t
-        |  FROM documents),
-        |bc AS (
-        |  SELECT b, CAST(COUNT(*) AS BIGINT) AS cnt FROM (
-        |    SELECT unnest([t[i] || ' ' || t[i+1] FOR i IN range(1, len(t))])
-        |           AS b
-        |    FROM toks) GROUP BY b),
-        |sp AS (SELECT split_part(b, ' ', 1) AS w1,
-        |              split_part(b, ' ', 2) AS w2, cnt FROM bc),
-        |r AS (
-        |  SELECT w1, w2, cnt,
-        |         ROW_NUMBER() OVER (PARTITION BY w1
-        |                            ORDER BY cnt DESC, w2 DESC) AS rn,
-        |         CAST(SUM(cnt) OVER (PARTITION BY w1) AS BIGINT) AS total
-        |  FROM sp)
-        |SELECT w1, w2 AS next_w, cnt AS next_cnt, total
-        |FROM r WHERE rn = 1 AND total >= 10 ORDER BY w1""".stripMargin,
-
-    // BPE learning replayed round-for-round: the same word-frequency
-    // base, per-round MATERIALIZED CTEs (pair counts → best pair → merge
-    // applied via the same single-pass replace), merges collected with
-    // their ranks. MATERIALIZED is load-bearing: each wf level is
-    // referenced twice, so inlining would blow up 2^n
-    "text_bpe_learn" ->
-      (bpeChainSql(BpeMerges) + "\n" +
-        (1 to BpeMerges).map(i =>
-          s"SELECT $i AS merge_rank, " +
-            s"replace(split_part(pr, ' ', 1), chr(57344), '<') AS lhs, " +
-            s"replace(split_part(pr, ' ', 2), chr(57344), '<') AS rhs, " +
-            s"replace(replace(pr, ' ', ''), chr(57344), '<') AS merged, " +
-            s"total AS pair_count FROM b$i")
-          .mkString("SELECT * FROM (", " UNION ALL ", ") ORDER BY merge_rank")),
-
-    // per-doc BPE token counts: the same replayed chain, words joined to
-    // the final symbolization, symbols counted by space algebra
-    "text_bpe_count" ->
-      (bpeChainSql(BpeMerges) + s"""
-         |SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_words,
-         |       CAST(SUM(len(sym) - len(replace(sym, ' ', '')) - 1)
-         |            AS BIGINT) AS n_bpe_tokens
-         |FROM (SELECT doc_id,
-         |             unnest(list_filter(string_split(text, ' '),
-         |                                x -> x != '')) AS w
-         |      FROM documents) d
-         |JOIN wf$BpeMerges USING (w)
-         |GROUP BY doc_id ORDER BY doc_id""".stripMargin),
-
-    // the induced vocabulary from the final symbolization of the same
-    // replayed chain
-    "text_bpe_vocab" ->
-      (bpeChainSql(BpeMerges) + s"""
-         |SELECT replace(tok, chr(57344), '<') AS tok, n FROM (
-         |  SELECT tok, CAST(SUM(cnt) AS BIGINT) AS n FROM (
-         |    SELECT cnt, unnest(list_filter(string_split(sym, ' '),
-         |                                   x -> x != '')) AS tok
-         |    FROM wf$BpeMerges)
-         |  GROUP BY tok ORDER BY n DESC, tok LIMIT 50)
-         |ORDER BY n DESC, tok""".stripMargin),
-
-    // the learned chain's FULL vocabulary ranked into dense ids, per-word
-    // symbol-id lists rebuilt on the vocabulary, then per-doc ordered
-    // reassembly — the same structures the Spark encode builds
-    "text_bpe_encode" ->
-      (bpeChainSql(BpeMerges) + s""",
-         |vocab_all AS MATERIALIZED (
-         |  SELECT tok, CAST(SUM(cnt) AS BIGINT) AS n FROM (
-         |    SELECT cnt, unnest(list_filter(string_split(sym, ' '),
-         |                                   x -> x != '')) AS tok
-         |    FROM wf$BpeMerges)
-         |  GROUP BY tok),
-         |tid AS MATERIALIZED (
-         |  SELECT tok, CAST(ROW_NUMBER() OVER (ORDER BY n DESC, tok)
-         |              AS BIGINT) AS tok_id
-         |  FROM vocab_all),
-         |wsym AS (
-         |  SELECT w, u['spos'] AS spos, u['tok'] AS tok FROM (
-         |    SELECT w, unnest([{'spos': j, 'tok': t[j]}
-         |                      FOR j IN range(1, len(t) + 1)]) AS u
-         |    FROM (SELECT w, list_filter(string_split(sym, ' '),
-         |                                x -> x != '') AS t
-         |          FROM wf$BpeMerges))),
-         |wt AS MATERIALIZED (
-         |  SELECT w, list(tok_id ORDER BY spos) AS wids
-         |  FROM wsym JOIN tid USING (tok) GROUP BY w),
-         |docw AS (
-         |  SELECT doc_id, u['wpos'] AS wpos, u['w'] AS w FROM (
-         |    SELECT doc_id, unnest([{'wpos': j, 'w': t[j]}
-         |                           FOR j IN range(1, len(t) + 1)]) AS u
-         |    FROM (SELECT doc_id, list_filter(string_split(text, ' '),
-         |                                     x -> x != '') AS t
-         |          FROM documents))),
-         |enc AS (
-         |  SELECT doc_id, flatten(list(wids ORDER BY wpos)) AS ids
-         |  FROM docw JOIN wt USING (w) GROUP BY doc_id)
-         |SELECT doc_id, CAST(len(ids) AS BIGINT) AS n_tokens,
-         |       CAST(generate_subscripts(ids[1:48], 1) AS INTEGER) AS pos,
-         |       unnest(ids[1:48]) AS tok_id
-         |FROM enc ORDER BY doc_id, pos""".stripMargin),
-
-    // the Bloom filter replayed as set membership: bit positions are
-    // token-window chunking: same single-space split, 1-based inclusive
-    // list slice = Spark's slice(toks, start+1, 32), tail chunk short
-    "text_chunk" ->
-      """WITH t AS (SELECT doc_id, string_split(text, ' ') AS toks
-        |           FROM documents),
-        |s AS (SELECT doc_id, toks, unnest(range(0, len(toks), 24)) AS start
-        |      FROM t WHERE len(toks) > 0)
-        |SELECT doc_id AS id, CAST(start // 24 AS INTEGER) AS chunk_idx,
-        |       CAST(least(32, len(toks) - start) AS INTEGER) AS n_tokens,
-        |       array_to_string(toks[start+1 : start+32], ' ') AS chunk_text
-        |FROM s ORDER BY id, chunk_idx""".stripMargin,
-
-    // LM-proxy quality score: bucket = exact floor(log2(corpus count)) via
-    // binary-digit-count (length(bin(c))-1 = Spark's length(conv(c,10,2))-1
-    // — string ops, engine-exact); SUM cast to BIGINT (HUGEINT ban), the
-    // mean is one division of exact integers
-    "text_lm_score" ->
-      """WITH toks AS (
-        |  SELECT doc_id, unnest(string_split(text, ' ')) AS token
-        |  FROM documents),
-        |t2 AS (SELECT doc_id, token FROM toks WHERE token != ''),
-        |c AS (SELECT token, length(bin(count(*))) - 1 AS bucket
-        |      FROM t2 GROUP BY token)
-        |SELECT doc_id AS id, COUNT(*) AS n_tokens,
-        |       CAST(SUM(bucket) AS BIGINT) AS sum_bucket,
-        |       CAST(CAST(SUM(bucket) AS BIGINT) AS DOUBLE)
-        |         / CAST(COUNT(*) AS DOUBLE) AS mean_freq_bucket
-        |FROM t2 JOIN c USING (token)
-        |GROUP BY doc_id ORDER BY id""".stripMargin,
-
-    // pmod(md5Hash60(i||':'||key), m); a probe hits iff ALL its positions
-    // are in the reference side's distinct position set — outcome-identical
-    // to the packed-bitset mask test, false positives included
-    "dedup_bloom_prefilter" ->
-      """WITH keyed AS (SELECT doc_id, md5(text) AS k FROM documents),
-        |ref AS (SELECT DISTINCT k FROM keyed WHERE doc_id % 10 = 0),
-        |pos AS (
-        |  SELECT DISTINCT
-        |         ('0x' || substr(md5(i || ':' || k), 1, 15))::BIGINT % 8192 AS p
-        |  FROM ref CROSS JOIN (SELECT unnest(['0', '1', '2']) AS i) ix),
-        |cand AS (
-        |  SELECT doc_id, k FROM keyed
-        |  WHERE ('0x' || substr(md5('0:' || k), 1, 15))::BIGINT % 8192
-        |          IN (SELECT p FROM pos)
-        |    AND ('0x' || substr(md5('1:' || k), 1, 15))::BIGINT % 8192
-        |          IN (SELECT p FROM pos)
-        |    AND ('0x' || substr(md5('2:' || k), 1, 15))::BIGINT % 8192
-        |          IN (SELECT p FROM pos))
-        |SELECT doc_id, (k IN (SELECT k FROM ref)) AS confirmed
-        |FROM cand ORDER BY doc_id""".stripMargin,
-
-    // the KMV sketch replayed from scratch: same 60-bit md5 hash, same
-    // bottom-64 distinct set (row_number over the distinct hashes), same
-    // (k−1)·2⁶⁰/h_k estimator — every factor an exactly-representable
-    // double, one division
-    "stat_kmv_distinct" -> kmvOracle,
-    // the SAME direct-sketch replay: the entry goes through persisted
-    // half-corpus sketch tables + merge, and bottom-k(bottom-k(A) ∪
-    // bottom-k(B)) = bottom-k(A ∪ B) exactly — the gate verifies the
-    // merge identity
-    "stat_kmv_incremental" -> kmvOracle,
-
-    // same shingle semantics as jaccardOracle, collapsed to distinct
-    // (source, shingle) rows
-    "stat_corpus_overlap" ->
-      """WITH toks AS (
-        |  SELECT source, string_split(text, ' ') AS t FROM documents),
-        |sh0 AS (
-        |  SELECT source,
-        |    CASE WHEN len(t) >= 3
-        |         THEN list_distinct([array_to_string(t[i:i+2], ' ')
-        |                             FOR i IN range(1, len(t) - 1)])
-        |         ELSE [array_to_string(t, ' ')] END AS s
-        |  FROM toks),
-        |sh AS (SELECT DISTINCT source, unnest(s) AS sh FROM sh0),
-        |tot AS (SELECT source, COUNT(*) AS total FROM sh GROUP BY source),
-        |i AS (
-        |  SELECT a.source AS src_a, b.source AS src_b, COUNT(*) AS inter
-        |  FROM sh a JOIN sh b ON a.sh = b.sh AND a.source < b.source
-        |  GROUP BY 1, 2)
-        |SELECT src_a, src_b, inter, ta.total AS total_a, tb.total AS total_b,
-        |       inter / CAST(ta.total AS DOUBLE) AS containment_a,
-        |       inter / CAST(ta.total + tb.total - inter AS DOUBLE) AS jaccard
-        |FROM i JOIN tot ta ON ta.source = i.src_a
-        |       JOIN tot tb ON tb.source = i.src_b
-        |ORDER BY src_a, src_b""".stripMargin,
-
-    "corpus_diff" ->
-      """WITH cur AS (
-        |  SELECT doc_id,
-        |         CASE WHEN doc_id % 10 = 7 THEN text || ' v2' ELSE text END
-        |           AS text
-        |  FROM documents WHERE doc_id % 10 != 3
-        |  UNION ALL
-        |  SELECT doc_id + 1000000 AS doc_id, text FROM documents
-        |  WHERE doc_id % 10 = 4)
-        |SELECT COALESCE(o.doc_id, c.doc_id) AS id,
-        |       CASE WHEN o.doc_id IS NULL THEN 'added'
-        |            WHEN c.doc_id IS NULL THEN 'removed'
-        |            WHEN o.text != c.text THEN 'changed' END AS change
-        |FROM documents o FULL OUTER JOIN cur c ON o.doc_id = c.doc_id
-        |WHERE o.doc_id IS NULL OR c.doc_id IS NULL OR o.text != c.text
-        |ORDER BY id""".stripMargin,
-
-    // conditional-aggregation replay of the explicit-values pivot
-    // confusion replay: the FULL 5-language stopword argmax (ties toward
-    // the lexicographically greatest code, matching array_max on
-    // (score, lang) structs), then one conditional-aggregation pass
-    // single-space tokenization is the langid-family convention (shared
-    // with the text_langid oracle; the kernel's \\s+ split coincides on
-    // space-separated corpora); counts COALESCE to 0 so NULL text falls
-    // through to 'und' exactly like the Spark side's otherwise()
-    "text_langid_confusion" ->
-      """WITH tok AS (SELECT lang, string_split(lower(trim(text)), ' ') AS toks
-        |             FROM documents),
-        |c AS (SELECT lang,
-        |  COALESCE(len(list_filter(toks, x -> x IN ('the','and','of','to',
-        |    'in','is','that','with','for','was'))), 0) AS en_c,
-        |  COALESCE(len(list_filter(toks, x -> x IN ('der','die','das','und',
-        |    'ist','nicht','mit','ein','von','zu'))), 0) AS de_c,
-        |  COALESCE(len(list_filter(toks, x -> x IN ('le','la','les','et',
-        |    'est','dans','pour','que','une','des'))), 0) AS fr_c,
-        |  COALESCE(len(list_filter(toks, x -> x IN ('el','la','los','las',
-        |    'es','en','que','una','por','con'))), 0) AS es_c,
-        |  COALESCE(len(list_filter(toks, x -> x IN ('的','是','在','了',
-        |    '和','有','我','不','这','他'))), 0) AS zh_c
-        |  FROM tok),
-        |p AS (SELECT lang,
-        |  CASE WHEN greatest(en_c, de_c, fr_c, es_c, zh_c) = 0 THEN 'und'
-        |       WHEN zh_c = greatest(en_c, de_c, fr_c, es_c, zh_c) THEN 'zh'
-        |       WHEN fr_c = greatest(en_c, de_c, fr_c, es_c, zh_c) THEN 'fr'
-        |       WHEN es_c = greatest(en_c, de_c, fr_c, es_c, zh_c) THEN 'es'
-        |       WHEN en_c = greatest(en_c, de_c, fr_c, es_c, zh_c) THEN 'en'
-        |       ELSE 'de' END AS pred
-        |  FROM c)
-        |SELECT lang,
-        |  CAST(COUNT(*) FILTER (pred = 'en') AS BIGINT) AS en,
-        |  CAST(COUNT(*) FILTER (pred = 'de') AS BIGINT) AS de,
-        |  CAST(COUNT(*) FILTER (pred = 'fr') AS BIGINT) AS fr,
-        |  CAST(COUNT(*) FILTER (pred = 'es') AS BIGINT) AS es,
-        |  CAST(COUNT(*) FILTER (pred = 'zh') AS BIGINT) AS zh,
-        |  CAST(COUNT(*) FILTER (pred = 'und') AS BIGINT) AS und
-        |FROM p GROUP BY lang ORDER BY lang""".stripMargin,
-
-    "stat_pivot" ->
-      ("""SELECT lang, """ +
-        (0 until 20).map(i =>
-          s"CAST(COUNT(*) FILTER (source = 'src$i') AS BIGINT) AS src$i")
-          .mkString(", ") +
-        """ FROM documents GROUP BY lang ORDER BY lang"""),
-
-    // sample-quantile replay: the bottom-256 (hash, value) sample per
-    // group via row_number over the shared md5 hash, then the discrete
-    // ceil(p·n)-th smallest sampled value; p cast to DOUBLE up front
-    // (bare DuckDB decimals would make ceil() decimal arithmetic)
-    "stat_quantile_sketch" ->
-      """WITH base AS (
-        |  SELECT event_type AS g,
-        |         ('0x' || substr(md5(CAST(event_id AS VARCHAR)),
-        |                         1, 15))::BIGINT AS h,
-        |         CAST(value AS DOUBLE) AS v
-        |  FROM events WHERE event_id IS NOT NULL AND value IS NOT NULL),
-        |r AS (SELECT g, h, v,
-        |        row_number() OVER (PARTITION BY g ORDER BY h, v) AS rn
-        |      FROM base),
-        |s AS (SELECT g, v FROM r WHERE rn <= 256),
-        |n AS (SELECT g, CAST(count(*) AS BIGINT) AS sample_n
-        |      FROM s GROUP BY 1),
-        |sv AS (SELECT g, v,
-        |         row_number() OVER (PARTITION BY g ORDER BY v) AS vr
-        |       FROM s),
-        |px AS (SELECT CAST(unnest([0.5, 0.9, 0.99]) AS DOUBLE) AS p)
-        |SELECT n.g AS event_type, px.p, sv.v AS q_est, n.sample_n
-        |FROM n JOIN px ON TRUE
-        |  JOIN sv ON sv.g = n.g
-        |         AND sv.vr = CAST(greatest(1, ceil(n.sample_n * px.p))
-        |                          AS BIGINT)
-        |ORDER BY event_type, p""".stripMargin,
-
-    "stat_hll" -> hllOracle,
-
-    // JL projection replay. The raw dot VALUES are the output here, so
-    // list_dot_product won't do (its reassociated/FMA accumulation drifts
-    // a last ulp from the sequential Java kernel — why the ann oracles
-    // output ranks only). Instead: FLOAT-QUANTIZED literal directions
-    // (every product exact in a double) + list_reduce, which folds
-    // left-to-right exactly like the codegen'd loop
-    "embed_project" -> {
-      // the constants go through a VARCHAR list cast: DuckDB's string →
-      // DOUBLE parse is correctly rounded, while a bare numeric literal
-      // lands in DECIMAL whose double conversion is NOT (measured: off
-      // by an ulp for full-precision constants)
-      val cols = (0 until 8).map { p =>
-        val lit = pipeline.Similarity.planeVectorF(p, 64)
-          .map(d => s"'${d.toString}'").mkString("[", ", ", "]::DOUBLE[]")
-        s"""list_reduce([v[i] * ($lit)[i] FOR i IN range(1, 65)],
-           |         (a, b) -> a + b) AS p$p""".stripMargin
-      }.mkString(",\n       ")
-      s"""SELECT vec_id AS id,
-         |       $cols
-         |FROM (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-         |      FROM embeddings)
-         |ORDER BY id""".stripMargin
-    },
-
-    // HLL overlap replay: the stat_hll register derivation with the
-    // bucket retained, pairwise elementwise-max union, the same scaled
-    // harmonic estimator at every level, inclusion–exclusion last
-    "stat_hll_overlap" ->
-      """WITH toks AS (SELECT doc_id, source, string_split(text, ' ') AS t
-        |              FROM documents),
-        |sh0 AS (
-        |  SELECT source,
-        |    CASE WHEN len(t) >= 3
-        |         THEN list_distinct([array_to_string(t[i:i+2], ' ')
-        |                             FOR i IN range(1, len(t) - 1)])
-        |         ELSE [array_to_string(t, ' ')] END AS s
-        |  FROM toks),
-        |h AS (
-        |  SELECT DISTINCT source,
-        |         ('0x' || substr(md5(sh), 1, 15))::BIGINT AS h
-        |  FROM (SELECT source, unnest(s) AS sh FROM sh0)),
-        |r AS (SELECT source, h // (1::BIGINT << 54) AS bucket,
-        |             h % (1::BIGINT << 54) AS rest FROM h),
-        |regs0 AS (
-        |  SELECT source, bucket,
-        |         max(CASE WHEN rest = 0 THEN 55
-        |             ELSE 54 - length(bin(rest)) + 1 END) AS rho
-        |  FROM r GROUP BY 1, 2),
-        |grid AS (SELECT DISTINCT source, unnest(range(64)) AS bucket FROM h),
-        |regs AS (
-        |  SELECT g.source, g.bucket, COALESCE(r0.rho, 0) AS rho
-        |  FROM grid g LEFT JOIN regs0 r0
-        |    ON g.source = r0.source AND g.bucket = r0.bucket),
-        |singles AS (
-        |  SELECT source,
-        |    0.709::DOUBLE * 4096.0::DOUBLE * 36028797018963968.0::DOUBLE
-        |      / CAST(CAST(SUM(1::BIGINT << (55 - rho)) AS BIGINT) AS DOUBLE)
-        |      AS est
-        |  FROM regs GROUP BY source),
-        |pr AS (
-        |  SELECT a.source AS src_a, b.source AS src_b,
-        |         greatest(a.rho, b.rho) AS rho
-        |  FROM regs a JOIN regs b
-        |    ON a.bucket = b.bucket AND a.source < b.source),
-        |un AS (
-        |  SELECT src_a, src_b,
-        |    0.709::DOUBLE * 4096.0::DOUBLE * 36028797018963968.0::DOUBLE
-        |      / CAST(CAST(SUM(1::BIGINT << (55 - rho)) AS BIGINT) AS DOUBLE)
-        |      AS est_union
-        |  FROM pr GROUP BY 1, 2)
-        |SELECT src_a, src_b, sa.est AS est_a, sb.est AS est_b, est_union,
-        |       sa.est + sb.est - est_union AS est_overlap
-        |FROM un
-        |JOIN singles sa ON sa.source = src_a
-        |JOIN singles sb ON sb.source = src_b
-        |ORDER BY src_a, src_b""".stripMargin,
-
-    // growth-curve replay: shuffleOrder's sharded permutation (shard →
-    // per-shard rank → offset cumsum), first-appearance mins, one
-    // conditional count/sum per checkpoint
-    "stat_vocab_growth" ->
-      """WITH d AS (
-        |  SELECT doc_id, text,
-        |         ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15))
-        |           ::BIGINT AS h
-        |  FROM documents),
-        |sh AS (SELECT doc_id, text, h, h % 32 AS shard FROM d),
-        |r AS (SELECT doc_id, text, shard,
-        |             ROW_NUMBER() OVER (PARTITION BY shard
-        |                                ORDER BY h, doc_id) AS pos
-        |      FROM sh),
-        |off AS (SELECT shard, COUNT(*) AS n FROM sh GROUP BY shard),
-        |o2 AS (SELECT shard,
-        |              COALESCE(SUM(n) OVER (ORDER BY shard
-        |                ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-        |              0) AS o
-        |       FROM off),
-        |g AS (SELECT doc_id, text, o + pos - 1 AS gp
-        |      FROM r JOIN o2 ON r.shard = o2.shard),
-        |tk AS (SELECT gp, unnest(list_filter(string_split(text, ' '),
-        |                                     x -> x != '')) AS w
-        |       FROM g),
-        |fp AS (SELECT w, MIN(gp) AS first_gp FROM tk GROUP BY w),
-        |dt AS (SELECT gp, CAST(COUNT(*) AS BIGINT) AS nt
-        |       FROM tk GROUP BY gp),
-        |cp AS (SELECT unnest([50, 100, 200, 400, 800, 1600]) AS c),
-        |ds AS (SELECT c, CAST(COUNT(*) AS BIGINT) AS docs_seen
-        |       FROM cp JOIN g ON gp < c GROUP BY c),
-        |ts AS (SELECT c, CAST(SUM(nt) AS BIGINT) AS tokens_seen
-        |       FROM cp JOIN dt ON gp < c GROUP BY c),
-        |ty AS (SELECT c, CAST(COUNT(*) AS BIGINT) AS distinct_types
-        |       FROM cp JOIN fp ON first_gp < c GROUP BY c)
-        |SELECT c, COALESCE(docs_seen, 0) AS docs_seen,
-        |       COALESCE(tokens_seen, 0) AS tokens_seen,
-        |       COALESCE(distinct_types, 0) AS distinct_types
-        |FROM cp LEFT JOIN ds USING (c) LEFT JOIN ts USING (c)
-        |        LEFT JOIN ty USING (c)
-        |ORDER BY c""".stripMargin,
-
-    // Gini replay: same compressed count-value table, same tie-block rank
-    // algebra, DECIMAL(38,0) end-to-end, division on string-rendered
-    // decimals
-    "stat_token_gini" ->
-      """WITH tk AS (
-        |  SELECT source, tok FROM (
-        |    SELECT source, unnest(string_split(text, ' ')) AS tok
-        |    FROM documents) WHERE tok != ''),
-        |c AS (SELECT source, tok, COUNT(*) AS c FROM tk GROUP BY 1, 2),
-        |z AS (SELECT source, c AS v, CAST(COUNT(*) AS BIGINT) AS m
-        |      FROM c GROUP BY 1, 2),
-        |w AS (
-        |  SELECT source, v, m,
-        |         CAST(COALESCE(SUM(m) OVER (PARTITION BY source ORDER BY v
-        |                ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-        |              0) + 1 AS BIGINT) AS s
-        |  FROM z),
-        |a AS (
-        |  SELECT source,
-        |         CAST(SUM(CAST(v AS DECIMAL(38,0)) * m * (2*s + m - 1))
-        |              AS DECIMAL(38,0)) AS a2,
-        |         CAST(SUM(m) AS BIGINT) AS n,
-        |         CAST(SUM(v * m) AS BIGINT) AS tot
-        |  FROM w GROUP BY source)
-        |SELECT source, n AS vocab_size, tot AS total_tokens,
-        |       CAST(CAST(CAST(a2 - CAST(n + 1 AS DECIMAL(38,0)) * tot
-        |                      AS DECIMAL(38,0)) AS VARCHAR) AS DOUBLE) /
-        |         CAST(CAST(CAST(CAST(n AS DECIMAL(38,0)) * tot
-        |                        AS DECIMAL(38,0)) AS VARCHAR) AS DOUBLE)
-        |         AS gini
-        |FROM a ORDER BY source""".stripMargin,
-
-    // Simpson replay: same token counts, Σc² and S·S as DECIMAL(38,0),
-    // each output one division of the string-rendered decimals
-    "stat_token_simpson" ->
-      """WITH tk AS (
-        |  SELECT source, tok FROM (
-        |    SELECT source, unnest(string_split(text, ' ')) AS tok
-        |    FROM documents) WHERE tok != ''),
-        |c AS (SELECT source, tok, COUNT(*) AS c FROM tk GROUP BY 1, 2),
-        |a AS (
-        |  SELECT source,
-        |         CAST(COUNT(*) AS BIGINT) AS vocab_size,
-        |         CAST(SUM(c) AS BIGINT) AS tot,
-        |         CAST(SUM(CAST(CAST(c AS DECIMAL(38,0)) * c
-        |                       AS DECIMAL(38,0))) AS DECIMAL(38,0)) AS sq
-        |  FROM c GROUP BY source)
-        |SELECT source, vocab_size, tot AS total_tokens,
-        |       CAST(CAST(sq AS VARCHAR) AS DOUBLE) /
-        |         CAST(CAST(CAST(CAST(tot AS DECIMAL(38,0)) * tot
-        |                        AS DECIMAL(38,0)) AS VARCHAR) AS DOUBLE)
-        |         AS simpson,
-        |       CAST(CAST(CAST(CAST(tot AS DECIMAL(38,0)) * tot
-        |                      AS DECIMAL(38,0)) AS VARCHAR) AS DOUBLE) /
-        |         CAST(CAST(sq AS VARCHAR) AS DOUBLE) AS eff_types
-        |FROM a ORDER BY source""".stripMargin,
-
-    // LSH band report replayed: same 3-token shingles as jaccardOracle,
-    // seeded 60-bit md5 signature mins, bucket = the r-tuple of values,
-    // integer occupancy algebra (c·(c−1)/2 exact — the product is even)
-    "stat_lsh_bands" ->
-      """WITH toks AS (
-        |  SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-        |sh AS (
-        |  SELECT doc_id,
-        |    CASE WHEN len(t) >= 3
-        |         THEN list_distinct([array_to_string(t[i:i+2], ' ')
-        |                             FOR i IN range(1, len(t) - 1)])
-        |         ELSE [array_to_string(t, ' ')] END AS s
-        |  FROM toks),
-        |ex AS (SELECT doc_id, unnest(s) AS g FROM sh),
-        |hx AS (
-        |  SELECT doc_id, i,
-        |         MIN(('0x' || substr(md5(CAST(i AS VARCHAR) || '|' || g),
-        |                             1, 15))::BIGINT) AS m
-        |  FROM ex CROSS JOIN (SELECT unnest(range(0, 8)) AS i)
-        |  GROUP BY doc_id, i),
-        |bk AS (
-        |  SELECT doc_id, CAST(i // 2 AS INTEGER) AS band,
-        |         list(m ORDER BY i) AS key
-        |  FROM hx GROUP BY doc_id, band),
-        |bc AS (SELECT band, key, COUNT(*) AS c FROM bk GROUP BY band, key)
-        |SELECT band, CAST(COUNT(*) AS BIGINT) AS n_buckets,
-        |       MAX(c) AS max_bucket,
-        |       CAST(SUM(CASE WHEN c = 1 THEN 1 ELSE 0 END) AS BIGINT)
-        |         AS singleton_buckets,
-        |       CAST(SUM(CASE WHEN c % 2 = 0 THEN (c // 2) * (c - 1)
-        |                     ELSE c * ((c - 1) // 2) END) AS BIGINT)
-        |         AS candidate_pairs
-        |FROM bc GROUP BY band ORDER BY band""".stripMargin,
-
-    // KS replay: cumulative conditional counts over the distinct-value
-    // grid; every SUM/window-SUM cast from HUGEINT to BIGINT
-    "stat_ks_drift" ->
-      """WITH src AS (
-        |  SELECT value AS v, event_type = 'purchase' AS a FROM events
-        |  WHERE event_type IN ('purchase', 'view') AND value IS NOT NULL),
-        |c AS (
-        |  SELECT v,
-        |         CAST(SUM(CASE WHEN a THEN 1 ELSE 0 END) AS BIGINT) AS ca,
-        |         CAST(SUM(CASE WHEN NOT a THEN 1 ELSE 0 END) AS BIGINT) AS cb
-        |  FROM src GROUP BY v),
-        |cum AS (
-        |  SELECT v,
-        |         CAST(SUM(ca) OVER (ORDER BY v) AS BIGINT) AS cuma,
-        |         CAST(SUM(cb) OVER (ORDER BY v) AS BIGINT) AS cumb,
-        |         CAST((SELECT SUM(ca) FROM c) AS BIGINT) AS na,
-        |         CAST((SELECT SUM(cb) FROM c) AS BIGINT) AS nb
-        |  FROM c),
-        |g AS (
-        |  SELECT v, na, nb,
-        |         ABS(CAST(cuma AS DOUBLE) / CAST(na AS DOUBLE)
-        |             - CAST(cumb AS DOUBLE) / CAST(nb AS DOUBLE)) AS gap
-        |  FROM cum)
-        |SELECT na AS n_a, nb AS n_b, MAX(gap) AS ks,
-        |       (SELECT v FROM g ORDER BY gap DESC, v LIMIT 1) AS at_value
-        |FROM g GROUP BY na, nb""".stripMargin,
-
-    // duplicate-rate replay over the same normalized fingerprint
-    "stat_dup_rate" ->
-      """SELECT source, CAST(COUNT(*) AS BIGINT) AS docs,
-        |  CAST(COUNT(DISTINCT md5(trim(regexp_replace(regexp_replace(
-        |    lower(text), '[^a-z0-9]+', ' ', 'g'), ' +', ' ', 'g'))))
-        |    AS BIGINT) AS distinct_docs,
-        |  CAST(COUNT(*) - COUNT(DISTINCT md5(trim(regexp_replace(
-        |    regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g'),
-        |    ' +', ' ', 'g')))) AS DOUBLE)
-        |    / CAST(COUNT(*) AS DOUBLE) AS dup_rate
-        |FROM documents GROUP BY source ORDER BY source""".stripMargin,
-
-    // k-anonymity replay: quasi-identifier tuple counts, sub-k tail only
-    "stat_k_anonymity" ->
-      """SELECT lang, source, CAST(n_chars // 64 AS BIGINT) AS len_bucket,
-        |       COUNT(*) AS n
-        |FROM documents
-        |GROUP BY 1, 2, 3 HAVING COUNT(*) < 5
-        |ORDER BY lang, source, len_bucket""".stripMargin,
-
-    // Count-Min replay: counter (i, slot) = count of token OCCURRENCES
-    // whose hash's i-th 9-bit slice is slot; est = min over the d=4 rows.
-    // Pure integer shifts/masks over the shared 60-bit md5 hash
-    "stat_cms" ->
-      """WITH tk AS (
-        |  SELECT tok FROM (
-        |    SELECT unnest(string_split(text, ' ')) AS tok FROM documents)
-        |  WHERE tok != ''),
-        |h AS (
-        |  SELECT tok, ('0x' || substr(md5(tok), 1, 15))::BIGINT AS hv
-        |  FROM tk),
-        |b AS (
-        |  SELECT i, (hv >> (i * 9)) & 511 AS slot,
-        |         CAST(COUNT(*) AS BIGINT) AS c
-        |  FROM h CROSS JOIN (SELECT unnest([0, 1, 2, 3]) AS i) ii
-        |  GROUP BY 1, 2),
-        |top AS (
-        |  SELECT tok AS token, CAST(COUNT(*) AS BIGINT) AS cnt
-        |  FROM tk GROUP BY tok ORDER BY cnt DESC, tok LIMIT 25),
-        |probe AS (
-        |  SELECT token, cnt,
-        |         ('0x' || substr(md5(token), 1, 15))::BIGINT AS hv
-        |  FROM top)
-        |SELECT p.token, p.cnt, MIN(b.c) AS est
-        |FROM probe p JOIN b ON b.slot = ((p.hv >> (b.i * 9)) & 511)
-        |GROUP BY p.token, p.cnt
-        |ORDER BY p.cnt DESC, p.token""".stripMargin,
-
-    // the streaming register maintenance converges to the identical batch
-    // sketch (elementwise-max merge), so the same replay applies
-    "st12_stream_hll" -> hllOracle,
-
-    // streaming CMS ≡ one-shot batch sketch (add-merge identity): replay
-    // the per-source counters in SQL, probe global top-10 tokens
-    "st13_stream_cms" ->
-      """WITH tk AS (
-        |  SELECT source, tok FROM (
-        |    SELECT source, unnest(string_split(text, ' ')) AS tok
-        |    FROM documents) WHERE tok != ''),
-        |h AS (
-        |  SELECT source, tok,
-        |         ('0x' || substr(md5(tok), 1, 15))::BIGINT AS hv
-        |  FROM tk),
-        |b AS (
-        |  SELECT source, i, (hv >> (i * 9)) & 511 AS slot,
-        |         CAST(COUNT(*) AS BIGINT) AS c
-        |  FROM h CROSS JOIN (SELECT unnest([0, 1, 2, 3]) AS i) ii
-        |  GROUP BY 1, 2, 3),
-        |top AS (
-        |  SELECT tok, COUNT(*) AS g FROM tk
-        |  GROUP BY tok ORDER BY g DESC, tok LIMIT 10),
-        |exact AS (
-        |  SELECT source, tok AS token, CAST(COUNT(*) AS BIGINT) AS cnt
-        |  FROM tk JOIN top USING (tok) GROUP BY 1, 2),
-        |probe AS (
-        |  SELECT source, token, cnt,
-        |         ('0x' || substr(md5(token), 1, 15))::BIGINT AS hv
-        |  FROM exact)
-        |SELECT p.source, p.token, p.cnt, MIN(b.c) AS est
-        |FROM probe p JOIN b ON b.source = p.source
-        |  AND b.slot = ((p.hv >> (b.i * 9)) & 511)
-        |GROUP BY 1, 2, 3 ORDER BY p.source, p.token""".stripMargin,
-
-    // identical unrolled Morton formula, generated from the same source
-    "layout_zorder" ->
-      s"""SELECT doc_id,
-        |  CAST(${graft.sources.Layout.zAddressSql("doc_id", "n_chars", 16)}
-        |       AS BIGINT) AS z
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    // compaction-plan replay: same skewed inventory, target = 1.5× mean
-    // (all floor divisions), largest-first cumulative-sum bin assignment
-    // per partition; files at/over target keep bin −1
-    "layout_compaction" ->
-      """WITH inv AS (
-        |  SELECT lang AS part,
-        |    CAST(FLOOR(SQRT(doc_id % 1600)) AS BIGINT) AS file_no,
-        |    CAST(SUM(n_chars) AS BIGINT) AS bytes
-        |  FROM documents GROUP BY 1, 2),
-        |tgt AS (SELECT (3 * CAST(SUM(bytes) AS BIGINT))
-        |               // (2 * COUNT(*)) AS t FROM inv),
-        |small AS (
-        |  SELECT part, file_no, bytes,
-        |    CAST(COALESCE(SUM(bytes) OVER (
-        |      PARTITION BY part ORDER BY bytes DESC, file_no
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-        |      AS BIGINT) AS start_byte
-        |  FROM inv WHERE bytes < (SELECT t FROM tgt))
-        |SELECT part, file_no, bytes, start_byte,
-        |       start_byte // (SELECT t FROM tgt) AS bin
-        |FROM small
-        |UNION ALL
-        |SELECT part, file_no, bytes,
-        |       CAST(-1 AS BIGINT), CAST(-1 AS BIGINT)
-        |FROM inv WHERE bytes >= (SELECT t FROM tgt)
-        |ORDER BY part, file_no""".stripMargin,
-
-    "mm_blob_stats" ->
-      """SELECT doc_id AS media_id, CAST(strlen(text) AS BIGINT) AS n_bytes,
-        |       CAST(ceil(strlen(text) / 64.0) AS BIGINT) AS n_frames
-        |FROM documents ORDER BY media_id""".stripMargin,
-
-    // decode replay: the synthetic image's pixel (x,y) channels are
-    // linear congruences mod 256 of (doc_id, x, y) with per-id geometry
-    // W = 4 + id%5, H = 4 + id%3 — sums are exact BIGINTs, one final
-    // division to DOUBLE on both sides (same IEEE rounding)
-    "mm_decode" ->
-      """WITH px AS (
-        |  SELECT doc_id, x.range AS x, y.range AS y
-        |  FROM documents
-        |  CROSS JOIN range(8) x CROSS JOIN range(6) y
-        |  WHERE x.range < 4 + doc_id % 5 AND y.range < 4 + doc_id % 3)
-        |SELECT doc_id AS media_id, TRUE AS decoded_ok,
-        |  CAST(4 + doc_id % 5 AS INT) AS width,
-        |  CAST(4 + doc_id % 3 AS INT) AS height,
-        |  CAST(sum((7*doc_id + 3*x + 5*y) % 256) AS DOUBLE) / count(*) AS mean_r,
-        |  CAST(sum((11*doc_id + 5*x + 7*y) % 256) AS DOUBLE) / count(*) AS mean_g,
-        |  CAST(sum((13*doc_id + 9*x + 2*y) % 256) AS DOUBLE) / count(*) AS mean_b
-        |FROM px GROUP BY doc_id ORDER BY media_id""".stripMargin,
-
-    // aspect-bucket replay: analytic geometry (the congruence image's
-    // width/height formulas) through the SAME integer argmin chain the
-    // operator unrolls (Multimodal.aspectBucketSql)
-    "mm_aspect_buckets" -> {
-      val idx = Multimodal.aspectBucketSql(
-        "4 + doc_id % 5", "4 + doc_id % 3", AspectBucketList)
-      val ns = AspectBucketList.map(_._1).mkString(", ")
-      val ds = AspectBucketList.map(_._2).mkString(", ")
-      s"""SELECT doc_id AS media_id,
-         |  CAST(4 + doc_id % 5 AS INT) AS width,
-         |  CAST(4 + doc_id % 3 AS INT) AS height,
-         |  CAST(([$ns])[($idx) + 1] AS INT) AS bucket_n,
-         |  CAST(([$ds])[($idx) + 1] AS INT) AS bucket_d
-         |FROM documents ORDER BY media_id""".stripMargin
-    },
-
-    // resize replay: kept pixels are the source's even coordinates
-    // (nearest-neighbor, top-left anchor), so the resized means are the
-    // same congruence summed over (2x, 2y)
-    "mm_resize" ->
-      """WITH px AS (
-        |  SELECT doc_id, 2*x.range AS x, 2*y.range AS y
-        |  FROM documents
-        |  CROSS JOIN range(4) x CROSS JOIN range(3) y
-        |  WHERE 2*x.range < 4 + doc_id % 5 AND 2*y.range < 4 + doc_id % 3)
-        |SELECT doc_id AS media_id,
-        |  CAST((4 + doc_id % 5 + 1) // 2 AS INT) AS width,
-        |  CAST((4 + doc_id % 3 + 1) // 2 AS INT) AS height,
-        |  CAST(sum((7*doc_id + 3*x + 5*y) % 256) AS DOUBLE) / count(*) AS mean_r,
-        |  CAST(sum((11*doc_id + 5*x + 7*y) % 256) AS DOUBLE) / count(*) AS mean_g,
-        |  CAST(sum((13*doc_id + 9*x + 2*y) % 256) AS DOUBLE) / count(*) AS mean_b
-        |FROM px GROUP BY doc_id ORDER BY media_id""".stripMargin,
-
-    // perceptual dedup replay: dHash grid coordinates are exact integer
-    // floors, luma the integer BT.601 combination of the congruence
-    // channels, the fingerprint two 32-bit-half BIGINTs (1<<63 overflows
-    // signed SQL), and the pair set BRUTE-FORCED — the banded Spark path
-    // must be lossless (pigeonhole), exactly like dedup_jaccard_prefix's
-    // ground-truth gate
-    "mm_image_dedup" ->
-      """WITH ids AS (
-        |  SELECT doc_id AS media_id, doc_id AS basis FROM documents
-        |  UNION ALL
-        |  SELECT -(doc_id + 1), doc_id FROM documents
-        |  WHERE doc_id % 7 = 0),
-        |g AS (
-        |  SELECT media_id, basis, gi.range AS gi, gj.range AS gj,
-        |         (gi.range * (16 + basis % 7)) // 9 AS x,
-        |         (gj.range * (12 + basis % 5)) // 8 AS y
-        |  FROM ids CROSS JOIN range(9) gi CROSS JOIN range(8) gj),
-        |l AS (
-        |  SELECT media_id, gi, gj,
-        |    299*(((73*basis + 151*x + 37*y + 11)
-        |          * (73*basis + 151*x + 37*y + 11)) % 65536 // 256)
-        |  + 587*(((89*basis + 97*x + 131*y + 23)
-        |          * (89*basis + 97*x + 131*y + 23)) % 65536 // 256)
-        |  + 114*(((53*basis + 61*x + 113*y + 41)
-        |          * (53*basis + 61*x + 113*y + 41)) % 65536 // 256) AS luma
-        |  FROM g),
-        |setbits AS (
-        |  SELECT p.media_id, p.gj*8 + p.gi AS bitpos
-        |  FROM l p JOIN l q ON p.media_id = q.media_id
-        |        AND q.gj = p.gj AND q.gi = p.gi + 1
-        |  WHERE p.gi < 8 AND q.luma > p.luma),
-        |fp AS (
-        |  SELECT i.media_id,
-        |    CAST(COALESCE(SUM(CASE WHEN bitpos < 32
-        |      THEN (CAST(1 AS BIGINT) << CAST(bitpos AS INT)) END), 0)
-        |      AS BIGINT) AS lo,
-        |    CAST(COALESCE(SUM(CASE WHEN bitpos >= 32
-        |      THEN (CAST(1 AS BIGINT) << CAST(bitpos - 32 AS INT)) END), 0)
-        |      AS BIGINT) AS hi
-        |  FROM ids i LEFT JOIN setbits ON i.media_id = setbits.media_id
-        |  GROUP BY 1)
-        |SELECT a.media_id AS id_a, b.media_id AS id_b,
-        |  CAST(bit_count(xor(a.lo, b.lo)) + bit_count(xor(a.hi, b.hi))
-        |       AS INT) AS hamming
-        |FROM fp a JOIN fp b ON a.media_id < b.media_id
-        |WHERE bit_count(xor(a.lo, b.lo)) + bit_count(xor(a.hi, b.hi)) <= 3
-        |ORDER BY id_a, id_b""".stripMargin,
-
-    // incremental probe replay: same analytic fingerprints as
-    // mm_image_dedup, but corpus = even doc_ids, batch = the re-posted
-    // copies (negative ids); ground truth is the brute-forced BIPARTITE
-    // cross-pair set — the banded probe must be lossless against it
-    "mm_fingerprint_incremental" ->
-      """WITH ids AS (
-        |  SELECT doc_id AS media_id, doc_id AS basis FROM documents
-        |  WHERE doc_id % 2 = 0
-        |  UNION ALL
-        |  SELECT -(doc_id + 1), doc_id FROM documents
-        |  WHERE doc_id % 7 = 0),
-        |g AS (
-        |  SELECT media_id, basis, gi.range AS gi, gj.range AS gj,
-        |         (gi.range * (16 + basis % 7)) // 9 AS x,
-        |         (gj.range * (12 + basis % 5)) // 8 AS y
-        |  FROM ids CROSS JOIN range(9) gi CROSS JOIN range(8) gj),
-        |l AS (
-        |  SELECT media_id, gi, gj,
-        |    299*(((73*basis + 151*x + 37*y + 11)
-        |          * (73*basis + 151*x + 37*y + 11)) % 65536 // 256)
-        |  + 587*(((89*basis + 97*x + 131*y + 23)
-        |          * (89*basis + 97*x + 131*y + 23)) % 65536 // 256)
-        |  + 114*(((53*basis + 61*x + 113*y + 41)
-        |          * (53*basis + 61*x + 113*y + 41)) % 65536 // 256) AS luma
-        |  FROM g),
-        |setbits AS (
-        |  SELECT p.media_id, p.gj*8 + p.gi AS bitpos
-        |  FROM l p JOIN l q ON p.media_id = q.media_id
-        |        AND q.gj = p.gj AND q.gi = p.gi + 1
-        |  WHERE p.gi < 8 AND q.luma > p.luma),
-        |fp AS (
-        |  SELECT i.media_id,
-        |    CAST(COALESCE(SUM(CASE WHEN bitpos < 32
-        |      THEN (CAST(1 AS BIGINT) << CAST(bitpos AS INT)) END), 0)
-        |      AS BIGINT) AS lo,
-        |    CAST(COALESCE(SUM(CASE WHEN bitpos >= 32
-        |      THEN (CAST(1 AS BIGINT) << CAST(bitpos - 32 AS INT)) END), 0)
-        |      AS BIGINT) AS hi
-        |  FROM ids i LEFT JOIN setbits ON i.media_id = setbits.media_id
-        |  GROUP BY 1)
-        |SELECT a.media_id AS batch_id, b.media_id AS corpus_id,
-        |  CAST(bit_count(xor(a.lo, b.lo)) + bit_count(xor(a.hi, b.hi))
-        |       AS INT) AS hamming
-        |FROM fp a JOIN fp b ON a.media_id < 0 AND b.media_id >= 0
-        |WHERE bit_count(xor(a.lo, b.lo)) + bit_count(xor(a.hi, b.hi)) <= 3
-        |ORDER BY batch_id, corpus_id""".stripMargin,
-
-    // acoustic dedup replay: gradient bits compare the raw congruence
-    // values (the -32768 signed shift cancels in the comparison), packed
-    // into the same two 32-bit halves; pairs brute-forced as ground truth
-    "mm_audio_dedup" ->
-      """WITH ids AS (
-        |  SELECT doc_id AS media_id, doc_id AS basis FROM documents
-        |  UNION ALL
-        |  SELECT -(doc_id + 1), doc_id FROM documents
-        |  WHERE doc_id % 9 = 0),
-        |cl AS (SELECT media_id, basis, 32 + basis % 17 AS n FROM ids),
-        |setbits AS (
-        |  SELECT media_id, i.range AS bitpos
-        |  FROM cl CROSS JOIN range(64) i
-        |  WHERE ((73*basis + 151*(((i.range+1)*n)//65) + 11)
-        |          * (73*basis + 151*(((i.range+1)*n)//65) + 11)) % 65536
-        |      > ((73*basis + 151*((i.range*n)//65) + 11)
-        |          * (73*basis + 151*((i.range*n)//65) + 11)) % 65536),
-        |fp AS (
-        |  SELECT c.media_id,
-        |    CAST(COALESCE(SUM(CASE WHEN bitpos < 32
-        |      THEN (CAST(1 AS BIGINT) << CAST(bitpos AS INT)) END), 0)
-        |      AS BIGINT) AS lo,
-        |    CAST(COALESCE(SUM(CASE WHEN bitpos >= 32
-        |      THEN (CAST(1 AS BIGINT) << CAST(bitpos - 32 AS INT)) END), 0)
-        |      AS BIGINT) AS hi
-        |  FROM cl c LEFT JOIN setbits ON c.media_id = setbits.media_id
-        |  GROUP BY 1)
-        |SELECT a.media_id AS id_a, b.media_id AS id_b,
-        |  CAST(bit_count(xor(a.lo, b.lo)) + bit_count(xor(a.hi, b.hi))
-        |       AS INT) AS hamming
-        |FROM fp a JOIN fp b ON a.media_id < b.media_id
-        |WHERE bit_count(xor(a.lo, b.lo)) + bit_count(xor(a.hi, b.hi)) <= 3
-        |ORDER BY id_a, id_b""".stripMargin,
-
-    // audio replay: PCM sample i of clip id is a congruence folded into
-    // signed 16-bit; counts/sums/peaks are exact integers on both sides
-    "mm_audio_decode" ->
-      """WITH sm AS (
-        |  SELECT doc_id, i.range AS i,
-        |         (1103515245*doc_id + 12345 + 2654435761*i.range) % 65536
-        |           - 32768 AS a
-        |  FROM documents CROSS JOIN range(49) i
-        |  WHERE i.range < 32 + doc_id % 17)
-        |SELECT doc_id AS media_id, TRUE AS decoded_ok,
-        |  CAST(32 + doc_id % 17 AS BIGINT) AS n_samples,
-        |  CAST(8000 AS INT) AS sample_rate,
-        |  CAST(sum(a) AS BIGINT) AS sum_amp,
-        |  CAST(max(abs(a)) AS INT) AS peak
-        |FROM sm GROUP BY doc_id ORDER BY media_id""".stripMargin,
-
-    "mm_frames" ->
-      """SELECT media_id, frame_idx FROM (
-        |  SELECT doc_id AS media_id,
-        |         unnest(range(CAST(ceil(strlen(text) / 64.0) AS BIGINT)))
-        |           AS frame_idx
-        |  FROM documents)
-        |ORDER BY media_id, frame_idx""".stripMargin,
-
-    // frame dedup replay: frames are 64-char slices of the ASCII text
-    // (byte == char here), checksummed with md5 like the Spark side; the
-    // df cap drops boilerplate frames from intersection AND set sizes;
-    // counts are BIGINT (count(*), no SUM ⇒ no HUGEINT), the Jaccard is
-    // one division of exact integers
-    "mm_frame_dedup" ->
-      """WITH fr AS (
-        |  SELECT DISTINCT doc_id AS media_id,
-        |         md5(substr(text, CAST(start*64+1 AS BIGINT), 64)) AS fh
-        |  FROM (SELECT doc_id, text,
-        |          unnest(range(CAST(ceil(strlen(text) / 64.0) AS BIGINT)))
-        |            AS start
-        |        FROM documents)),
-        |keep AS (
-        |  SELECT media_id, fh FROM fr
-        |  QUALIFY count(*) OVER (PARTITION BY fh) <= 20),
-        |tot AS (SELECT media_id, count(*) AS nf FROM keep GROUP BY 1),
-        |inter AS (
-        |  SELECT a.media_id AS id_a, b.media_id AS id_b, count(*) AS matched
-        |  FROM keep a JOIN keep b
-        |    ON a.fh = b.fh AND a.media_id < b.media_id
-        |  GROUP BY 1, 2)
-        |SELECT id_a, id_b, matched, ta.nf AS nf_a, tb.nf AS nf_b,
-        |       CAST(matched AS DOUBLE)
-        |         / CAST(ta.nf + tb.nf - matched AS DOUBLE) AS jaccard
-        |FROM inter JOIN tot ta ON id_a = ta.media_id
-        |           JOIN tot tb ON id_b = tb.media_id
-        |WHERE CAST(matched AS DOUBLE)
-        |        / CAST(ta.nf + tb.nf - matched AS DOUBLE) >= 0.5
-        |ORDER BY id_a, id_b""".stripMargin,
-
-    // incremental frame probe replay: corpus = all documents' frame
-    // sets, batch = every 7th document re-chunked under id+1000000;
-    // boilerplate df computed over the CORPUS only, dropped from both
-    // sides before totals — the bipartite ground truth in one pass
-    "mm_frame_incremental" ->
-      """WITH fr_c AS (
-        |  SELECT DISTINCT doc_id AS media_id,
-        |         md5(substr(text, CAST(start*64+1 AS BIGINT), 64)) AS fh
-        |  FROM (SELECT doc_id, text,
-        |          unnest(range(CAST(ceil(strlen(text) / 64.0) AS BIGINT)))
-        |            AS start
-        |        FROM documents)),
-        |fr_b AS (
-        |  SELECT DISTINCT doc_id + 1000000 AS media_id,
-        |         md5(substr(text, CAST(start*64+1 AS BIGINT), 64)) AS fh
-        |  FROM (SELECT doc_id, text,
-        |          unnest(range(CAST(ceil(strlen(text) / 64.0) AS BIGINT)))
-        |            AS start
-        |        FROM documents WHERE doc_id % 7 = 0)),
-        |boiler AS (
-        |  SELECT fh FROM fr_c GROUP BY fh HAVING count(*) > 20),
-        |keep_c AS (SELECT * FROM fr_c WHERE fh NOT IN (SELECT fh FROM boiler)),
-        |keep_b AS (SELECT * FROM fr_b WHERE fh NOT IN (SELECT fh FROM boiler)),
-        |tot_c AS (SELECT media_id, count(*) AS nf FROM keep_c GROUP BY 1),
-        |tot_b AS (SELECT media_id, count(*) AS nf FROM keep_b GROUP BY 1),
-        |inter AS (
-        |  SELECT a.media_id AS batch_id, b.media_id AS corpus_id,
-        |         count(*) AS matched
-        |  FROM keep_b a JOIN keep_c b ON a.fh = b.fh
-        |  GROUP BY 1, 2)
-        |SELECT batch_id, corpus_id, matched, tb.nf AS nf_batch,
-        |       tc.nf AS nf_corpus,
-        |       CAST(matched AS DOUBLE)
-        |         / CAST(tb.nf + tc.nf - matched AS DOUBLE) AS jaccard
-        |FROM inter JOIN tot_b tb ON batch_id = tb.media_id
-        |           JOIN tot_c tc ON corpus_id = tc.media_id
-        |WHERE CAST(matched AS DOUBLE)
-        |        / CAST(tb.nf + tc.nf - matched AS DOUBLE) >= 0.5
-        |ORDER BY batch_id, corpus_id""".stripMargin,
-
-    "dedup_embedding_cosine_exact" ->
-      """WITH e AS (
-        |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings)
-        |SELECT a.vec_id AS id_a, b.vec_id AS id_b
-        |FROM e a JOIN e b ON a.vec_id < b.vec_id
-        |WHERE list_cosine_similarity(a.v, b.v) >= 0.4
-        |ORDER BY id_a, id_b""".stripMargin,
-
-    "st3_recovery_worklist" ->
-      """SELECT 'nations~' AS document_uri,
-        |       'nations~/' || CAST(n_nationkey AS VARCHAR) || '#' ||
-        |       CAST(ROW_NUMBER() OVER (ORDER BY n_nationkey) AS VARCHAR) AS txn_id,
-        |       ROW_NUMBER() OVER (ORDER BY n_nationkey) AS revision
-        |FROM nation ORDER BY document_uri, revision""".stripMargin
-  )
-
-  /** Exact-Hamming ground truth for the simhash pair set, computed from
-    * scratch in DuckDB: the same md5-derived 60-bit token hashes, the same
-    * per-bit majority vote, brute-force pairs with bit_count(xor) <= 3.
-    * The banded Spark path is pigeonhole-complete for maxHamming <= bands-1,
-    * so the two pair sets must be IDENTICAL — a hard oracle, not rows-only. */
-  private def simhashOracle: String =
-    """WITH tok AS (
-      |  SELECT doc_id, unnest(string_split(text, ' ')) AS token FROM documents),
-      |h AS (
-      |  SELECT doc_id, ('0x' || substr(md5(token), 1, 15))::BIGINT AS th
-      |  FROM tok),
-      |votes AS (
-      |  SELECT doc_id, b.bit,
-      |         CASE WHEN SUM(CASE WHEN (th >> b.bit) & 1 = 1
-      |                            THEN 1 ELSE -1 END) > 0
-      |              THEN (1::BIGINT << b.bit) ELSE 0 END AS bitval
-      |  FROM h CROSS JOIN (SELECT unnest(range(60)) AS bit) b
-      |  GROUP BY doc_id, b.bit),
-      |sig AS (
-      |  SELECT doc_id, CAST(SUM(bitval) AS BIGINT) AS sig
-      |  FROM votes GROUP BY doc_id)
-      |SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-      |       CAST(bit_count(xor(a.sig, b.sig)) AS BIGINT) AS hamming
-      |FROM sig a JOIN sig b ON a.doc_id < b.doc_id
-      |WHERE bit_count(xor(a.sig, b.sig)) <= 3
-      |ORDER BY id_a, id_b""".stripMargin
-
-  /** Full replay of the LSH-ANN algorithm in DuckDB: the deterministic
-    * hyperplanes are inlined as double literals (shortest-round-trip
-    * rendering parses back to identical doubles), buckets/multiprobes/
-    * re-rank run the same computation — so even this APPROXIMATE operator
-    * gets an exact oracle. */
-  private def planeLit(p: Int): String =
-    pipeline.Similarity.planeVector(p, 64).map(_.toString)
-      .mkString("[", ", ", "]")
-
-  /** SQL for the sign-bucket of `v` under the first `planes` deterministic
-    * hyperplanes — shared by every LSH-replay oracle. */
-  private def bucketSql(planes: Int): String =
-    (0 until planes).map { p =>
-      s"(CASE WHEN list_dot_product(v, ${planeLit(p)}) >= 0 THEN ${1L << p} ELSE 0 END)"
-    }.mkString("\n     + ")
-
-  /** Replay of graph_pagerank: the ann_knn_graph edge chain, then the
-    * 3-round integer-scaled fixpoint unrolled CTE-for-iteration. Every
-    * operation is integer multiply/add/floor-division ('//' ≡ Spark's
-    * 'div' on nonnegative longs) and every aggregate is CAST back to
-    * BIGINT (DuckDB SUM(BIGINT) is HUGEINT — the r5 hasher incident). */
-  private def pageRankOracle: String = {
-    val scale = pipeline.GraphAnalytics.PageRankScale
-    def iter(prev: String, cur: String): String =
-      s"""$cur AS (
-         |  SELECT n.node,
-         |    ${scale * 15L} // ((SELECT n FROM nn) * 100)
-         |    + (85 * COALESCE(s.m, 0)) // 100 AS r
-         |  FROM nodes n LEFT JOIN (
-         |    SELECT e.neighbor_id AS nid,
-         |           CAST(SUM(p.r // d.outdeg) AS BIGINT) AS m
-         |    FROM edges e JOIN $prev p ON e.node_id = p.node
-         |                 JOIN deg d ON e.node_id = d.node_id
-         |    GROUP BY 1) s ON n.node = s.nid)""".stripMargin
-    s"""WITH e AS (
-       |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-       |bkt AS (
-       |  SELECT vec_id, v, ${bucketSql(6)} AS bucket FROM e),
-       |cand AS (
-       |  SELECT a.vec_id AS node_id, b.vec_id AS neighbor_id,
-       |         ${cosSql("a.v", "b.v")} AS sim
-       |  FROM bkt a JOIN bkt b ON a.vec_id != b.vec_id
-       |  WHERE bit_count(xor(CAST(a.bucket AS BIGINT),
-       |                      CAST(b.bucket AS BIGINT))) <= 1),
-       |rankedg AS (
-       |  SELECT node_id, neighbor_id,
-       |         ROW_NUMBER() OVER (PARTITION BY node_id
-       |                            ORDER BY sim DESC, neighbor_id) AS rank
-       |  FROM cand),
-       |edges AS (SELECT node_id, neighbor_id FROM rankedg WHERE rank <= 3),
-       |nodes AS (SELECT node_id AS node FROM
-       |  (SELECT node_id FROM edges UNION SELECT neighbor_id FROM edges)),
-       |nn AS (SELECT COUNT(*) AS n FROM nodes),
-       |deg AS (SELECT node_id, COUNT(*) AS outdeg FROM edges GROUP BY 1),
-       |r0 AS (SELECT node, $scale // (SELECT n FROM nn) AS r FROM nodes),
-       |${iter("r0", "r1")},
-       |${iter("r1", "r2")},
-       |${iter("r2", "r3")}
-       |SELECT node AS vec_id, r AS rank_scaled FROM r3
-       |ORDER BY vec_id""".stripMargin
-  }
-
-  /** Replay of graph_pagerank_dangling: the customer→nation→region edge
-    * table (regions are sinks), 4 rounds of the integer recurrence WITH
-    * uniform dangling-mass redistribution — each round adds one BIGINT
-    * dangling sum and a floor per-node share. Every CTE level is
-    * MATERIALIZED: r{i-1} is referenced twice per round (g{i} and r{i}),
-    * so plain CTE inlining would duplicate the chain 2^n times. */
-  private def pageRankDanglingOracle: String = {
-    val scale = pipeline.GraphAnalytics.PageRankScale
-    def iter(prev: String, i: Int): String =
-      s"""g$i AS MATERIALIZED (
-         |  SELECT CAST(COALESCE(SUM(p.r), 0) AS BIGINT)
-         |         // (SELECT n FROM nn) AS g
-         |  FROM $prev p JOIN dang ON p.node = dang.node),
-         |r$i AS MATERIALIZED (
-         |  SELECT n.node,
-         |    ${scale * 15L} // ((SELECT n FROM nn) * 100)
-         |    + (85 * (COALESCE(s.m, 0) + (SELECT g FROM g$i))) // 100 AS r
-         |  FROM nodes n LEFT JOIN (
-         |    SELECT e.dst AS nid, CAST(SUM(p.r // d.outdeg) AS BIGINT) AS m
-         |    FROM edges e JOIN $prev p ON e.src = p.node
-         |                 JOIN deg d ON e.src = d.src
-         |    GROUP BY 1) s ON n.node = s.nid)""".stripMargin
-    s"""WITH edges AS MATERIALIZED (
-       |  SELECT CAST(c_custkey AS BIGINT) + 100000 AS src,
-       |         CAST(c_nationkey AS BIGINT) AS dst FROM customer
-       |  UNION ALL
-       |  SELECT CAST(n_nationkey AS BIGINT),
-       |         CAST(n_regionkey AS BIGINT) + 900000 FROM nation),
-       |nodes AS MATERIALIZED (
-       |  SELECT src AS node FROM edges UNION SELECT dst FROM edges),
-       |nn AS MATERIALIZED (SELECT COUNT(*) AS n FROM nodes),
-       |deg AS MATERIALIZED (
-       |  SELECT src, COUNT(*) AS outdeg FROM edges GROUP BY 1),
-       |dang AS MATERIALIZED (
-       |  SELECT node FROM nodes
-       |  WHERE node NOT IN (SELECT src FROM edges)),
-       |r0 AS MATERIALIZED (
-       |  SELECT node, $scale // (SELECT n FROM nn) AS r FROM nodes),
-       |${iter("r0", 1)},
-       |${iter("r1", 2)},
-       |${iter("r2", 3)},
-       |${iter("r3", 4)}
-       |SELECT node, r AS rank_scaled FROM r4 ORDER BY node""".stripMargin
-  }
-
-  /** Replay of graph_pagerank_personal: the same sink-bearing graph, but
-    * teleport (and the dangling-mass return) restricted to the SEED set
-    * (every 10th customer) — r0 puts scale//|S| on seeds and 0 elsewhere,
-    * each round adds the seed-only base and the seed-only dangling share.
-    * Same MATERIALIZED discipline as the dangling oracle (r{i-1} is
-    * referenced twice per round). */
-  private def personalPageRankOracle: String = {
-    val scale = pipeline.GraphAnalytics.PageRankScale
-    def iter(prev: String, i: Int): String =
-      s"""g$i AS MATERIALIZED (
-         |  SELECT CAST(COALESCE(SUM(p.r), 0) AS BIGINT)
-         |         // (SELECT ns FROM nsd) AS g
-         |  FROM $prev p JOIN dang ON p.node = dang.node),
-         |r$i AS MATERIALIZED (
-         |  SELECT n.node,
-         |    CASE WHEN n.is_seed THEN
-         |      ${scale * 15L} // ((SELECT ns FROM nsd) * 100) ELSE 0 END
-         |    + (85 * (COALESCE(s.m, 0) +
-         |        CASE WHEN n.is_seed THEN (SELECT g FROM g$i) ELSE 0 END))
-         |      // 100 AS r
-         |  FROM nodes n LEFT JOIN (
-         |    SELECT e.dst AS nid, CAST(SUM(p.r // d.outdeg) AS BIGINT) AS m
-         |    FROM edges e JOIN $prev p ON e.src = p.node
-         |                 JOIN deg d ON e.src = d.src
-         |    GROUP BY 1) s ON n.node = s.nid)""".stripMargin
-    s"""WITH edges AS MATERIALIZED (
-       |  SELECT CAST(c_custkey AS BIGINT) + 100000 AS src,
-       |         CAST(c_nationkey AS BIGINT) AS dst FROM customer
-       |  UNION ALL
-       |  SELECT CAST(n_nationkey AS BIGINT),
-       |         CAST(n_regionkey AS BIGINT) + 900000 FROM nation),
-       |nodes0 AS MATERIALIZED (
-       |  SELECT src AS node FROM edges UNION SELECT dst FROM edges),
-       |seeds AS MATERIALIZED (
-       |  SELECT CAST(c_custkey AS BIGINT) + 100000 AS node FROM customer
-       |  WHERE c_custkey % 10 = 0),
-       |nodes AS MATERIALIZED (
-       |  SELECT node, node IN (SELECT node FROM seeds) AS is_seed
-       |  FROM nodes0),
-       |nsd AS MATERIALIZED (
-       |  SELECT COUNT(*) AS ns FROM nodes WHERE is_seed),
-       |deg AS MATERIALIZED (
-       |  SELECT src, COUNT(*) AS outdeg FROM edges GROUP BY 1),
-       |dang AS MATERIALIZED (
-       |  SELECT node FROM nodes
-       |  WHERE node NOT IN (SELECT src FROM edges)),
-       |r0 AS MATERIALIZED (
-       |  SELECT node, CASE WHEN is_seed
-       |    THEN $scale // (SELECT ns FROM nsd) ELSE 0 END AS r
-       |  FROM nodes),
-       |${iter("r0", 1)},
-       |${iter("r1", 2)},
-       |${iter("r2", 3)},
-       |${iter("r3", 4)}
-       |SELECT node, r AS rank_scaled FROM r4 ORDER BY node""".stripMargin
-  }
-
-  /** Replay of graph_knn_components: the knn edge chain, symmetrized,
-    * then the transitive closure as a recursive CTE with min-label
-    * components; isolated vectors coalesce to themselves. */
-  /** The k-NN edge derivation (k=3, 6 planes) shared by the components
-    * and triangle-count oracles — ends in `kedges` (node_id, neighbor_id). */
-  private def knnEdgeCtes: String =
-    s"""e AS (
-       |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-       |bkt AS (
-       |  SELECT vec_id, v, ${bucketSql(6)} AS bucket FROM e),
-       |cand AS (
-       |  SELECT a.vec_id AS node_id, b.vec_id AS neighbor_id,
-       |         ${cosSql("a.v", "b.v")} AS sim
-       |  FROM bkt a JOIN bkt b ON a.vec_id != b.vec_id
-       |  WHERE bit_count(xor(CAST(a.bucket AS BIGINT),
-       |                      CAST(b.bucket AS BIGINT))) <= 1),
-       |rankedg AS (
-       |  SELECT node_id, neighbor_id,
-       |         ROW_NUMBER() OVER (PARTITION BY node_id
-       |                            ORDER BY sim DESC, neighbor_id) AS rank
-       |  FROM cand),
-       |kedges AS (SELECT node_id, neighbor_id FROM rankedg WHERE rank <= 3)""".stripMargin
-
-  private def knnComponentsOracle: String =
-    s"""WITH RECURSIVE $knnEdgeCtes,
-       |edges AS (
-       |  SELECT node_id AS a, neighbor_id AS b FROM kedges
-       |  UNION SELECT neighbor_id, node_id FROM kedges),
-       |reach(id, r) AS (
-       |  SELECT a, b FROM edges
-       |  UNION
-       |  SELECT x.id, e2.b FROM reach x JOIN edges e2 ON x.r = e2.a),
-       |lbl AS (SELECT id, LEAST(id, MIN(r)) AS component_id
-       |        FROM reach GROUP BY id)
-       |SELECT emb.vec_id,
-       |       COALESCE(l.component_id, emb.vec_id) AS component_id
-       |FROM embeddings emb LEFT JOIN lbl l ON emb.vec_id = l.id
-       |ORDER BY vec_id""".stripMargin
-
-  /** Per-node triangle counts over the same k-NN edge set: canonical
-    * undirected edges, each triangle enumerated once from its min-id
-    * corner (the SET of triangles is orientation-independent, so this
-    * replays the degree-ordered Spark enumeration exactly). */
-  private def knnTrianglesOracle: String =
-    s"""WITH $knnEdgeCtes,
-       |ce AS (
-       |  SELECT DISTINCT LEAST(node_id, neighbor_id) AS u,
-       |         GREATEST(node_id, neighbor_id) AS v
-       |  FROM kedges WHERE node_id != neighbor_id),
-       |tri AS (
-       |  SELECT a.u AS x, a.v AS y, b.v AS z
-       |  FROM ce a JOIN ce b ON a.u = b.u AND a.v < b.v
-       |  JOIN ce c ON c.u = a.v AND c.v = b.v),
-       |corners AS (
-       |  SELECT x FROM tri
-       |  UNION ALL SELECT y FROM tri
-       |  UNION ALL SELECT z FROM tri),
-       |cnt AS (SELECT x, CAST(COUNT(*) AS BIGINT) AS triangles
-       |        FROM corners GROUP BY 1)
-       |SELECT emb.vec_id,
-       |       COALESCE(cnt.triangles, CAST(0 AS BIGINT)) AS triangles
-       |FROM embeddings emb LEFT JOIN cnt ON emb.vec_id = cnt.x
-       |ORDER BY vec_id""".stripMargin
-
-  private def annLshOracle: String = {
-    val bucketExpr = bucketSql(4)
-    s"""WITH e AS (
-       |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-       |bkt AS (
-       |  SELECT vec_id, v,
-       |    $bucketExpr AS bucket
-       |  FROM e),
-       |q AS (
-       |  SELECT vec_id AS query_id, v AS qv,
-       |         unnest([bucket, xor(bucket,1), xor(bucket,2),
-       |                 xor(bucket,4), xor(bucket,8)]) AS probe
-       |  FROM bkt WHERE vec_id < 10),
-       |cand AS (
-       |  SELECT DISTINCT q.query_id, c.vec_id AS id,
-       |         list_cosine_similarity(q.qv, c.v) AS sim
-       |  FROM q JOIN bkt c ON c.bucket = q.probe AND c.vec_id != q.query_id),
-       |ranked AS (
-       |  SELECT query_id, id AS neighbor_id,
-       |         ROW_NUMBER() OVER (PARTITION BY query_id
-       |                            ORDER BY sim DESC, id) AS rank
-       |  FROM cand)
-       |SELECT query_id, neighbor_id, rank FROM ranked
-       |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin
-  }
-
-  /** Spark's exact cosine computation, spelled out:
-    * dot(a,b) / (sqrt(dot(a,a)) * sqrt(dot(b,b))). Deliberately NOT
-    * DuckDB's list_cosine_similarity (dot/sqrt(xx*yy)) — where the SET of
-    * results depends on a comparison (centroid assignment, a threshold),
-    * the oracle must run the bit-identical operation sequence, or a 1-ulp
-    * divergence in the division path flips set membership. */
-  private def cosSql(a: String, b: String): String =
-    s"list_dot_product($a, $b) / (sqrt(list_dot_product($a, $a)) * " +
-      s"sqrt(list_dot_product($b, $b)))"
-
-  /** Replay of the LSH near-dup pair search: candidates are exactly the
-    * pairs whose sign-buckets are within Hamming distance 1 (== the
-    * Hamming-1 multiprobe set), verified with exact cosine. */
-  private def cosineLshPairsOracle: String =
-    s"""WITH e AS (
-       |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-       |bkt AS (
-       |  SELECT vec_id, v,
-       |    ${bucketSql(6)} AS bucket
-       |  FROM e)
-       |SELECT a.vec_id AS id_a, b.vec_id AS id_b
-       |FROM bkt a JOIN bkt b ON a.vec_id < b.vec_id
-       |WHERE bit_count(xor(CAST(a.bucket AS BIGINT), CAST(b.bucket AS BIGINT))) <= 1
-       |  AND ${cosSql("a.v", "b.v")} >= 0.4
-       |ORDER BY id_a, id_b""".stripMargin
-
-  /** Replay of the IVF-flat search: deterministic centroids (first nlist
-    * vectors in id order), nearest-centroid assignment with centroid-id
-    * tie-break, nprobe probing, exact re-rank. */
-  /** MMR replay: exact-cosine pool (top poolK per query, the cosSql
-    * expression Spark's cosineTopK evaluates), then outK chained greedy
-    * steps — each step's max-sim aggregate, ½-scaled combination and
-    * (mmr DESC, id) argmax reproduce the flatMapGroups kernel's exact
-    * arithmetic. Every level is MATERIALIZED (each sel/cand table is
-    * referenced by three successors — plain CTE inlining would blow up
-    * 3^outK, the BPE-oracle lesson). */
-  private def mmrOracle(queryMax: Int, poolK: Int, outK: Int): String = {
-    val sb = new StringBuilder
-    sb.append(
-      s"""WITH e AS (
-         |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-         |q AS (SELECT vec_id AS query_id, v AS qv FROM e
-         |      WHERE vec_id < $queryMax),
-         |pool AS MATERIALIZED (
-         |  SELECT query_id, id, rel, v FROM (
-         |    SELECT q.query_id, c.vec_id AS id,
-         |           ${cosSql("q.qv", "c.v")} AS rel, c.v,
-         |           ROW_NUMBER() OVER (PARTITION BY q.query_id
-         |             ORDER BY ${cosSql("q.qv", "c.v")} DESC, c.vec_id) AS rn
-         |    FROM q JOIN e c ON c.vec_id != q.query_id)
-         |  WHERE rn <= $poolK),
-         |pick1 AS MATERIALIZED (
-         |  SELECT query_id, id, v,
-         |         0.5 * rel - 0.5 * CAST(0 AS DOUBLE) AS mmr,
-         |         CAST(1 AS BIGINT) AS r
-         |  FROM (SELECT pool.*, ROW_NUMBER() OVER (PARTITION BY query_id
-         |          ORDER BY 0.5 * rel - 0.5 * CAST(0 AS DOUBLE) DESC, id)
-         |          AS rn
-         |        FROM pool) WHERE rn = 1),
-         |sel1 AS MATERIALIZED (SELECT query_id, id, v FROM pick1),
-         |""".stripMargin)
-    for (t <- 2 to outK) {
-      val prev = t - 1
-      sb.append(
-        s"""cand$t AS MATERIALIZED (
-           |  SELECT pool.* FROM pool
-           |  WHERE NOT EXISTS (SELECT 1 FROM sel$prev s
-           |                    WHERE s.query_id = pool.query_id
-           |                      AND s.id = pool.id)),
-           |ms$t AS MATERIALIZED (
-           |  SELECT c.query_id, c.id, MAX(${cosSql("c.v", "s.v")}) AS m
-           |  FROM cand$t c JOIN sel$prev s ON s.query_id = c.query_id
-           |  GROUP BY 1, 2),
-           |pick$t AS MATERIALIZED (
-           |  SELECT query_id, id, v, mmr, CAST($t AS BIGINT) AS r FROM (
-           |    SELECT c.query_id, c.id, c.v,
-           |           0.5 * c.rel - 0.5 * ms$t.m AS mmr,
-           |           ROW_NUMBER() OVER (PARTITION BY c.query_id
-           |             ORDER BY 0.5 * c.rel - 0.5 * ms$t.m DESC, c.id)
-           |             AS rn
-           |    FROM cand$t c JOIN ms$t ON ms$t.query_id = c.query_id
-           |                           AND ms$t.id = c.id)
-           |  WHERE rn = 1),
-           |sel$t AS MATERIALIZED (
-           |  SELECT * FROM sel$prev
-           |  UNION ALL SELECT query_id, id, v FROM pick$t),
-           |""".stripMargin)
-    }
-    val picks = (1 to outK).map(t =>
-      s"SELECT query_id, id, r, mmr FROM pick$t").mkString("\n  UNION ALL ")
-    sb.append(
-      s"""allp AS (
-         |  $picks)
-         |SELECT query_id, id AS neighbor_id, r AS mmr_rank, mmr AS mmr_score
-         |FROM allp ORDER BY query_id, mmr_rank""".stripMargin)
-    sb.toString
-  }
-
-  /** Brute-force cosine top-5 for query vectors 0-9 — the exact-search
-    * baseline (ann_cosine_topk) and the ground-truth side of ann_recall. */
-  private def annCosineOracle: String =
-    """WITH e AS (
-      |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-      |sims AS (
-      |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-      |         list_cosine_similarity(q.v, c.v) AS sim
-      |  FROM e q JOIN e c ON q.vec_id < 10 AND c.vec_id != q.vec_id),
-      |ranked AS (
-      |  SELECT query_id, neighbor_id,
-      |         ROW_NUMBER() OVER (PARTITION BY query_id
-      |                            ORDER BY sim DESC, neighbor_id) AS rank
-      |  FROM sims)
-      |SELECT query_id, neighbor_id, rank FROM ranked
-      |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin
-
-  private def annIvfOracle: String =
-    s"""WITH e AS (
-       |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-       |c AS (SELECT vec_id AS cid, v AS cv FROM e ORDER BY vec_id LIMIT 16),
-       |scored AS (
-       |  SELECT e.vec_id, e.v, c.cid,
-       |         ROW_NUMBER() OVER (PARTITION BY e.vec_id
-       |            ORDER BY ${cosSql("e.v", "c.cv")} DESC, c.cid) AS crn
-       |  FROM e CROSS JOIN c),
-       |assign AS (SELECT vec_id, v, cid FROM scored WHERE crn = 1),
-       |qprobe AS (SELECT vec_id AS query_id, v AS qv, cid FROM scored
-       |           WHERE vec_id < 10 AND crn <= 4),
-       |cand AS (
-       |  SELECT qp.query_id, a.vec_id AS id,
-       |         ${cosSql("qp.qv", "a.v")} AS sim
-       |  FROM qprobe qp JOIN assign a
-       |    ON a.cid = qp.cid AND a.vec_id != qp.query_id),
-       |ranked AS (
-       |  SELECT query_id, id AS neighbor_id,
-       |         ROW_NUMBER() OVER (PARTITION BY query_id
-       |                            ORDER BY sim DESC, id) AS rank
-       |  FROM cand)
-       |SELECT query_id, neighbor_id, rank FROM ranked
-       |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin
-
-  /** Replay of the product-quantization search: codebooks are subvector
-    * slices of the first `ncodes` vectors in id order; per subspace the
-    * code is the L2-argmin codeword (the (s·s − 2·s·w) + w·w expansion in
-    * the same association as the Spark expression, ties → lowest code);
-    * ADC score is the left-associated sum of per-subspace query-slice ×
-    * codeword dot products. */
-  /** Cross-parity exact-Jaccard ground truth shared by the batch
-    * (`dedup_incremental`) and streaming (`st10_stream_corpus_dedup`)
-    * bindings of the corpus-probe dedup: every (odd batch doc, even corpus
-    * doc) pair with trigram Jaccard ≥ 0.5. */
-  private val incrementalPairsOracle: String =
-    """WITH toks AS (
-      |  SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-      |sh AS (
-      |  SELECT doc_id,
-      |    CASE WHEN len(t) >= 3
-      |         THEN list_distinct([array_to_string(t[i:i+2], ' ')
-      |                             FOR i IN range(1, len(t) - 1)])
-      |         ELSE [array_to_string(t, ' ')] END AS s
-      |  FROM toks),
-      |pairs AS (
-      |  SELECT a.doc_id AS batch_id, b.doc_id AS corpus_id,
-      |         len(list_intersect(a.s, b.s)) AS inter,
-      |         len(a.s) AS la, len(b.s) AS lb
-      |  FROM sh a JOIN sh b ON a.doc_id % 2 = 1 AND b.doc_id % 2 = 0)
-      |SELECT batch_id, corpus_id FROM pairs
-      |WHERE inter > 0
-      |  AND CAST(inter AS DOUBLE) / (la + lb - inter) >= 0.5
-      |ORDER BY batch_id, corpus_id""".stripMargin
-
-  private def pqSl(v: String, j: Int, sub: Int) =
-    s"$v[${j * sub + 1}:${(j + 1) * sub}]"
-
-  /** PQ codebook TRAINING replay (mirrors Similarity.pqTrain
-    * CTE-for-stage): cb0 = subvector slices of the first `ncodes` vectors
-    * per subspace; per round, a joint L2-argmin assignment of every
-    * (vector, subspace) pair and the compressed cum-count exact median per
-    * (subspace, code, position) — the same recipe as the kmedians oracle —
-    * with empty cells COALESCE'd to the previous codeword. Yields `cbf`
-    * (j, c, w). */
-  private def pqTrainSql(m: Int, ncodes: Int, sub: Int, iters: Int,
-      src: String = "e"): String = {
-    val sb = new StringBuilder
-    sb.append(
-      s"""cb0 AS (
-         |  SELECT t.j, r.c, r.v[t.j * $sub + 1 : (t.j + 1) * $sub] AS w
-         |  FROM (SELECT (ROW_NUMBER() OVER (ORDER BY vec_id)) - 1 AS c, v
-         |        FROM (SELECT * FROM $src ORDER BY vec_id LIMIT $ncodes)) r,
-         |       UNNEST(generate_series(0, ${m - 1})) AS t(j)),
-         |subv AS (
-         |  SELECT $src.vec_id, t.j, $src.v[t.j * $sub + 1 : (t.j + 1) * $sub] AS s
-         |  FROM $src, UNNEST(generate_series(0, ${m - 1})) AS t(j)),
-         |""".stripMargin)
-    for (i <- 1 to iters) {
-      val prev = s"cb${i - 1}"
-      sb.append(
-        s"""pas$i AS (
-           |  SELECT subv.vec_id, subv.j, subv.s, cb.c,
-           |    ROW_NUMBER() OVER (PARTITION BY subv.vec_id, subv.j
-           |      ORDER BY (list_dot_product(subv.s, subv.s)
-           |                - 2 * list_dot_product(subv.s, cb.w))
-           |               + list_dot_product(cb.w, cb.w) ASC, cb.c) AS rn
-           |  FROM subv JOIN $prev cb ON cb.j = subv.j),
-           |pcomp$i AS (
-           |  SELECT j, c, t.i AS pos, s[t.i] AS comp FROM pas$i,
-           |       UNNEST(generate_series(1, $sub)) AS t(i)
-           |  WHERE rn = 1),
-           |pcnt$i AS (SELECT j, c, pos, comp, COUNT(*) AS n0
-           |  FROM pcomp$i GROUP BY 1, 2, 3, 4),
-           |pcum$i AS (SELECT j, c, pos, comp,
-           |    SUM(n0) OVER (PARTITION BY j, c, pos ORDER BY comp) AS cum,
-           |    SUM(n0) OVER (PARTITION BY j, c, pos) AS n
-           |  FROM pcnt$i),
-           |pmed$i AS (SELECT j, c, pos, MIN(comp) AS mv FROM pcum$i
-           |  WHERE cum >= greatest(1, ceil(n * 0.5)) GROUP BY 1, 2, 3),
-           |pcw$i AS (SELECT j, c, list(mv ORDER BY pos) AS w
-           |  FROM pmed$i GROUP BY j, c),
-           |cb$i AS (SELECT p.j, p.c, COALESCE(pcw$i.w, p.w) AS w
-           |  FROM $prev p LEFT JOIN pcw$i
-           |    ON p.j = pcw$i.j AND p.c = pcw$i.c),
-           |""".stripMargin)
-    }
-    sb.append(s"cbf AS (SELECT * FROM cb$iters)")
-    sb.toString
-  }
-
-  /** Shared PQ oracle fragments: trained codebooks (`cbf`), the
-    * per-subspace L2-argmin encode CTEs (enc0..enc{m-1} + the joined
-    * `enc`), the per-subspace codebook joins, and the left-associated ADC
-    * score expression. */
-  private def pqEncSql(m: Int, ncodes: Int, sub: Int, iters: Int,
-      src: String = "e"): String = {
-    val encCtes = (0 until m).map { j =>
-      val s = pqSl(s"$src.v", j, sub)
-      s"""enc$j AS (SELECT vec_id, c AS k$j FROM (
-         |  SELECT $src.vec_id, cb.c, ROW_NUMBER() OVER (PARTITION BY $src.vec_id
-         |    ORDER BY (list_dot_product($s, $s)
-         |              - 2 * list_dot_product($s, cb.w))
-         |             + list_dot_product(cb.w, cb.w) ASC, cb.c) AS rn
-         |  FROM $src CROSS JOIN (SELECT c, w FROM cbf WHERE j = $j) cb)
-         |  WHERE rn = 1)""".stripMargin
-    }.mkString(",\n")
-    val encJoin = (1 until m)
-      .map(j => s"JOIN enc$j USING (vec_id)").mkString(" ")
-    s"""${pqTrainSql(m, ncodes, sub, iters, src)},
-       |$encCtes,
-       |enc AS (SELECT * FROM enc0 $encJoin)""".stripMargin
-  }
-
-  private def pqCbJoins(m: Int): String =
-    (0 until m)
-      .map(j => s"JOIN (SELECT c, w FROM cbf WHERE j = $j) c$j ON c$j.c = enc.k$j")
-      .mkString(" ")
-
-  private def pqScoreSql(m: Int, sub: Int, qv: String): String =
-    (0 until m)
-      .map(j => s"list_dot_product(${pqSl(qv, j, sub)}, c$j.w)")
-      .mkString(" + ")
-
-  private def annPqOracle(m: Int, ncodes: Int, sub: Int, k: Int,
-      iters: Int): String =
-    s"""WITH e AS (
-       |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-       |${pqEncSql(m, ncodes, sub, iters)},
-       |q AS (SELECT vec_id AS query_id, v AS qv FROM e WHERE vec_id < 10),
-       |scored AS (
-       |  SELECT q.query_id, enc.vec_id AS id,
-       |         ${pqScoreSql(m, sub, "q.qv")} AS score
-       |  FROM q CROSS JOIN enc ${pqCbJoins(m)}
-       |  WHERE enc.vec_id != q.query_id),
-       |ranked AS (
-       |  SELECT query_id, id AS neighbor_id,
-       |         ROW_NUMBER() OVER (PARTITION BY query_id
-       |                            ORDER BY score DESC, id) AS rank
-       |  FROM scored)
-       |SELECT query_id, neighbor_id, rank FROM ranked
-       |WHERE rank <= $k ORDER BY query_id, rank""".stripMargin
-
-  /** IVF-PQ replay: the IVF assign/probe CTEs composed with the PQ
-    * train/encode CTEs; candidates come from the probed inverted lists and
-    * are scored by the same ADC expression. */
-  /** Residual IVF-PQ replay: the same coarse assignment as the raw
-    * oracle, then residuals `v − cv` (double subtraction, FLOAT
-    * round-trip — the entry's exactness quantization), the PQ chain
-    * retargeted at the residual CTE, and the score as
-    * `q·c + (ADC fold)` with the parenthesization matching the entry's
-    * `qc + reduceLeft` association. */
-  private def annIvfPqResidualOracle(nlist: Int, nprobe: Int, m: Int,
-      ncodes: Int, sub: Int, k: Int, iters: Int): String = {
-    val dim = m * sub
-    s"""WITH e AS (
-       |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-       |c AS (SELECT vec_id AS cid, v AS cv FROM e ORDER BY vec_id LIMIT $nlist),
-       |cscored AS (
-       |  SELECT e.vec_id, e.v, c.cid, c.cv,
-       |         ROW_NUMBER() OVER (PARTITION BY e.vec_id
-       |            ORDER BY ${cosSql("e.v", "c.cv")} DESC, c.cid) AS crn
-       |  FROM e CROSS JOIN c),
-       |assign AS (SELECT vec_id, v, cid, cv FROM cscored WHERE crn = 1),
-       |re AS (
-       |  SELECT vec_id,
-       |         CAST(CAST([v[i] - cv[i] FOR i IN range(1, ${dim + 1})]
-       |              AS FLOAT[]) AS DOUBLE[]) AS v
-       |  FROM assign),
-       |qprobe AS (SELECT vec_id AS query_id, v AS qv, cid,
-       |                  list_dot_product(v, cv) AS qc
-       |           FROM cscored WHERE vec_id < 10 AND crn <= $nprobe),
-       |${pqEncSql(m, ncodes, sub, iters, src = "re")},
-       |scored AS (
-       |  SELECT qp.query_id, a.vec_id AS id,
-       |         qp.qc + (${pqScoreSql(m, sub, "qp.qv")}) AS score
-       |  FROM qprobe qp JOIN assign a
-       |    ON a.cid = qp.cid AND a.vec_id != qp.query_id
-       |  JOIN enc ON enc.vec_id = a.vec_id ${pqCbJoins(m)}),
-       |ranked AS (
-       |  SELECT query_id, id AS neighbor_id,
-       |         ROW_NUMBER() OVER (PARTITION BY query_id
-       |                            ORDER BY score DESC, id) AS rank
-       |  FROM scored)
-       |SELECT query_id, neighbor_id, rank FROM ranked
-       |WHERE rank <= $k ORDER BY query_id, rank""".stripMargin
-  }
-
-  private def annIvfPqOracle(nlist: Int, nprobe: Int, m: Int, ncodes: Int,
-      sub: Int, k: Int, iters: Int): String =
-    s"""WITH e AS (
-       |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-       |c AS (SELECT vec_id AS cid, v AS cv FROM e ORDER BY vec_id LIMIT $nlist),
-       |cscored AS (
-       |  SELECT e.vec_id, e.v, c.cid,
-       |         ROW_NUMBER() OVER (PARTITION BY e.vec_id
-       |            ORDER BY ${cosSql("e.v", "c.cv")} DESC, c.cid) AS crn
-       |  FROM e CROSS JOIN c),
-       |assign AS (SELECT vec_id, cid FROM cscored WHERE crn = 1),
-       |qprobe AS (SELECT vec_id AS query_id, v AS qv, cid FROM cscored
-       |           WHERE vec_id < 10 AND crn <= $nprobe),
-       |${pqEncSql(m, ncodes, sub, iters)},
-       |scored AS (
-       |  SELECT qp.query_id, a.vec_id AS id,
-       |         ${pqScoreSql(m, sub, "qp.qv")} AS score
-       |  FROM qprobe qp JOIN assign a
-       |    ON a.cid = qp.cid AND a.vec_id != qp.query_id
-       |  JOIN enc ON enc.vec_id = a.vec_id ${pqCbJoins(m)}),
-       |ranked AS (
-       |  SELECT query_id, id AS neighbor_id,
-       |         ROW_NUMBER() OVER (PARTITION BY query_id
-       |                            ORDER BY score DESC, id) AS rank
-       |  FROM scored)
-       |SELECT query_id, neighbor_id, rank FROM ranked
-       |WHERE rank <= $k ORDER BY query_id, rank""".stripMargin
-
-  /** Full k-medians replay: `iters` chained (assign → exact component
-    * medians → COALESCE empty cells) rounds, then the final assignment.
-    * Mirrors [[graft.pipeline.Clustering.kmediansAssign]] CTE-for-stage;
-    * the median recipe is the same compressed cum-count quantile as the
-    * stat_quantiles oracle. */
-  private def kmediansOracle(k: Int, iters: Int): String =
-    kmediansCtes(k, iters) +
-      s"""sf AS (SELECT e.vec_id, c$iters.cid,
-         |  ROW_NUMBER() OVER (PARTITION BY e.vec_id
-         |    ORDER BY ${cosSql("e.v", s"c$iters.cv")} DESC, c$iters.cid) AS rn
-         |  FROM e CROSS JOIN c$iters)
-         |SELECT vec_id, cid AS cluster FROM sf WHERE rn = 1
-         |ORDER BY vec_id""".stripMargin
-
-  /** The WITH-chain of the deterministic Lloyd loop, ending (with a
-    * trailing comma) at `c<iters>` = the trained (cid, cv) centroid
-    * table — shared by the clustering oracle and the trained-IVF oracle
-    * that composes an inverted-file search on top of it. */
-  private def kmediansCtes(k: Int, iters: Int): String = {
-    val sb = new StringBuilder
-    sb.append(
-      s"""WITH e AS MATERIALIZED (
-         |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-         |c0 AS MATERIALIZED (
-         |  SELECT (ROW_NUMBER() OVER (ORDER BY vec_id)) - 1 AS cid, v AS cv
-         |  FROM (SELECT * FROM e ORDER BY vec_id LIMIT $k)),
-         |""".stripMargin)
-    for (i <- 1 to iters) {
-      val prev = s"c${i - 1}"
-      sb.append(
-        s"""s$i AS MATERIALIZED (SELECT e.vec_id, e.v, $prev.cid,
-           |  ROW_NUMBER() OVER (PARTITION BY e.vec_id
-           |    ORDER BY ${cosSql("e.v", s"$prev.cv")} DESC, $prev.cid) AS rn
-           |  FROM e CROSS JOIN $prev),
-           |a$i AS MATERIALIZED (SELECT vec_id, v, cid FROM s$i WHERE rn = 1),
-           |comp$i AS MATERIALIZED (SELECT cid, i AS pos, v[i] AS comp
-           |  FROM a$i, UNNEST(generate_series(1, len(v))) AS t(i)),
-           |cnt$i AS MATERIALIZED (SELECT cid, pos, comp, COUNT(*) AS c
-           |  FROM comp$i GROUP BY 1, 2, 3),
-           |cum$i AS MATERIALIZED (SELECT cid, pos, comp,
-           |    SUM(c) OVER (PARTITION BY cid, pos ORDER BY comp) AS cum,
-           |    SUM(c) OVER (PARTITION BY cid, pos) AS n
-           |  FROM cnt$i),
-           |med$i AS MATERIALIZED (SELECT cid, pos, MIN(comp) AS m FROM cum$i
-           |  WHERE cum >= greatest(1, ceil(n * 0.5)) GROUP BY 1, 2),
-           |cm$i AS MATERIALIZED (SELECT cid, list(m ORDER BY pos) AS cv FROM med$i GROUP BY cid),
-           |c$i AS MATERIALIZED (SELECT $prev.cid, COALESCE(cm$i.cv, $prev.cv) AS cv
-           |  FROM $prev LEFT JOIN cm$i ON $prev.cid = cm$i.cid),
-           |""".stripMargin)
-    }
-    sb.toString
-  }
-
-  /** Trained-IVF replay: the Lloyd chain's final centroid table feeds the
-    * same inverted-file search CTEs as annIvfOracle. */
-  private def annIvfTrainedOracle(
-      nlist: Int, iters: Int, nprobe: Int, k: Int): String = {
-    val c = s"c$iters"
-    kmediansCtes(nlist, iters) +
-      s"""scored AS (
-         |  SELECT e.vec_id, e.v, $c.cid,
-         |         ROW_NUMBER() OVER (PARTITION BY e.vec_id
-         |            ORDER BY ${cosSql("e.v", s"$c.cv")} DESC, $c.cid) AS crn
-         |  FROM e CROSS JOIN $c),
-         |assign AS (SELECT vec_id, v, cid FROM scored WHERE crn = 1),
-         |qprobe AS (SELECT vec_id AS query_id, v AS qv, cid FROM scored
-         |           WHERE vec_id < 10 AND crn <= $nprobe),
-         |cand AS (
-         |  SELECT qp.query_id, a.vec_id AS id,
-         |         ${cosSql("qp.qv", "a.v")} AS sim
-         |  FROM qprobe qp JOIN assign a
-         |    ON a.cid = qp.cid AND a.vec_id != qp.query_id),
-         |ranked AS (
-         |  SELECT query_id, id AS neighbor_id,
-         |         ROW_NUMBER() OVER (PARTITION BY query_id
-         |                            ORDER BY sim DESC, id) AS rank
-         |  FROM cand)
-         |SELECT query_id, neighbor_id, rank FROM ranked
-         |WHERE rank <= $k ORDER BY query_id, rank""".stripMargin
-  }
-
-  /** KMV cardinality sketch replayed from the whole corpus — shared by the
-    * direct entry and the persisted-merge entry (whose result is identical
-    * by the sketch-union identity). */
-  /** HLL replay: bucket = top-6 bits of the shared 60-bit md5 hash, rho =
-    * leading zeros within the remaining 54 bits + 1 computed EXACTLY as
-    * 54 - binary-digit-count + 1 (bin() string length — no float log);
-    * empty buckets materialize via the range(64) grid with rho 0; the
-    * harmonic sum is the scaled integer Σ 2^(55-rho) (cast: SUM ⇒ HUGEINT
-    * ban) and the estimate multiplies exact powers of two into alpha then
-    * divides once — bit-identical to the Spark side. Shared by the batch
-    * entry and the streaming maintenance (max-merge convergence). */
-  private val hllOracle =
-    """WITH toks AS (SELECT doc_id, source, string_split(text, ' ') AS t
-      |              FROM documents),
-      |sh0 AS (
-      |  SELECT source,
-      |    CASE WHEN len(t) >= 3
-      |         THEN list_distinct([array_to_string(t[i:i+2], ' ')
-      |                             FOR i IN range(1, len(t) - 1)])
-      |         ELSE [array_to_string(t, ' ')] END AS s
-      |  FROM toks),
-      |h AS (
-      |  SELECT DISTINCT source,
-      |         ('0x' || substr(md5(sh), 1, 15))::BIGINT AS h
-      |  FROM (SELECT source, unnest(s) AS sh FROM sh0)),
-      |r AS (SELECT source, h // (1::BIGINT << 54) AS bucket,
-      |             h % (1::BIGINT << 54) AS rest FROM h),
-      |regs0 AS (
-      |  SELECT source, bucket,
-      |         max(CASE WHEN rest = 0 THEN 55
-      |             ELSE 54 - length(bin(rest)) + 1 END) AS rho
-      |  FROM r GROUP BY 1, 2),
-      |grid AS (SELECT DISTINCT source, unnest(range(64)) AS bucket FROM h),
-      |regs AS (
-      |  SELECT g.source, COALESCE(r0.rho, 0) AS rho
-      |  FROM grid g LEFT JOIN regs0 r0
-      |    ON g.source = r0.source AND g.bucket = r0.bucket)
-      |SELECT source,
-      |  CAST(count(*) FILTER (rho > 0) AS BIGINT) AS nonempty,
-      |  CAST(SUM(1::BIGINT << (55 - rho)) AS BIGINT) AS harmonic_scaled,
-      |  0.709::DOUBLE * 4096.0::DOUBLE * 36028797018963968.0::DOUBLE
-      |    / CAST(CAST(SUM(1::BIGINT << (55 - rho)) AS BIGINT) AS DOUBLE)
-      |    AS est_distinct
-      |FROM regs GROUP BY source ORDER BY source""".stripMargin
-
-  private val kmvOracle =
-    """WITH tok AS (
-      |  SELECT source, unnest(string_split(text, ' ')) AS tok
-      |  FROM documents),
-      |h AS (
-      |  SELECT DISTINCT source,
-      |         ('0x' || substr(md5(tok), 1, 15))::BIGINT AS h
-      |  FROM tok WHERE tok != ''),
-      |r AS (
-      |  SELECT source, h,
-      |         row_number() OVER (PARTITION BY source ORDER BY h) AS rn
-      |  FROM h),
-      |s AS (
-      |  SELECT source, COUNT(*) AS sketch_size, MAX(h) AS h_k
-      |  FROM r WHERE rn <= 64 GROUP BY source)
-      |SELECT source, sketch_size, h_k,
-      |       CASE WHEN sketch_size < 64 THEN CAST(sketch_size AS DOUBLE)
-      |            ELSE CAST(63 AS DOUBLE) * CAST(1152921504606846976 AS DOUBLE)
-      |                   / CAST(h_k AS DOUBLE) END AS est_distinct
-      |FROM s ORDER BY source""".stripMargin
-
-  // -- shared DuckDB fragments for the text-analysis oracles: the
-  // composed corpus filter must gate on EXACTLY the formulas the
-  // component entries pin, so each lives once --
-  private val WsTokensSql =
-    """len(regexp_split_to_array(trim(text), '\s+'))"""
-
-  /** The canonical aspect-bucket set shared by the mm_aspect_buckets
-    * entry and its oracle (square, landscape/portrait 4:3, wide/tall). */
-  private val AspectBucketList: Seq[(Int, Int)] =
-    Seq((1, 1), (4, 3), (3, 4), (16, 9), (9, 16))
-
-  /** The fixed query table for `text_bm25_batch` — shared by the entry
-    * and its generated oracle. Query 5's term is absent from the corpus
-    * by construction (the no-candidates case). */
-  private val BatchQueries: Seq[(Long, String)] = Seq(
-    1L -> "spark", 1L -> "merge",
-    2L -> "customer", 2L -> "window", 2L -> "table",
-    3L -> "stream", 3L -> "filter",
-    4L -> "the", 4L -> "data",
-    5L -> "zzz_absent_term")
-
-  /** Shared CTE chain replaying [[pipeline.Sampling.importanceWeights]]
-    * (target = the English slice, 256 hash buckets): ends in `iw`
-    * (doc_id, t_mass, r_mass, weight) for both the weighting entry and
-    * the weighted-resample entry to build on. */
-  private val ImportanceCtes =
-    """WITH toks AS (
-      |  SELECT doc_id, lang, tok FROM (
-      |    SELECT doc_id, lang, unnest(string_split(text, ' ')) AS tok
-      |    FROM documents) WHERE tok != ''),
-      |bk AS (
-      |  SELECT doc_id, lang,
-      |         ('0x' || substr(md5(tok), 1, 15))::BIGINT % 256 AS b
-      |  FROM toks),
-      |tb AS (SELECT b, CAST(COUNT(*) AS BIGINT) AS tm FROM bk
-      |       WHERE lang = 'en' GROUP BY b),
-      |rb AS (SELECT b, CAST(COUNT(*) AS BIGINT) AS rm FROM bk GROUP BY b),
-      |tot AS (
-      |  SELECT (SELECT CAST(SUM(tm) AS BIGINT) FROM tb) AS tt,
-      |         (SELECT CAST(SUM(rm) AS BIGINT) FROM rb) AS rt),
-      |d AS (
-      |  SELECT bk.doc_id,
-      |         CAST(SUM(COALESCE(tb.tm, 0)) AS BIGINT) AS t_mass,
-      |         CAST(SUM(COALESCE(rb.rm, 0)) AS BIGINT) AS r_mass
-      |  FROM bk LEFT JOIN tb ON bk.b = tb.b LEFT JOIN rb ON bk.b = rb.b
-      |  GROUP BY bk.doc_id),
-      |iw AS (
-      |  SELECT doc_id, t_mass, r_mass,
-      |         (CAST(t_mass AS DOUBLE) + 1.0) / (CAST(r_mass AS DOUBLE) + 1.0)
-      |           * (CAST(rt AS DOUBLE) / CAST(tt AS DOUBLE)) AS weight
-      |  FROM d CROSS JOIN tot)""".stripMargin
-  private val AlphaRatioSql =
-    """(length(text) - length(regexp_replace(text, '[A-Za-z]', '', 'g')))
-      |    / CAST(length(text) AS DOUBLE)""".stripMargin
-  private val QualityScoreSql =
-    s"""LEAST(1.0, $WsTokensSql / 100.0) * ($AlphaRatioSql)"""
-  private val LangPredSql =
-    """CASE WHEN len(list_filter(string_split(lower(trim(text)), ' '),
-      |         x -> x IN ('the','and','of','to','in','is','that','with',
-      |                    'for','was')))
-      |     > 0 THEN 'en' ELSE 'und' END""".stripMargin
-
-  /** Ground-truth components via a recursive closure over the SAME exact
-    * n-gram-Jaccard pair set [[jaccardOracle]] computes: each node's
-    * cluster is the minimum id it can reach. */
-  private def clustersOracle: String =
-    """WITH RECURSIVE toks AS (
-      |  SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-      |sh AS (
-      |  SELECT doc_id,
-      |    CASE WHEN len(t) >= 3
-      |         THEN list_distinct([array_to_string(t[i:i+2], ' ')
-      |                             FOR i IN range(1, len(t) - 1)])
-      |         ELSE [array_to_string(t, ' ')] END AS s
-      |  FROM toks),
-      |p AS (
-      |  SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-      |         len(list_intersect(a.s, b.s)) AS inter,
-      |         len(a.s) AS la, len(b.s) AS lb
-      |  FROM sh a JOIN sh b ON a.doc_id < b.doc_id),
-      |pairs AS (
-      |  SELECT id_a, id_b FROM p
-      |  WHERE inter > 0
-      |    AND CAST(inter AS DOUBLE) / (la + lb - inter) >= 0.5),
-      |edges AS (
-      |  SELECT id_a AS a, id_b AS b FROM pairs
-      |  UNION SELECT id_b, id_a FROM pairs),
-      |reach(id, r) AS (
-      |  SELECT a, b FROM edges
-      |  UNION
-      |  SELECT x.id, e.b FROM reach x JOIN edges e ON x.r = e.a),
-      |lbl AS (
-      |  SELECT id, LEAST(id, MIN(r)) AS cluster_id FROM reach GROUP BY id)
-      |SELECT d.doc_id,
-      |       COALESCE(l.cluster_id, d.doc_id) AS cluster_id,
-      |       COALESCE(l.cluster_id, d.doc_id) = d.doc_id AS survivor
-      |FROM documents d LEFT JOIN lbl l ON l.id = d.doc_id
-      |ORDER BY d.doc_id""".stripMargin
-
-  /** Exact 3-gram Jaccard >= 0.5 pairs, computed from scratch in DuckDB —
-    * the oracle for both the deterministic shared-shingle path and the
-    * MinHash-LSH path (whose recall at the fixture's J≈0.97 planted pairs
-    * is 1 − (1−J⁴)¹⁶ ≈ 1-6e-14). */
-  /** The fixed question set for `pipeline_rag_prep` — ids ≥ 2⁶² mark the
-    * query side of the unioned chunk+question table (shared by the entry
-    * and its oracle). Chunk ids pack as doc_id·2²⁰ + chunk_idx, so the
-    * scheme is collision-free for doc_id < 2⁴² and docs < ~25M tokens —
-    * bounds a corpus-scale deployment actually clears, unlike the naive
-    * ×1000 packing. */
-  private val RagQuerySentinel: Long = 1L << 62
-  private val RagChunkShift: Long = 1L << 20
-  private val RagQuestions: Seq[(Long, String)] = Seq(
-    RagQuerySentinel -> "how does the stream merge window state",
-    (RagQuerySentinel + 1) -> "customer orders with the largest revenue",
-    (RagQuerySentinel + 2) -> "language detection for crawled documents")
-
-  /** The ONE trained coarse quantizer shared by ann_ivf_trained_topk,
-    * dedup_semantic_trained and embed_outliers — built once per
-    * (session, sfDir); the memo key ENCODES the parameters, so a tuned
-    * variant can never silently serve stale centroids to its siblings. */
-  private val TrainedNlist = 16
-  private val TrainedIters = 2
-  private def trainedQuantizer(
-      s: SparkSession, dir: String): IndexedSeq[Array[Double]] =
-    prepared(s, s"kmedians:$TrainedNlist:$TrainedIters:$dir") {
-      graft.pipeline.Clustering.kmediansCentroids(
-        t(s, dir, "embeddings"), "vec_id", "embedding",
-        TrainedNlist, TrainedIters)
-    }
-
-  /** The in-order two-trigger fixture shared by the ORDER-SENSITIVE
-    * streaming entries (st16/st17): hourly (event_type, bucket, cnt)
-    * counts — the SAME timeBucket as the batch operators, a drifted copy
-    * would break the streamed≡batch gate identities — split at the
-    * midpoint bucket into two arrival chunks under `<base>/in`, so the
-    * earlier buckets arrive first (writeArrivals pins the order).
-    * Returns the scratch base. */
-  private def orderedCountFiles(
-      s: SparkSession, dir: String, purpose: String): String = {
-    val base = scratchDir(s, purpose, dir)
-    val counts = events(s, dir)
-      .groupBy(col("event_type"),
-        graft.pipeline.EventAnalytics.timeBucket(col("ts_ms"), 3600000L)
-          .as("bucket"))
-      .agg(count(lit(1)).as("cnt"))
-      .persist()
-    try {
-      val mm = counts.agg(min("bucket"), max("bucket")).collect()(0)
-      val split = (mm.getLong(0) + mm.getLong(1)) / 2
-      writeArrivals(s, s"$base/in", counts.filter(col("bucket") <= split),
-        counts.filter(col("bucket") > split))
-      base
-    } finally counts.unpersist()
-  }
-
-  /** The trailing-window anomaly replay shared by the batch entry
-    * (`e7_count_anomaly`) and the streaming-maintenance entry
-    * (`st17_stream_anomaly`, whose in-order fold must equal it). */
-  private val countAnomalyOracle =
-    """WITH c AS (
-      |  SELECT event_type, epoch_ms(ts) // 3600000 AS bucket,
-      |         CAST(COUNT(*) AS BIGINT) AS cnt
-      |  FROM events GROUP BY 1, 2),
-      |t AS (
-      |  SELECT event_type, bucket, cnt,
-      |         CAST(COUNT(*) OVER w AS BIGINT) AS trail_n,
-      |         CAST(COALESCE(SUM(cnt) OVER w, 0) AS BIGINT) AS trail_sum
-      |  FROM c
-      |  WINDOW w AS (PARTITION BY event_type ORDER BY bucket
-      |               ROWS BETWEEN 24 PRECEDING AND 1 PRECEDING))
-      |SELECT event_type, bucket, cnt, trail_n, trail_sum,
-      |       trail_n > 0 AND cnt * trail_n > 2 * trail_sum AS anomaly
-      |FROM t ORDER BY event_type, bucket""".stripMargin
-
-  /** The EWMA replay shared by the batch entry (`e9_ewma_smooth`) and the
-    * streaming-maintenance entry (`st16_stream_ewma`, whose in-order
-    * two-trigger fold must equal the batch fold). */
-  private val ewmaOracle =
-    """WITH c AS (
-      |  SELECT event_type, epoch_ms(ts) // 3600000 AS bucket,
-      |         CAST(COUNT(*) AS BIGINT) AS cnt
-      |  FROM events GROUP BY 1, 2),
-      |g AS (
-      |  SELECT event_type, list(bucket ORDER BY bucket) AS bks,
-      |         list(CAST(cnt AS DOUBLE) ORDER BY bucket) AS xs
-      |  FROM c GROUP BY event_type),
-      |e AS (SELECT event_type, unnest(generate_series(1, len(bks))) AS i,
-      |             bks, xs
-      |      FROM g)
-      |SELECT event_type, bks[i] AS bucket, CAST(xs[i] AS BIGINT) AS cnt,
-      |       list_reduce(xs[1:i], (acc, x) -> 0.25 * x + 0.75 * acc)
-      |         AS ewma
-      |FROM e ORDER BY event_type, bucket""".stripMargin
-
-  /** Merge rounds for the BPE entries — small enough that the DuckDB
-    * replay (nMerges materialized CTE levels) stays cheap at the gate's
-    * scale, large enough that multi-character tokens emerge. */
-  private val BpeMerges = 12
-
-  /** BPE learning memoized per (session, sfDir): setup for
-    * `text_bpe_vocab` (the vocabulary derivation is the measured op
-    * there; `text_bpe_learn` itself always trains live). */
-  private def bpeModel(s: SparkSession, dir: String)
-      : (Seq[graft.pipeline.Bpe.Merge], DataFrame) =
-    prepared(s, s"bpe:$dir") {
-      graft.pipeline.Bpe.learn(t(s, dir, "documents"), col("text"), BpeMerges)
-    }
-
-  /** The shared WITH-chain replaying [[pipeline.Bpe.learn]] in DuckDB:
-    * wf0 = the word-frequency base with space-wrapped char symbols
-    * (content '<' escaped to chr(57344)=U+E000 exactly as
-    * [[pipeline.Bpe.escapeContent]] does, so a content token can never
-    * equal the end-of-word marker); then per round i: p_i = weighted
-    * adjacent-pair counts, b_i = the best pair (total DESC, pair ASC),
-    * wf_i = the merge applied via the same TWO nested left-to-right
-    * `replace` passes (pass 2 catches occurrences whose leading space the
-    * previous match consumed — two passes are a guaranteed fixpoint, see
-    * Bpe scaladoc). Every level is MATERIALIZED — each wf is referenced
-    * twice (p_{i+1} and wf_{i+1}), so plain CTE inlining would duplicate
-    * the chain 2^n times. */
-  private def bpeChainSql(n: Int): String = {
-    val sb = new StringBuilder(
-      """WITH wf0 AS MATERIALIZED (
-        |  SELECT w, COUNT(*) AS cnt,
-        |         ' ' || regexp_replace(replace(w, '<', chr(57344)),
-        |                               '(.)', '\1 ', 'g') || '</w> ' AS sym
-        |  FROM (SELECT unnest(list_filter(string_split(text, ' '),
-        |                                  x -> x != '')) AS w
-        |        FROM documents)
-        |  GROUP BY w)""".stripMargin)
-    for (i <- 1 to n) sb ++= s""",
-       |p$i AS MATERIALIZED (
-       |  SELECT pr, CAST(SUM(cnt) AS BIGINT) AS total FROM (
-       |    SELECT cnt, unnest([t[j] || ' ' || t[j+1]
-       |                        FOR j IN range(1, len(t))]) AS pr
-       |    FROM (SELECT cnt, list_filter(string_split(sym, ' '),
-       |                                  x -> x != '') AS t
-       |          FROM wf${i - 1}))
-       |  GROUP BY pr),
-       |b$i AS MATERIALIZED (
-       |  SELECT pr, total FROM p$i ORDER BY total DESC, pr LIMIT 1),
-       |wf$i AS MATERIALIZED (
-       |  SELECT w, cnt,
-       |         CASE WHEN pr IS NULL THEN sym
-       |              ELSE replace(replace(sym, ' ' || pr || ' ',
-       |                             ' ' || replace(pr, ' ', '') || ' '),
-       |                           ' ' || pr || ' ',
-       |                           ' ' || replace(pr, ' ', '') || ' ')
-       |         END AS sym
-       |  FROM wf${i - 1} LEFT JOIN b$i ON TRUE)""".stripMargin
-    sb.toString
-  }
-
-  private def jaccardOracle: String = jaccardOracleAt("0.5")
-
-  /** Brute-force Jaccard ground truth at a threshold; the threshold
-    * routes through a VARCHAR cast (bare DuckDB literals are DECIMAL,
-    * and DECIMAL→DOUBLE is not correctly rounded — the r6 lesson). */
-  private def jaccardOracleAt(threshold: String): String =
-    s"""WITH toks AS (
-      |  SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-      |sh AS (
-      |  SELECT doc_id,
-      |    CASE WHEN len(t) >= 3
-      |         THEN list_distinct([array_to_string(t[i:i+2], ' ')
-      |                             FOR i IN range(1, len(t) - 1)])
-      |         ELSE [array_to_string(t, ' ')] END AS s
-      |  FROM toks),
-      |pairs AS (
-      |  SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-      |         len(list_intersect(a.s, b.s)) AS inter,
-      |         len(a.s) AS la, len(b.s) AS lb
-      |  FROM sh a JOIN sh b ON a.doc_id < b.doc_id)
-      |SELECT id_a, id_b FROM pairs
-      |WHERE inter > 0
-      |  AND CAST(inter AS DOUBLE) / (la + lb - inter)
-      |      >= CAST('$threshold' AS DOUBLE)
-      |ORDER BY id_a, id_b""".stripMargin
 }

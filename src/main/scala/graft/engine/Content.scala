@@ -91,9 +91,12 @@ object Content {
   /** Latest visible state from an append log. */
   def latestView(log: DataFrame): DataFrame = visible(latestRows(log))
 
-  /** Empty content log. */
+  /** Empty content log: a zero-row local relation, which the optimizer
+    * sizes from its rows. (An `emptyRDD` relation has no statistics and is
+    * estimated at `spark.sql.defaultSizeInBytes`, so an index built over a
+    * log applied to it sized its table as about 1e21 bytes.) */
   def empty(spark: SparkSession): DataFrame =
-    spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+    spark.createDataFrame(java.util.List.of[org.apache.spark.sql.Row](), schema)
 
   /** Adapt an arbitrary table into collection form: every row becomes an
     * item of `collectionUri` with the given id column; remaining columns

@@ -323,7 +323,7 @@ object QueryPlanner {
     metrics.add("index.rows.accepted", kept)
     metrics.add("index.rows.skipped", total - kept)
     if (total - kept <= skipMax) return
-    val exact = sort.isEmpty || (p.exactSortMatch && p.ckFields.nonEmpty)
+    val exact = servedInIndexOrder(p, sort)
     val target = if (exact) size.toLong else size.toLong + skipMax
     if (kept < target) {
       metrics.inc("query.skip_guard.exceeded")
@@ -373,6 +373,34 @@ object QueryPlanner {
   private def orderCols(scan: Seq[(String, Boolean)]): Seq[Column] =
     scan.map { case (n, a) =>
       if (a) col(n).asc_nulls_last else col(n).desc_nulls_first }
+
+  /** The index returns rows in the requested order by itself: no sort was
+    * requested, or the clustering key serves the requested sort exactly.
+    * An empty sort never yields clustering-key fields. */
+  private def servedInIndexOrder(p: QueryPlan, sort: Seq[SortBy]): Boolean =
+    sort.isEmpty || (p.exactSortMatch && p.ckFields.nonEmpty)
+
+  /** The first `size` of `rows` in index order, for a plan that
+    * [[servedInIndexOrder]]. With a requested sort: the typed clustering
+    * columns, no per-row JSON work. Nulls (missing sort fields) order LAST
+    * ascending / FIRST descending to match the primary path's normKey
+    * contract (CollectionOrderingSpec); the remaining type-mixing
+    * divergence (a text column orders lexically) mirrors the reference,
+    * whose index scans also use the storage column's native order. With
+    * no requested sort: the chosen index's own clustering order, exactly
+    * what the reference's source scan returns — also the order the
+    * skipped-rows guard measured against. */
+  private def indexOrderPage(rows: DataFrame, p: QueryPlan, d: IndexDef,
+      size: Int): DataFrame = {
+    val order =
+      if (p.ckFields.nonEmpty)
+        p.ckFields.map(ck =>
+          if (ck.ascending) col(ck.name).asc_nulls_last
+          else col(ck.name).desc_nulls_first) :+
+          (if (p.reversed) col("item_id").desc else col("item_id").asc)
+      else orderCols(scanOrder(d, reversed = false))
+    rows.orderBy(order: _*).limit(size)
+  }
 
   private def filterColumn(ff: FieldFilter): Column = {
     val c = col(ff.name)
@@ -450,24 +478,7 @@ object QueryPlanner {
       if (residualPred.isDefined && skipMax >= 0)
         skippedRowsGuard(d, p, pushed, residualPred.get, sort, size, skipMax)
       val limited =
-        if (p.exactSortMatch && p.ckFields.nonEmpty)
-          // index order: typed physical columns, no per-row JSON work.
-          // Nulls (missing sort fields) order LAST ascending / FIRST
-          // descending to match the primary path's normKey contract
-          // (CollectionOrderingSpec); the remaining type-mixing divergence
-          // (a text column orders lexically) mirrors the reference, whose
-          // index scans also use the storage column's native order.
-          residual.orderBy(p.ckFields.map(ck =>
-            if (ck.ascending) col(ck.name).asc_nulls_last
-            else col(ck.name).desc_nulls_first) :+
-            (if (p.reversed) col("item_id").desc else col("item_id").asc): _*)
-            .limit(size)
-        else if (sort.isEmpty)
-          // no requested sort ⇒ the chosen index's own clustering order,
-          // exactly what the reference's source scan returns — also the
-          // order the skipped-rows guard measured against
-          residual.orderBy(orderCols(scanOrder(d, reversed = false)): _*)
-            .limit(size)
+        if (servedInIndexOrder(p, sort)) indexOrderPage(residual, p, d, size)
         else HyperStorage.sortAndLimit(residual, sort, resolver,
           col("item_id").asc, size)
       (p, QueryResult(limited, version.revision)())
@@ -499,8 +510,7 @@ object QueryPlanner {
       filter: Option[String] = None, sort: Seq[SortBy] = Nil,
       size: Int = HyperStorage.DefaultPageSize): (QueryPlan, QueryResult) = {
     val p = plan(im, uri, filter, sort)
-    val servable = sort.isEmpty || (p.exactSortMatch && p.ckFields.nonEmpty)
-    if (p.source == "primary" || !servable)
+    if (p.source == "primary" || !servedInIndexOrder(p, sort))
       (p, im.storage.queryAfter(uri, lastRow, filter, sort, size))
     else {
       val d = im.indexDef(uri, p.source).get
@@ -539,17 +549,8 @@ object QueryPlanner {
         // end; the generator's reachedEnd check stops the page chain
         val residual = filter.map(f =>
           Translator.predicate(f, resolver)).fold(pushed)(pushed.filter)
-        val limited =
-          if (sort.nonEmpty)
-            residual.orderBy(p.ckFields.map(ck =>
-              if (ck.ascending) col(ck.name).asc_nulls_last
-              else col(ck.name).desc_nulls_first) :+
-              (if (p.reversed) col("item_id").desc else col("item_id").asc): _*)
-              .limit(size)
-          else
-            residual.orderBy(orderCols(scanOrder(d, reversed = false)): _*)
-              .limit(size)
-        (p, QueryResult(limited, version.revision)())
+        (p, QueryResult(indexOrderPage(residual, p, d, size),
+          version.revision)())
       }
     }
   }

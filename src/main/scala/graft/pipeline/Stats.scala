@@ -742,7 +742,7 @@ object Stats {
   }
 
   /** Decimal → double via the string rendering (correctly-rounded parse on
-    * both engines — see SparkEntry's helper of the same shape). */
+    * both engines — see EntryHelpers.decAsDouble, of the same shape). */
   private def decAsDouble(c: Column): Column = c.cast("string").cast("double")
 
   /** k-anonymity audit over quasi-identifier columns: a released dataset

@@ -3,22 +3,19 @@ package graft
 import org.scalatest.freespec.AnyFreeSpec
 import org.scalatest.matchers.should.Matchers
 
-/** Driver-contract consistency guards: every oracle belongs to a query;
-  * every query is oracle-checked unless deliberately exempt; the flagship
+/** Driver-contract consistency guards: every entry carries a body and an
+  * oracle under a unique name; the registry never shrinks; the flagship
   * entry returns rows at the smoke scale. */
 class SparkEntrySpec extends AnyFreeSpec with Matchers with SparkFixture {
 
-  /** Every registered query is oracle-checked — the simhash/LSH entries
-    * got exact oracles in round 3 (md5-derived token hashes, inlined
-    * hyperplane constants), so nothing is exempt anymore. */
-  private val oracleExempt = Set.empty[String]
-
   "SparkEntry" - {
-    "every oracle key has a query entry" in {
-      (SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet) shouldBe empty
-    }
-    "every query has an oracle unless exempt" in {
-      (SparkEntry.queries.keySet -- SparkEntry.oracleSql.keySet) shouldBe oracleExempt
+    "entry names are unique, and every entry has a run and an oracle" in {
+      // a null here is a family val read before its object finished
+      // initializing (a cycle between a family and the shared helpers)
+      val names = SparkEntry.entries.map(_.name)
+      names.diff(names.distinct) shouldBe empty
+      SparkEntry.entries.filter(e => e.run == null || e.oracleSql == null ||
+        e.oracleSql.trim.isEmpty).map(_.name) shouldBe empty
     }
     "the registry never shrinks (entry-count tripwire)" in {
       // Verify swallows a failed entry with a stderr line, and the

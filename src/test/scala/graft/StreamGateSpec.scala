@@ -1,5 +1,6 @@
 package graft
 
+import graft.entries.StreamEntries
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQueryException
@@ -20,11 +21,11 @@ class StreamGateSpec extends AnyFreeSpec with Matchers with SparkFixture {
   "the streaming-gate helpers" - {
     "an arrival schedule drains in write order, one chunk per batch" in {
       val base = freshDir()
-      SparkEntry.writeArrivals(spark, s"$base/in", (1 to 3).map(i =>
+      StreamEntries.writeArrivals(spark, s"$base/in", (1 to 3).map(i =>
         spark.range(5).select(lit(i).as("chunk"), col("id"))): _*)
       val seen = new java.util.concurrent.ConcurrentLinkedQueue[
         (Long, Seq[Int], Long, String)]()
-      SparkEntry.drain(spark, SparkEntry.readArrivals(spark, s"$base/in")
+      StreamEntries.drain(spark, StreamEntries.readArrivals(spark, s"$base/in")
         .writeStream.foreachBatch { (b: DataFrame, id: Long) =>
           val chunks = b.select("chunk").distinct().collect()
             .map(_.getInt(0)).toSeq
@@ -32,18 +33,18 @@ class StreamGateSpec extends AnyFreeSpec with Matchers with SparkFixture {
             spark.conf.get("spark.sql.shuffle.partitions")))
           ()
         }, s"$base/ckpt")
-      val sp = SparkEntry.StatePartitions.toString
+      val sp = StreamEntries.StatePartitions.toString
       seen.asScala.toSeq shouldBe Seq(
         (0L, Seq(1), 5L, sp), (1L, Seq(2), 5L, sp), (2L, Seq(3), 5L, sp))
     }
 
     "a drain whose batch throws rethrows, stops and restores the conf" in {
       val base = freshDir()
-      SparkEntry.writeArrivals(spark, s"$base/in", spark.range(3).toDF("id"))
+      StreamEntries.writeArrivals(spark, s"$base/in", spark.range(3).toDF("id"))
       val partitions = spark.conf.get("spark.sql.shuffle.partitions")
-      partitions should not be SparkEntry.StatePartitions.toString
+      partitions should not be StreamEntries.StatePartitions.toString
       val e = intercept[StreamingQueryException] {
-        SparkEntry.drain(spark, SparkEntry.readArrivals(spark, s"$base/in")
+        StreamEntries.drain(spark, StreamEntries.readArrivals(spark, s"$base/in")
           .writeStream.foreachBatch { (_: DataFrame, id: Long) =>
             throw new IllegalStateException(s"batch $id fails")
           }, s"$base/ckpt")

@@ -57,11 +57,7 @@ class IndexStoreSpec extends AnyFreeSpec with Matchers with SparkFixture {
 
     def dir(id: String): String = store.tableDir(Uri, id)
 
-    /** The manifest's part count. */
-    def parts(id: String): Int =
-      Files.readString(Path.of(dir(id), "_manifest")).split("\n")
-        .collectFirst { case l if l.startsWith("parts\t") => l.stripPrefix("parts\t").toInt }
-        .get
+    def parts(id: String): Int = manifestParts(dir(id))
 
     def rows(id: String): Seq[Seq[Any]] =
       store.openVersion(Uri, id).rows.select("item_id", "revision", "body", "d0")
@@ -86,6 +82,23 @@ class IndexStoreSpec extends AnyFreeSpec with Matchers with SparkFixture {
   }
 
   private def rewrites: Long = EngineMetrics(spark).get("index.rewrites")
+
+  /** The part count the manifest of the table in `dir` records. */
+  private def manifestParts(dir: String): Int =
+    Files.readString(Path.of(dir, "_manifest")).split("\n")
+      .collectFirst { case l if l.startsWith("parts\t") => l.stripPrefix("parts\t").toInt }
+      .get
+
+  "an index built over an in-memory content log is one part" in {
+    // the log of a batch applied to Content.empty: a build sizes its table
+    // from this plan's estimate, which must come from the two rows
+    val log = HyperStorage(spark, Content.empty(spark))
+      .applySeq(Seq(put("a", 1).copy(seq = 1), put("b", 2).copy(seq = 2))).log
+    val store = new IndexStore(spark, Files.createTempDirectory("layout-memory").toString)
+    new IndexManager(HyperStorage(spark, log), Some(store))
+      .createIndex(Uri, "byX", ByX, Some("x > 0"))
+    manifestParts(store.tableDir(Uri, "byX")) shouldBe 1
+  }
 
   "a small table version is one data file, read in one scan" in {
     val f = new Fixture
