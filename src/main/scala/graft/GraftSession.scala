@@ -2,8 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** The one place a local SparkSession is built: Verify, Bench, Probe,
-  * PerfProbe and the test fixture all run on these confs. */
+/** The one place a local SparkSession is built: Verify, Bench, Probe and
+  * the test fixture all run on these confs. */
 object GraftSession {
 
   /** Cores from SPARK_GRAFT_CPUS, else the machine's cores capped at 32 (an

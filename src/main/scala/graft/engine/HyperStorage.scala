@@ -143,9 +143,9 @@ final case class ApplyResult(log: DataFrame, feed: DataFrame, rejected: DataFram
   *
   * Read path (§3.1 of SURVEY.md): filter expression → Catalyst Column via
   * the HQL translator; sort → orderBy with the reference's type rules;
-  * size/skipMax → limit + scan-cap guard. Catalyst performs the pushdown /
-  * top-k work the reference hand-implements (queryUntilFetched,
-  * HyperbusAdapter.scala:268-309).
+  * size/skipMax → the page and scan-cap guard shared with the index path
+  * ([[Page]]). Catalyst performs the pushdown / top-k work the reference
+  * hand-implements (queryUntilFetched, HyperbusAdapter.scala:268-309).
   *
   * Scale posture: every per-URI read filters the log by `document_uri`
   * BEFORE the latest-revision window, so the predicate reaches the scan
@@ -228,8 +228,8 @@ final class HyperStorage(val spark: SparkSession, val log: DataFrame,
     * itemIdFilter supports the S2 clustering-range form; `ascending=false`
     * is the reference's descending collection scan (Db.scala:146-177).
     * Deleted / never-created collections throw NotFound (reference 404,
-    * HyperbusAdapter.scala:122-134). Pass skipMax < 0 to disable the
-    * skipped-rows guard. */
+    * HyperbusAdapter.scala:122-134). The skipped-rows guard is
+    * [[Page.guard]] in item_id order; pass skipMax < 0 to disable it. */
   def query(
       collectionUri: String,
       filter: Option[String] = None,
@@ -319,34 +319,18 @@ final class HyperStorage(val spark: SparkSession, val log: DataFrame,
     val items = latest.filter(visNoTomb && col("revision") > tombRev)
     val withRange = items.filter(rangeCond)
 
-    // `sort=id` IS the clustering order: it maps to the physical item_id
-    // column (lexical, like the reference's text-typed id — NOT the JSON
-    // normKey, which would order numeric-looking ids numerically), and its
-    // direction drives the scan direction for the guard.
-    val idSortOnly = sort.size == 1 && sort.head.fieldName == "id"
-    val effectiveAsc = if (idSortOnly) !sort.head.descending else ascending
-    val idOrder = if (effectiveAsc) col("item_id").asc else col("item_id").desc
-    val exactSort = sort.isEmpty || idSortOnly
+    val order = Seq(idKey(sort, ascending))
+    val served = sort.isEmpty || idSortOnly(sort)
 
     val filtered0 = pred.fold(withRange)(withRange.filter)
     // resume-key predicates land BELOW the sort: each page is a top-k over
     // the remainder, never a full sort above a limit
     val filtered = extraPredicate.fold(filtered0)(b => filtered0.filter(b(resolver)))
 
-    // skipMax contract (HyperbusAdapter.scala:181-197, 278-283): the
-    // reference scans in clustering order and errors once it has SKIPPED
-    // (filter-rejected) more than skipMax rows before the page fills —
-    // `target` accepted rows: `size` on the exact-sort path, size+skipMax
-    // on the over-fetch (non-exact sort) path. Rejected rows after the
-    // page fills don't count — a selective filter on a big collection
-    // whose page fills early succeeds (VERDICT r1 item 2).
-    //
-    // Cost shape: piggybacked on the aggregate above; the exact
-    // positional check (TakeOrdered boundary + one filtered count, never
-    // a global sort) only when total rejections exceed skipMax.
+    // the skipMax contract ([[Page.guard]]) in clustering order, on counts
+    // piggybacked on the aggregate above; every job it runs reads the
+    // CACHED fold — near-free rescans
     if (pred.isDefined && skipMax >= 0) {
-      // every job in this guard reads the CACHED fold — near-free rescans
-      val target = if (exactSort) size.toLong else size.toLong + skipMax
       val (total, kept) =
         if (tombRev < 0) (r.getLong(3), r.getLong(4))
         else {
@@ -357,44 +341,18 @@ final class HyperStorage(val spark: SparkSession, val log: DataFrame,
           metrics.add("query.rows.skipped", c.getLong(0) - c.getLong(1))
           (c.getLong(0), c.getLong(1))
         }
-      if (total - kept > skipMax) {
-        if (kept < target) {
-          metrics.inc("query.skip_guard.exceeded")
-          fail(new QuerySkippedRowsLimited(skipMax))
-        }
-        // boundary = item_id of the target-th accepted row in scan order;
-        // skipped = rejected rows positioned before it
-        val b = filtered.orderBy(idOrder)
-          .limit(math.min(target, Int.MaxValue).toInt)
-          .agg(if (effectiveAsc) max("item_id") else min("item_id")).collect()(0)
-        val boundary = b.getString(0)
-        val before =
-          if (effectiveAsc) col("item_id") < boundary else col("item_id") > boundary
-        // coalesce: a NULL predicate (missing field) REJECTS the row, so it
-        // must count as skipped — bare !pred would drop it from the count
-        // and let the guard pass where the total-kept precheck counted it
-        metrics.inc("query.skip_guard.boundary")
-        val skipped = withRange
-          .filter(!coalesce(pred.get, lit(false)) && before).count()
-        if (skipped > skipMax) {
-          metrics.inc("query.skip_guard.exceeded")
-          fail(new QuerySkippedRowsLimited(skipMax))
-        }
-      }
+      try Page.guard(withRange, pred.get, total, kept, order, served, size, skipMax)
+      catch { case e: Throwable => fail(e) }
     }
 
-    val sorted =
-      if (sort.isEmpty || idSortOnly) filtered.orderBy(idOrder).limit(size)
-      else sortAndLimit(filtered, sort, resolver, idOrder, size)
-
-    QueryResult(sorted.drop(helperCols: _*), staticRevision)(
+    val page = Page.take(filtered, order, served, sort, resolver, size)
+    QueryResult(page.drop(helperCols: _*), staticRevision)(
       release = () => { latest.unpersist(); () })
   }
 
-  /** O6 cursor pagination: the page after `lastRow` under the same sort.
-    * Reference resume-key generation (IndexLogic.leastRowsFilterFields:
-    * 108-165): EQ on the sort-field prefix + GT/LT on the boundary field,
-    * unioned over each prefix length, with item_id as the final tiebreak. */
+  /** O6 cursor pagination: the page after `lastRow` under the same sort —
+    * rows strictly after it in the page's order ([[Page.after]]): the
+    * sort fields' normalized keys, then item_id as the final tiebreak. */
   def queryAfter(
       collectionUri: String,
       lastRow: Row,
@@ -404,30 +362,18 @@ final class HyperStorage(val spark: SparkSession, val log: DataFrame,
       ascending: Boolean = true): QueryResult = {
     val lastBody = Option(lastRow.getAs[String]("body")).getOrElse("{}")
     val lastId = lastRow.getAs[String]("item_id")
-    // strict-after predicate: (f1=v1 ∧ … ∧ fk>vk) ∨ … ∨ (f1>v1), with the
-    // trailing item_id comparison for full determinism. Body-field
-    // comparisons go through the NORMALIZED sort key (struct comparison),
-    // so numeric boundary values page numerically and text ones lexically
-    // — the same ordering the sort itself uses. `sort=id` is the lexical
-    // clustering order (exactly as in query()), so it contributes only
-    // the item_id comparison, not a normKey over the body id.
-    // Built against the resolver query() provides, so the boundary fields
-    // read the SAME single-parse materialized columns as the sort keys.
-    val idSortOnly = sort.size == 1 && sort.head.fieldName == "id"
-    val effAsc = if (idSortOnly) !sort.head.descending else ascending
+    // Body-field comparisons go through the NORMALIZED sort key (struct
+    // comparison), so numeric boundary values page numerically and text
+    // ones lexically — the same ordering the sort itself uses. `sort=id`
+    // contributes only the item_id key (as in query()). Built against the
+    // resolver query() provides, so the boundary fields read the SAME
+    // single-parse materialized columns as the sort keys.
     def after(resolver: FieldResolver): Column = {
-      val keyed: Seq[(Column, Column, Boolean)] =
-        sort.filterNot(_.fieldName == "id").map { s =>
-          val c = resolver.resolve(graft.hql.Ident(s.fieldName)).getOrElse(lit(null))
-          val lastRaw = lit(JsonOps.extractText(lastBody, s.fieldName).orNull)
-          (HyperStorage.normKey(c), HyperStorage.normKey(lastRaw), s.descending)
-        } :+ ((col("item_id"), lit(lastId), !effAsc))
-      keyed.indices.map { i =>
-        val eqPrefix = keyed.take(i).map { case (c, v, _) => c <=> v }
-        val (c, v, desc) = keyed(i)
-        val gt = if (desc) c < v else c > v
-        (eqPrefix :+ gt).reduce(_ && _)
-      }.reduce(_ || _)
+      val keyed = sort.filterNot(_.fieldName == "id").map { s =>
+        val last = lit(JsonOps.extractText(lastBody, s.fieldName).orNull)
+        (Page.Key(sortKey(s, resolver), !s.descending), normKey(last))
+      } :+ ((idKey(sort, ascending), lit(lastId)))
+      Page.after(keyed.map(_._1), keyed.map(_._2))
     }
     query(collectionUri, filter, sort, size = size, skipMax = -1,
       ascending = ascending, extraPredicate = Some(after))
@@ -525,6 +471,17 @@ object HyperStorage {
   }
 
   def isCollectionUri(path: String): Boolean = path.endsWith("~")
+
+  private def idSortOnly(sort: Seq[SortBy]): Boolean =
+    sort.size == 1 && sort.head.fieldName == "id"
+
+  /** The primary source's clustering order. `sort=id` maps to the
+    * physical item_id column (lexical, like the reference's text-typed id
+    * — NOT the JSON normKey, which would order numeric-looking ids
+    * numerically), and its direction is the scan direction; any other
+    * sort scans in `ascending` direction. */
+  private def idKey(sort: Seq[SortBy], ascending: Boolean): Page.Key =
+    Page.Key(col("item_id"), if (idSortOnly(sort)) !sort.head.descending else ascending)
 
   /** Normalized sort key for the reference's dynamic-type rule
     * (CollectionOrdering, HyperbusAdapter.scala:341-376): numbers compare

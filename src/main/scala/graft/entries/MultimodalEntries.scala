@@ -20,6 +20,21 @@ object MultimodalEntries {
       Multimodal.syntheticPng(t(s, dir, "documents"), "doc_id").persist()
     }
 
+  /** The corpus frame-checksum table (media_id, fh) of mm_frame_dedup and
+    * mm_frame_incremental: ingest-time work, written once per (session,
+    * sf) and read by both. */
+  private def frameTable(s: SparkSession, dir: String): DataFrame = {
+    val root = prepared(s, s"mmframes:$dir") {
+      val out = scratchDir(s, "mm_frames", dir)
+      val media = Multimodal.fromText(t(s, dir, "documents"),
+        "doc_id", "text")
+      Multimodal.frameChecksumTable(media, chunkBytes = 64)
+        .write.mode("overwrite").parquet(out)
+      out
+    }
+    s.read.parquet(root)
+  }
+
   /** The canonical aspect-bucket set shared by the mm_aspect_buckets
     * entry and its oracle (square, landscape/portrait 4:3, wide/tall). */
   private val AspectBucketList: Seq[(Int, Int)] =
@@ -401,15 +416,7 @@ object MultimodalEntries {
       // serving split as the two perceptual dedups) and the entry times
       // the Jaccard sweep over the stored checksums — the pass a
       // production dedup re-runs when re-tuning maxDf / minJaccard
-      val root = prepared(s, s"mmframes:$dir") {
-        val out = scratchDir(s, "mm_frames", dir)
-        val media = Multimodal.fromText(t(s, dir, "documents"),
-          "doc_id", "text")
-        Multimodal.frameChecksumTable(media, chunkBytes = 64)
-          .write.mode("overwrite").parquet(out)
-        out
-      }
-      Multimodal.frameDedupFromTable(s.read.parquet(root), maxDf = 20,
+      Multimodal.frameDedupFromTable(frameTable(s, dir), maxDf = 20,
           minJaccard = 0.5)
         .orderBy("id_a", "id_b")
     },
@@ -452,14 +459,6 @@ object MultimodalEntries {
       // dropped from both sides. Both checksum tables are ingest-time
       // fixture (shared corpus table with mm_frame_dedup); the entry
       // times the bipartite probe — the per-batch cost of the loop.
-      val corpusRoot = prepared(s, s"mmframes:$dir") {
-        val out = scratchDir(s, "mm_frames", dir)
-        val media = Multimodal.fromText(t(s, dir, "documents"),
-          "doc_id", "text")
-        Multimodal.frameChecksumTable(media, chunkBytes = 64)
-          .write.mode("overwrite").parquet(out)
-        out
-      }
       val batchRoot = prepared(s, s"mmframesb:$dir") {
         val out = scratchDir(s, "mm_frames_batch", dir)
         val copies = t(s, dir, "documents")
@@ -471,7 +470,7 @@ object MultimodalEntries {
         out
       }
       Multimodal.frameDedupAgainst(s.read.parquet(batchRoot),
-          s.read.parquet(corpusRoot), maxDf = 20, minJaccard = 0.5)
+          frameTable(s, dir), maxDf = 20, minJaccard = 0.5)
         .orderBy("batch_id", "corpus_id")
     },
       // incremental frame probe replay: corpus = all documents' frame

@@ -550,6 +550,23 @@ object SimilarityEntries {
         TrainedNlist, TrainedIters)
     }
 
+  /** The raw-PQ codebook (m = 8, ncodes = 8, 2 Lloyd rounds) the PQ and
+    * IVF-PQ entries share: build-time work, trained once per (session,
+    * sf). */
+  private def pqBook(s: SparkSession, dir: String): Similarity.PqBook =
+    prepared(s, s"pqbook:$dir:8:8:2") {
+      Similarity.trainPq(t(s, dir, "embeddings"), "vec_id", "embedding",
+        m = 8, ncodes = 8, trainIters = 2)
+    }
+
+  /** The residual-PQ codebook (nlist = 16, m = 8, ncodes = 8, 2 rounds) of
+    * the two residual IVF-PQ entries, trained once per (session, sf). */
+  private def residualBook(s: SparkSession, dir: String): Similarity.PqBook =
+    prepared(s, s"residbook:$dir:16:8:8:2") {
+      Similarity.trainResidualPq(t(s, dir, "embeddings"), "vec_id",
+        "embedding", nlist = 16, m = 8, ncodes = 8, trainIters = 2)
+    }
+
   val all: Seq[Entry] = Seq(
 
     // ---- LLM-pipeline: similarity search -------------------------------
@@ -786,10 +803,7 @@ object SimilarityEntries {
       // the inner-product expansion q·c + ADC — the higher-recall form
       // at identical index storage. The residual codebook is BUILD-time
       // work, memoized like the raw-PQ books; the bench times the search
-      val book = prepared(s, s"residbook:$dir:16:8:8:2") {
-        Similarity.trainResidualPq(t(s, dir, "embeddings"), "vec_id",
-          "embedding", nlist = 16, m = 8, ncodes = 8, trainIters = 2)
-      }
+      val book = residualBook(s, dir)
       Similarity.annIvfPqResidualTopK(t(s, dir, "embeddings"), "vec_id",
           "embedding", col("vec_id") < 10, k = 5, nlist = 16, nprobe = 4,
           m = 8, ncodes = 8, trainIters = 2, trained = Some(book))
@@ -811,10 +825,7 @@ object SimilarityEntries {
       // to the inline form (the same oracle replays both)
       val root = prepared(s, s"annivfpqresidtables:$dir") {
         val out = scratchDir(s, "annivfpqresid_index", dir)
-        val book = prepared(s, s"residbook:$dir:16:8:8:2") {
-          Similarity.trainResidualPq(t(s, dir, "embeddings"), "vec_id",
-            "embedding", nlist = 16, m = 8, ncodes = 8, trainIters = 2)
-        }
+        val book = residualBook(s, dir)
         val cents = Similarity.centroidTable(t(s, dir, "embeddings"),
           "vec_id", "embedding", nlist = 16)
         Similarity.annIvfPqResidualEncodeTable(t(s, dir, "embeddings"),
@@ -945,10 +956,7 @@ object SimilarityEntries {
       // times the ANN query, not the Lloyd rounds (ivfpq shares the book)
       Similarity.annPqTopK(t(s, dir, "embeddings"), "vec_id", "embedding",
           col("vec_id") < 10, k = 5, m = 8, ncodes = 8,
-          trained = Some(prepared(s, s"pqbook:$dir:8:8:2") {
-            Similarity.trainPq(t(s, dir, "embeddings"), "vec_id", "embedding",
-              m = 8, ncodes = 8, trainIters = 2)
-          }))
+          trained = Some(pqBook(s, dir)))
         .select(col("query_id"), col("neighbor_id"), col("rank").cast("long").as("rank"))
         .orderBy("query_id", "rank")
     }, annPqOracle(m = 8, ncodes = 8, sub = 8, k = 5, iters = 2)),
@@ -961,10 +969,7 @@ object SimilarityEntries {
       // ADC without decompression
       Similarity.annIvfPqTopK(t(s, dir, "embeddings"), "vec_id", "embedding",
           col("vec_id") < 10, k = 5, nlist = 16, nprobe = 4, m = 8, ncodes = 8,
-          trained = Some(prepared(s, s"pqbook:$dir:8:8:2") {
-            Similarity.trainPq(t(s, dir, "embeddings"), "vec_id", "embedding",
-              m = 8, ncodes = 8, trainIters = 2)
-          }))
+          trained = Some(pqBook(s, dir)))
         .select(col("query_id"), col("neighbor_id"), col("rank").cast("long").as("rank"))
         .orderBy("query_id", "rank")
     },
@@ -983,10 +988,7 @@ object SimilarityEntries {
       // additionally spec-pinned through a real round trip).
       val root = prepared(s, s"annpqtables:$dir") {
         val out = scratchDir(s, "annpq_index", dir)
-        val book = prepared(s, s"pqbook:$dir:8:8:2") {
-          Similarity.trainPq(t(s, dir, "embeddings"), "vec_id", "embedding",
-            m = 8, ncodes = 8, trainIters = 2)
-        }
+        val book = pqBook(s, dir)
         Similarity.annPqEncodeTable(t(s, dir, "embeddings"), "vec_id",
             "embedding", book)
           .write.mode("overwrite").parquet(s"$out/codes")
@@ -1014,10 +1016,7 @@ object SimilarityEntries {
       // scan, no encode — what a 100 TB serving deployment actually runs.
       val root = prepared(s, s"annivfpqtables:$dir") {
         val out = scratchDir(s, "annivfpq_index", dir)
-        val book = prepared(s, s"pqbook:$dir:8:8:2") {
-          Similarity.trainPq(t(s, dir, "embeddings"), "vec_id", "embedding",
-            m = 8, ncodes = 8, trainIters = 2)
-        }
+        val book = pqBook(s, dir)
         val cents = Similarity.centroidTable(t(s, dir, "embeddings"),
           "vec_id", "embedding", nlist = 16)
         Similarity.annIvfPqEncodeTable(t(s, dir, "embeddings"), "vec_id",

@@ -2,6 +2,7 @@ package graft
 package entries
 
 import graft.pipeline.{Similarity, TextAnalysis}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import EntryHelpers._
 
@@ -19,6 +20,23 @@ object TextEntries {
     3L -> "stream", 3L -> "filter",
     4L -> "the", 4L -> "data",
     5L -> "zzz_absent_term")
+
+  /** The stored BM25 index over the documents table — postings, doclens
+    * and stats, three parquet tables written once per (session, sf) and
+    * read by every entry that serves from them. */
+  private def bm25Tables(s: SparkSession, dir: String): (DataFrame, DataFrame, DataFrame) = {
+    val root = prepared(s, s"bm25tables:$dir") {
+      val out = scratchDir(s, "bm25_index", dir)
+      val (postings, doclens, stats) = graft.pipeline.Retrieval
+        .bm25IndexTables(t(s, dir, "documents"), "doc_id", col("text"))
+      postings.write.mode("overwrite").parquet(s"$out/postings")
+      doclens.write.mode("overwrite").parquet(s"$out/doclens")
+      stats.write.mode("overwrite").parquet(s"$out/stats")
+      out
+    }
+    (s.read.parquet(s"$root/postings"), s.read.parquet(s"$root/doclens"),
+      s.read.parquet(s"$root/stats"))
+  }
 
   /** Shared CTE chain replaying [[pipeline.Sampling.importanceWeights]]
     * (target = the English slice, 256 hash buckets): ends in `iw`
@@ -854,18 +872,9 @@ object TextEntries {
       // at build time — query batches read term-pruned postings and
       // never re-tokenize the corpus; exact integers throughout, so the
       // inline text_bm25 oracle replays this entry unchanged
-      val root = prepared(s, s"bm25tables:$dir") {
-        val out = scratchDir(s, "bm25_index", dir)
-        val (postings, doclens, stats) = graft.pipeline.Retrieval
-          .bm25IndexTables(t(s, dir, "documents"), "doc_id", col("text"))
-        postings.write.mode("overwrite").parquet(s"$out/postings")
-        doclens.write.mode("overwrite").parquet(s"$out/doclens")
-        stats.write.mode("overwrite").parquet(s"$out/stats")
-        out
-      }
+      val (postings, doclens, stats) = bm25Tables(s, dir)
       graft.pipeline.Retrieval.bm25TopKFromTables(
-          s.read.parquet(s"$root/postings"), s.read.parquet(s"$root/doclens"),
-          s.read.parquet(s"$root/stats"), "doc_id",
+          postings, doclens, stats, "doc_id",
           terms = Seq("spark", "customer", "window"), topK = 10)
         .orderBy("rank")
     },
@@ -913,18 +922,9 @@ object TextEntries {
       // bm25TopKFromTables ≡ inline bm25TopK is spec-pinned bit-equal),
       // which is how a production hybrid retriever actually runs — no
       // per-query corpus re-tokenization.
-      val root = prepared(s, s"bm25tables:$dir") {
-        val out = scratchDir(s, "bm25_index", dir)
-        val (postings, doclens, stats) = graft.pipeline.Retrieval
-          .bm25IndexTables(t(s, dir, "documents"), "doc_id", col("text"))
-        postings.write.mode("overwrite").parquet(s"$out/postings")
-        doclens.write.mode("overwrite").parquet(s"$out/doclens")
-        stats.write.mode("overwrite").parquet(s"$out/stats")
-        out
-      }
+      val (postings, doclens, stats) = bm25Tables(s, dir)
       val lex = graft.pipeline.Retrieval.bm25TopKFromTables(
-          s.read.parquet(s"$root/postings"), s.read.parquet(s"$root/doclens"),
-          s.read.parquet(s"$root/stats"), "doc_id",
+          postings, doclens, stats, "doc_id",
           terms = Seq("spark", "customer", "window"), topK = 20)
         .select(col("doc_id"), col("rank"))
       val den = Similarity.cosineTopK(t(s, dir, "embeddings"), "vec_id",
@@ -989,18 +989,9 @@ object TextEntries {
       // text is never re-tokenized, and the canonical-order seqSum fold
       // makes the scores bit-equal to the inline batch (one oracle for
       // both). Shares the durable index build with text_bm25_tables.
-      val root = prepared(s, s"bm25tables:$dir") {
-        val out = scratchDir(s, "bm25_index", dir)
-        val (postings, doclens, stats) = graft.pipeline.Retrieval
-          .bm25IndexTables(t(s, dir, "documents"), "doc_id", col("text"))
-        postings.write.mode("overwrite").parquet(s"$out/postings")
-        doclens.write.mode("overwrite").parquet(s"$out/doclens")
-        stats.write.mode("overwrite").parquet(s"$out/stats")
-        out
-      }
+      val (postings, doclens, stats) = bm25Tables(s, dir)
       graft.pipeline.Retrieval.bm25BatchTopKFromTables(
-          s.read.parquet(s"$root/postings"), s.read.parquet(s"$root/doclens"),
-          s.read.parquet(s"$root/stats"), "doc_id", BatchQueries, topK = 5)
+          postings, doclens, stats, "doc_id", BatchQueries, topK = 5)
         .orderBy("query_id", "rank")
     },
       // the stored-postings batch path must land the inline batch's exact

@@ -1,7 +1,7 @@
 package graft.indexing
 
-import graft.engine.{Conflict, Content, HyperStorage, NotFound, QueryResult,
-  QuerySkippedRowsLimited, SortBy}
+import graft.engine.{Conflict, Content, HyperStorage, NotFound, Page, QueryResult,
+  SortBy}
 import graft.hql._
 import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.graftbridge.Bridge
@@ -308,99 +308,33 @@ object QueryPlanner {
       pushdown, ck, reversed, exact)
   }
 
-  /** The primary path's skipMax contract (HyperStorage.query:190-221)
-    * replayed in the INDEX's clustering order: error once more than
-    * skipMax residual-rejected rows precede the point where the page
-    * fills. NULL predicate results (missing fields) reject the row and
-    * count as skipped, exactly like the primary guard. */
-  private def skippedRowsGuard(d: IndexDef, p: QueryPlan, pushed: DataFrame,
-      pred: Column, sort: Seq[SortBy], size: Int, skipMax: Int): Unit = {
-    val predOk = coalesce(pred, lit(false))
-    val c = pushed.agg(count(lit(1)), count_if(predOk)).collect()(0)
-    val (total, kept) = (c.getLong(0), c.getLong(1))
-    val metrics = graft.engine.EngineMetrics(pushed.sparkSession)
-    metrics.add("index.rows.scanned", total)
-    metrics.add("index.rows.accepted", kept)
-    metrics.add("index.rows.skipped", total - kept)
-    if (total - kept <= skipMax) return
-    val exact = servedInIndexOrder(p, sort)
-    val target = if (exact) size.toLong else size.toLong + skipMax
-    if (kept < target) {
-      metrics.inc("query.skip_guard.exceeded")
-      throw new QuerySkippedRowsLimited(skipMax)
-    }
-    val scan = scanOrder(d, exact && p.reversed)
-    val order = orderCols(scan)
-    // boundary = scan-order key of the target-th accepted row: TakeOrdered
-    // for the first `target`, then the REVERSE order's top-1 — a single
-    // row reaches the driver, never the 10k-row page (target can be
-    // size + skipMax)
-    val revOrder = scan.map { case (n, a) =>
-      if (a) col(n).desc_nulls_first else col(n).asc_nulls_last }
-    val boundary = pushed.filter(predOk)
-      .orderBy(order: _*).limit(math.min(target, Int.MaxValue).toInt)
-      .select(scan.map(s => col(s._1)): _*)
-      .orderBy(revOrder: _*).limit(1).collect().head
-    val before = scan.indices.map { i =>
-      val eqPrefix = scan.take(i).zipWithIndex.map { case ((n, _), j) =>
-        col(n) <=> lit(boundary.get(j)) }
-      val (n, a) = scan(i)
-      val b = lit(boundary.get(i))
-      val lt =
-        if (a) when(b.isNull, col(n).isNotNull)
-          .otherwise(coalesce(col(n) < b, lit(false)))
-        else when(b.isNull, lit(false))
-          .otherwise(col(n).isNull || col(n) > b)
-      (eqPrefix :+ lt).reduce(_ && _)
-    }.reduce(_ || _)
-    val skipped = pushed.filter(!predOk && before).count()
-    if (skipped > skipMax) {
-      metrics.inc("query.skip_guard.exceeded")
-      throw new QuerySkippedRowsLimited(skipMax)
-    }
+  /** The order an index-served page comes in, which is also the order its
+    * skipped-rows guard scans. For a plan that [[servedInIndexOrder]] with
+    * a requested sort: the matched clustering prefix, then item_id — typed
+    * columns, no per-row JSON work; a text column orders lexically, like
+    * the reference's index scans over the storage column's native order.
+    * Otherwise: the index's clustering columns in declared direction, then
+    * item_id asc — with no requested sort, exactly what the reference's
+    * source scan returns. A key that already ends in item_id (a sort by
+    * `id`) names it once: the guard projects the order's columns. */
+  private def indexOrder(p: QueryPlan, d: IndexDef, sort: Seq[SortBy]): Seq[Page.Key] = {
+    val keys =
+      if (servedInIndexOrder(p, sort) && p.ckFields.nonEmpty)
+        p.ckFields.map(ck => (ck.name, ck.ascending)) :+ (("item_id", !p.reversed))
+      else {
+        val n = d.sortBy.size
+        d.sortBy.zipWithIndex.map { case (it, i) =>
+          (IndexLogic.tableFieldName(it, n, i), !it.isDesc)
+        } :+ (("item_id", true))
+      }
+    keys.distinctBy(_._1).map { case (name, asc) => Page.Key(col(name), asc) }
   }
-
-  /** The index's physical scan order: its clustering columns in declared
-    * direction, then item_id asc — all reversed for a reversed scan. */
-  private def scanOrder(d: IndexDef, reversed: Boolean): Seq[(String, Boolean)] = {
-    val n = d.sortBy.size
-    val base = d.sortBy.zipWithIndex.map { case (it, i) =>
-      (IndexLogic.tableFieldName(it, n, i), !it.isDesc)
-    } :+ (("item_id", true))
-    if (reversed) base.map { case (c, a) => (c, !a) } else base
-  }
-
-  private def orderCols(scan: Seq[(String, Boolean)]): Seq[Column] =
-    scan.map { case (n, a) =>
-      if (a) col(n).asc_nulls_last else col(n).desc_nulls_first }
 
   /** The index returns rows in the requested order by itself: no sort was
     * requested, or the clustering key serves the requested sort exactly.
     * An empty sort never yields clustering-key fields. */
   private def servedInIndexOrder(p: QueryPlan, sort: Seq[SortBy]): Boolean =
     sort.isEmpty || (p.exactSortMatch && p.ckFields.nonEmpty)
-
-  /** The first `size` of `rows` in index order, for a plan that
-    * [[servedInIndexOrder]]. With a requested sort: the typed clustering
-    * columns, no per-row JSON work. Nulls (missing sort fields) order LAST
-    * ascending / FIRST descending to match the primary path's normKey
-    * contract (CollectionOrderingSpec); the remaining type-mixing
-    * divergence (a text column orders lexically) mirrors the reference,
-    * whose index scans also use the storage column's native order. With
-    * no requested sort: the chosen index's own clustering order, exactly
-    * what the reference's source scan returns — also the order the
-    * skipped-rows guard measured against. */
-  private def indexOrderPage(rows: DataFrame, p: QueryPlan, d: IndexDef,
-      size: Int): DataFrame = {
-    val order =
-      if (p.ckFields.nonEmpty)
-        p.ckFields.map(ck =>
-          if (ck.ascending) col(ck.name).asc_nulls_last
-          else col(ck.name).desc_nulls_first) :+
-          (if (p.reversed) col("item_id").desc else col("item_id").asc)
-      else orderCols(scanOrder(d, reversed = false))
-    rows.orderBy(order: _*).limit(size)
-  }
 
   private def filterColumn(ff: FieldFilter): Column = {
     val c = col(ff.name)
@@ -445,15 +379,15 @@ object QueryPlanner {
   /** Execute a collection query through the chosen source: pushdown
     * FieldFilters land on typed index columns (native Catalyst filters,
     * parquet-pushable — F3 wired); the FULL residual filter is always
-    * re-applied (HyperbusAdapter.scala:235-244); index order is used when
-    * the sort matches exactly, else residual in-memory order
-    * (:181-197). Returns the plan alongside the rows.
+    * re-applied (HyperbusAdapter.scala:235-244); the page ([[Page.take]])
+    * is in index order when the sort matches exactly, else a residual
+    * in-memory order (:181-197). Returns the plan alongside the rows.
     *
-    * The skipped-rows guard applies REGARDLESS of chosen source — the
-    * reference raises query-skipped-rows-limited from the shared fetch
-    * loop (HyperbusAdapter.scala:278-283), so an index-served query must
-    * refuse the same scans the primary path refuses. Rows the index
-    * pre-filtered away (its filterBy) never count: they are not scanned. */
+    * The skipped-rows guard ([[Page.guard]]) applies REGARDLESS of chosen
+    * source — the reference raises query-skipped-rows-limited from the
+    * shared fetch loop (HyperbusAdapter.scala:278-283) — in the page's
+    * order. Rows the index pre-filtered away (its filterBy) never count:
+    * they are not scanned. */
   def query(im: IndexManager, uri: String,
       filter: Option[String] = None, sort: Seq[SortBy] = Nil,
       size: Int = HyperStorage.DefaultPageSize,
@@ -470,18 +404,22 @@ object QueryPlanner {
     } else {
       val d = im.indexDef(uri, p.source).get
       val version = im.indexVersion(uri, p.source).get
-      val table = version.rows
       val resolver = FieldResolver.json(col("body"))
-      val pushed = p.pushdown.foldLeft(table)((df, ff) => df.filter(filterColumn(ff)))
+      val pushed = p.pushdown.foldLeft(version.rows)((df, ff) => df.filter(filterColumn(ff)))
       val residualPred = filter.map(f => Translator.predicate(f, resolver))
       val residual = residualPred.fold(pushed)(pushed.filter)
-      if (residualPred.isDefined && skipMax >= 0)
-        skippedRowsGuard(d, p, pushed, residualPred.get, sort, size, skipMax)
-      val limited =
-        if (servedInIndexOrder(p, sort)) indexOrderPage(residual, p, d, size)
-        else HyperStorage.sortAndLimit(residual, sort, resolver,
-          col("item_id").asc, size)
-      (p, QueryResult(limited, version.revision)())
+      val order = indexOrder(p, d, sort)
+      val served = servedInIndexOrder(p, sort)
+      for (pred <- residualPred if skipMax >= 0) {
+        val c = pushed.agg(count(lit(1)), count_if(coalesce(pred, lit(false)))).collect()(0)
+        val (total, kept) = (c.getLong(0), c.getLong(1))
+        metrics.add("index.rows.scanned", total)
+        metrics.add("index.rows.accepted", kept)
+        metrics.add("index.rows.skipped", total - kept)
+        Page.guard(pushed, pred, total, kept, order, served, size, skipMax)
+      }
+      (p, QueryResult(Page.take(residual, order, served, sort, resolver, size),
+        version.revision)())
     }
   }
 
@@ -549,8 +487,8 @@ object QueryPlanner {
         // end; the generator's reachedEnd check stops the page chain
         val residual = filter.map(f =>
           Translator.predicate(f, resolver)).fold(pushed)(pushed.filter)
-        (p, QueryResult(indexOrderPage(residual, p, d, size),
-          version.revision)())
+        (p, QueryResult(Page.take(residual, indexOrder(p, d, sort),
+          served = true, sort, resolver, size), version.revision)())
       }
     }
   }

@@ -1,6 +1,6 @@
 package org.apache.spark.sql.graftbridge
 
-import org.apache.spark.SparkEnv
+import org.apache.spark.{SparkContext, SparkEnv}
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.{ColumnNodeToExpressionConverter, ExpressionUtils}
@@ -24,4 +24,8 @@ object Bridge {
     * `SparkEnv.stop` deletes recursively. */
   def driverTmpDir: String = SparkEnv.get.driverTmpDir.getOrElse(
     throw new IllegalStateException("no driver temp dir: not on the driver"))
+
+  /** Block until every posted listener event was delivered (the listener
+    * bus is `private[spark]`): counts a listener took are complete after. */
+  def drainListeners(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
 }

@@ -17,6 +17,13 @@ class QueryCollectionsSpec extends AnyFreeSpec with Matchers with SparkFixture {
     HyperStorage(spark, r.log)
   }
 
+  /** 60 items i001..i060 with n = the item number. */
+  private def big: HyperStorage = {
+    val ops = (1 to 60).map(i =>
+      WriteOp(i.toLong, "PUT", f"big~/i$i%03d", s"""{"n":$i}"""))
+    HyperStorage(spark, HyperStorage(spark, Content.empty(spark)).applySeq(ops).log)
+  }
+
   private def ids(q: QueryResult): Seq[String] =
     q.rows.collect().map(_.getAs[String]("item_id")).toSeq
 
@@ -99,10 +106,7 @@ class QueryCollectionsSpec extends AnyFreeSpec with Matchers with SparkFixture {
     }
 
     "skipMax: selective filter errors once skipped rows exceed the cap" in {
-      val ops = (1 to 60).map(i =>
-        WriteOp(i.toLong, "PUT", f"big~/i$i%03d", s"""{"n":$i}"""))
-      val st = HyperStorage(spark,
-        HyperStorage(spark, Content.empty(spark)).applySeq(ops).log)
+      val st = big
       // only one row passes; 59 skipped > skipMax=10 ⇒ error
       a[QuerySkippedRowsLimited] should be thrownBy
         st.query("big~", filter = Some("n = 60"), size = 10, skipMax = 10)
@@ -110,6 +114,36 @@ class QueryCollectionsSpec extends AnyFreeSpec with Matchers with SparkFixture {
       // first 10 accepted arrive before 10 rows are skipped
       ids(st.query("big~", filter = Some("n <= 50"), size = 10, skipMax = 10))
         .length shouldBe 10
+    }
+
+    "skipMax: rejections past the cap but after the boundary pass (boundary job)" in {
+      val st = big
+      val f = Some("n > 5 and n <= 50")
+      // 15 rejected rows (i001-i005, i051-i060) exceed skipMax = 10, so
+      // the positional check runs: the 10th accepted row is i015 and only
+      // the 5 rejected rows before it count
+      val metrics = EngineMetrics(spark)
+      metrics.reset()
+      ids(st.query("big~", filter = f, size = 10, skipMax = 10)) shouldBe
+        (6 to 15).map(i => f"i$i%03d")
+      metrics.get("query.skip_guard.boundary") shouldBe 1L
+      metrics.get("query.skip_guard.exceeded") shouldBe 0L
+      a[QuerySkippedRowsLimited] should be thrownBy
+        st.query("big~", filter = f, size = 10, skipMax = 4)
+    }
+
+    "skipMax: a descending id sort measures the boundary from the top" in {
+      val st = big
+      val f = Some("n > 5 and n <= 50")
+      val desc = Seq(SortBy("id", descending = true))
+      // scanning down from i060, the 10 rejected rows i051-i060 precede
+      // the 10th accepted row (i041): 10 passes skipMax = 10, fails 9 ...
+      ids(st.query("big~", filter = f, sort = desc, size = 10, skipMax = 10)) shouldBe
+        (41 to 50).reverse.map(i => f"i$i%03d")
+      a[QuerySkippedRowsLimited] should be thrownBy
+        st.query("big~", filter = f, sort = desc, size = 10, skipMax = 9)
+      // ... while the ascending scan meets only 5 rejections first
+      ids(st.query("big~", filter = f, size = 10, skipMax = 9)).length shouldBe 10
     }
 
     "skipMax: NULL-rejected rows (missing field) count as skipped" in {

@@ -172,14 +172,14 @@ class IndexRevisionSpec extends AnyFreeSpec with Matchers with SparkFixture {
       def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
     }
     val sc = spark.sparkContext
-    org.apache.spark.graftbridge.ListenerBus.drain(sc)
+    org.apache.spark.sql.graftbridge.Bridge.drainListeners(sc)
     spark.listenerManager.register(listener)
     try {
       val (p, q) = QueryPlanner.query(m.im, Uri, Some("x > 3"), Seq(SortBy("x")), size = 2)
       p.source shouldBe "byX"
       q.rows.collect().map(_.getAs[String]("item_id")).toSeq shouldBe Seq("i4", "i5")
       q.revision shouldBe 6
-      org.apache.spark.graftbridge.ListenerBus.drain(sc)
+      org.apache.spark.sql.graftbridge.Bridge.drainListeners(sc)
     } finally spark.listenerManager.unregister(listener)
     val paths = scanned.toArray(Array.empty[String]).toSeq
     val store = Path.of(m.storePath).toRealPath()

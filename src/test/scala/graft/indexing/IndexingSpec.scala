@@ -362,10 +362,82 @@ class IndexingSpec extends AnyFreeSpec with Matchers with SparkFixture {
       a[QuerySkippedRowsLimited] should be thrownBy
         QueryPlanner.query(im, "col~",
           Some("b = 1 and c = 0"), Seq(SortBy("a")), size = 5, skipMax = 2)
-      // the primary path refuses the same query shape (parity)
-      a[QuerySkippedRowsLimited] should be thrownBy
-        im.storage.query("col~", Some("b = 1 and c = 0"),
-          Seq(SortBy("a")), size = 5, skipMax = 2).rows.collect()
+    }
+
+    // (filter, sort, size, skipMax) → None = both refuse, else the ids;
+    // every case is served by index `source` and must come out the same
+    // through the primary path
+    type Guarded = (String, Seq[SortBy], Int, Int, Option[Seq[String]])
+    def agree(im: IndexManager, source: String, cases: Seq[Guarded]): Unit = {
+      def run(q: => QueryResult): Option[Seq[String]] =
+        try Some(ids(q)) catch { case _: QuerySkippedRowsLimited => None }
+      for ((f, sort, size, skipMax, expected) <- cases) {
+        withClue(s"filter=$f sort=$sort size=$size skipMax=$skipMax: ") {
+          QueryPlanner.plan(im, "col~", Some(f), sort).source shouldBe source
+          run(QueryPlanner.query(im, "col~", Some(f), sort, size, skipMax)._2) shouldBe
+            expected
+          run(im.storage.query("col~", Some(f), sort, size, skipMax)) shouldBe expected
+        }
+      }
+    }
+
+    "primary and index paths agree on every guarded case (parity table)" in {
+      // a = item number, so item_id order is index order here. The primary
+      // path also scans the non-members (b = 0) the index filtered out,
+      // so each case keeps them from flipping its verdict.
+      val byA = Seq(SortBy("a"))
+      agree(guarded, "byA", Seq(
+        ("b = 1 and c = 2", byA, 5, 3, None), // the page cannot fill
+        ("b = 1 and c = 0", byA, 5, 2, None), // rejections before the boundary
+        // both paths run the positional check and pass
+        ("b = 1 and c = 1", Nil, 3, 4, Some(Seq("item01", "item03", "item05"))),
+        ("b = 1 and c = 1", byA, 1, 4, Some(Seq("item01"))),
+        // the served key (a, id) already ends in item_id
+        ("b = 1 and c = 1", Seq(SortBy("a"), SortBy("id")), 1, 4, Some(Seq("item01"))),
+        // the primary path checks 14 rejections before item19 and passes
+        ("b = 1 and c = 0", Nil, 5, 14,
+          Some(Seq("item11", "item13", "item15", "item17", "item19")))))
+    }
+
+    "a sort by id through a filter-only index runs the positional check" in {
+      // the served key is item_id alone: the page order and the guard's
+      // boundary name it once. Every case rejects more members than
+      // skipMax, so the boundary job runs on the index path.
+      val im = guarded
+      im.createIndex("col~", "members", Nil, Some("b = 1"))
+      val byId = Seq(SortBy("id"))
+      val byIdDesc = Seq(SortBy("id", descending = true))
+      val metrics = EngineMetrics(spark)
+      metrics.reset()
+      agree(im, "members", Seq(
+        ("b = 1 and c = 0", byId, 5, 2, None),
+        ("b = 1 and c = 1", byId, 3, 4, Some(Seq("item01", "item03", "item05"))),
+        ("b = 1 and c = 1", byIdDesc, 2, 4, None),
+        ("b = 1 and c = 0", byIdDesc, 1, 4, Some(Seq("item29")))))
+      // each case's boundary job ran on both paths
+      metrics.get("query.skip_guard.boundary") shouldBe 8L
+    }
+
+    "the guard measures position in the page's order, not the full clustering key" in {
+      // index sorted (a, b), query sorted by a, every row in one a tie
+      // group: the page orders it by item_id, so the accepted (c = 1)
+      // item01-item03 come first; in (a, b) order the three rejected
+      // (b = 1) item04-item06 would precede them — 3 > skipMax = 2
+      val ops = (1 to 6).map { i =>
+        val c = if (i <= 3) 1 else 0
+        WriteOp(i.toLong, "PUT", f"tie~/item$i%02d", s"""{"a":1,"b":${c + 1},"c":$c}""")
+      }
+      val r = HyperStorage(spark, Content.empty(spark)).applySeq(ops)
+      val im = new IndexManager(HyperStorage(spark, r.log.persist()))
+      im.createIndex("tie~", "byAB", Seq(
+        IndexSortItem("a", Some("decimal"), Some("asc")),
+        IndexSortItem("b", Some("decimal"), Some("asc"))), None)
+      val (p, q) = QueryPlanner.query(im, "tie~", Some("c = 1"), Seq(SortBy("a")),
+        size = 1, skipMax = 2)
+      p.source shouldBe "byAB"
+      ids(q) shouldBe Seq("item01")
+      ids(im.storage.query("tie~", Some("c = 1"), Seq(SortBy("a")), size = 1,
+        skipMax = 2)) shouldBe Seq("item01")
     }
   }
 
