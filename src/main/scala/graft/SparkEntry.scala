@@ -11,11 +11,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * body next to its oracle. */
 object SparkEntry {
 
-  /** Every entry, family by family. */
+  /** Every entry, in name order: the order Bench and Verify run them. */
   val entries: Seq[Entry] = Seq(EngineEntries.all, IndexEntries.all,
     StreamEntries.all, AnalyticsEntries.all, DedupEntries.all,
     SimilarityEntries.all, TextEntries.all, SamplingEntries.all,
-    MultimodalEntries.all).flatten
+    MultimodalEntries.all).flatten.sortBy(_.name)
 
   locally {
     val dups = entries.groupBy(_.name).collect { case (n, es) if es.size > 1 => n }

@@ -1,5 +1,6 @@
 package graft
 import java.nio.file.{Files, Paths}
+import com.fasterxml.jackson.databind.ObjectMapper
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -7,34 +8,16 @@ object Verify {
     val Array(sfDir, outDir) = args.take(2)
     // optional 3rd arg: comma-separated substrings — run matching entries
     // only (local iteration; the driver always passes exactly two args)
-    val only: Option[Seq[String]] =
-      args.drop(2).headOption.map(_.split(',').toSeq)
+    val only = args.drop(2).headOption.map(_.split(',').toSeq)
     val spark = GraftSession.local(GraftSession.cpus)
+    val runner = new Runner(spark)
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.exists(name.contains)) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
-    }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    for (e <- SparkEntry.entries if only.forall(_.exists(e.name.contains)))
+      runner.run(e, sfDir)(_.coalesce(1).write.mode("overwrite").parquet(s"$outDir/${e.name}"))
+        .failure.foreach(x => System.err.println(s"[verify] ${e.name} failed: ${x.getMessage}"))
+    val json = new ObjectMapper().createObjectNode()
+    SparkEntry.entries.foreach(e => json.put(e.name, e.oracleSql))
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json.toString)
     spark.stop()
   }
 }

@@ -2,7 +2,6 @@ package graft.engine
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import com.fasterxml.jackson.databind.node.ObjectNode
-import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
@@ -113,22 +112,4 @@ case class JsonMergePatch(left: Expression, right: Expression)
   }
   override protected def withNewChildrenInternal(l: Expression, r: Expression): JsonMergePatch =
     copy(l, r)
-}
-
-case class JsonAppendId(left: Expression, right: Expression)
-    extends BinaryExpression with CodegenFallback {
-  override def dataType: DataType = StringType
-  override def nullSafeEval(json: Any, id: Any): Any =
-    UTF8String.fromString(JsonOps.appendId(json.toString, id.toString))
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): JsonAppendId =
-    copy(l, r)
-}
-
-object JsonColumns {
-  import org.apache.spark.sql.graftbridge.Bridge.{column, expression}
-  def json_null_strip(c: Column): Column = column(JsonNullStrip(expression(c)))
-  def json_merge_patch(existing: Column, patch: Column): Column =
-    column(JsonMergePatch(expression(existing), expression(patch)))
-  def json_append_id(json: Column, id: Column): Column =
-    column(JsonAppendId(expression(json), expression(id)))
 }

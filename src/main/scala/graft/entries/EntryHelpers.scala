@@ -67,14 +67,37 @@ object EntryHelpers {
     * each entry once per JVM and is unaffected. The memo is kept per
     * session object (a weak map, as EngineMetrics keys its registries), so
     * a memo can never cross SparkSessions: a memoized index manager points
-    * into a temp dir that stopping its session's context deletes. */
-  private val prepCache: java.util.Map[SparkSession,
-      scala.collection.concurrent.TrieMap[String, Any]] =
+    * into a temp dir that stopping its session's context deletes. Each
+    * memo also sums the wall time of the builds it ran: the setup an
+    * entry's run paid, apart from the operator. */
+  private final class Memo {
+    val values = scala.collection.concurrent.TrieMap[String, Any]()
+    val setupNs = new java.util.concurrent.atomic.AtomicLong
+  }
+
+  private val prepCache: java.util.Map[SparkSession, Memo] =
     java.util.Collections.synchronizedMap(new java.util.WeakHashMap())
 
-  private[entries] def prepared[T](s: SparkSession, key: String)(build: => T): T =
-    prepCache.computeIfAbsent(s, _ => scala.collection.concurrent.TrieMap())
-      .getOrElseUpdate(key, build).asInstanceOf[T]
+  private def memo(s: SparkSession): Memo = prepCache.computeIfAbsent(s, _ => new Memo)
+
+  /** Builds nest (a table build trains the book it encodes with), and an
+    * inner build's time is already inside the outer one's. */
+  private val buildDepth = ThreadLocal.withInitial[Int](() => 0)
+
+  private[entries] def prepared[T](s: SparkSession, key: String)(build: => T): T = {
+    val m = memo(s)
+    m.values.getOrElseUpdate(key, {
+      val t0 = System.nanoTime()
+      buildDepth.set(buildDepth.get + 1)
+      try build finally {
+        buildDepth.set(buildDepth.get - 1)
+        if (buildDepth.get == 0) m.setupNs.addAndGet(System.nanoTime() - t0)
+      }
+    }).asInstanceOf[T]
+  }
+
+  /** Wall nanoseconds `prepared` has spent building memos of `s`. */
+  def setupNanos(s: SparkSession): Long = memo(s).setupNs.get
 
   /** Decimal → double through the decimal's string rendering. Both Spark and
     * DuckDB parse decimal strings with correctly-rounded double conversion,

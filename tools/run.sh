@@ -5,7 +5,11 @@
 #   tools/run.sh graft.Probe <sf_dir> time q1_agg 3
 #   tools/run.sh graft.Verify <sf_dir> <out_dir> _stream_
 # (Verify's optional 3rd arg is comma-separated entry-name substrings;
-# `_stream_` reruns exactly the 12 streaming gates.)
+# `_stream_` reruns exactly the 12 streaming gates.) All three mains run
+# entries one at a time through graft.Runner, which clears the cache after
+# each (Verify and Bench in name order, Probe in the order named); Probe's
+# `time` line shows each run's `setup`, the seconds spent building
+# memoized fixtures, apart from the rest of its wall time.
 # Runs the classes of the checkout the script sits in (build them first with
 # `sbt compile`), so each checkout's copy runs its own code.
 # Env: SPARK_DRIVER_MEM (default below), SPARK_GRAFT_CPUS (cores; read by
