@@ -36,10 +36,13 @@ object Content {
     * rows — callers decide visibility (the write path needs dead rows to
     * know revisions; the read path applies [[visible]]).
     *
-    * Implemented as a max_by HASH AGGREGATE, not a row_number window: the
-    * aggregate needs no sort, does map-side partial aggregation, and at
-    * cluster scale shuffles one pre-combined row per (uri, item) per
-    * mapper instead of the whole log. */
+    * Implemented as a max_by aggregate, not a row_number window: it does
+    * map-side partial aggregation, and at cluster scale shuffles one
+    * pre-combined row per (uri, item) per mapper instead of the whole log.
+    * max_by's struct buffer cannot be hash-aggregated, so both sides are a
+    * SortAggregate over a Sort. Over a single-partition input (a URI read
+    * in one task, [[HyperStorage.uriScan]]) the fold is one task with one
+    * Sort and no Exchange. */
   def latestRows(log: DataFrame): DataFrame = {
     val cols = log.columns
     val payload = cols.filterNot(c => c == "document_uri" || c == "item_id")

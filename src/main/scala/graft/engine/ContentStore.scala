@@ -2,6 +2,7 @@ package graft.engine
 
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.hadoop.fs.Path
 import java.util.zip.CRC32
 
@@ -53,14 +54,32 @@ object ContentStore {
         .mode(SaveMode.Overwrite).parquet)
 
   /** Open the committed version as a HyperStorage whose per-URI reads
-    * carry the partition predicate (directory pruning before any IO). The
-    * `part` column rides along in the log; engine projections ignore it. */
+    * carry the partition predicate (directory pruning before any IO) and
+    * know their partition's bytes. The `part` column rides along in the
+    * log; engine projections ignore it. */
   def open(spark: SparkSession, path: String): HyperStorage =
     scan(spark, liveRoot(spark, path).getOrElse(
       throw new java.io.FileNotFoundException(s"no committed store at $path")))
-      .map(log => new HyperStorage(spark, log,
-        uriPruner = uri => col("part") === partitionOf(uri)))
+      .map { log =>
+        val bytes = partBytes(log)
+        new HyperStorage(spark, log, Some(UriLayout(
+          pruner = uri => col("part") === partitionCol(uri),
+          bytes = uri => bytes.getOrElse(partitionOf(uri), 0L))))
+      }
       .getOrElse(HyperStorage(spark, Content.empty(spark)))
+
+  /** Data bytes under each `part` directory of a scan, summed from the file
+    * listing its relation took when the scan was created: no FS call, no
+    * job. (The optimizer's size estimate cannot stand in: it is the whole
+    * table's, not pruned by partition filters.) */
+  private def partBytes(log: DataFrame): Map[Int, Long] =
+    log.queryExecution.analyzed.collectFirst {
+      case r: LogicalRelation => r.relation
+    }.collect { case fs: HadoopFsRelation =>
+      val part = fs.partitionSchema.fieldIndex("part")
+      fs.location.listFiles(Nil, Nil)
+        .groupMapReduce(_.values.getInt(part))(_.files.map(_.getLen).sum)(_ + _)
+    }.getOrElse(Map.empty)
 
   /** [[open]], or an empty in-memory log when nothing has been committed
     * yet (the bootstrap case of a write-back loop). */

@@ -96,9 +96,11 @@ object SortBy {
   * latest-revision fold backing `rows` (mirroring [[ApplyResult.release]]):
   * call it once the rows have been consumed. Embedders that batch many
   * queries per session (like Bench's per-entry cache clear) may skip it;
-  * without either, each successful query leaves one collection-sized
-  * MEMORY_AND_DISK entry until a later eviction. Index-served results
-  * carry a no-op release. */
+  * without either, each successful query leaves its collection-sized
+  * MEMORY_AND_DISK fold cached until a later eviction: one block for a
+  * collection read in one task ([[HyperStorage.uriScan]]), one per shuffle
+  * partition for a larger one. Index-served results carry a no-op
+  * release. */
 final case class QueryResult(rows: DataFrame, revision: Long)(
     val release: () => Unit = () => ())
 
@@ -138,6 +140,13 @@ final case class ApplyResult(log: DataFrame, feed: DataFrame, rejected: DataFram
     release: () => Unit = () => (), appended: DataFrame = null,
     rejectedCount: () => Long = () => 0L)
 
+/** How a stored content log is laid out by URI ([[ContentStore]]):
+  * `pruner(uri)` is the filter on the partition the URI column `uri` lands
+  * in (a literal URI folds to a static partition filter), and `bytes(uri)`
+  * the data size of that partition, taken from the file listing the store
+  * already holds. */
+final case class UriLayout(pruner: Column => Column, bytes: String => Long)
+
 /** HyperStorage-on-Spark: the reference's query and mutation capabilities
   * over a content log DataFrame.
   *
@@ -147,12 +156,17 @@ final case class ApplyResult(log: DataFrame, feed: DataFrame, rejected: DataFram
   * ([[Page]]). Catalyst performs the pushdown / top-k work the reference
   * hand-implements (queryUntilFetched, HyperbusAdapter.scala:268-309).
   *
-  * Scale posture: every per-URI read filters the log by `document_uri`
-  * BEFORE the latest-revision window, so the predicate reaches the scan
-  * (partition pruning) instead of sitting above a whole-log shuffle.
+  * Scale posture: every per-URI read goes through [[uriScan]], which
+  * filters the log by `document_uri` (and the store's partition) BEFORE
+  * the latest-revision fold, so the predicate reaches the scan (partition
+  * pruning) instead of sitting above a whole-log shuffle. A URI whose
+  * bytes fit one task is read as one partition, and everything above the
+  * scan (fold, guard aggregate, tombstone join, top-k) runs in that one
+  * task with no Exchange; a larger URI keeps a parallel scan and folds
+  * through a shuffle.
   */
 final class HyperStorage(val spark: SparkSession, val log: DataFrame,
-    val uriPruner: String => Column = _ => lit(true)) {
+    val layout: Option[UriLayout] = None) {
   import HyperStorage._
 
   /** Whole latest visible state (all collections). Unreserved full view —
@@ -160,11 +174,30 @@ final class HyperStorage(val spark: SparkSession, val log: DataFrame,
     * 100 TB a compacted current-state table replaces re-derivation). */
   lazy val current: DataFrame = Content.latestView(log)
 
-  /** Latest row per (uri,item) for one URI — the URI predicate (plus the
-    * store's partition-pruning predicate, ContentStore) lands below the
-    * latest-revision aggregation, directly on the scan. */
-  private def latestFor(uri: String): DataFrame =
-    Content.latestRows(log.filter(uriPruner(uri) && col("document_uri") === uri))
+  /** The bytes a read of `uri` scans: its partition's data files in a
+    * stored log ([[UriLayout]]); for an in-memory log, the optimizer's
+    * estimate of the whole log. */
+  def uriBytes(uri: String): BigInt =
+    layout.fold(log.queryExecution.optimizedPlan.stats.sizeInBytes)(l => BigInt(l.bytes(uri)))
+
+  /** The one per-URI read: the log's rows of `uri`, with the URI predicate
+    * and the layout's partition predicate on the scan. When the URI's bytes
+    * are at most `spark.sql.files.openCostInBytes` — the size below which
+    * Spark packs files into one split rather than open them in parallel —
+    * the scan is coalesced to one partition: every operator above it then
+    * sees a single partition and plans no Exchange. Above that the scan
+    * keeps its splits. Either way the rows are the same. */
+  def uriScan(uri: String): DataFrame = {
+    val rows = log.filter(pruner(lit(uri)) && col("document_uri") === uri)
+    if (uriBytes(uri) <= spark.sessionState.conf.filesOpenCostInBytes) rows.coalesce(1)
+    else rows
+  }
+
+  /** The layout's partition filter for the URI column `uri`. */
+  private def pruner(uri: Column): Column = layout.fold(lit(true))(_.pruner(uri))
+
+  /** Latest row per (uri,item) for one URI, folded over [[uriScan]]. */
+  private def latestFor(uri: String): DataFrame = Content.latestRows(uriScan(uri))
 
   /** Time-travel view, COLLECTION-revision cutoff: every read — get,
     * query, pagination, static row — sees the state as of collection
@@ -181,8 +214,7 @@ final class HyperStorage(val spark: SparkSession, val log: DataFrame,
     * next to the URI/partition pruning predicates. Writes through a
     * snapshot view are not meaningful; use the live storage. */
   def asOf(maxRevision: Long): HyperStorage =
-    new HyperStorage(spark, log.filter(col("revision") <= maxRevision),
-      uriPruner)
+    new HyperStorage(spark, log.filter(col("revision") <= maxRevision), layout)
 
   /** Time-travel view, CHRONOLOGICAL cutoff: the state as of wall-clock
     * `millis` inclusive — rows written by later batches (their
@@ -198,8 +230,7 @@ final class HyperStorage(val spark: SparkSession, val log: DataFrame,
     * revision cutoff. */
   def asOfTime(millis: Long): HyperStorage =
     new HyperStorage(spark,
-      log.filter(col("modified_at") <= timestamp_millis(lit(millis))),
-      uriPruner)
+      log.filter(col("modified_at") <= timestamp_millis(lit(millis))), layout)
 
   /** S1 point get: document (itemId="") or collection item. Deleted
     * documents / items of deleted collections are invisible. */
@@ -215,12 +246,11 @@ final class HyperStorage(val spark: SparkSession, val log: DataFrame,
 
   /** S3: collection-level revision, 0 for a URI never written (the
     * reference keeps it as a Cassandra static column, Db.scala:179-183).
-    * One aggregate over the pruned raw log, no latest-revision fold: the
-    * latest row of every item is among the raw rows, and no fold drops
-    * the row holding the maximum, so both maxima agree. */
+    * One aggregate over [[uriScan]], no latest-revision fold: the latest
+    * row of every item is among the raw rows, and no fold drops the row
+    * holding the maximum, so both maxima agree. */
   def revisionOf(uri: String): Long = {
-    val r = log.filter(uriPruner(uri) && col("document_uri") === uri)
-      .agg(max("revision")).collect()(0)
+    val r = uriScan(uri).agg(max("revision")).collect()(0)
     if (r.isNullAt(0)) 0L else r.getLong(0)
   }
 
@@ -383,9 +413,11 @@ final class HyperStorage(val spark: SparkSession, val log: DataFrame,
     * document and applied in `seq` order per key — a distributed, per-key
     * serialized fold, mirroring the reference's single-worker-per-URI
     * guarantee. The state side is semi-join-restricted to the batch's URIs
-    * below the window: writing k documents reads k documents' state, not
-    * the whole store. Returns the appended log, the feed events, and the
-    * rejected ops (404/409 channel). */
+    * and, on a stored log, to their partitions (a dynamic partition filter
+    * that reuses the broadcast) below the fold: writing k documents reads
+    * the directories of k documents, not the whole store. Returns the
+    * appended log, the feed events, and the rejected ops (404/409
+    * channel). */
   /** `batchTsMillis` is the DETERMINISTIC event time stamped onto every
     * written row (created_at on first write, modified_at always) — the
     * batch equivalent of the reference's per-write wall clock
@@ -402,11 +434,15 @@ final class HyperStorage(val spark: SparkSession, val log: DataFrame,
     import sess.implicits._
     EngineMetrics(spark).inc("write.batches")
 
+    // the length filter holds for every URI: Spark adds a dynamic
+    // partition filter only when the broadcast side carries a filter it
+    // judges selective (PartitionPruning.hasSelectivePredicate)
     val touched = ops.map(op => splitPath(op.path)._1).distinct()
-      .toDF("document_uri")
+      .toDF("touched_uri").filter(length(col("touched_uri")) >= 0)
     val latest = Content.latestRows(
-        log.select(Content.schema.fieldNames.map(col): _*)
-          .join(broadcast(touched), Seq("document_uri"), "left_semi"))
+        log.join(broadcast(touched),
+          col("document_uri") === col("touched_uri") && pruner(col("touched_uri")),
+          "left_semi").select(Content.schema.fieldNames.map(col): _*))
       .select(Content.schema.fieldNames.map(col): _*)
       .as[ContentRow]
 

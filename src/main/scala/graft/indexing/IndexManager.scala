@@ -137,12 +137,12 @@ final class IndexManager(val storage: HyperStorage,
     // a resumable pending build (reference pending_index semantics)
     store.saveDefs(defs.values)
     try {
-      // apply the storage's partition pruner like every per-URI read —
-      // a ContentStore-backed build scans one directory partition, whose
-      // estimated size sets the index table's part count. The collection
-      // revision the index reflects is observed on that scan by the build
-      // job itself: no separate job over the content log
-      val scan = storage.log.filter(storage.uriPruner(uri) && col("document_uri") === uri)
+      // the collection's per-URI scan, like every per-URI read: a
+      // ContentStore-backed build reads one directory partition, whose
+      // bytes set the index table's part count. The collection revision
+      // the index reflects is observed on that scan by the build job
+      // itself: no separate job over the content log
+      val scan = storage.uriScan(uri)
       val scanned = new Observation()
       val items = Content.visible(
           Content.latestRows(scan.observe(scanned, max("revision").as("revision"))))
@@ -154,7 +154,7 @@ final class IndexManager(val storage: HyperStorage,
         case Some(r: Long) => r
         case _ => 0L
       }
-      store.writeTable(uri, indexId, built, revision, IndexStore.estimatedBytes(scan))
+      store.writeTable(uri, indexId, built, revision, storage.uriBytes(uri))
       val normal = indexing.copy(status = StatusNormal)
       defs += (uri, indexId) -> normal
       store.saveDefs(defs.values)

@@ -37,12 +37,14 @@ import java.net.{URLDecoder, URLEncoder}
   * n is sized to the table's bytes: a whole-table write (build or
   * compaction) takes the smallest n with bytes / n ≤
   * `spark.sql.files.openCostInBytes` ([[partsFor]]) — Spark's own estimate
-  * of the size at which a file is worth opening — from optimizer
-  * statistics, so choosing it launches no job. A small index is one file,
-  * read by one scan task and rewritten by one write task; a 100 TB index
-  * stays at IndexPartitions parts. Merges keep n; once a merge leaves the
-  * table larger than 2 · n · openCost, the table is rewritten at the n its
-  * size asks for.
+  * of the size at which a file is worth opening — from sizes known without
+  * a job: a build from its collection's partition bytes
+  * ([[graft.engine.HyperStorage.uriBytes]]), a compaction from the
+  * optimizer's estimate of the table's files. A small index is one file,
+  * read as one partition ([[openParts]]) and rewritten by one write task;
+  * a 100 TB index stays at IndexPartitions parts. Merges keep n; once a
+  * merge leaves the table larger than 2 · n · openCost, the table is
+  * rewritten at the n its size asks for.
   *
   * The manifest's revision line is the commit record of the index as a
   * sink: the collection revision its rows reflect (the latest revision of
@@ -150,8 +152,8 @@ final class IndexStore(val spark: SparkSession, val path: String) {
   // ------------------------------------------------------------ tables
 
   /** Full (re)build: one fresh staging root owning every part, at the part
-    * count `bytes` asks for — the caller's optimizer estimate of the
-    * source it builds from. The schema anchor is a swapped write (a crash
+    * count `bytes` asks for — the caller's size of the source it builds
+    * from. The schema anchor is a swapped write (a crash
     * can never leave it truncated), and it lands before the manifest
     * commit; a table's schema is a pure function of its IndexDef — a
     * schema CHANGE always goes through dropTable (delete + create) — so
@@ -198,12 +200,18 @@ final class IndexStore(val spark: SparkSession, val path: String) {
 
   /** Committed rows of the given physical parts only, in ONE scan over
     * their directories in whatever roots own them (directory-level pruning
-    * through the manifest — no file listing outside the named parts). */
+    * through the manifest — no file listing outside the named parts). A
+    * one-part table was at most openCost bytes at its last whole-table
+    * write, the size HyperStorage.uriScan reads in one task, so it is read
+    * as one partition: an aggregate or top-k over it plans no Exchange. */
   private def openParts(dir: String, m: Manifest, parts: Iterable[Int]): DataFrame = {
     val schema = tableSchema(dir)
     val paths = parts.toSeq.sorted.flatMap(p => m.roots.get(p).map(root => s"$dir/$root/ipart=$p"))
     if (paths.isEmpty) spark.createDataFrame(java.util.List.of[Row](), schema)
-    else spark.read.schema(schema).parquet(paths: _*)
+    else {
+      val rows = spark.read.schema(schema).parquet(paths: _*)
+      if (m.n == 1) rows.coalesce(1) else rows
+    }
   }
 
   def dropTable(uri: String, indexId: String): Unit = {
@@ -255,7 +263,7 @@ final class IndexStore(val spark: SparkSession, val path: String) {
     * The rows are unchanged, so the revision carries forward. */
   private def compactIfNeeded(dir: String, m: Manifest): Unit = {
     lazy val rows = openParts(dir, m, m.roots.keys)
-    lazy val bytes = estimatedBytes(rows)
+    lazy val bytes = rows.queryExecution.optimizedPlan.stats.sizeInBytes
     if (m.roots.values.toSet.size > MaxRoots ||
         (m.n < IndexPartitions && bytes > 2 * m.n * BigInt(openCost))) {
       EngineMetrics(spark).inc("index.rewrites")
@@ -287,11 +295,6 @@ object IndexStore {
     * n, physical part → staging-root name (relative to the table dir), and
     * the collection revision. */
   private final case class Manifest(n: Int, roots: Map[Int, String], revision: Long)
-
-  /** The optimizer's size estimate of `df`: file sizes for a file scan,
-    * read without launching a job. */
-  def estimatedBytes(df: DataFrame): BigInt =
-    df.queryExecution.optimizedPlan.stats.sizeInBytes
 
   /** The manifest line keys of the revision record and the part count. */
   private val RevisionKey = "revision"

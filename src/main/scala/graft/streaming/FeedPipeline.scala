@@ -82,7 +82,7 @@ object FeedPipeline {
       if (full.log.columns.contains("batch"))
         full.log.filter(col("batch") =!= tsMillis)
       else full.log
-    val store = new HyperStorage(s, stateLog, full.uriPruner)
+    val store = new HyperStorage(s, stateLog, full.layout)
     val r = store.applyOps(batch, tsMillis)
     // checkpoints taken so far, released with the fold when the batch ends
     var checkpoints = List.empty[DataFrame]

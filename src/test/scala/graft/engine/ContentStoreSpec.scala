@@ -216,5 +216,93 @@ class ContentStoreSpec extends AnyFreeSpec with Matchers with SparkFixture {
       st2.get("docs~/a").map(_.getAs[String]("body")) shouldBe
         Some("""{"x":1,"id":"a","y":2}""")
     }
+
+    "applyOps reads the state of the touched partitions only" in {
+      val path = tempStore()
+      ContentStore.write(HyperStorage(spark, Content.empty(spark)).applySeq(Seq(
+        WriteOp(1, "PUT", "docs~/a", """{"x":1}"""),
+        WriteOp(2, "PUT", "other~/z", """{"x":3}"""))).log, path, SaveMode.Overwrite)
+      val r = ContentStore.open(spark, path).applySeq(Seq(
+        WriteOp(3, "PATCH", "docs~/a", """{"y":2}""")))
+      try {
+        val appended = r.appended.collect()
+        appended.map(_.getAs[String]("body")).toSeq shouldBe Seq("""{"x":1,"id":"a","y":2}""")
+        val plan = r.appended.queryExecution.executedPlan.toString
+        plan should include("dynamicpruningexpression(part")
+      } finally r.release()
+    }
+  }
+
+  "per-URI reads of a collection that fits one task" - {
+    val OpenCost = "spark.sql.files.openCostInBytes"
+
+    /** A stored collection with several revisions per item, a deleted item,
+      * a collection DELETE at revision 9 and items re-created after it; a
+      * document and a second collection in other partitions. */
+    lazy val st: HyperStorage = {
+      def op(method: String, path: String, body: String = null) =
+        WriteOp(0, method, path, body)
+      val ops = Seq(
+        op("PUT", "c~/a", """{"x":1,"s":"p"}"""), op("PUT", "c~/b", """{"x":2}"""),
+        op("PUT", "c~/c", """{"x":3}"""), op("PATCH", "c~/a", """{"x":10}"""),
+        op("PUT", "c~/d", """{"x":4}"""), op("DELETE", "c~/b"),
+        op("PUT", "c~/e", """{"x":5}"""), op("PATCH", "c~/c", """{"x":30}"""),
+        op("DELETE", "c~"),
+        op("PUT", "c~/a", """{"x":20}"""), op("PUT", "c~/f", """{"x":6}"""),
+        op("PATCH", "c~/f", """{"x":7}"""), op("PUT", "c~/g", """{"x":1}"""),
+        op("PUT", "c~/h", """{"x":8}"""), op("PATCH", "c~/a", """{"s":"q"}"""),
+        op("PUT", "doc", """{"v":1}"""), op("PATCH", "doc", """{"v":2}"""),
+        op("PUT", "other~/z", """{"x":9}""")
+      ).zipWithIndex.map { case (o, i) => o.copy(seq = i + 1L) }
+      val path = tempStore()
+      ContentStore.write(
+        HyperStorage(spark, Content.empty(spark)).applySeq(ops).log, path, SaveMode.Overwrite)
+      ContentStore.open(spark, path)
+    }
+
+    def rows(q: QueryResult): Seq[Seq[Any]] =
+      try q.rows.collect().map(_.toSeq).toSeq finally q.release()
+
+    /** Every read kind, as plain values; a refused query as its message. */
+    def reads(): Seq[Any] = {
+      val byX = Seq(SortBy("x", descending = true))
+      val first = st.query("c~", Some("x > 2"), byX, size = 2, skipMax = 5)
+      val firstRows = try first.rows.collect().toSeq finally first.release()
+      Seq(
+        Seq("c~/a", "c~/b", "c~/c", "c~/f", "doc", "other~/z", "c~/none")
+          .map(p => st.get(p).map(_.toSeq)),
+        firstRows.map(_.toSeq), first.revision,
+        rows(st.queryAfter("c~", firstRows.last, Some("x > 2"), byX, size = 2)),
+        rows(st.query("c~", Some("x < 100"), Seq(SortBy("s")), skipMax = 0)),
+        intercept[QuerySkippedRowsLimited](
+          st.query("c~", Some("x > 7"), Seq(SortBy("id")), size = 2, skipMax = 1)).getMessage,
+        intercept[NotFound](st.query("none~")).getMessage,
+        Seq("c~", "doc", "none~").map(st.revisionOf),
+        rows(st.asOf(8).query("c~", sort = Seq(SortBy("id")))),
+        st.asOf(8).get("c~/c").map(_.toSeq), st.asOf(9).get("c~/c"))
+    }
+
+    "plan no shuffle: get, a query's rows and revisionOf" in {
+      st.uriBytes("c~") should be > BigInt(0)
+      shufflesOf(st.get("c~/a")) shouldBe 0
+      shufflesOf(rows(st.query("c~", Some("x > 2"), Seq(SortBy("x")), size = 2))) shouldBe 0
+      shufflesOf(st.revisionOf("c~")) shouldBe 0
+    }
+
+    "fold through a shuffle once the collection is larger than openCost" in
+      withConf(OpenCost, "1") {
+        shufflesOf(st.get("c~/a")) should be > 0
+        shufflesOf(rows(st.query("c~", Some("x > 2"), Seq(SortBy("x")), size = 2))) should be > 0
+      }
+
+    "return the same results under both plans" in {
+      val oneTask = reads()
+      // b deleted, c hidden by the collection DELETE, a re-created after it
+      oneTask(0).asInstanceOf[Seq[Option[_]]].map(_.isDefined) shouldBe
+        Seq(true, false, false, true, true, true, false)
+      oneTask(1).asInstanceOf[Seq[Seq[Any]]].map(_(1)) shouldBe Seq("a", "h")
+      oneTask(7) shouldBe Seq(15L, 2L, 0L)
+      withConf(OpenCost, "1")(reads()) shouldBe oneTask
+    }
   }
 }

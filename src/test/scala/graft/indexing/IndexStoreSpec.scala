@@ -3,8 +3,8 @@ package graft.indexing
 import graft.SparkFixture
 import graft.engine._
 import graft.streaming.FeedPipeline
+import org.apache.spark.sql.SaveMode
 import org.apache.spark.sql.execution.FileSourceScanExec
-import org.apache.spark.sql.functions.col
 import org.scalatest.freespec.AnyFreeSpec
 import org.scalatest.matchers.should.Matchers
 import java.io.File
@@ -42,12 +42,9 @@ class IndexStoreSpec extends AnyFreeSpec with Matchers with SparkFixture {
     }
     write((1 to 40).map(i => put(s"i$i", i)): _*)
 
-    /** The optimizer's estimate of the collection's content-log scan — the
-      * bytes a build sizes its table from. */
-    def contentBytes: BigInt = {
-      val s = storage
-      IndexStore.estimatedBytes(s.log.filter(s.uriPruner(Uri) && col("document_uri") === Uri))
-    }
+    /** The bytes of the collection's content-store partition — what a
+      * build sizes its table from. */
+    def contentBytes: BigInt = storage.uriBytes(Uri)
 
     def build(id: String): Unit = {
       val m = new IndexManager(storage, Some(store))
@@ -97,6 +94,29 @@ class IndexStoreSpec extends AnyFreeSpec with Matchers with SparkFixture {
     val store = new IndexStore(spark, Files.createTempDirectory("layout-memory").toString)
     new IndexManager(HyperStorage(spark, log), Some(store))
       .createIndex(Uri, "byX", ByX, Some("x > 0"))
+    manifestParts(store.tableDir(Uri, "byX")) shouldBe 1
+  }
+
+  "an index on a small collection of a large store is sized by the collection" in {
+    // a build sizes its table from the collection's partition, not from
+    // the whole store: the index is one part although the store's bytes
+    // ask for IndexPartitions
+    val rnd = new scala.util.Random(7)
+    val big = (1 to 3000).map(i => WriteOp(i, "PUT", s"big~/b$i",
+      s"""{"pad":"${rnd.alphanumeric.take(60).mkString}"}"""))
+    val path = Files.createTempDirectory("layout-large").toString
+    ContentStore.write(HyperStorage(spark, Content.empty(spark))
+      .applySeq(big :+ put("a", 1).copy(seq = 3001) :+ put("b", 2).copy(seq = 3002)).log,
+      path, SaveMode.Overwrite)
+    val storage = ContentStore.open(spark, path)
+    ContentStore.partitionOf("big~") should not be ContentStore.partitionOf(Uri)
+    val collectionBytes = storage.uriBytes(Uri)
+    val storeBytes = storage.log.queryExecution.optimizedPlan.stats.sizeInBytes
+    collectionBytes should be < storeBytes / IndexStore.IndexPartitions
+    val store = new IndexStore(spark, Files.createTempDirectory("layout-index").toString)
+    withConf(OpenCost, ((collectionBytes + storeBytes / IndexStore.IndexPartitions) / 2).toString) {
+      new IndexManager(storage, Some(store)).createIndex(Uri, "byX", ByX, Some("x > 0"))
+    }
     manifestParts(store.tableDir(Uri, "byX")) shouldBe 1
   }
 

@@ -540,6 +540,25 @@ class IndexingSpec extends AnyFreeSpec with Matchers with SparkFixture {
       (plan should include).regex("PushedFilters: \\[[^\\]]*d0")
     }
 
+    "a one-part index table plans no shuffle under its guard aggregate" in {
+      // the guard aggregate and the page of an index-served query, on a
+      // table laid out in one part and on one laid out in many
+      def shufflesAt(openCost: String): Int = withConf(OpenCost, openCost) {
+        val (st, path) = newStoragePath()
+        val im = new IndexManager(st, Some(new IndexStore(spark, path)))
+        im.createIndex("collection-1~", "byB",
+          Seq(IndexSortItem("b", Some("decimal"), Some("asc"))), None)
+        shufflesOf {
+          val (p, q) = QueryPlanner.query(im, "collection-1~",
+            Some("b > 10"), Seq(SortBy("b")), 50)
+          p.source shouldBe "byB"
+          ids(q) shouldBe Seq("item3", "item1")
+        }
+      }
+      shufflesAt((4L << 20).toString) shouldBe 0 // Spark's default openCost
+      shufflesAt("1") should be > 0
+    }
+
     "pushdown survives a multi-root (post-merge) table: filters land at every scan" in withConf(OpenCost, "1") {
       // one-byte files: the table is laid out in many parts
       val (st, path) = newStoragePath()
